@@ -1253,8 +1253,8 @@ def q_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents into a store, commit a delete of a deterministic md5-keyed
     ~10% of doc_ids (:func:`pysparkenc.lineage.delete_rows` — key files
     + one atomic lineage append), then scan through
-    :func:`pysparkenc.lineage.read_store`, which anti-joins the delete
-    keys sequenced by run. The oracle recomputes the surviving set
+    :func:`pysparkenc.lineage.read_store`, which drops the deleted keys
+    per chunk file, sequenced by run. The oracle recomputes the surviving set
     directly on parquet, so a delete that leaks or over-deletes a single
     row breaks the hash gate. Sequencing vs later appends, time travel,
     compaction materialization, and expiry are pinned in

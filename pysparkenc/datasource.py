@@ -35,6 +35,11 @@ Scale design:
   pruning uses). Every filter is also returned to Spark for
   re-evaluation, so pruning is a pure optimization and can never drop a
   row it shouldn't: a group survives unless the stats *prove* it empty.
+  Caveat: Spark 4.1 reuses the reader planned with a DataFrame's last
+  pushed filters for later queries on it that push none, so a
+  ``load()`` DataFrame queried with a filter and then without one reads
+  too few rows. :func:`pysparkenc.lineage.read_store` runs this reader
+  without Spark's data source planner and is not affected.
 - Decode reuses :func:`engine._group_decoder` — the exact executor path
   ``decode_table`` runs under ``applyInArrow``, yielding Arrow record
   batches (zero row-at-a-time Python).
@@ -47,6 +52,8 @@ pushdown through the encoded representation.
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import json
 import os
 import time
@@ -203,6 +210,26 @@ def _lineage_plan(
     return {r: tuple(sorted(ps)) for r, ps in live.items()}, deletes
 
 
+def _delete_sets(
+    path: str, dels: list[tuple[int, str]]
+) -> list[tuple[int, str, tuple[str, ...]]]:
+    """``(del_run_id, key_dir, key_columns)`` for each visible delete run
+    of :func:`_lineage_plan`; the key columns come from a key file's
+    footer. A committed delete run without key files is a corrupt store
+    and raises."""
+    out = []
+    for run_id, key_dir in dels:
+        kf = _list_parquet(key_dir)
+        if not kf:  # unreadable committed delete: fail loudly
+            raise ValueError(
+                f"delete run {run_id} of lineage store {path} has "
+                "no key files — store is corrupt (expire_runs "
+                "removes key dirs only after supersede)"
+            )
+        out.append((run_id, key_dir, tuple(pq.read_schema(kf[0]).names)))
+    return out
+
+
 def _recover_store_schema(
     path: str, live: dict[int, tuple[int, ...]]
 ) -> StructType:
@@ -339,15 +366,67 @@ class _Pushed:
     hi: object = None
 
 
+_EPOCH_DATE = datetime.date(1970, 1, 1)
+_EPOCH_NTZ = datetime.datetime(1970, 1, 1)
+_EPOCH_UTC = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+_MICRO = datetime.timedelta(microseconds=1)
+
+
+def _physical_value(logical: str, v):
+    """A pushed Catalyst literal in the physical domain the column's
+    footer stats, dict pages and blooms live in: epoch days for DATE,
+    micros for timestamps (NTZ as wall-clock micros) and day-time
+    intervals, months for year-month intervals, the unscaled int for
+    DECIMAL. None when no exact conversion exists (a value of another
+    type, a decimal finer than the column's scale, a wide decimal whose
+    chunks are fixed-width bytes): the caller then leaves the filter to
+    Spark."""
+    if logical == "date_day":
+        if isinstance(v, datetime.date) and not isinstance(
+            v, datetime.datetime
+        ):
+            return (v - _EPOCH_DATE).days
+        return None
+    if logical.startswith("timestamp"):
+        if not isinstance(v, datetime.datetime):
+            return None
+        ntz = logical.startswith("timestamp_ntz")
+        if ntz != (v.tzinfo is None):
+            return None
+        return (v - (_EPOCH_NTZ if ntz else _EPOCH_UTC)) // _MICRO
+    if logical.startswith("interval_dt_us"):
+        if isinstance(v, datetime.timedelta):
+            return v // _MICRO
+        return None
+    if logical.startswith("interval_ym_mo"):
+        if isinstance(v, int) and not isinstance(v, bool):
+            return v
+        return None
+    if logical.startswith("decimal("):
+        p, s = engine._decimal_params(logical)
+        if p > 18 or isinstance(v, bool) or not isinstance(
+            v, (int, decimal.Decimal)
+        ):
+            return None
+        unscaled = decimal.Decimal(v).scaleb(s)
+        if unscaled != unscaled.to_integral_value():
+            return None
+        return int(unscaled)
+    return v
+
+
 def _to_pushed(filters: Sequence[Filter], schema: StructType) -> list[_Pushed]:
     """Translate the prunable subset of Catalyst filters. Only top-level
     scalar columns participate (nested predicates stay Spark-side).
     ``Not`` unwraps for ``IsNull`` (-> not-null prune); other negations
     and disjunctions never arrive — the Python Data Source filter API
     (pyspark.sql.datasource) defines no ``Or`` class, so Spark keeps OR
-    trees on its side and re-applies them after our scan."""
-    scalar = {
-        f.name
+    trees on its side and re-applies them after our scan. Values on
+    converted-domain columns (dates, timestamps, decimals, intervals)
+    are moved into the physical domain first (:func:`_physical_value`);
+    a value that cannot be moved is not pushed."""
+    logical = {
+        f.name: engine._logical_of(f)
         for f in schema.fields
         if f.dataType.typeName()
         not in ("struct", "array", "map")
@@ -361,27 +440,51 @@ def _to_pushed(filters: Sequence[Filter], schema: StructType) -> list[_Pushed]:
             else:
                 continue  # NOT(eq/in/...) can't prove a group empty
         attr = getattr(f, "attribute", None)
-        if not attr or len(attr) != 1 or attr[0] not in scalar:
+        if not attr or len(attr) != 1 or attr[0] not in logical:
             continue
         c = attr[0]
+        if isinstance(f, (EqualTo, EqualNullSafe, In, GreaterThan,
+                          GreaterThanOrEqual, LessThan, LessThanOrEqual)):
+            raw = f.value if isinstance(f, In) else (f.value,)
+            vals = tuple(_physical_value(logical[c], v)
+                         for v in raw if v is not None)
+            if not vals or None in vals:
+                continue
         if isinstance(f, IsNull):
             out.append(_Pushed(c, "isnull"))
-        elif isinstance(f, EqualTo) or (
-            isinstance(f, EqualNullSafe) and f.value is not None
-        ):
-            out.append(_Pushed(c, "isin", (f.value,)))
-        elif isinstance(f, In):
-            vals = tuple(v for v in f.value if v is not None)
-            if vals:
-                out.append(_Pushed(c, "isin", vals))
-        elif isinstance(f, GreaterThan) or isinstance(f, GreaterThanOrEqual):
-            out.append(_Pushed(c, "range", lo=f.value))
-        elif isinstance(f, LessThan) or isinstance(f, LessThanOrEqual):
-            out.append(_Pushed(c, "range", hi=f.value))
+        elif isinstance(f, (EqualTo, EqualNullSafe, In)):
+            out.append(_Pushed(c, "isin", vals))
+        elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+            out.append(_Pushed(c, "range", lo=vals[0]))
+        elif isinstance(f, (LessThan, LessThanOrEqual)):
+            out.append(_Pushed(c, "range", hi=vals[0]))
         elif isinstance(f, IsNotNull):
             out.append(_Pushed(c, "notnull"))
         elif isinstance(f, StringStartsWith):
             out.append(_Pushed(c, "prefix", (f.value,)))
+    return out
+
+
+def where_pushed(where: list[tuple]) -> list[_Pushed]:
+    """Page-group pruning predicates for an AND of
+    :func:`pysparkenc.engine.scan_table` ``where`` entries, whose values
+    are already in the physical domain: ``==`` / ``in`` prune by dict
+    pages, blooms and stats, range ops by stats (strict bounds with the
+    inclusive superset); ``!=``, ``not in`` and ``("or", …)`` entries
+    prune nothing. The caller must still filter the rows: pruning only
+    drops page groups that provably hold no match."""
+    out = []
+    for w in where:
+        if len(w) != 3:  # ("or", [...]): residual-only
+            continue
+        col, op, v = w
+        if op in ("==", "="):
+            out.append(_Pushed(col, "isin", (v,)))
+        elif op == "in":
+            out.append(_Pushed(col, "isin", tuple(v)))
+        elif op in engine._RANGE_OPS:
+            lo, hi = engine._range_bounds(op, v)
+            out.append(_Pushed(col, "range", lo=lo, hi=hi))
     return out
 
 
@@ -470,8 +573,8 @@ class ChunkStoreReader(DataSourceReader):
         # file listing is NOT the table — visibility is governed by the
         # commit records. Plan from committed runs, skip superseded
         # layouts (a compacted-but-unexpired store is read exactly once)
-        # and apply equality-delete sets, so this read path and
-        # read_store can never disagree on a maintained store.
+        # and apply equality-delete sets. lineage.read_store runs this
+        # same reader under mapInArrow.
         self.lineage = is_lineage_store(path)
         self.live: dict[int, tuple[int, ...]] = {}
         self.deletes: list[tuple[int, str, tuple[str, ...]]] = []
@@ -479,19 +582,8 @@ class ChunkStoreReader(DataSourceReader):
         self._decoder = None  # executor-side _group_decoder cache
         self._widened: tuple[StructType, list[str]] | None = None
         if self.lineage:
-            live, dels = _lineage_plan(path, self.as_of_run)
-            self.live = live
-            for run_id, key_dir in dels:
-                kf = _list_parquet(key_dir)
-                if not kf:  # unreadable committed delete: fail loudly
-                    raise ValueError(
-                        f"delete run {run_id} of lineage store {path} has "
-                        "no key files — store is corrupt (expire_runs "
-                        "removes key dirs only after supersede)"
-                    )
-                self.deletes.append(
-                    (run_id, key_dir, tuple(pq.read_schema(kf[0]).names))
-                )
+            self.live, dels = _lineage_plan(path, self.as_of_run)
+            self.deletes = _delete_sets(path, dels)
             # widen ONCE, driver-side: when a delete key column falls
             # outside the read schema this consults every committed
             # file's metadata (_recover_store_schema) — doing it per
@@ -590,8 +682,13 @@ class ChunkStoreReader(DataSourceReader):
         # set in __init__ for every store with live runs — the only
         # callers are partitions planned FROM self.live; falling back
         # to a per-file recompute here would silently reintroduce the
-        # O(files^2) recovery, so fail loudly instead
-        assert self._widened is not None, "reader widened schema unset"
+        # O(files^2) recovery, so fail loudly instead (a raise, not an
+        # assert: ``python -O`` strips asserts)
+        if self._widened is None:
+            raise RuntimeError(
+                f"pysparkenc reader for {self.path}: widened schema unset "
+                "(a lineage file read was planned without live runs)"
+            )
         decode_schema, user_cols = self._widened
         allowed: set[str] = set()
         for f in decode_schema.fields:

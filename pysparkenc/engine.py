@@ -1369,6 +1369,42 @@ def _group_decoder(schema: StructType):
     return decode_pages
 
 
+def arrow_safe_schema(
+    schema: StructType,
+) -> tuple[StructType, dict[str, object]]:
+    """INTERVAL columns can't cross the Arrow boundary between the JVM
+    and Python (``applyInArrow`` and the Python data source both refuse
+    them, see encode_table): substitute each with its exact physical int
+    (int64 micros for day-time, int32 months for year-month). Returns
+    the substituted schema and ``{name: interval type}`` for
+    :func:`restore_intervals`, which casts them back Spark-side."""
+    restore: dict[str, object] = {}
+    fields = []
+    for f in schema.fields:
+        if isinstance(f.dataType, DayTimeIntervalType):
+            fields.append(StructField(f.name, LongType(), f.nullable))
+            restore[f.name] = f.dataType
+        elif isinstance(f.dataType, YearMonthIntervalType):
+            fields.append(StructField(f.name, IntegerType(), f.nullable))
+            restore[f.name] = f.dataType
+        else:
+            fields.append(f)
+    return (StructType(fields) if restore else schema), restore
+
+
+def restore_intervals(df: DataFrame, restore: dict[str, object]) -> DataFrame:
+    """Inverse of :func:`arrow_safe_schema`'s substitution: exact casts
+    back to the interval types (timestamp difference for day-time micros,
+    ``make_ym_interval`` for year-month months)."""
+    for name, dt in restore.items():
+        if isinstance(dt, DayTimeIntervalType):
+            iv = F.timestamp_micros(F.col(name)) - F.timestamp_micros(F.lit(0))
+        else:
+            iv = F.make_ym_interval(F.lit(0), F.col(name))
+        df = df.withColumn(name, iv.cast(dt))
+    return df
+
+
 def decode_table(
     chunks_df: DataFrame,
     schema: StructType | None = None,
@@ -1405,29 +1441,12 @@ def decode_table(
     combined ``run_id * 2^32 + part_id`` of a lineage-committed store)
     as a LongType column of that name — row provenance for readers that
     need the writing run, e.g. equality-delete sequencing
-    (:func:`pysparkenc.lineage.read_store`). Costs nothing: the id is a
+    (:func:`pysparkenc.lineage.apply_deletes`). Costs nothing: the id is a
     grouping key the decode shuffle already carries.
     """
     if schema is None:
         schema = output_schema_of_chunks(chunks_df)
-    # INTERVAL columns can't ride applyInArrow (see encode_table): the
-    # Arrow stage emits their exact physical ints under a substituted
-    # schema, and the interval type is restored by a Spark-side cast
-    # (timestamp-difference for day-time — exact micros; make_ym_interval
-    # for year-month) immediately after.
-    iv_restore: dict[str, tuple[str, object]] = {}
-    sub_fields = []
-    for f in schema.fields:
-        if isinstance(f.dataType, DayTimeIntervalType):
-            sub_fields.append(StructField(f.name, LongType(), f.nullable))
-            iv_restore[f.name] = ("dt", f.dataType)
-        elif isinstance(f.dataType, YearMonthIntervalType):
-            sub_fields.append(StructField(f.name, IntegerType(), f.nullable))
-            iv_restore[f.name] = ("ym", f.dataType)
-        else:
-            sub_fields.append(f)
-    if iv_restore:
-        schema = StructType(sub_fields)
+    schema, iv_restore = arrow_safe_schema(schema)
     allowed: set[str] = set()
     for f in schema.fields:
         allowed |= _subtree_chunk_names(f.name, f.dataType)
@@ -1469,20 +1488,7 @@ def decode_table(
         out = grouped.groupBy("part_id", "__pg").applyInArrow(
             lambda t: decode_pages(t), schema
         )
-    for name, (kind, dt) in iv_restore.items():
-        if kind == "dt":
-            out = out.withColumn(
-                name,
-                (
-                    F.timestamp_micros(F.col(name))
-                    - F.timestamp_micros(F.lit(0))
-                ).cast(dt),
-            )
-        else:
-            out = out.withColumn(
-                name, F.make_ym_interval(F.lit(0), F.col(name)).cast(dt)
-            )
-    return out
+    return restore_intervals(out, iv_restore)
 
 
 def aggregate_chunks(chunks_df: DataFrame, cols: list[str]) -> DataFrame:
@@ -1707,6 +1713,10 @@ def _chunk_passes_isin(
             uniques = _dict_page_values(aux, extra, dtype, nu)
             probe_vals = nvals if nvals is not None else fvals
             return bool(np.isin(probe_vals, uniques).any())
+        if fvals is not None:
+            # numeric probe against a byte dict (a wide DECIMAL's 16-byte
+            # fixed values): the domains can't be compared — keep
+            return True
         d_off, d_data = _dict_page_values(aux, extra, dtype, nu)
         raw = bytes(d_data)
         return any(
@@ -2123,6 +2133,104 @@ def _physical_bound(field, v):
     return F.lit(v)
 
 
+_RANGE_OPS = (">=", "<=", ">", "<", "between")
+
+
+def _or_terms(w: tuple) -> list[tuple]:
+    """The simple predicates of one ``where`` entry: the disjuncts of an
+    ``("or", [...])`` entry, else the entry itself."""
+    if len(w) == 2 and w[0] == "or":
+        ts = [tuple(t) for t in w[1]]
+        if not ts:
+            raise ValueError("empty OR disjunction")
+        return ts
+    return [w]
+
+
+def _range_bounds(op: str, v) -> tuple:
+    """(lo, hi) of a range predicate; None is unbounded."""
+    if op == "between":
+        return v[0], v[1]
+    return (v, None) if op in (">=", ">") else (None, v)
+
+
+def plan_scan(
+    schema: StructType, columns: list[str] | None, where: Iterable[tuple]
+) -> tuple[list[tuple], StructType]:
+    """Validate a scan's ``columns`` and ``where`` (see
+    :func:`scan_table`) against ``schema``. Returns the predicates as
+    tuples and the decode schema: the requested columns plus every
+    predicate column, in ``schema`` order. Unknown columns raise
+    ``KeyError``, malformed predicates ``ValueError``, an IN list mixing
+    strings with numbers ``TypeError``."""
+    where = [tuple(w) for w in where]
+    names = {f.name for f in schema.fields}
+    for w in where:
+        for t in _or_terms(w):
+            if len(t) != 3:
+                raise ValueError(f"predicate must be (col, op, value): {t!r}")
+            if t[0] not in names:
+                raise KeyError(f"unknown predicate column {t[0]!r}")
+            if t[1] == "in":
+                kinds = {isinstance(v, (str, bytes)) for v in t[2]}
+                if not kinds:
+                    raise ValueError(f"empty IN list: {t!r}")
+                if len(kinds) > 1:
+                    raise TypeError("probe values must be all string/bytes "
+                                    "or all numeric")
+    if columns is None:
+        return where, schema
+    pred_cols = [t[0] for w in where for t in _or_terms(w)]
+    need = list(dict.fromkeys(list(columns) + pred_cols))
+    missing = [c for c in need if c not in names]
+    if missing:
+        raise KeyError(f"unknown columns {missing}")
+    return where, StructType([f for f in schema.fields if f.name in need])
+
+
+def _residual(field, op: str, v):
+    """Exact row-level filter for one simple predicate, in the same
+    physical domain the prune (and the caller) used — a raw literal
+    would compare a decimal column to its unscaled int, or a timestamp
+    to bare micros."""
+    col = field.name
+    if op in ("==", "="):
+        return F.col(col) == _physical_bound(field, v)
+    if op == "in":
+        return _isin_physical(field, list(v))
+    if op in ("!=", "<>"):
+        return ~(F.col(col) == _physical_bound(field, v))
+    if op == "not in":
+        return ~_isin_physical(field, list(v))
+    if op in _RANGE_OPS:
+        lo, hi = _range_bounds(op, v)
+        cond = F.lit(True)
+        if lo is not None:
+            b = _physical_bound(field, lo)
+            cond = cond & (F.col(col) > b if op == ">" else F.col(col) >= b)
+        if hi is not None:
+            b = _physical_bound(field, hi)
+            cond = cond & (F.col(col) < b if op == "<" else F.col(col) <= b)
+        return cond
+    raise ValueError(f"unsupported predicate op {op!r}")
+
+
+def row_filters(schema: StructType, where: list[tuple]) -> list:
+    """One exact row condition per ``where`` entry (an OR entry becomes
+    the disjunction of its terms), built against ``schema``'s field
+    types. Under an :func:`arrow_safe_schema` substitution an INTERVAL
+    column is its physical int, so its condition compares the raw
+    physical value and stays pushable into a file scan."""
+    conds = []
+    for w in where:
+        cond = None
+        for col, op, v in _or_terms(w):
+            r = _residual(schema[col], op, v)
+            cond = r if cond is None else (cond | r)
+        conds.append(cond)
+    return conds
+
+
 def scan_table(
     chunks_df: DataFrame,
     schema: StructType | None = None,
@@ -2173,61 +2281,7 @@ def scan_table(
     """
     if schema is None:
         schema = output_schema_of_chunks(chunks_df)
-    where = [tuple(w) for w in where]
-    names = {f.name for f in schema.fields}
-
-    def _terms_of(w) -> list[tuple]:
-        if len(w) == 2 and w[0] == "or":
-            ts = [tuple(t) for t in w[1]]
-            if not ts:
-                raise ValueError("empty OR disjunction")
-            return ts
-        return [w]
-
-    for w in where:
-        for t in _terms_of(w):
-            if len(t) != 3:
-                raise ValueError(f"predicate must be (col, op, value): {t!r}")
-            if t[0] not in names:
-                raise KeyError(f"unknown predicate column {t[0]!r}")
-    pred_cols = [t[0] for w in where for t in _terms_of(w)]
-    if columns is not None:
-        need = list(dict.fromkeys(list(columns) + pred_cols))
-        missing = [c for c in need if c not in names]
-        if missing:
-            raise KeyError(f"unknown columns {missing}")
-        sub = StructType([f for f in schema.fields if f.name in need])
-    else:
-        sub = schema
-
-    _RANGE_OPS = (">=", "<=", ">", "<", "between")
-
-    def _residual(col, op, v):
-        """Exact row-level filter for one simple predicate, in the same
-        physical domain the prune (and the caller) used — a raw literal
-        would compare a decimal column to its unscaled int, or a
-        timestamp to bare micros."""
-        field = sub[col]
-        if op in ("==", "="):
-            return F.col(col) == _physical_bound(field, v)
-        if op == "in":
-            return _isin_physical(field, list(v))
-        if op in ("!=", "<>"):
-            return ~(F.col(col) == _physical_bound(field, v))
-        if op == "not in":
-            return ~_isin_physical(field, list(v))
-        if op in _RANGE_OPS:
-            lo = v[0] if op == "between" else (v if op in (">=", ">") else None)
-            hi = v[1] if op == "between" else (v if op in ("<=", "<") else None)
-            cond = F.lit(True)
-            if lo is not None:
-                b = _physical_bound(field, lo)
-                cond = cond & (F.col(col) > b if op == ">" else F.col(col) >= b)
-            if hi is not None:
-                b = _physical_bound(field, hi)
-                cond = cond & (F.col(col) < b if op == "<" else F.col(col) <= b)
-            return cond
-        raise ValueError(f"unsupported predicate op {op!r}")
+    where, sub = plan_scan(schema, columns, where)
 
     def _prune_keys(chunks, col, op, v):
         """Surviving-group keys under the strongest prune for one
@@ -2239,49 +2293,34 @@ def scan_table(
         if op == "in":
             return _prune_keys_isin(chunks, col, list(v))
         if op in _RANGE_OPS:
-            lo = v[0] if op == "between" else (v if op in (">=", ">") else None)
-            hi = v[1] if op == "between" else (v if op in ("<=", "<") else None)
-            return _prune_keys_range(chunks, col, lo, hi)
+            return _prune_keys_range(chunks, col, *_range_bounds(op, v))
         return None
 
     pruned = chunks_df
-    conds = []
     for w in where:
-        terms = _terms_of(w)
-        if len(w) == 2 and w[0] == "or":
-            cond = None
-            for col, op, v in terms:
-                r = _residual(col, op, v)
-                cond = r if cond is None else (cond | r)
-            conds.append(cond)
-            # OR prune = union of the branches' survivors: a group is
-            # dropped only when EVERY branch proves it empty. One
-            # residual-only branch keeps everything — skip the pass.
-            # The union is over the branches' KEY frames (one row per
-            # surviving group, per-branch distinct), never over nested
-            # semi-joins of the chunk table — unions of self-derived
-            # semi-joins mis-resolve in Spark's deduplication and can
-            # silently drop one side (pinned in tests/test_scan.py).
-            branch_keys = [_prune_keys(pruned, col, op, v)
-                           for col, op, v in terms]
-            if all(k is not None for k in branch_keys):
-                keep = branch_keys[0].distinct()
-                for k in branch_keys[1:]:
-                    keep = keep.unionByName(k.distinct())
-                pruned = pruned.join(
-                    F.broadcast(keep.distinct()), ["part_id", "chunk_id"],
-                    "left_semi",
-                )
+        # an OR entry prunes with the UNION of its branches' survivors:
+        # a group is dropped only when EVERY branch proves it empty, and
+        # one residual-only branch keeps everything — skip the pass.
+        # The union is over the branches' KEY frames (one row per
+        # surviving group, per-branch distinct), never over nested
+        # semi-joins of the chunk table — unions of self-derived
+        # semi-joins mis-resolve in Spark's deduplication and can
+        # silently drop one side (pinned in tests/test_scan.py).
+        keys = [_prune_keys(pruned, col, op, v)
+                for col, op, v in _or_terms(w)]
+        if any(k is None for k in keys):
             continue
-        col, op, v = terms[0]
-        conds.append(_residual(col, op, v))
-        k = _prune_keys(pruned, col, op, v)
-        if k is not None:
-            pruned = pruned.join(
-                F.broadcast(k), ["part_id", "chunk_id"], "left_semi"
-            )
+        keep = keys[0]
+        if len(keys) > 1:
+            keep = keep.distinct()
+            for k in keys[1:]:
+                keep = keep.unionByName(k.distinct())
+            keep = keep.distinct()
+        pruned = pruned.join(
+            F.broadcast(keep), ["part_id", "chunk_id"], "left_semi"
+        )
     out = decode_table(pruned, sub, part_col=part_col)
-    for c in conds:
+    for c in row_filters(sub, where):
         out = out.where(c)
     if columns is not None:
         out = out.select(*columns, *([part_col] if part_col else []))

@@ -37,7 +37,21 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .engine import encode_table
+from . import datasource
+from .engine import (
+    _logical_of,
+    aggregate_chunks,
+    arrow_safe_schema,
+    count_rows,
+    decode_table,
+    distinct_values,
+    encode_table,
+    output_schema_of_chunks,
+    plan_scan,
+    require_flat_scalar,
+    restore_intervals,
+    row_filters,
+)
 
 LINEAGE_SCHEMA = StructType(
     [
@@ -110,8 +124,6 @@ def _check_schema_evolution(spark: SparkSession, path: str, df: DataFrame):
     wrong kernel. Driver-side, metadata-only, eager (same contract as
     the delete key validation)."""
     from pyspark.errors import AnalysisException
-
-    from .engine import _logical_of, output_schema_of_chunks
 
     try:
         committed = read_committed_chunks(spark, path)
@@ -559,15 +571,13 @@ def delete_rows(
     # Eager driver-side key validation (mirrors encode_table's interval
     # check): a key column present in keys_df but absent from the store
     # would commit cleanly and then poison EVERY subsequent read — the
-    # delete anti-join fails resolving `__dr.<col>` and there is no
+    # reader cannot find the key column to match and there is no
     # supported undo. Resolve the store schema from chunk metadata
     # (O(columns) collect) and refuse up front. An empty store (no
     # committed data runs yet) has no schema to check against — the
     # delete is legal (it applies to nothing) and later appends define
     # the schema, so validation is skipped there.
     from pyspark.errors import AnalysisException
-
-    from .engine import output_schema_of_chunks
 
     try:
         committed = read_committed_chunks(spark, path)
@@ -578,8 +588,6 @@ def delete_rows(
         # propagate — see _check_schema_evolution.
         has_data = False
     if has_data:
-        from .engine import _logical_of
-
         store_fields = {f.name: _logical_of(f)
                         for f in output_schema_of_chunks(committed)}
         missing = [c for c in key_cols if c not in store_fields]
@@ -787,35 +795,53 @@ def read_store(
     where=(),
 ) -> DataFrame:
     """THE store read path: committed chunks -> pruned projected scan ->
-    equality deletes applied, all snapshot-consistent at ``as_of_run``.
-    Equivalent to :func:`pysparkenc.engine.scan_table` over
-    :func:`read_committed_chunks` when the store has no deletes (the
-    provenance column is only added — and the anti-joins only planned —
-    when a committed delete run is visible)."""
-    from .engine import scan_table
-
-    chunks = read_committed_chunks(spark, path, as_of_run=as_of_run)
-    deletes = read_delete_sets(spark, path, as_of_run=as_of_run)
-    if not deletes:
-        return scan_table(chunks, schema, columns=columns, where=where)
-    part_col = "__pysparkenc_part"
-    scan_cols = columns
-    if columns is not None:
-        # the anti-joins need every delete key column decoded, even when
-        # the caller's projection drops it — widen the scan, trim after
-        key_names = {c for _, keys in deletes for c in keys.columns}
-        scan_cols = list(dict.fromkeys(list(columns) + sorted(key_names)))
-    out = scan_table(
-        chunks, schema, columns=scan_cols, where=where, part_col=part_col
+    equality deletes applied, all snapshot-consistent at ``as_of_run``;
+    the rows and ``columns`` / ``where`` contract of :func:`apply_deletes`
+    over :func:`pysparkenc.engine.scan_table`. FILE-LOCAL: the
+    ``pysparkenc`` reader plans committed runs with pyarrow, and each
+    ``mapInArrow`` task decodes its chunk files, prunes page groups by
+    ``where`` and drops deleted rows sequenced by run — no exchange, no
+    join, no Spark metadata job. ``("or", …)`` is residual-only."""
+    if schema is None:
+        live, _ = datasource._lineage_plan(path, as_of_run)
+        schema = (datasource._recover_store_schema(path, live) if live
+                  else StructType([]))
+    where, sub = plan_scan(schema, columns, where)
+    dec, restore = arrow_safe_schema(sub)
+    # the reader runs without Spark's data source planner: its planning
+    # workers outlive the read (a few hundred MB of resident memory)
+    # and Spark reuses a planned reader across queries on one DataFrame
+    reader = datasource.ChunkStoreReader(
+        path, dec, {} if as_of_run is None else {"as_of_run": as_of_run}
     )
-    out = apply_deletes(out, deletes, part_col=part_col)
-    return out.select(*columns) if columns is not None else out.drop(part_col)
+    reader.pushed = datasource.where_pushed(where)
+    parts = reader.partitions()
+
+    def read(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield from reader.read(parts[i])
+
+    out = spark.range(0, len(parts), 1, len(parts)).mapInArrow(read, dec)
+    for cond in row_filters(dec, where):
+        out = out.where(cond)
+    out = restore_intervals(out, restore)
+    return out.select(*columns) if columns is not None else out
 
 
 # ---------------------------------------------------------------------------
 # delete-aware metadata queries (the store-level siblings of
 # engine.count_rows / distinct_values / aggregate_chunks)
 # ---------------------------------------------------------------------------
+
+def _delete_key_cols(path: str, as_of_run: int | None) -> list[str]:
+    """Key columns of the delete runs visible at ``as_of_run`` (empty
+    when none is) — read from the lineage records and key-file footers
+    with pyarrow, no Spark job."""
+    _, dels = datasource._lineage_plan(path, as_of_run)
+    return sorted({c for _, _, kcols in datasource._delete_sets(path, dels)
+                   for c in kcols})
+
 
 def store_count_rows(
     spark: SparkSession,
@@ -830,23 +856,17 @@ def store_count_rows(
     delete run is visible (detectable from lineage for free), this is
     the engine's metadata-only count — one footer aggregation, zero
     payload decode. With visible deletes, ONLY the delete key columns
-    decode (a narrow projected scan), never the full table.
-    ``visible=False`` is the engine's physical-store semantics
+    decode (a narrow projected :func:`read_store`), never the full
+    table. ``visible=False`` is the engine's physical-store semantics
     (pre-delete), stated explicitly instead of being the silent
     default."""
-    chunks = read_committed_chunks(spark, path, as_of_run=as_of_run)
-    deletes = (
-        read_delete_sets(spark, path, as_of_run=as_of_run) if visible else []
-    )
-    from .engine import count_rows, output_schema_of_chunks, scan_table
-
-    if not deletes:
-        return count_rows(chunks)
-    key_cols = sorted({c for _, keys in deletes for c in keys.columns})
-    schema = output_schema_of_chunks(chunks)
-    pc = "__pysparkenc_part"
-    rows = scan_table(chunks, schema, columns=key_cols, part_col=pc)
-    return apply_deletes(rows, deletes, part_col=pc).count()
+    key_cols = _delete_key_cols(path, as_of_run) if visible else []
+    if not key_cols:
+        return count_rows(read_committed_chunks(spark, path,
+                                                as_of_run=as_of_run))
+    return read_store(
+        spark, path, columns=key_cols, as_of_run=as_of_run
+    ).count()
 
 
 def store_distinct_values(
@@ -862,20 +882,13 @@ def store_distinct_values(
     equality delete no longer appears. Fast path (no visible delete
     runs): the engine's dictionary-page answer — footer metadata + tiny
     dict payloads, code streams untouched. With visible deletes the
-    dict pages can't know which rows an anti-join drops, so the scan
-    projects ``col`` plus the delete key columns (still column-pruned —
-    never the full table), applies the deletes, and distincts."""
+    dict pages can't know which rows a delete drops, so
+    :func:`read_store` decodes ``col`` alone (the reader decodes the
+    delete keys it needs itself) and the result distincts."""
     chunks = read_committed_chunks(spark, path, as_of_run=as_of_run)
-    deletes = (
-        read_delete_sets(spark, path, as_of_run=as_of_run) if visible else []
-    )
-    from .engine import distinct_values, output_schema_of_chunks
-
     schema = output_schema_of_chunks(chunks)
-    from .engine import require_flat_scalar
-
     require_flat_scalar(schema, col)
-    if not deletes:
+    if not (visible and _delete_key_cols(path, as_of_run)):
         return distinct_values(chunks, col, schema)
     return read_store(
         spark, path, schema, as_of_run=as_of_run, columns=[col]
@@ -894,8 +907,8 @@ def store_aggregate(
     store-level :func:`engine.aggregate_chunks`), delete-aware by
     default. Fast path (no visible delete runs): metadata-only — footer
     stats fold, no payload decode. With visible deletes the aggregate
-    must see which rows survive, so the named columns (plus delete
-    keys) decode in a projected scan and fold with the same output
+    must see which rows survive, so the named columns decode in a
+    projected :func:`read_store` and fold with the same output
     contract: ``n_values`` counts non-null survivors, ``sum_val`` is
     exact for integer columns (decimal(38,0) fold, null past int64) and
     null otherwise, ``min_val``/``max_val`` are float64.
@@ -906,24 +919,15 @@ def store_aggregate(
     domain a decoded-value fold can't reproduce exactly. Use
     ``read_store(...)`` + SQL for those, or compact to materialize the
     deletes and return to the fast path."""
-    chunks = read_committed_chunks(spark, path, as_of_run=as_of_run)
-    deletes = (
-        read_delete_sets(spark, path, as_of_run=as_of_run) if visible else []
-    )
-    from .engine import (
-        _logical_of,
-        aggregate_chunks,
-        output_schema_of_chunks,
-        scan_table,
-    )
-
-    if not deletes:
-        return aggregate_chunks(chunks, cols)
-    schema = output_schema_of_chunks(chunks)
+    if not (visible and _delete_key_cols(path, as_of_run)):
+        return aggregate_chunks(
+            read_committed_chunks(spark, path, as_of_run=as_of_run), cols
+        )
+    rows = read_store(spark, path, columns=cols, as_of_run=as_of_run)
     int_logicals = {"int32", "int64"}
     plain_numeric = int_logicals | {"float32", "float64"}
     for c in cols:
-        lg = _logical_of(schema[c])
+        lg = _logical_of(rows.schema[c])
         if lg not in plain_numeric:
             raise TypeError(
                 f"store_aggregate(visible=True) with pending deletes "
@@ -931,19 +935,11 @@ def store_aggregate(
                 "Compact the store (materializes deletes) or aggregate "
                 "through read_store()."
             )
-    key_cols = sorted({c for _, keys in deletes for c in keys.columns})
-    pcol = "__pysparkenc_part"
-    scan_cols = list(dict.fromkeys(list(cols) + key_cols))
-    rows = apply_deletes(
-        scan_table(chunks, schema, columns=scan_cols, part_col=pcol),
-        deletes,
-        part_col=pcol,
-    )
     lo = F.lit(-(2 ** 63)).cast("decimal(38,0)")
     hi = F.lit(2 ** 63 - 1).cast("decimal(38,0)")
     parts = []
     for c in cols:
-        is_int = _logical_of(schema[c]) in int_logicals
+        is_int = _logical_of(rows.schema[c]) in int_logicals
         s = F.sum(F.col(c).cast("decimal(38,0)"))
         parts.append(
             rows.agg(
@@ -1012,8 +1008,6 @@ def compact_store(
     batch encode of the same store is mid-flight: its remaining
     partitions would commit into a layout the compaction didn't see.
     """
-    from .engine import decode_table
-
     t0 = time.time()
     if runs is not None and max_run_bytes is not None:
         raise ValueError("pass runs= or max_run_bytes=, not both")

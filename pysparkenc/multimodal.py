@@ -399,8 +399,11 @@ class _JpegBitReader:
             self.pos += 2
         else:
             self.pos += 1
-        self.acc = (self.acc << 8) | b
-        self.n += 8
+        # only called with the accumulator drained (n == 0): start a
+        # fresh byte rather than shifting an ever-growing int, which
+        # made a long scan without restart markers O(n^2)
+        self.acc = b
+        self.n = 8
 
     def bit(self) -> int:
         if self.n == 0:

@@ -369,3 +369,24 @@ def test_decode_jpeg_fill_bytes_and_tem_markers():
     assert np.array_equal(decode_jpeg(padded), base)
     temmed = good[:i] + b"\xff\x01" + good[i:]
     assert np.array_equal(decode_jpeg(temmed), base)
+
+
+def test_jpeg_bit_reader_long_scan_is_linear():
+    """A long entropy-coded segment with no restart markers: every byte
+    refill must cost O(1). The accumulator used to keep every bit read
+    so far, making each refill a shift of an ever-longer int — 200 KB
+    took tens of seconds; linear reading takes well under one."""
+    import time
+
+    from pysparkenc.multimodal import _JpegBitReader
+
+    n = 200_000
+    raw = np.random.default_rng(1).integers(0, 256, n, np.uint8).tobytes()
+    scan = raw.replace(b"\xff", b"\xff\x00") + b"\xff\xd9"  # EOI
+    rd = _JpegBitReader(scan, 0)
+    t0 = time.perf_counter()
+    got = bytes(rd.bits(8) for _ in range(n))
+    assert time.perf_counter() - t0 < 5.0
+    assert got == raw  # 0xFF00 un-stuffed, bits MSB-first
+    with pytest.raises(ValueError, match="marker 0xFFD9"):
+        rd.bit()

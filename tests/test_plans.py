@@ -317,13 +317,12 @@ def test_token_freq_topk_matches_single_window(docs):
     assert got == want
 
 
-def test_delete_anti_join_is_broadcast(spark, tmp_path):
-    """Equality-delete application must plan as a BROADCAST anti-join
-    for small delete sets (takedown lists vs billions of rows): the key
-    files are tiny parquet, so Catalyst's size estimate — or AQE at
-    runtime — must not fall back to a shuffled join, and the run-
-    sequencing condition must ride the join without degrading it to a
-    cartesian/BNLJ over the data side."""
+def test_read_store_with_deletes_plans_no_exchange(spark, tmp_path):
+    """Equality deletes must never plan an O(rows x keys) shape. The
+    store read is file-local: the ``pysparkenc`` reader decodes each
+    chunk file in one ``mapInArrow`` task and drops deleted rows there,
+    sequenced by run, so the plan with a committed delete carries no
+    exchange, no join and no cartesian/nested-loop over the data side."""
     from pysparkenc.lineage import (
         delete_rows,
         encode_with_lineage,
@@ -336,6 +335,7 @@ def test_delete_anti_join_is_broadcast(spark, tmp_path):
     encode_with_lineage(df, store, num_partitions=2)
     delete_rows(spark, store, df.limit(4).select("doc_id"))
     plan = plan_of(read_store(spark, store))
-    assert "BroadcastExchange" in plan
-    # the anti-join must not plan as a nested-loop over the DATA side
+    assert "MapInArrow" in plan
+    assert "Exchange" not in plan
+    assert "Join" not in plan
     assert "CartesianProduct" not in plan

@@ -147,6 +147,30 @@ def test_scan_equality_on_converted_domains(spark):
         chunks.unpersist()
 
 
+def test_scan_equality_on_dict_encoded_wide_decimal(spark):
+    """A DECIMAL(30,2) column with few distinct values rides a dict page
+    of 16-byte fixed values; an unscaled-int probe can't be compared
+    with those bytes, so the dict probe must keep the group rather than
+    drop every match."""
+    df = spark.sql(
+        "SELECT id, CAST(id % 5 AS DECIMAL(30,2)) AS w FROM range(2000)"
+    )
+    chunks = encode_table(df, num_partitions=1)
+    chunks.cache().count()
+    try:
+        codecs = {r["codec"] for r in chunks.where(F.col("col") == "w")
+                  .select("codec").collect()}
+        assert codecs == {"dict_rle"}
+        got = scan_table(chunks, df.schema, columns=["id"],
+                         where=[("w", "==", 300)])
+        assert got.count() == 400
+        got = scan_table(chunks, df.schema, columns=["id"],
+                         where=[("w", "in", [100, 400])])
+        assert got.count() == 800
+    finally:
+        chunks.unpersist()
+
+
 def test_scan_strict_inequalities(spark, li_chunks):
     df, chunks = li_chunks
     got = scan_table(
