@@ -804,30 +804,32 @@ def render_bench_md() -> None:
             write_bench_md(json.load(f))
 
 
-_TEMPLATE_HEADERS = (
-    "## Host capacity calibration",
-    "## Scaling result",
-    "## Quality gates measured alongside throughput",
-    "## Skew defusal:",
-    "## Pack-sequences skew defusal:",
-    "## Page sizing:",
-)
+# header lines this template writes, matched whole: a hand-written
+# section whose header merely starts like one (`## Scaling result
+# caveats`) is not the template's and must survive a rewrite
+_TEMPLATE_HEADERS = tuple(re.compile(h) for h in (
+    r"## Host capacity calibration \(why N=\d+\)",
+    r"## Scaling result",
+    r"## Quality gates measured alongside throughput",
+    r"## Skew defusal: salted range plan vs naive partition-by-source",
+    r"## Pack-sequences skew defusal: auto-sharding the window sort",
+    r"## Page sizing: fixed rows vs bytes target",
+))
 
 
 def _extra_sections(path: str) -> str:
-    """Hand-written BENCH.md sections (anything whose `## ` header is
-    not produced by this template) — preserved verbatim across
+    """Hand-written BENCH.md sections (anything whose `## ` header line
+    is not one this template produces) — preserved verbatim across
     rewrites, so `--scaling` can never clobber results recorded by
     other benches or by hand."""
     if not os.path.exists(path):
         return ""
-    import re as _re
-
     text = open(path).read()
     out = []
-    for m in _re.finditer(r"(?ms)^## .*?(?=^## |\Z)", text):
+    for m in re.finditer(r"(?ms)^## .*?(?=^## |\Z)", text):
         sec = m.group(0)
-        if not any(sec.startswith(h) for h in _TEMPLATE_HEADERS):
+        header = sec.split("\n", 1)[0].rstrip()
+        if not any(h.fullmatch(header) for h in _TEMPLATE_HEADERS):
             out.append(sec.rstrip() + "\n")
     return ("\n" + "\n".join(out)) if out else ""
 

@@ -10,9 +10,10 @@ On a lineage-managed store (one written by
 the commit protocol: reads plan from committed runs and apply delete
 sets (never orphan chunks, never a double-read of a compacted store),
 and ``mode("append")`` writes commit a real lineage run — fresh run id,
-chunks under ``run_id=<r>/``, atomic lineage append — indistinguishable
-from an ``encode_with_lineage`` run. ``mode("overwrite")`` and stream
-writes refuse with a typed error naming the supported path.
+chunks under ``run_id=<r>/``, then the driver-side commit
+(:func:`_commit_lineage_rows`) every lineage write goes through.
+``mode("overwrite")`` and stream writes refuse with a typed error
+naming the supported path.
 
 Store layout (plain files, any fs path the driver and executors share)::
 
@@ -144,6 +145,49 @@ def _list_parquet(d: str) -> list[str]:
     )
 
 
+_LINEAGE_PA_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.int64()),
+        ("batch_id", pa.int64()),
+        ("part_id", pa.int64()),
+        ("n_rows", pa.int64()),
+        ("n_values", pa.int64()),
+        ("plain_bytes", pa.int64()),
+        ("enc_bytes", pa.int64()),
+        ("n_chunks", pa.int64()),
+        ("wall_sec", pa.float64()),
+        ("status", pa.string()),
+    ]
+)
+
+
+def _lineage_table(path: str, cols: Sequence[str]) -> pa.Table:
+    """Every lineage record of ``path`` projected to ``cols``, as ONE
+    pyarrow table under the nullable :data:`_LINEAGE_PA_SCHEMA` types
+    whatever nullability each file's writer declared. A file written
+    before a column existed reads it as nulls, and a missing or null
+    ``batch_id`` reads as -1 (batch mode) — the same defaults as
+    :func:`pysparkenc.lineage.read_lineage`, without a Spark job."""
+    target = pa.schema([_LINEAGE_PA_SCHEMA.field(c) for c in cols])
+    tabs = []
+    for f in _list_parquet(_lineage_dir(path)):
+        with pq.ParquetFile(f) as pf:
+            have = set(pf.schema_arrow.names)
+            t = pf.read(columns=[c for c in cols if c in have])
+        tabs.append(pa.table(
+            [t.column(c) if c in have else pa.nulls(t.num_rows)
+             for c in cols],
+            names=list(cols),
+        ).cast(target))
+    tab = pa.concat_tables(tabs) if tabs else target.empty_table()
+    if "batch_id" in cols:
+        i = tab.schema.get_field_index("batch_id")
+        tab = tab.set_column(
+            i, target.field(i), pc.fill_null(tab.column(i), -1)
+        )
+    return tab
+
+
 def _lineage_plan(
     path: str, as_of_run: int | None = None
 ) -> tuple[dict[int, tuple[int, ...]], list[tuple[int, str]]]:
@@ -159,32 +203,12 @@ def _lineage_plan(
     visible equality-delete runs as ``(del_run_id, key_dir)``. The scan
     is one metadata read of the (tiny, one-row-per-partition) lineage
     records."""
-    files = _list_parquet(_lineage_dir(path))
-    if not files:
+    tab = _lineage_table(path, ("run_id", "batch_id", "part_id", "status"))
+    if not tab.num_rows:
         return {}, []
-    cols = ["run_id", "batch_id", "part_id", "status"]
-    # unified nullable target: per-file nullability varies with the
-    # writer (coalesce(1) commits vs createDataFrame markers)
-    target = pa.schema(
-        [("run_id", pa.int64()), ("batch_id", pa.int64()),
-         ("part_id", pa.int64()), ("status", pa.string())]
-    )
-    tabs = []
-    for f in files:
-        avail = pq.read_schema(f).names
-        t = pq.read_table(f, columns=[c for c in cols if c in avail])
-        if "batch_id" not in t.schema.names:  # pre-batch_id stores
-            t = t.append_column(
-                "batch_id", pa.array([-1] * t.num_rows, pa.int64())
-            )
-        tabs.append(t.select(cols).cast(target))
-    tab = pa.concat_tables(tabs)
     run = tab.column("run_id").to_numpy()
     part = tab.column("part_id").to_numpy()
-    batch = tab.column("batch_id").to_numpy(zero_copy_only=False)
-    batch = np.where(np.isnan(batch.astype(np.float64)), -1, batch).astype(
-        np.int64
-    ) if batch.dtype.kind == "f" else batch.astype(np.int64)
+    batch = tab.column("batch_id").to_numpy()
     status = np.asarray(tab.column("status").to_pylist())
     done = status == "done"
     sup = status == "superseded"
@@ -288,6 +312,32 @@ def _recover_store_schema(
     meta = sorted(agg.values(), key=lambda m: m["col_idx"])
     return engine.assemble_schema_from_meta(meta,
                                             total_groups=len(groups))
+
+
+def _check_schema_evolution(path: str, schema: StructType) -> None:
+    """Appending a run to a lineage store may ADD or OMIT columns (the
+    union decodes with typed nulls via the col_idx-0 anchor), but a
+    shared column must keep its logical type — a silent type change
+    would make the union schema ambiguous and decode one run's chunks
+    under the wrong kernel. Driver-side and metadata-only; a store with
+    no committed data has nothing to check against. A read failure (a
+    corrupt footer) propagates: skipping the guard then would let a
+    type-changing append commit."""
+    live, _ = _lineage_plan(path)
+    if not live:
+        return
+    store = {f.name: engine._logical_of(f)
+             for f in _recover_store_schema(path, live)}
+    for f in schema.fields:
+        old = store.get(f.name)
+        new = engine._logical_of(f)
+        if old is not None and old != new:
+            raise TypeError(
+                f"schema evolution cannot change a column's type: "
+                f"{f.name} is {old} in the store but {new} in this "
+                "append. Add a NEW column (old groups decode it as "
+                "nulls) or compact under an explicit cast first."
+            )
 
 
 def _delete_drop_mask(
@@ -830,71 +880,111 @@ class ChunkStoreReader(DataSourceReader):
 @dataclass
 class _FileCommit(WriterCommitMessage):
     files: tuple = ()
-    # lineage mode: (part_id, n_rows, n_values, plain_bytes, enc_bytes,
-    # n_chunks, wall_sec) for the task's lineage row
-    lineage_row: tuple | None = None
 
 
 def _lineage_max_run(path: str) -> int:
-    """Highest run id in the lineage records (0 when empty) — pure
-    pyarrow, driver-side, so the writer can allocate without a
-    SparkSession round-trip."""
-    hi = 0
-    for f in _list_parquet(_lineage_dir(path)):
-        col = pq.read_table(f, columns=["run_id"]).column("run_id")
-        if len(col):
-            hi = max(hi, pc.max(col).as_py() or 0)
-    return int(hi)
+    """Highest run id in the lineage records (0 when empty), read on
+    the driver with pyarrow."""
+    return int(pc.max(_lineage_table(path, ("run_id",)).column(0)).as_py()
+               or 0)
 
 
-def _lineage_done_parts(path: str, run_id: int) -> tuple[list[int], int]:
-    """(distinct done part ids, done row count) for ``run_id`` — the
-    driver-side collision probe the post-commit single-writer check
-    reads (mirrors :func:`pysparkenc.lineage.encode_with_lineage`)."""
-    parts: list[int] = []
-    n = 0
-    for f in _list_parquet(_lineage_dir(path)):
-        t = pq.read_table(f, columns=["run_id", "part_id", "status"])
-        mask = pc.and_(
-            pc.equal(t.column("run_id"), run_id),
-            pc.equal(t.column("status"), "done"),
+def _chunk_lineage_rows(
+    path: str, run_id: int, batch_id: int, wall_sec: float
+) -> list[tuple]:
+    """The ``done`` lineage rows of a run whose chunks have landed under
+    ``chunks/run_id=<r>/``, one per part id, built from the chunk files'
+    metadata columns with pyarrow (payloads are never read). Every
+    column-chunk row of one page group carries the group's ``n_rows``,
+    so a part's rows are the sum over its page groups of the group's
+    max; ``n_chunks`` counts its chunk rows. Computed from what actually
+    landed, so a retried or lost task cannot skew the commit record."""
+    cols = ["part_id", "chunk_id", "n_rows", "n_values", "plain_bytes",
+            "enc_bytes"]
+    files = _list_parquet(os.path.join(_chunk_dir(path), f"run_id={run_id}"))
+    if not files:
+        return []
+    target = pa.schema([(c, pa.int64()) for c in cols])
+    t = pa.concat_tables(
+        pq.read_table(f, columns=cols).cast(target) for f in files
+    )
+    groups = t.group_by(["part_id", "chunk_id"]).aggregate(
+        [("n_rows", "max"), ("n_values", "sum"), ("plain_bytes", "sum"),
+         ("enc_bytes", "sum"),
+         ("n_rows", "count", pc.CountOptions(mode="all"))]
+    )
+    parts = groups.group_by("part_id").aggregate(
+        [("n_rows_max", "sum"), ("n_values_sum", "sum"),
+         ("plain_bytes_sum", "sum"), ("enc_bytes_sum", "sum"),
+         ("n_rows_count", "sum")]
+    ).sort_by("part_id")
+    return [
+        (int(run_id), int(batch_id), p, nr, nv, pb, eb, nc,
+         float(wall_sec), "done")
+        for p, nr, nv, pb, eb, nc in zip(
+            *(parts.column(c).to_pylist() for c in (
+                "part_id", "n_rows_max_sum", "n_values_sum_sum",
+                "plain_bytes_sum_sum", "enc_bytes_sum_sum",
+                "n_rows_count_sum",
+            ))
         )
-        sel = t.filter(mask)
-        n += sel.num_rows
-        parts.extend(int(p) for p in sel.column("part_id").to_pylist())
-    return sorted(set(parts)), n
-
-
-_LINEAGE_PA_SCHEMA = pa.schema(
-    [
-        ("run_id", pa.int64()),
-        ("batch_id", pa.int64()),
-        ("part_id", pa.int64()),
-        ("n_rows", pa.int64()),
-        ("n_values", pa.int64()),
-        ("plain_bytes", pa.int64()),
-        ("enc_bytes", pa.int64()),
-        ("n_chunks", pa.int64()),
-        ("wall_sec", pa.float64()),
-        ("status", pa.string()),
     ]
-)
 
 
 def _append_lineage_rows(path: str, rows: list[tuple]) -> None:
-    """Atomic single-file lineage append: write to a dot-prefixed temp
-    name (invisible to parquet dir readers) and ``os.replace`` onto the
-    final name — the same all-or-nothing commit-record contract as
-    ``encode_with_lineage``'s ``coalesce(1)`` append."""
+    """Publish ``rows`` as ONE lineage file: written under a
+    dot-prefixed temp name (invisible to lineage readers) and
+    ``os.replace``d into ``lineage/``, so all of a commit record becomes
+    visible at once or none of it — a killed commit can never leave a
+    batch half-visible to the ``batch_id`` replay check."""
     t = pa.Table.from_pylist(
         [dict(zip(_LINEAGE_PA_SCHEMA.names, r)) for r in rows],
         schema=_LINEAGE_PA_SCHEMA,
     )
     d = _lineage_dir(path)
+    os.makedirs(d, exist_ok=True)
     tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
     pq.write_table(t, tmp)
-    os.replace(
-        tmp, os.path.join(d, f"part-dsw-{uuid.uuid4().hex}.parquet")
+    os.replace(tmp, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
+
+
+def _commit_lineage_rows(
+    path: str, run_id: int, rows: list[tuple], retry: str
+) -> None:
+    """THE lineage commit of run ``run_id``: append ``rows`` (its done
+    or delete rows plus any supersede markers) as one atomic file, then
+    check that the store is single-writer. Two committers that raced to
+    one run id interleave their chunk files under the same run dir and
+    double-commit its parts; if the run's committed rows differ from the
+    ones this call appended, every done part of the run is superseded by
+    a quarantine marker (``batch_id == run_id``) so readers stop seeing
+    the mixed run, and the commit raises. ``retry`` tells the caller
+    what to re-run. Local-filesystem layout, like the reader."""
+    if rows:
+        _append_lineage_rows(path, rows)
+    lin = _lineage_table(path, ("run_id", "part_id", "status"))
+    lin = lin.filter(pc.equal(lin.column("run_id"), int(run_id)))
+    mine = sum(1 for r in rows if r[0] == run_id)
+    if lin.num_rows == mine:
+        return
+    done = lin.filter(pc.equal(lin.column("status"), "done"))
+    parts = sorted(set(done.column("part_id").to_pylist()))
+    quarantined = ""
+    if parts:
+        _append_lineage_rows(
+            path,
+            [(run_id, run_id, p, 0, 0, 0, 0, 0, 0.0, "superseded")
+             for p in parts],
+        )
+        quarantined = (
+            f"Run {run_id} has been quarantined (all its partitions "
+            "superseded — readers no longer see it; expire_runs reclaims "
+            "its files). "
+        )
+    raise RuntimeError(
+        f"concurrent commit detected on run {run_id}: {lin.num_rows} "
+        f"lineage rows landed where this writer appended {mine}. "
+        f"{quarantined}Stores are single-writer — {retry}"
     )
 
 
@@ -967,7 +1057,6 @@ class ChunkStoreWriter(DataSourceArrowWriter):
     def write(self, iterator: Iterator[pa.RecordBatch]) -> _FileCommit:
         from pyspark import TaskContext
 
-        t0 = time.time()
         table = self._encode_iterator(iterator)
         if table is None:
             return _FileCommit(())
@@ -985,20 +1074,7 @@ class ChunkStoreWriter(DataSourceArrowWriter):
                 staging, f"stage-{pid:05d}-{uuid.uuid4().hex}.parquet"
             )
             pq.write_table(table, fname)
-            # lineage metrics, mirroring encode_with_lineage's per-part
-            # aggregation: every column-chunk row of one page group
-            # shares n_rows, so rows = sum of one n_rows per chunk_id
-            cids = table.column("chunk_id").to_numpy()
-            _, first = np.unique(cids, return_index=True)
-            n_rows = int(table.column("n_rows").to_numpy()[first].sum())
-            row = (
-                pid, n_rows,
-                int(pc.sum(table.column("n_values")).as_py() or 0),
-                int(pc.sum(table.column("plain_bytes")).as_py() or 0),
-                int(pc.sum(table.column("enc_bytes")).as_py() or 0),
-                table.num_rows, time.time() - t0,
-            )
-            return _FileCommit((fname,), row)
+            return _FileCommit((fname,))
         os.makedirs(_chunk_dir(self.path), exist_ok=True)
         # job-millis prefix keeps append file names monotone across jobs
         # (same driver), so a streaming tail's name watermark never skips
@@ -1026,14 +1102,13 @@ class ChunkStoreWriter(DataSourceArrowWriter):
             )
 
     def _commit_lineage(self, messages) -> None:
-        """Publish staged files into ``chunks/run_id=<r>/`` and append
-        the run's lineage rows as ONE atomically-renamed file — the
-        same chunks-first-then-lineage commit protocol as
+        """Publish staged files into ``chunks/run_id=<r>/``, then commit
+        the run's lineage rows through :func:`_commit_lineage_rows` —
+        the same chunks-first-then-lineage commit as
         :func:`pysparkenc.lineage.encode_with_lineage`: a crash before
         the lineage rename leaves only invisible orphans."""
         run_id = int(self.lineage_run_id)
         run_dir = os.path.join(_chunk_dir(self.path), f"run_id={run_id}")
-        rows = [m.lineage_row for m in messages if m and m.lineage_row]
         staged = [f for m in messages if m for f in m.files]
         if not staged:
             # nothing landed: withdraw the claimed (empty) run dir
@@ -1046,29 +1121,12 @@ class ChunkStoreWriter(DataSourceArrowWriter):
         for f in staged:
             os.replace(f, os.path.join(run_dir, os.path.basename(f)
                                        .replace("stage-", "part-", 1)))
-        _append_lineage_rows(
-            self.path,
-            [(run_id, -1, p, nr, nv, pb, eb, nc, w, "done")
-             for (p, nr, nv, pb, eb, nc, w) in rows],
+        _commit_lineage_rows(
+            self.path, run_id,
+            _chunk_lineage_rows(self.path, run_id, -1,
+                                time.time() - self.job_millis / 1000),
+            "re-run the write, which will commit under a fresh run id.",
         )
-        # post-commit single-writer check (same contract as
-        # encode_with_lineage): a racing committer on the same run id
-        # interleaved its files under this run dir — quarantine the
-        # mixed run so readers stop seeing it, then fail loudly
-        parts, committed = _lineage_done_parts(self.path, run_id)
-        if committed != len(rows):
-            _append_lineage_rows(
-                self.path,
-                [(run_id, run_id, p, 0, 0, 0, 0, 0, 0.0, "superseded")
-                 for p in parts],
-            )
-            raise RuntimeError(
-                f"concurrent commit detected on run {run_id}: {committed} "
-                f"lineage rows landed where this writer appended "
-                f"{len(rows)}. Run {run_id} has been quarantined — stores "
-                "are single-writer; re-run the write, which will commit "
-                "under a fresh run id."
-            )
         from .lineage import _record_run_schema
 
         _record_run_schema(
@@ -1304,29 +1362,10 @@ class ChunkStoreDataSource(DataSource):
                 "rewrite through pysparkenc.lineage (compact_store / "
                 "delete_rows / upsert_rows)"
             )
-        # schema evolution contract (same rule as encode_with_lineage):
-        # a run may ADD or OMIT columns, but a shared column must keep
-        # its logical type, or the union schema decodes chunks under the
-        # wrong kernel
-        live, _dels = _lineage_plan(path)
-        if live:
-            existing = _recover_store_schema(path, live)
-            by_name = {f.name: f for f in existing.fields}
-            for f in schema.fields:
-                old = by_name.get(f.name)
-                if old is None:
-                    continue
-                if engine._logical_of(old) != engine._logical_of(f):
-                    raise ValueError(
-                        f"schema evolution cannot change column "
-                        f"'{f.name}' from {old.dataType.simpleString()} to "
-                        f"{f.dataType.simpleString()} — add a new column "
-                        "instead"
-                    )
-        from .lineage import _on_disk_run_ids
+        _check_schema_evolution(path, schema)
+        from .lineage import _next_run_id
 
-        run_id = max(_lineage_max_run(path),
-                     max(_on_disk_run_ids(path), default=0)) + 1
+        run_id = _next_run_id(None, path)
         # claim the id on disk NOW: a job crashed before commit leaves
         # an empty/orphan dir, which _next_run_id treats as occupied
         os.makedirs(

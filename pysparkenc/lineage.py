@@ -9,15 +9,22 @@ enc_bytes, n_chunks, wall_sec, status)``.
 
 Commit protocol (Iceberg-snapshot-shaped, on plain parquet dirs):
 
-- chunk rows land under ``chunks/run_id=<r>/`` first;
-- the lineage row for a partition is appended only *after* its chunks —
-  the lineage row IS the commit record;
+- chunk rows land under ``chunks/run_id=<r>/`` first, through the Spark
+  write — the only Spark job of a commit;
+- the commit record is then built on the driver with pyarrow from the
+  run's chunk METADATA columns (one lineage row per partition, from what
+  actually landed) and published as ONE parquet file, written under a
+  dot-temp name and atomically renamed into ``lineage/`` — the lineage
+  row IS the commit record, and a commit is visible whole or not at all;
 - readers (:func:`read_committed_chunks`) semi-join chunks against
   ``status='done'`` lineage on (run_id, part_id): orphan chunks from a
   crashed run are invisible, so append-after-crash never double-counts;
-- resume anti-joins the new run against committed part_ids
-  (``left_anti`` on a broadcast — the done-set is tiny relative to data)
-  and re-encodes only missing partitions.
+- resume skips the part ids the lineage records as done and re-encodes
+  only missing partitions;
+- replay checks, run-id allocation, the schema-evolution guard and the
+  single-writer collision check all read the lineage and chunk metadata
+  with pyarrow on the driver (:mod:`pysparkenc.datasource`), which, like
+  :func:`read_store`, assumes the local-filesystem layout.
 
 A killed 10^12-sequence job therefore restarts where it stopped, and
 swapping this directory layout for real Iceberg commits is a config
@@ -28,6 +35,8 @@ from __future__ import annotations
 
 import time
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -114,41 +123,6 @@ def run_schemas(path: str) -> dict[int, "StructType"]:
             with open(os.path.join(d, f)) as fh:
                 out[int(f[4:-5])] = StructType.fromJson(json.load(fh))
     return out
-
-
-def _check_schema_evolution(spark: SparkSession, path: str, df: DataFrame):
-    """Appending a run may ADD or OMIT columns (the union decodes with
-    typed nulls via the anchor rule in ``decode_table``), but a shared
-    column must keep its logical type — a silent type change would make
-    the union schema ambiguous and decode one run's chunks under the
-    wrong kernel. Driver-side, metadata-only, eager (same contract as
-    the delete key validation)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        committed = read_committed_chunks(spark, path)
-        has_data = bool(committed.limit(1).count())
-    except AnalysisException:
-        # no chunks dir yet (fresh store): nothing to check against.
-        # Anything else (corrupt footer, I/O failure) PROPAGATES —
-        # silently skipping the guard on a real read failure would let
-        # a type-changing append commit, the exact poisoned state this
-        # eager validation exists to prevent.
-        return
-    if not has_data:
-        return
-    store = {f.name: _logical_of(f)
-             for f in output_schema_of_chunks(committed)}
-    for f in df.schema.fields:
-        old = store.get(f.name)
-        new = _logical_of(f)
-        if old is not None and old != new:
-            raise TypeError(
-                f"schema evolution cannot change a column's type: "
-                f"{f.name} is {old} in the store but {new} in this "
-                "append. Add a NEW column (old groups decode it as "
-                "nulls) or compact under an explicit cast first."
-            )
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
@@ -312,14 +286,7 @@ def _on_disk_run_ids(path: str) -> set[int]:
     return ids
 
 
-def _max_committed_run(spark: SparkSession, path: str) -> int:
-    """Highest run id with a lineage row (0 on an empty store)."""
-    lin = read_lineage(spark, path)
-    row = lin.agg(F.max("run_id").alias("m")).collect()[0]
-    return int(row["m"] or 0)
-
-
-def _next_run_id(spark: SparkSession, path: str) -> int:
+def _next_run_id(spark: SparkSession | None, path: str) -> int:
     """Allocate the next run id: one past the max run id visible in the
     lineage OR on disk. The on-disk scan closes the crash window between
     a run's data write and its lineage append: a writer killed there
@@ -328,12 +295,10 @@ def _next_run_id(spark: SparkSession, path: str) -> int:
     decode survives (pages key last-wins per column) but the run's
     lineage metrics and every footer-metadata aggregate would double.
     Skipping disk-occupied ids makes orphans permanently invisible
-    instead; :func:`vacuum_store` reclaims them."""
-    hi = _max_committed_run(spark, path)
-    disk = _on_disk_run_ids(path)
-    if disk:
-        hi = max(hi, max(disk))
-    return hi + 1
+    instead; :func:`vacuum_store` reclaims them. Pure pyarrow and file
+    listing: ``spark`` is unused (the data-source writer passes None)."""
+    return max(datasource._lineage_max_run(path),
+               *_on_disk_run_ids(path), 0) + 1
 
 
 def encode_with_lineage(
@@ -381,12 +346,13 @@ def encode_with_lineage(
     """
     spark = df.sparkSession
     t0 = time.time()
+    # replay and resume both read the done rows, with pyarrow: the
+    # chunk write below is this call's only Spark job
+    lin = datasource._lineage_table(path, ("batch_id", "part_id", "status"))
+    done = lin.filter(pc.equal(lin.column("status"), "done"))
     if batch_id is not None:
-        already = (
-            read_lineage(spark, path)
-            .where((F.col("batch_id") == int(batch_id)) & (F.col("status") == "done"))
-            .count()
-        )
+        already = pc.sum(pc.equal(done.column("batch_id"), int(batch_id)))
+        already = int(already.as_py() or 0)
         if already:
             return {
                 "run_id": -1,
@@ -397,27 +363,22 @@ def encode_with_lineage(
                 "values": 0,
                 "plain_bytes": 0,
                 "enc_bytes": 0,
-                "skipped_partitions": int(already),
+                "skipped_partitions": already,
                 "compression_ratio": 1.0,
                 "replayed_batch": True,
             }
-    _check_schema_evolution(spark, path, df)
+    datasource._check_schema_evolution(path, df.schema)
     run_id = _next_run_id(spark, path)
     chunks = encode_table(
         df, partition_by=partition_by, num_partitions=num_partitions,
         codec=codec, compression=compression, rows_per_chunk=rows_per_chunk,
         target_chunk_bytes=target_chunk_bytes, sort_by=sort_by, bloom=bloom,
     )
-    skipped = 0
-    if resume:
-        done = completed_part_ids(spark, path)
-        skipped = done.count()
-        if skipped:
-            chunks = chunks.join(F.broadcast(done), "part_id", "left_anti")
-    if drop_part_ids:
-        chunks = chunks.where(
-            ~F.col("part_id").isin([int(p) for p in drop_part_ids])
-        )
+    done_parts = (set(done.column("part_id").to_pylist()) if resume
+                  else set())
+    skip = done_parts | {int(p) for p in drop_part_ids or ()}
+    if skip:
+        chunks = chunks.where(~F.col("part_id").isin(sorted(skip)))
 
     (
         chunks.withColumn("run_id", F.lit(run_id))
@@ -426,111 +387,36 @@ def encode_with_lineage(
         .parquet(_chunks_dir(path))
     )
     wall = time.time() - t0
-
-    # lineage commit AFTER chunk rows land; computed from what actually
-    # landed for this run_id so retried/lost tasks can't skew the metrics
-    written = spark.read.parquet(_chunks_dir(path)).where(F.col("run_id") == run_id)
-    per_group = written.groupBy("part_id", "chunk_id").agg(
-        F.max("n_rows").alias("g_rows"),
-        F.sum("n_values").alias("g_values"),
-        F.sum("plain_bytes").alias("g_plain"),
-        F.sum("enc_bytes").alias("g_enc"),
-        F.count(F.lit(1)).alias("g_chunks"),
+    # lineage commit AFTER chunk rows land, built from what landed
+    rows = datasource._chunk_lineage_rows(
+        path, run_id, -1 if batch_id is None else int(batch_id), wall
     )
-    lin = per_group.groupBy("part_id").agg(
-        F.sum("g_rows").cast("long").alias("n_rows"),
-        F.sum("g_values").cast("long").alias("n_values"),
-        F.sum("g_plain").cast("long").alias("plain_bytes"),
-        F.sum("g_enc").cast("long").alias("enc_bytes"),
-        F.sum("g_chunks").cast("long").alias("n_chunks"),
-        F.lit(float(wall)).alias("wall_sec"),
-        F.lit("done").alias("status"),
-    ).select(
-        F.lit(run_id).cast("long").alias("run_id"),
-        F.lit(-1 if batch_id is None else int(batch_id)).cast("long").alias("batch_id"),
-        "*",
+    datasource._commit_lineage_rows(
+        path, run_id, rows,
+        "re-run the encode, which will commit under a fresh run id.",
     )
-    # coalesce(1): the lineage append is the COMMIT RECORD, so it must be
-    # all-or-nothing. One task -> one file -> one rename at job commit; a
-    # job killed mid-commit leaves either no lineage rows (batch replays
-    # in full, orphan chunks stay invisible) or all of them — never the
-    # partial visibility a multi-file append allows, which would let the
-    # batch_id replay check treat a half-committed batch as done and
-    # silently drop the missing partitions. The row count is one per
-    # partition (tiny), so the single writer is never a bottleneck.
-    lin.coalesce(1).write.mode("append").parquet(_lineage_dir(path))
-
-    # single-writer enforcement (same check as delete_rows): two
-    # committers racing _next_run_id to one id interleave their chunk
-    # files under the same run dir and double-commit its partitions —
-    # detect post-commit (committed rows for this run != the rows THIS
-    # call appended) and fail loudly rather than let readers see a
-    # mixed, double-counted run.
-    committed = (
-        read_lineage(spark, path).where(F.col("run_id") == run_id).count()
-    )
-    mine = lin.count()
-    if committed != mine:
-        # QUARANTINE the poisoned run before failing: both writers'
-        # chunk files interleave under the same run dir, so its done
-        # rows describe a mixed, double-counted run no retry can repair
-        # (re-running allocates a fresh id; the collided one stays
-        # visible forever). Supersede every committed (run, part) of the
-        # collided run — the same marker mechanism compaction uses —
-        # so readers stop selecting its chunk groups and expire_runs can
-        # reclaim the directory. batch_id = the collided run itself:
-        # time travel to any snapshot at/after the collision sees the
-        # quarantine; earlier snapshots never saw the run at all. Both
-        # racing writers may append markers — duplicates are harmless
-        # (the read path distincts them).
-        parts = (
-            read_lineage(spark, path)
-            .where((F.col("run_id") == run_id) & (F.col("status") == "done"))
-            .select("part_id").distinct().collect()
-        )
-        markers = spark.createDataFrame(
-            [
-                (int(run_id), int(run_id), int(p["part_id"]),
-                 0, 0, 0, 0, 0, float(wall), "superseded")
-                for p in parts
-            ],
-            LINEAGE_SCHEMA,
-        )
-        markers.coalesce(1).write.mode("append").parquet(_lineage_dir(path))
-        raise RuntimeError(
-            f"concurrent commit detected on run {run_id}: {committed} "
-            f"lineage rows landed where this writer appended {mine}. "
-            f"Run {run_id} has been quarantined (all its partitions "
-            "superseded — readers no longer see it; expire_runs reclaims "
-            "its files). Stores are single-writer — re-run the encode, "
-            "which will commit under a fresh run id."
-        )
-
     _record_run_schema(path, run_id, df.schema)
-    agg = lin.agg(
-        F.count(F.lit(1)).alias("parts"),
-        F.sum("n_rows").alias("rows"),
-        F.sum("n_values").alias("values"),
-        F.sum("plain_bytes").alias("plain"),
-        F.sum("enc_bytes").alias("enc"),
-    ).collect()[0]
+    # rows are LINEAGE_SCHEMA tuples: n_rows, n_values, plain_bytes,
+    # enc_bytes sit at 3..6
+    plain = sum(r[5] for r in rows)
+    enc = sum(r[6] for r in rows)
     out = {
         "run_id": run_id,
         "wall_sec": wall,
-        "partitions": agg["parts"],
-        "rows": agg["rows"] or 0,
-        "values": agg["values"] or 0,
-        "plain_bytes": agg["plain"] or 0,
-        "enc_bytes": agg["enc"] or 0,
-        "skipped_partitions": skipped,
-        "compression_ratio": (agg["plain"] or 0) / max(1, agg["enc"] or 0),
+        "partitions": len(rows),
+        "rows": sum(r[3] for r in rows),
+        "values": sum(r[4] for r in rows),
+        "plain_bytes": plain,
+        "enc_bytes": enc,
+        "skipped_partitions": len(done_parts),
+        "compression_ratio": plain / max(1, enc),
     }
-    if skipped and not out["rows"]:
-        # the resume anti-join dropped EVERYTHING: this call was a
-        # no-op. Correct for a true resume of a completed encode, but
-        # the classic footgun when the caller meant to APPEND a second
-        # dataset (part ids collide with the committed run's). Say so
-        # in the result instead of leaving a silent empty run.
+    if done_parts and not out["rows"]:
+        # resume dropped EVERYTHING: this call was a no-op. Correct for
+        # a true resume of a completed encode, but the classic footgun
+        # when the caller meant to APPEND a second dataset (part ids
+        # collide with the committed run's). Say so in the result
+        # instead of leaving a silent empty run.
         out["hint"] = (
             "all partitions were already committed (resume semantics); "
             "to APPEND a new dataset to this store pass resume=False "
@@ -572,24 +458,18 @@ def delete_rows(
     # check): a key column present in keys_df but absent from the store
     # would commit cleanly and then poison EVERY subsequent read — the
     # reader cannot find the key column to match and there is no
-    # supported undo. Resolve the store schema from chunk metadata
-    # (O(columns) collect) and refuse up front. An empty store (no
-    # committed data runs yet) has no schema to check against — the
-    # delete is legal (it applies to nothing) and later appends define
-    # the schema, so validation is skipped there.
-    from pyspark.errors import AnalysisException
-
-    try:
-        committed = read_committed_chunks(spark, path)
-        has_data = bool(committed.limit(1).count())
-    except AnalysisException:
-        # fresh store (no chunks dir): the delete applies to nothing
-        # and later appends define the schema. Real read failures
-        # propagate — see _check_schema_evolution.
-        has_data = False
-    if has_data:
-        store_fields = {f.name: _logical_of(f)
-                        for f in output_schema_of_chunks(committed)}
+    # supported undo. Resolve the store schema from chunk metadata with
+    # pyarrow and refuse up front. An empty store (no committed data
+    # runs yet) has no schema to check against — the delete is legal
+    # (it applies to nothing) and later appends define the schema, so
+    # validation is skipped there. A read failure (a corrupt footer)
+    # propagates: skipping the guard would let a poisoning delete commit.
+    live, _ = datasource._lineage_plan(path)
+    if live:
+        store_fields = {
+            f.name: _logical_of(f)
+            for f in datasource._recover_store_schema(path, live)
+        }
         missing = [c for c in key_cols if c not in store_fields]
         if missing:
             raise ValueError(
@@ -622,37 +502,25 @@ def delete_rows(
             )
     run_id = _next_run_id(spark, path)
     keys = keys_df.select(*key_cols).distinct()
+    key_dir = f"{_deletes_dir(path)}/run_id={run_id}"
     # overwrite is belt-and-braces: _next_run_id never hands out an id
     # with files already on disk (a crashed attempt's orphan key files
     # keep their id forever; vacuum_store reclaims them), so this dir is
     # always fresh — overwrite guards the invariant anyway
-    keys.write.mode("overwrite").parquet(
-        f"{_deletes_dir(path)}/run_id={run_id}"
-    )
-    n = spark.read.parquet(f"{_deletes_dir(path)}/run_id={run_id}").count()
-    wall = time.time() - t0
-    marker = spark.createDataFrame(
-        [(int(run_id), -1, -1, int(n), 0, 0, 0, 0, float(wall), "delete")],
-        LINEAGE_SCHEMA,
-    )
-    marker.coalesce(1).write.mode("append").parquet(_lineage_dir(path))
+    keys.write.mode("overwrite").parquet(key_dir)
+    n = sum(pq.read_metadata(f).num_rows
+            for f in datasource._list_parquet(key_dir))
     # Stores are SINGLE-WRITER (same contract as encode/compact): two
     # concurrent committers can race _next_run_id to the same id, and
     # the overwrite key-file write means only the last writer's list
-    # survives. Detect the collision post-commit and fail LOUDLY — a
-    # silently dropped takedown list is the one unacceptable outcome.
-    n_markers = (
-        read_lineage(spark, path)
-        .where(F.col("run_id") == int(run_id))
-        .count()
+    # survives — the commit check fails LOUDLY then, since a silently
+    # dropped takedown list is the one unacceptable outcome.
+    datasource._commit_lineage_rows(
+        path, run_id,
+        [(run_id, -1, -1, n, 0, 0, 0, 0, time.time() - t0, "delete")],
+        "only the last-written key files survive; re-apply this delete "
+        "list.",
     )
-    if n_markers != 1:
-        raise RuntimeError(
-            f"concurrent commit detected on run {run_id}: {n_markers} "
-            "lineage rows share the id and only the last-written key "
-            "files survive. Stores are single-writer — re-apply this "
-            "delete list."
-        )
     return {"run_id": run_id, "keys": int(n), "wall_sec": time.time() - t0}
 
 
@@ -1020,7 +888,7 @@ def compact_store(
         # it may name the latest commit, nothing older. Max COMMITTED
         # run, not _next_run_id - 1: uncommitted orphan dirs (crashed
         # writers) occupy higher ids on disk without being commits.
-        latest = _max_committed_run(spark, path)
+        latest = datasource._lineage_max_run(path)
         if int(as_of_run) < latest:
             raise ValueError(
                 f"compact_store(as_of_run={as_of_run}) is older than the "
@@ -1112,60 +980,28 @@ def compact_store(
         .parquet(_chunks_dir(path))
     )
     wall = time.time() - t0
-    written = spark.read.parquet(_chunks_dir(path)).where(
-        F.col("run_id") == run_id
-    )
-    lin = written.groupBy("part_id").agg(
-        F.max("n_rows").cast("long").alias("n_rows"),
-        F.sum("n_values").cast("long").alias("n_values"),
-        F.sum("plain_bytes").cast("long").alias("plain_bytes"),
-        F.sum("enc_bytes").cast("long").alias("enc_bytes"),
-        F.count(F.lit(1)).cast("long").alias("n_chunks"),
-        F.lit(float(wall)).alias("wall_sec"),
-        F.lit("done").alias("status"),
-    ).select(
-        F.lit(run_id).cast("long").alias("run_id"),
-        F.lit(-1).cast("long").alias("batch_id"),
-        "*",
-    )
-    # n_rows per partition: groups have per-page n_rows; recompute as the
-    # sum over distinct chunk groups (max over the group's columns)
-    per_group = written.groupBy("part_id", "chunk_id").agg(
-        F.max("n_rows").alias("g_rows")
-    )
-    rows_per_part = per_group.groupBy("part_id").agg(
-        F.sum("g_rows").cast("long").alias("n_rows2")
-    )
-    lin = (
-        lin.join(rows_per_part, "part_id")
-        .drop("n_rows").withColumnRenamed("n_rows2", "n_rows")
-        .select(*[f.name for f in LINEAGE_SCHEMA.fields])
-    )
-    markers = spark.createDataFrame(
-        [
-            (int(r["run_id"]), int(run_id), int(r["part_id"]),
-             0, 0, 0, 0, 0, float(wall), "superseded")
-            for r in old
-        ]
-        + [
-            # fully-retired delete runs: part_id -1 is the whole-run
-            # marker read_delete_sets filters on. A delete some
-            # REMAINING run still predates stays live — its keys keep
-            # applying to the runs this compaction didn't rewrite.
-            (int(dr), int(run_id), -1, 0, 0, 0, 0, 0, float(wall),
-             "superseded")
-            for dr in dead_deletes
-        ],
-        LINEAGE_SCHEMA,
-    )
-    # ONE single-file append = the atomic publish-and-supersede commit
-    lin.unionByName(markers).coalesce(1).write.mode("append").parquet(
-        _lineage_dir(path)
+    rows = datasource._chunk_lineage_rows(path, run_id, -1, wall)
+    markers = [
+        (int(r["run_id"]), run_id, int(r["part_id"]), 0, 0, 0, 0, 0,
+         float(wall), "superseded")
+        for r in old
+    ] + [
+        # fully-retired delete runs: part_id -1 is the whole-run marker
+        # read_delete_sets filters on. A delete some REMAINING run still
+        # predates stays live — its keys keep applying to the runs this
+        # compaction didn't rewrite.
+        (int(dr), run_id, -1, 0, 0, 0, 0, 0, float(wall), "superseded")
+        for dr in dead_deletes
+    ]
+    # ONE file = the atomic publish-and-supersede commit
+    datasource._commit_lineage_rows(
+        path, run_id, rows + markers,
+        "re-run the compaction, which will commit under a fresh run id.",
     )
     _record_run_schema(path, run_id, df.schema)
     return {
         "run_id": run_id,
-        "partitions": int(lin.count()),
+        "partitions": len(rows),
         "superseded": len(old),
         "selected_runs": sorted(selected),
         "bytes_selected": bytes_selected,

@@ -551,3 +551,70 @@ def test_resume_noop_append_carries_hint(spark, tmp_path):
     # the intended append works and carries no hint
     r3 = encode_with_lineage(df, store, num_partitions=2, resume=False)
     assert r3["rows"] == 20 and "hint" not in r3
+
+
+def _spark_lineage_oracle(spark, path, run_id, batch_id=-1):
+    """The per-part done rows of ``run_id`` as the Spark aggregation
+    over the run's chunk files computes them: rows = sum over page
+    groups of the group's max n_rows, n_chunks = chunk rows."""
+    per_group = (
+        spark.read.parquet(f"{path}/chunks")
+        .where(F.col("run_id") == run_id)
+        .groupBy("part_id", "chunk_id")
+        .agg(
+            F.max("n_rows").alias("g_rows"),
+            F.sum("n_values").alias("g_values"),
+            F.sum("plain_bytes").alias("g_plain"),
+            F.sum("enc_bytes").alias("g_enc"),
+            F.count(F.lit(1)).alias("g_chunks"),
+        )
+    )
+    rows = per_group.groupBy("part_id").agg(
+        F.sum("g_rows").alias("n_rows"),
+        F.sum("g_values").alias("n_values"),
+        F.sum("g_plain").alias("plain_bytes"),
+        F.sum("g_enc").alias("enc_bytes"),
+        F.sum("g_chunks").alias("n_chunks"),
+    ).collect()
+    return sorted(
+        (run_id, batch_id, r["part_id"], r["n_rows"], r["n_values"],
+         r["plain_bytes"], r["enc_bytes"], r["n_chunks"], "done")
+        for r in rows
+    )
+
+
+def _committed_rows(spark, path, run_id):
+    cols = [f.name for f in read_lineage(spark, path).schema.fields
+            if f.name != "wall_sec"]
+    return sorted(
+        tuple(r) for r in read_lineage(spark, path)
+        .where((F.col("run_id") == run_id) & (F.col("status") == "done"))
+        .select(*cols).collect()
+    )
+
+
+def test_commit_rows_match_the_spark_aggregation(spark, tokens_df, tmp_path):
+    """The driver-side commit record equals the Spark aggregation over
+    the run's chunk files, column for column (wall time aside), for a
+    plain encode, a resume after lost partitions, a streaming batch and
+    a compaction."""
+    from pysparkenc.lineage import compact_store
+
+    path = str(tmp_path / "enc")
+    kw = dict(partition_by=("source", "doc_id"), num_partitions=N_PARTS)
+    runs = []
+    m = encode_with_lineage(tokens_df, path, drop_part_ids=frozenset({0, 1}),
+                            **kw)
+    runs.append((m["run_id"], -1, N_PARTS - 2))
+    m = encode_with_lineage(tokens_df, path, **kw)  # resume
+    runs.append((m["run_id"], -1, 2))
+    m = encode_with_lineage(tokens_df.limit(50), path, resume=False,
+                            batch_id=4, rows_per_chunk=16, **kw)
+    runs.append((m["run_id"], 4, m["partitions"]))
+    m = compact_store(spark, path, num_partitions=3)
+    runs.append((m["run_id"], -1, 3))
+    for run_id, batch_id, n_parts in runs:
+        want = _spark_lineage_oracle(spark, path, run_id, batch_id)
+        assert len(want) == n_parts
+        assert _committed_rows(spark, path, run_id) == want
+    assert m["partitions"] == 3

@@ -339,3 +339,43 @@ def test_read_store_with_deletes_plans_no_exchange(spark, tmp_path):
     assert "Exchange" not in plan
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _jobs_in(spark, group: str, action) -> int:
+    """Spark jobs ``action`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_encode_with_lineage_jobs_match_a_plain_write(spark, tmp_path):
+    """The lineage commit (replay and resume reads, run-id allocation,
+    schema guard, commit record, collision check) runs on the driver
+    with pyarrow: committing a run into a fresh store starts no more
+    Spark jobs than writing the same encoded chunks as plain
+    partitioned parquet."""
+    from pysparkenc.engine import encode_table
+    from pysparkenc.lineage import encode_with_lineage
+    from pysparkenc.synth import make_tokens_table
+
+    src = str(tmp_path / "src")
+    make_tokens_table(spark, 300, seed=9).write.parquet(src)
+    df = spark.read.parquet(src)
+    kw = dict(partition_by=("source", "doc_id"), num_partitions=4)
+
+    def plain(out):
+        (encode_table(df, **kw).withColumn("run_id", F.lit(1))
+         .write.partitionBy("run_id").parquet(str(tmp_path / out)))
+
+    def lineage():
+        assert encode_with_lineage(df, str(tmp_path / "store"),
+                                   **kw)["rows"] == 300
+
+    plain("warm-up")  # the session's first encode starts one-off jobs
+    want = _jobs_in(spark, "plain-write", lambda: plain("plain"))
+    got = _jobs_in(spark, "lineage-write", lineage)
+    assert 0 < got <= want, (got, want)

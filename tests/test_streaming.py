@@ -158,6 +158,49 @@ def test_read_lineage_tolerates_pre_batch_id_dirs(spark, tmp_path):
     assert lin[0]["n_rows"] == 10 and lin[0]["status"] == "done"
 
 
+def test_replay_and_resume_on_pre_batch_id_lineage(spark, tmp_path):
+    """The driver-side replay and resume reads handle a lineage dir
+    whose files predate the batch_id column (and declare other
+    nullability than the commit writer): the missing batch_id reads as
+    -1, a batch replay is still a no-op, and a resume still skips the
+    committed parts."""
+    import shutil
+
+    from pysparkenc.lineage import (
+        encode_with_lineage,
+        read_lineage,
+        read_store,
+    )
+
+    enc = str(tmp_path / "enc")
+    df = make_tokens_table(spark, 80, seed=31)
+    kw = dict(partition_by=("source", "doc_id"), num_partitions=4)
+    first = encode_with_lineage(df, enc, drop_part_ids=frozenset({2}), **kw)
+    old = read_lineage(spark, enc).drop("batch_id").collect()
+    shutil.rmtree(f"{enc}/lineage")
+    spark.createDataFrame(
+        old,
+        "run_id long, part_id long, n_rows long, n_values long, "
+        "plain_bytes long, enc_bytes long, n_chunks long, wall_sec double, "
+        "status string",
+    ).write.parquet(f"{enc}/lineage")
+
+    resumed = encode_with_lineage(df, enc, **kw)
+    assert resumed["skipped_partitions"] == first["partitions"] == 3
+    assert first["rows"] + resumed["rows"] == 80
+
+    more = make_tokens_table(spark, 20, seed=32).withColumn(
+        "doc_id", F.concat(F.lit("b_"), F.col("doc_id")))
+    b = encode_with_lineage(more, enc, resume=False, batch_id=0, **kw)
+    assert b["rows"] == 20 and "replayed_batch" not in b
+    again = encode_with_lineage(more, enc, resume=False, batch_id=0, **kw)
+    assert again["replayed_batch"] and again["skipped_partitions"] == (
+        b["partitions"])
+    assert read_store(spark, enc).count() == 100
+    assert {r["batch_id"] for r in read_lineage(spark, enc).collect()} == (
+        {-1, 0})
+
+
 def test_stream_rejects_batch_frame(spark, tmp_path):
     import pytest
 
