@@ -29,7 +29,7 @@ from pysparkenc import multimodal as mm
 from pysparkenc import similarity as sim
 from pysparkenc import textops as tx
 from pysparkenc.dedup import minhash_params
-from pysparkenc.engine import decode_table, encode_table, footer
+from pysparkenc.engine import decode_table, encode_table, footer, scan_table
 from pysparkenc.synth import SOURCES, make_tokens_table
 
 P31 = tx.MERSENNE31
@@ -737,15 +737,13 @@ def q_pruned_isin_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-list dict-page pushdown: the membership probe is tested against
     each chunk's dictionary page; groups whose dictionary holds none of
     the probe values are skipped before any value decode."""
-    from pysparkenc.engine import decode_table_where_isin
-
     df = _read(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
     # persist: the prune probe and the decode are two branches over the
     # same chunks relation (see q_pruned_dict_scan)
     chunks = encode_table(df, partition_by=("lang", "doc_id")).persist()
-    out = decode_table_where_isin(chunks, df.schema, "lang", ["de", "fr"])
+    out = scan_table(chunks, df.schema, where=[("lang", "in", ["de", "fr"])])
     return out.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("sum_chars"),
@@ -763,7 +761,6 @@ def q_pruned_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-of-range absent one; tests/test_bloom.py pins the skip counts,
     this query pins exactness under the value-hash gate."""
     from pysparkenc.caching import tether
-    from pysparkenc.engine import decode_table_where_isin
 
     df = _read(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
@@ -773,7 +770,7 @@ def q_pruned_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         df, partition_by=("source", "doc_id"), bloom=["doc_id"]
     ).persist()
     probe = [3, 17, 23, 170, 171, 999_999_999]
-    out = decode_table_where_isin(chunks, df.schema, "doc_id", probe)
+    out = scan_table(chunks, df.schema, where=[("doc_id", "in", probe)])
     return tether(
         out.select("doc_id", "lang", "source", "n_chars"), chunks
     )
@@ -796,15 +793,14 @@ def q_pruned_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stat-pruned decode (reference's row-group skip re-expressed): only
     chunk groups whose l_orderkey [min,max] overlaps the range are
     decoded, then the exact predicate + aggregate run on the survivors."""
-    from pysparkenc.engine import decode_table_where
-
     df = _read(spark, sf_dir, "lineitem")
     # persist: the prune probe and the decode are two branches over the
     # same chunks relation; persisting stands in for chunks already on
     # storage (where the probe is a column-pruned metadata scan) instead
     # of re-running the inline encode per branch.
     chunks = encode_table(df, partition_by=("l_returnflag", "l_orderkey")).persist()
-    out = decode_table_where(chunks, df.schema, "l_orderkey", 1000, 5000)
+    out = scan_table(chunks, df.schema,
+                     where=[("l_orderkey", "between", (1000, 5000))])
     return (
         out.groupBy("l_returnflag")
         .agg(
@@ -822,8 +818,6 @@ def q_pruned_string_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     datastore/byte-array.go:8-12) let a doc_id range drop whole chunk
     groups before any payload decode; partitioning by source keeps chunk
     string ranges tight."""
-    from pysparkenc.engine import decode_table_where
-
     df = _read(spark, sf_dir, "documents").select(
         F.concat(F.lit("doc-"),
                  F.lpad(F.col("doc_id").cast("string"), 6, "0")).alias("key"),
@@ -835,8 +829,8 @@ def q_pruned_string_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # storage (where the probe is a column-pruned metadata scan) instead
     # of re-running the inline encode per branch.
     chunks = encode_table(df, partition_by=("source", "key")).persist()
-    out = decode_table_where(chunks, df.schema, "key",
-                             "doc-000100", "doc-000300")
+    out = scan_table(chunks, df.schema,
+                     where=[("key", "between", ("doc-000100", "doc-000300"))])
     return out.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.min("key").alias("min_id"),
@@ -853,8 +847,6 @@ def q_pruned_dict_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the reference's dict pages are decode-internal,
     layout/page-dict.go). Partitioning by lang makes most groups
     single-lang, so the probe drops nearly everything."""
-    from pysparkenc.engine import decode_table_where_equals
-
     df = _read(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
@@ -863,7 +855,7 @@ def q_pruned_dict_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # storage (where the probe is a column-pruned metadata scan) instead
     # of re-running the inline encode per branch.
     chunks = encode_table(df, partition_by=("lang", "doc_id")).persist()
-    out = decode_table_where_equals(chunks, df.schema, "lang", "de")
+    out = scan_table(chunks, df.schema, where=[("lang", "==", "de")])
     return out.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("sum_chars"),

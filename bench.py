@@ -1,14 +1,17 @@
 #!/usr/bin/env python3
 """Benchmark harness for the PySpark-native columnar encoding engine.
 
-Default mode (what the driver runs):
+Default mode:
     python bench.py
 Runs the headline queries from ``__spark_entry__.queries()`` at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
-    {"metric": ..., "value": <total sec>, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": ..., "tokens_per_sec": ...,
-     "compression_ratio": ...}
+``local[$SPARK_GRAFT_CPUS]``, writes the full result (per-query,
+isolated and host-probe detail) to BENCH_DETAIL.json and ends stdout
+with ONE compact JSON headline line (under 2 KB, so a tail capture of
+the output keeps it whole):
+    {"metric": ..., "value": <total sec>, "unit": "sec", "sf": ...,
+     "cpus": ..., "flagship_tokens": ..., "tokens_per_sec": ...,
+     "compression_ratio": ..., "detail": "BENCH_DETAIL.json"}
 
 Scaling mode (north_rule evidence, in-sandbox stand-in for N vs 4N
 executors — same job, same deterministic input, two parallelism levels):
@@ -34,6 +37,8 @@ import time
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPO = os.path.dirname(os.path.abspath(__file__))
+HEADLINE_KEYS = ("metric", "value", "unit", "sf", "cpus", "flagship_tokens",
+                 "tokens_per_sec", "compression_ratio")
 
 
 def make_spark(cpus: int, shuffle_partitions: int | None = None):
@@ -909,7 +914,8 @@ Compression ratio (plain/encoded, auto-selected codecs): {s['compression_ratio']
   (`tests/test_size_vs_parquet.py`).
 
 Reproduce: `python bench.py --scaling --rows {s['rows']}`.
-Headline per-query timings land in BENCH_r{{N}}.json via `python bench.py`;
+`python bench.py` ends with a compact headline line and writes the
+per-query timings to BENCH_DETAIL.json;
 the query suite runs best-of-2 full passes (override with `BENCH_PASSES`)
 and the flagship encode best-of-3 trials, because the shared host shows
 multi-minute contention windows that can tax one section of a single
@@ -1148,6 +1154,16 @@ def run_distinct_bench(n_rows: int, cpus: int, trials: int = 5) -> dict:
         spark.stop()
 
 
+def emit_headline(result: dict, detail_path: str) -> None:
+    """Write the full bench result to ``detail_path`` and print the
+    compact headline as the last stdout line."""
+    with open(detail_path, "w") as f:
+        json.dump(result, f, indent=1)
+    head = {k: result.get(k) for k in HEADLINE_KEYS}
+    head["detail"] = os.path.basename(detail_path)
+    print(json.dumps(head))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scaling", action="store_true")
@@ -1185,7 +1201,9 @@ def main() -> None:
     elif args.compact_bench:
         out = run_compact_bench(args.rows, args.cpus)
     else:
-        out = run_bench(args.sf_dir, args.cpus)
+        emit_headline(run_bench(args.sf_dir, args.cpus),
+                      os.path.join(REPO, "BENCH_DETAIL.json"))
+        return
     print(json.dumps(out))
 
 

@@ -153,7 +153,7 @@ def _stats_numeric(values: np.ndarray) -> tuple[float | None, float | None]:
     - num_min = nanmin: the true smallest value (NaN sorts greatest, so it
       can never be the min unless the chunk is all-NaN);
     - num_max = plain max: NaN when any NaN is present — semantically the
-      max under NaN-greatest ordering, and ``prune_chunks`` treats a NaN
+      max under NaN-greatest ordering, and page-group pruning treats a NaN
       max as "unbounded above" so lo-bounded scans keep the chunk.
     """
     if values.size == 0:

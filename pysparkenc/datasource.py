@@ -31,11 +31,11 @@ Scale design:
   IsNotNull / StringStartsWith predicates on top-level scalar columns
   prune whole page groups per file — dictionary-page membership probes
   for ``dict_rle`` chunks, NaN-safe min/max and truncation-safe
-  smin/smax otherwise (the same :func:`engine._chunk_passes_isin` /
-  :func:`engine._chunk_passes_range` predicates the engine's Spark-side
-  pruning uses). Every filter is also returned to Spark for
-  re-evaluation, so pruning is a pure optimization and can never drop a
-  row it shouldn't: a group survives unless the stats *prove* it empty.
+  smin/smax otherwise, decided by :func:`engine._group_passes` (the
+  one page-group evaluator, which ``scan_table`` and ``read_store`` run
+  too). Every filter is also returned to Spark for re-evaluation, so
+  pruning is a pure optimization and can never drop a row it
+  shouldn't: a group survives unless the stats *prove* it empty.
   Caveat: Spark 4.1 reuses the reader planned with a DataFrame's last
   pushed filters for later queries on it that push none, so a
   ``load()`` DataFrame queried with a filter and then without one reads
@@ -405,17 +405,6 @@ def _delete_drop_mask(
 # reader
 # ---------------------------------------------------------------------------
 
-@dataclass
-class _Pushed:
-    """Picklable pruning predicate for one column."""
-
-    col: str
-    kind: str  # "isin" | "range" | "notnull"
-    values: tuple = ()
-    lo: object = None
-    hi: object = None
-
-
 _EPOCH_DATE = datetime.date(1970, 1, 1)
 _EPOCH_NTZ = datetime.datetime(1970, 1, 1)
 _EPOCH_UTC = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
@@ -465,7 +454,9 @@ def _physical_value(logical: str, v):
     return v
 
 
-def _to_pushed(filters: Sequence[Filter], schema: StructType) -> list[_Pushed]:
+def _to_pushed(
+    filters: Sequence[Filter], schema: StructType
+) -> list[engine._Pushed]:
     """Translate the prunable subset of Catalyst filters. Only top-level
     scalar columns participate (nested predicates stay Spark-side).
     ``Not`` unwraps for ``IsNull`` (-> not-null prune); other negations
@@ -481,7 +472,7 @@ def _to_pushed(filters: Sequence[Filter], schema: StructType) -> list[_Pushed]:
         if f.dataType.typeName()
         not in ("struct", "array", "map")
     }
-    out: list[_Pushed] = []
+    out: list[engine._Pushed] = []
     for f in filters:
         if isinstance(f, Not):
             inner = f.child
@@ -501,87 +492,18 @@ def _to_pushed(filters: Sequence[Filter], schema: StructType) -> list[_Pushed]:
             if not vals or None in vals:
                 continue
         if isinstance(f, IsNull):
-            out.append(_Pushed(c, "isnull"))
+            out.append(engine._Pushed(c, "isnull"))
         elif isinstance(f, (EqualTo, EqualNullSafe, In)):
-            out.append(_Pushed(c, "isin", vals))
+            out.append(engine._Pushed(c, "isin", vals))
         elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-            out.append(_Pushed(c, "range", lo=vals[0]))
+            out.append(engine._Pushed(c, "range", lo=vals[0]))
         elif isinstance(f, (LessThan, LessThanOrEqual)):
-            out.append(_Pushed(c, "range", hi=vals[0]))
+            out.append(engine._Pushed(c, "range", hi=vals[0]))
         elif isinstance(f, IsNotNull):
-            out.append(_Pushed(c, "notnull"))
+            out.append(engine._Pushed(c, "notnull"))
         elif isinstance(f, StringStartsWith):
-            out.append(_Pushed(c, "prefix", (f.value,)))
+            out.append(engine._Pushed(c, "prefix", (f.value,)))
     return out
-
-
-def where_pushed(where: list[tuple]) -> list[_Pushed]:
-    """Page-group pruning predicates for an AND of
-    :func:`pysparkenc.engine.scan_table` ``where`` entries, whose values
-    are already in the physical domain: ``==`` / ``in`` prune by dict
-    pages, blooms and stats, range ops by stats (strict bounds with the
-    inclusive superset); ``!=``, ``not in`` and ``("or", …)`` entries
-    prune nothing. The caller must still filter the rows: pruning only
-    drops page groups that provably hold no match."""
-    out = []
-    for w in where:
-        if len(w) != 3:  # ("or", [...]): residual-only
-            continue
-        col, op, v = w
-        if op in ("==", "="):
-            out.append(_Pushed(col, "isin", (v,)))
-        elif op == "in":
-            out.append(_Pushed(col, "isin", tuple(v)))
-        elif op in engine._RANGE_OPS:
-            lo, hi = engine._range_bounds(op, v)
-            out.append(_Pushed(col, "range", lo=lo, hi=hi))
-    return out
-
-
-def _group_passes(meta_rows: dict[str, dict], p: _Pushed) -> bool:
-    """Does this page group possibly satisfy predicate ``p``?  Missing
-    chunk/stats keep the group — only provable emptiness drops it."""
-    d = meta_rows.get(p.col)
-    if d is None:
-        return True
-    extra = json.loads(d["extra"] or "{}")
-    if p.kind == "notnull":
-        nr, nc = d["n_rows"], d["null_count"]
-        return not (nr is not None and nc is not None and nc >= nr)
-    if p.kind == "isnull":
-        # IS NULL can only match a group that recorded some nulls
-        nc = d["null_count"]
-        return nc is None or nc > 0
-    if p.kind == "prefix":
-        pref = str(p.values[0])
-        smin, smax = extra.get("smin"), extra.get("smax")
-        if smax is not None and smax < pref:
-            return False
-        if smin is not None and smin > pref and not smin.startswith(pref):
-            return False
-        return True
-    if p.kind == "isin":
-        vals = list(p.values)
-        is_bytes = isinstance(vals[0], (str, bytes))
-        svals = {v if isinstance(v, bytes) else str(v).encode() for v in vals}
-        nvals = None if is_bytes else np.asarray(sorted(vals))
-        hbytes, hints = engine._bloom_probe_hashes(
-            svals if is_bytes else None, nvals
-        )
-        return engine._chunk_passes_isin(
-            d["codec"], d["dtype"], d["n_unique"], d["num_min"], d["num_max"],
-            extra, d["aux"],
-            svals=svals,
-            strs=sorted(s.decode(errors="replace") for s in svals),
-            fvals=None if is_bytes else np.array(sorted(vals), np.float64),
-            nvals=nvals,
-            logical=d.get("logical"),
-            bloom=d.get("bloom"),
-            hbytes=hbytes, hints=hints,
-        )
-    return engine._chunk_passes_range(
-        d["num_min"], d["num_max"], extra, p.lo, p.hi
-    )
 
 
 def _bin_pack(files: list[str], target: int = 32 << 20) -> list[tuple[str, ...]]:
@@ -615,7 +537,7 @@ class ChunkStoreReader(DataSourceReader):
             raise ValueError("pysparkenc reader needs a path")
         self.path = path
         self.user_schema = schema
-        self.pushed: list[_Pushed] = []
+        self.pushed: list[engine._Pushed] = []
         options = options or {}
         aor = options.get("as_of_run")
         self.as_of_run = int(aor) if aor is not None else None
@@ -649,6 +571,8 @@ class ChunkStoreReader(DataSourceReader):
                 "as_of_run is only meaningful on a lineage-managed store "
                 f"(no lineage/ dir under {path})"
             )
+        else:
+            self._widened = self._widened_schema()  # no deletes: as is
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         self.pushed = _to_pushed(filters, self.user_schema)
@@ -657,34 +581,30 @@ class ChunkStoreReader(DataSourceReader):
         return iter(filters)
 
     def partitions(self) -> list[InputPartition]:
-        if self.lineage:
-            parts: list[InputPartition] = []
-            for r in sorted(self.live):
-                run_dir = os.path.join(_chunk_dir(self.path), f"run_id={r}")
-                # bin-pack within a run only: delete sequencing is
-                # per-run (a file's writing run comes from its dir)
-                for g in _bin_pack(_list_parquet(run_dir)):
-                    parts.append(InputPartition(("L", r, g)))
-            return parts or [InputPartition(None)]
-        groups = _bin_pack(_list_chunk_files(self.path))
-        # zero files: one empty partition so the scan yields an empty
-        # DataFrame instead of failing
-        return [InputPartition(g) for g in groups] or [InputPartition(None)]
+        """(run id, files) per read task; the run id is None on a flat
+        store. Zero files: one empty partition so the scan yields an
+        empty DataFrame instead of failing."""
+        if not self.lineage:
+            groups = _bin_pack(_list_chunk_files(self.path))
+            return ([InputPartition((None, g)) for g in groups]
+                    or [InputPartition(None)])
+        parts: list[InputPartition] = []
+        for r in sorted(self.live):
+            run_dir = os.path.join(_chunk_dir(self.path), f"run_id={r}")
+            # bin-pack within a run only: delete sequencing is per-run
+            # (a file's writing run comes from its dir)
+            for g in _bin_pack(_list_parquet(run_dir)):
+                parts.append(InputPartition((r, g)))
+        return parts or [InputPartition(None)]
 
     def read(self, partition: InputPartition):
         if partition.value is None:
             return
-        val = partition.value
-        if isinstance(val, tuple) and len(val) == 3 and val[0] == "L":
-            _, run_id, files = val
-            for f in files:
-                yield from self._read_lineage_file(f, int(run_id))
-            return
-        files = (val,) if isinstance(val, str) else val
+        run_id, files = partition.value
         for f in files:
-            yield from self._read_file(f)
+            yield from self._read_file(f, run_id)
 
-    # -- lineage-store read path ------------------------------------------
+    # -- file decode: delete sets and page-group pruning ----------------
 
     def _widened_schema(self) -> tuple[StructType, list[str]]:
         """User projection widened with every delete key column (the
@@ -728,7 +648,11 @@ class ChunkStoreReader(DataSourceReader):
             out.append((del_run, t))
         return out
 
-    def _read_lineage_file(self, path: str, run_id: int):
+    def _read_file(self, path: str, run_id: int | None):
+        """Decode the page groups of one chunk file that pass
+        ``self.pushed`` (:func:`engine._page_groups`), minus the rows
+        deleted by runs sequenced after ``run_id``. A flat store's file
+        (``run_id`` None) has every part id live and no delete sets."""
         # set in __init__ for every store with live runs — the only
         # callers are partitions planned FROM self.live; falling back
         # to a per-file recompute here would silently reintroduce the
@@ -743,22 +667,20 @@ class ChunkStoreReader(DataSourceReader):
         allowed: set[str] = set()
         for f in decode_schema.fields:
             allowed |= engine._subtree_chunk_names(f.name, f.dataType)
-        live_pids = list(self.live.get(run_id, ()))
+        live = ([] if run_id is None
+                else [("part_id", "in", list(self.live.get(run_id, ())))])
         # DNF filters: (requested columns OR the col_idx-0 anchor chunk)
         # AND committed partitions only (orphan part ids from a crashed
         # encode never decode). The anchor term mirrors decode_table's
         # schema-evolution rule (engine.py): a group written before
         # EVERY requested column existed must still decode — as
         # all-null rows — so one chunk per group must survive to carry
-        # its row count; col_idx 0 exists in every group.
+        # its row count; col_idx 0 exists in every group. Flat appends
+        # require an identical schema, so there it only adds col 0.
         table = pq.read_table(
             path,
-            filters=[
-                [("col", "in", sorted(allowed)),
-                 ("part_id", "in", live_pids)],
-                [("col_idx", "==", 0),
-                 ("part_id", "in", live_pids)],
-            ],
+            filters=[[("col", "in", sorted(allowed)), *live],
+                     [("col_idx", "==", 0), *live]],
         )
         if table.num_rows == 0:
             return
@@ -782,95 +704,16 @@ class ChunkStoreReader(DataSourceReader):
             )
         if self._decoder is None:  # once per task, not per file
             self._decoder = engine._group_decoder(decode_schema)
-        decode_pages = self._decoder
-        pid = table.column("part_id").to_numpy()
-        cid = table.column("chunk_id").to_numpy()
-        order = np.lexsort((cid, pid))
-        table = table.take(pa.array(order))
-        pid, cid = pid[order], cid[order]
-        keys = pid * (int(cid.max()) + 1 if cid.size else 1) + cid
-        group_starts = np.concatenate(
-            [[0], np.flatnonzero(np.diff(keys)) + 1, [keys.size]]
-        )
-        dels = self._keys_for(run_id)
-        for s, e in zip(group_starts[:-1], group_starts[1:]):
-            if self.pushed:
-                meta_rows = self._group_meta(table, int(s), int(e))
-                if not all(
-                    _group_passes(meta_rows, p) for p in self.pushed
-                ):
-                    continue
-            out = decode_pages(table.slice(int(s), int(e - s)))
+        table, spans = engine._page_groups(table, self.pushed)
+        dels = [] if run_id is None else self._keys_for(run_id)
+        for s, e in spans:
+            out = self._decoder(table.slice(s, e - s))
             for _, keys_tab in dels:
                 mask = _delete_drop_mask(out, keys_tab)
                 if mask is not None:
                     out = out.filter(pc.invert(mask))
             if out.num_rows:
                 yield from out.select(user_cols).to_batches()
-
-    def _group_meta(self, table: pa.Table, s: int, e: int) -> dict:
-        wanted = ["col", "codec", "dtype", "logical", "n_rows",
-                  "null_count", "n_unique", "num_min", "num_max",
-                  "extra", "aux", "bloom"]
-        present = set(table.schema.names)
-        sl = table.slice(s, e - s)
-        cols = {
-            c: (sl.column(c).to_pylist() if c in present
-                else [None] * sl.num_rows)
-            for c in wanted
-        }
-        return {
-            cols["col"][j]: {c: cols[c][j] for c in cols}
-            for j in range(sl.num_rows)
-        }
-
-    def _read_file(self, path: str):
-        schema = self.user_schema
-        allowed: set[str] = set()
-        for f in schema.fields:
-            allowed |= engine._subtree_chunk_names(f.name, f.dataType)
-        table = pq.read_table(
-            path,
-            filters=[("col", "in", sorted(allowed))],
-        )
-        if table.num_rows == 0:
-            return
-        decode_pages = engine._group_decoder(schema)
-        pid = table.column("part_id").to_numpy()
-        cid = table.column("chunk_id").to_numpy()
-        order = np.lexsort((cid, pid))
-        table = table.take(pa.array(order))
-        pid, cid = pid[order], cid[order]
-        keys = pid * (int(cid.max()) + 1 if cid.size else 1) + cid
-        group_starts = np.concatenate(
-            [[0], np.flatnonzero(np.diff(keys)) + 1, [keys.size]]
-        )
-        # page-group pruning against the pushed predicates
-        keep_slices = []
-        if self.pushed:
-            wanted = ["col", "codec", "dtype", "logical", "n_rows",
-                      "null_count", "n_unique", "num_min", "num_max",
-                      "extra", "aux", "bloom"]
-            present = set(table.schema.names)
-            cols = {
-                c: (table.column(c).to_pylist() if c in present
-                    else [None] * table.num_rows)  # pre-bloom stores
-                for c in wanted
-            }
-        for s, e in zip(group_starts[:-1], group_starts[1:]):
-            if self.pushed:
-                meta_rows = {
-                    cols["col"][j]: {c: cols[c][j] for c in cols}
-                    for j in range(s, e)
-                }
-                if not all(
-                    _group_passes(meta_rows, p) for p in self.pushed
-                ):
-                    continue
-            keep_slices.append((int(s), int(e - s)))
-        for s, n in keep_slices:
-            out = decode_pages(table.slice(s, n))
-            yield from out.to_batches()
 
 
 # ---------------------------------------------------------------------------
@@ -1160,8 +1003,8 @@ class ChunkStoreStreamReader(DataSourceStreamReader):
     monotone in batch id), and chunk files are immutable once visible,
     so an offset is simply the high-water file name. Each micro-batch
     reads the files in ``(start, end]`` — one input partition per file,
-    decoded executor-side with the same group decoder as the batch
-    reader. Batch-written ``part-…`` files carry a job-millis prefix, so
+    decoded executor-side by the batch reader's file decoder.
+    Batch-written ``part-…`` files carry a job-millis prefix, so
     successive appends from one driver also sort above the watermark.
     Don't mix writer kinds on a tailed store: ``part-`` names always
     sort below ``stream-`` names, so a batch append to a store already
@@ -1171,7 +1014,7 @@ class ChunkStoreStreamReader(DataSourceStreamReader):
 
     def __init__(self, path: str, schema: StructType):
         self.path = path
-        self.user_schema = schema
+        self._files = ChunkStoreReader(path, schema)  # the file decoder
 
     def initialOffset(self) -> dict:  # noqa: N802 (Spark API name)
         return {"hwm": ""}
@@ -1193,26 +1036,7 @@ class ChunkStoreStreamReader(DataSourceStreamReader):
     def read(self, partition: InputPartition):
         if partition.value is None:
             return
-        schema = self.user_schema
-        allowed: set[str] = set()
-        for f in schema.fields:
-            allowed |= engine._subtree_chunk_names(f.name, f.dataType)
-        table = pq.read_table(
-            partition.value, filters=[("col", "in", sorted(allowed))]
-        )
-        if table.num_rows == 0:
-            return
-        decode_pages = engine._group_decoder(schema)
-        pid = table.column("part_id").to_numpy()
-        cid = table.column("chunk_id").to_numpy()
-        order = np.lexsort((cid, pid))
-        table = table.take(pa.array(order))
-        pid = pid[order]
-        part_starts = np.concatenate(
-            [[0], np.flatnonzero(np.diff(pid)) + 1, [pid.size]]
-        )
-        for s, e in zip(part_starts[:-1], part_starts[1:]):
-            yield from decode_pages(table.slice(int(s), int(e - s))).to_batches()
+        yield from self._files._read_file(partition.value, None)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the query checkpoint; nothing to clean up

@@ -49,6 +49,7 @@ int stream — exactly the Dremel shredding, expressed as columnar chunks.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 from collections.abc import Iterable, Iterator
 
@@ -544,7 +545,7 @@ def _attach_string_stats(ck: chunklib.EncodedChunk, arr: pa.Array) -> None:
     sets (datastore/byte-array.go:8-12). Truncation keeps bounds valid:
     a truncated *min* prefix is still <= every value; a *max* is stored
     only when the full value fits (a truncated max would falsely bound
-    above), otherwise absent = unbounded — prune_chunks keeps the chunk.
+    above), otherwise absent = unbounded — pruning keeps the chunk.
     """
     import pyarrow.compute as pc
 
@@ -729,7 +730,7 @@ def encode_table(
     ``bloom``: chunk paths (same addressing as ``codec`` dict keys —
     ``"doc_id"``, ``"spans#item.label"``) to cover with a per-chunk
     split-block bloom filter, or a dict path -> target FPP (default
-    0.01). Blooms make equality/IN pruning (:func:`prune_chunks_isin`)
+    0.01). Blooms make equality/IN pruning (:func:`_group_passes`)
     decisive on high-cardinality columns where min/max stats span the
     key space and no dict page exists — opt-in, like parquet's
     ``bloom_filter_enabled`` writer property (the reference ships the
@@ -1549,75 +1550,6 @@ def footer(chunks_df: DataFrame) -> DataFrame:
     return chunks_df.drop("data", "aux")
 
 
-def prune_chunks(
-    chunks_df: DataFrame,
-    col: str,
-    lo: float | str | None = None,
-    hi: float | str | None = None,
-) -> DataFrame:
-    """Stat-based chunk-group pruning: keep only chunk groups whose
-    ``col`` min/max range overlaps [lo, hi].
-
-    The Spark-side analogue of the reference's row-group skip
-    (file-reader.go:110-112 SkipRowGroup + chunk seek-skip
-    layout/chunk.go:28-51): per-chunk min/max stats recorded at encode
-    time let a range predicate drop whole groups before any payload byte
-    is decoded. At 100 TB the decode stage then touches only matching
-    groups — this is predicate pushdown *through* the encoded
-    representation.
-    """
-    keep = _prune_keys_range(chunks_df, col, lo, hi)
-    return chunks_df.join(F.broadcast(keep), ["part_id", "chunk_id"],
-                          "left_semi")
-
-
-def _prune_keys_range(
-    chunks_df: DataFrame,
-    col: str,
-    lo: float | str | None = None,
-    hi: float | str | None = None,
-) -> DataFrame:
-    """The keep-keys side of :func:`prune_chunks`: (part_id, chunk_id)
-    of chunk groups whose ``col`` stats overlap [lo, hi]. Exposed
-    separately so OR disjunctions can UNION branch survivors' keys
-    directly instead of unioning nested semi-joins (see
-    ``scan_table``)."""
-    if isinstance(lo, str) or isinstance(hi, str):
-        # string bounds: lexicographic smin/smax live in the chunk's
-        # extra JSON (absent smax = unbounded after truncation — keep)
-        stats = chunks_df.where(F.col("col") == col).select(
-            "part_id", "chunk_id",
-            F.get_json_object("extra", "$.smin").alias("smin"),
-            F.get_json_object("extra", "$.smax").alias("smax"),
-        )
-        cond = F.lit(True)
-        if lo is not None:
-            mx = F.col("smax")
-            cond = cond & (mx.isNull() | (mx >= str(lo)))
-        if hi is not None:
-            mn = F.col("smin")
-            cond = cond & (mn.isNull() | (mn <= str(hi)))
-        return stats.where(cond).select("part_id", "chunk_id")
-
-    stats = chunks_df.where(F.col("col") == col).select(
-        "part_id", "chunk_id", "num_min", "num_max"
-    )
-    cond = F.lit(True)
-    # NaN/null stats mean "can't bound this chunk" (all-NaN chunk, or a
-    # float chunk containing NaN stores num_max = NaN — see
-    # chunk._stats_numeric): keep it rather than silently dropping rows.
-    # num_min = NaN only for all-NaN chunks; such rows can never satisfy
-    # `col <= hi` under Spark's NaN-greatest ordering, so pruning them on
-    # the hi bound is exact.
-    if lo is not None:
-        mx = F.col("num_max")
-        cond = cond & (mx.isNull() | F.isnan(mx) | (mx >= float(lo)))
-    if hi is not None:
-        mn = F.col("num_min")
-        cond = cond & (mn.isNull() | (~F.isnan(mn) & (mn <= float(hi))))
-    return stats.where(cond).select("part_id", "chunk_id")
-
-
 def _bloom_probe_hashes(svals, nvals):
     """Precomputed uint64 probe hashes for bloom consults: ``hbytes``
     over the encoded byte probes, ``hints`` over integer probes (only
@@ -1674,9 +1606,8 @@ def _chunk_passes_isin(
     hbytes=None,
     hints=None,
 ) -> bool:
-    """Single-chunk IN-list probe shared by :func:`prune_chunks_isin`
-    (executor-side over footer batches) and the ``pysparkenc`` data
-    source reader (per input file). ``fvals`` is a sorted float64 array
+    """Single-chunk IN-list probe of :func:`_group_passes` (probe sets
+    from :func:`_isin_probe`). ``fvals`` is a sorted float64 array
     for numeric probes or None for string/bytes probes (``svals`` =
     encoded byte set, ``strs`` = sorted decoded strings); ``nvals``
     keeps the probe values in their exact dtype for the dict-page
@@ -1742,8 +1673,8 @@ def _chunk_passes_isin(
 
 
 def _chunk_passes_range(num_min, num_max, extra: dict, lo, hi) -> bool:
-    """Single-chunk range-overlap test (the local mirror of
-    :func:`prune_chunks`' DataFrame condition, NaN/missing-stat-safe).
+    """Single-chunk range-overlap test of :func:`_group_passes`,
+    NaN/missing-stat-safe.
     String bounds consult the truncation-safe smin/smax in ``extra``."""
     if isinstance(lo, str) or isinstance(hi, str):
         smin, smax = extra.get("smin"), extra.get("smax")
@@ -1766,125 +1697,195 @@ def _chunk_passes_range(num_min, num_max, extra: dict, lo, hi) -> bool:
     return True
 
 
-def _prune_keys_isin(
-    chunks_df: DataFrame,
-    col: str,
-    values,
-) -> DataFrame:
-    """Dictionary-page predicate pushdown for an IN-list (or equality)
-    probe, returning the surviving groups' (part_id, chunk_id) keys.
+# ---------------------------------------------------------------------------
+# page-group pruning: the one evaluator behind scan_table, read_store and
+# the pysparkenc data source (the reference's SkipRowGroup,
+# file-reader.go:110-112, extended with dict-page and bloom probes)
+# ---------------------------------------------------------------------------
 
-    For ``dict_rle`` chunks of ``col``, decode only the (tiny) dictionary
-    page and drop chunk groups whose dictionary contains none of
-    ``values`` — strictly stronger than min/max pruning: a chunk spanning
-    ["apple", "zebra"] overlaps any probe in between, but its dict page
-    proves "mango" absent without touching the code stream. Non-dict
-    chunks fall back to the stat overlap test (num_min/num_max for
-    numerics, smin/smax for strings) — kept if ANY probe value overlaps,
-    and always kept on missing stats.
-
-    The reference's stats-only row-group skip (file-reader.go:110-112)
-    cannot do this — its dict pages are decode-internal. Here the dict
-    page is a first-class ``aux`` payload, so the probe is a narrow
-    metadata-scale pass (one Arrow batch of footer rows + aux, payload
-    ``data`` never read) followed by a broadcast semi-join.
-    """
-    values = list(values)
-    if not values:
-        raise ValueError("prune_chunks_isin needs at least one probe value")
-    is_bytes_probe = isinstance(values[0], (str, bytes))
-    if any(isinstance(v, (str, bytes)) != is_bytes_probe for v in values):
-        raise TypeError("probe values must be all string/bytes or all numeric")
-    bloom_col = (
-        F.col("bloom") if "bloom" in chunks_df.columns
-        else F.lit(None).cast("binary")  # pre-bloom chunk stores
-    )
-    meta = chunks_df.where(F.col("col") == col).select(
-        "part_id", "chunk_id", "codec", "dtype", "logical", "n_unique",
-        "num_min", "num_max", "extra", "aux", bloom_col.alias("bloom"),
-    )
+def _isin_probe(values: tuple) -> dict:
+    """The probe sets :func:`_chunk_passes_isin` takes for an IN list:
+    the encoded byte set, the sorted decoded strings, the sorted
+    float64 and exact-dtype numerics (None for a string probe) and the
+    bloom probe hashes."""
+    is_bytes = isinstance(values[0], (str, bytes))
     svals = {v if isinstance(v, bytes) else str(v).encode() for v in values}
-    strs = sorted(s.decode(errors="replace") for s in svals)
-    fvals = None if is_bytes_probe else np.array(sorted(values), dtype=np.float64)
-    nvals = None if is_bytes_probe else np.asarray(sorted(values))
-    hbytes, hints = _bloom_probe_hashes(svals if is_bytes_probe else None,
-                                        nvals if not is_bytes_probe else None)
-
-    def probe(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            cols = {name: b.column(i) for i, name in enumerate(b.schema.names)}
-            keep_p, keep_c = [], []
-            for i in range(b.num_rows):
-                keep = _chunk_passes_isin(
-                    cols["codec"][i].as_py(),
-                    cols["dtype"][i].as_py(),
-                    cols["n_unique"][i].as_py(),
-                    cols["num_min"][i].as_py(),
-                    cols["num_max"][i].as_py(),
-                    json.loads(cols["extra"][i].as_py() or "{}"),
-                    cols["aux"][i].as_py(),
-                    svals=svals, strs=strs, fvals=fvals, nvals=nvals,
-                    logical=cols["logical"][i].as_py(),
-                    bloom=cols["bloom"][i].as_py(),
-                    hbytes=hbytes, hints=hints,
-                )
-                if keep:
-                    keep_p.append(cols["part_id"][i].as_py())
-                    keep_c.append(cols["chunk_id"][i].as_py())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(keep_p, pa.int64()), pa.array(keep_c, pa.int64())],
-                names=["part_id", "chunk_id"],
-            )
-
-    return meta.mapInArrow(probe, "part_id long, chunk_id long")
+    nvals = None if is_bytes else np.asarray(sorted(values))
+    hbytes, hints = _bloom_probe_hashes(svals if is_bytes else None, nvals)
+    return dict(
+        svals=svals,
+        strs=sorted(s.decode(errors="replace") for s in svals),
+        fvals=None if is_bytes else np.array(sorted(values), np.float64),
+        nvals=nvals, hbytes=hbytes, hints=hints,
+    )
 
 
-def prune_chunks_isin(
-    chunks_df: DataFrame,
-    col: str,
-    values,
-) -> DataFrame:
-    """See :func:`_prune_keys_isin` (the keep-keys computation); this
-    wrapper semi-joins the surviving groups back onto the chunk rows."""
-    keep = _prune_keys_isin(chunks_df, col, values)
-    return chunks_df.join(F.broadcast(keep), ["part_id", "chunk_id"],
-                          "left_semi")
+@dataclasses.dataclass
+class _Pushed:
+    """One picklable page-group pruning predicate, values in the
+    column's physical domain. ``kind`` is ``"isin"`` (``values``),
+    ``"range"`` (``lo``/``hi``, None unbounded), ``"notnull"``,
+    ``"isnull"``, ``"prefix"`` (``values[0]``) or ``"or"`` (``values``
+    holds the branch predicates, ``col`` is None). An IN list's probe
+    sets are built once here, not once per page group."""
+
+    col: str | None
+    kind: str
+    values: tuple = ()
+    lo: object = None
+    hi: object = None
+    probe: dict | None = dataclasses.field(
+        default=None, init=False, repr=False, compare=False
+    )
+
+    def __post_init__(self):
+        if self.kind == "isin":
+            self.probe = _isin_probe(self.values)
+
+    def cols(self) -> set[str]:
+        if self.kind == "or":
+            return set().union(*(b.cols() for b in self.values))
+        return {self.col}
 
 
-def prune_chunks_equals(chunks_df: DataFrame, col: str, value) -> DataFrame:
-    """Single-value form of :func:`prune_chunks_isin`."""
-    return prune_chunks_isin(chunks_df, col, [value])
+def _term_pushed(col: str, op: str, v) -> _Pushed | None:
+    """The pruning predicate of one simple ``where`` term, or None for
+    ``!=`` / ``not in`` (an inequality never proves a group empty)."""
+    if op in ("==", "="):
+        return _Pushed(col, "isin", (v,))
+    if op == "in":
+        return _Pushed(col, "isin", tuple(v))
+    if op in _RANGE_OPS:
+        lo, hi = _range_bounds(op, v)
+        return _Pushed(col, "range", lo=lo, hi=hi)
+    return None
 
 
-def decode_table_where_equals(
-    chunks_df: DataFrame,
-    schema: StructType | None,
-    col: str,
-    value,
-) -> DataFrame:
-    """Equality-filtered decode: dict-page + stat pruning drops whole
-    chunk groups, the exact row predicate runs on the survivors."""
-    if schema is None:
-        schema = output_schema_of_chunks(chunks_df)
-    out = decode_table(prune_chunks_equals(chunks_df, col, value), schema)
-    # residual in the SAME physical domain the prune used (unscaled int
-    # for DECIMAL, micros for timestamps, ...) — see _physical_bound
-    return out.where(F.col(col) == _physical_bound(schema[col], value))
+def where_pushed(where: list[tuple]) -> list[_Pushed]:
+    """Page-group pruning predicates for an AND of :func:`scan_table`
+    ``where`` entries (validated by :func:`plan_scan`): ``==`` / ``in``
+    prune by dict pages, blooms and stats, range ops by stats (strict
+    bounds with the inclusive superset). An ``("or", …)`` entry prunes
+    when every branch can — a group is kept if any branch keeps it —
+    and prunes nothing if a branch is ``!=`` / ``not in``. The caller
+    still filters the rows: pruning only drops page groups that
+    provably hold no match."""
+    out = []
+    for w in where:
+        branches = [_term_pushed(*t) for t in _or_terms(w)]
+        if any(b is None for b in branches):
+            continue
+        out.append(branches[0] if len(branches) == 1
+                   else _Pushed(None, "or", tuple(branches)))
+    return out
 
 
-def decode_table_where_isin(
-    chunks_df: DataFrame,
-    schema: StructType | None,
-    col: str,
-    values,
-) -> DataFrame:
-    """IN-list-filtered decode: dict-page + stat pruning drops whole
-    chunk groups, the exact membership predicate runs on the survivors."""
-    if schema is None:
-        schema = output_schema_of_chunks(chunks_df)
-    values = list(values)
-    out = decode_table(prune_chunks_isin(chunks_df, col, values), schema)
-    return out.where(_isin_physical(schema[col], values))
+def _group_passes(meta: dict[str, dict], p: _Pushed) -> bool:
+    """THE page-group skip decision: can the group whose chunk footer
+    rows are ``meta`` (chunk name -> row) hold a row satisfying ``p``?
+    False only when the footer proves it cannot; missing stats keep
+    the group. A group with no chunk for ``p.col`` was written before
+    the column existed and decodes as all-null rows, so only IS NULL
+    can match it."""
+    if p.kind == "or":
+        return any(_group_passes(meta, b) for b in p.values)
+    d = meta.get(p.col)
+    if d is None:
+        return p.kind == "isnull"
+    if p.kind == "notnull":
+        nr, nc = d["n_rows"], d["null_count"]
+        return not (nr is not None and nc is not None and nc >= nr)
+    if p.kind == "isnull":
+        # IS NULL can only match a group that recorded some nulls
+        nc = d["null_count"]
+        return nc is None or nc > 0
+    extra = json.loads(d["extra"] or "{}")
+    if p.kind == "prefix":
+        pref = str(p.values[0])
+        smin, smax = extra.get("smin"), extra.get("smax")
+        if smax is not None and smax < pref:
+            return False
+        if smin is not None and smin > pref and not smin.startswith(pref):
+            return False
+        return True
+    if p.kind == "isin":
+        return _chunk_passes_isin(
+            d["codec"], d["dtype"], d["n_unique"], d["num_min"], d["num_max"],
+            extra, d["aux"], logical=d["logical"], bloom=d["bloom"],
+            **p.probe,
+        )
+    return _chunk_passes_range(d["num_min"], d["num_max"], extra, p.lo, p.hi)
+
+
+_META_COLS = ("col", "codec", "dtype", "logical", "n_rows", "null_count",
+              "n_unique", "num_min", "num_max", "extra", "aux", "bloom")
+
+
+def _page_groups(
+    table: pa.Table, pushed: list[_Pushed]
+) -> tuple[pa.Table, list[tuple[int, int]]]:
+    """Chunk rows sorted by (part_id, chunk_id), and the [start, end)
+    row span of every page group that passes every predicate in
+    ``pushed`` (:func:`_group_passes` over the group's predicate-column
+    footer rows)."""
+    import pyarrow.compute as pc
+
+    pid = table.column("part_id").to_numpy()
+    cid = table.column("chunk_id").to_numpy()
+    order = np.lexsort((cid, pid))
+    table = table.take(pa.array(order))
+    pid, cid = pid[order], cid[order]
+    keys = pid * (int(cid.max()) + 1 if cid.size else 1) + cid
+    cuts = np.concatenate(
+        [[0], np.flatnonzero(np.diff(keys)) + 1, [keys.size]]
+    )
+    spans = [(int(s), int(e)) for s, e in zip(cuts[:-1], cuts[1:])]
+    if not pushed:
+        return table, spans
+    pcols = pa.array(sorted(set().union(*(p.cols() for p in pushed))),
+                     pa.string())
+    rows = np.flatnonzero(
+        pc.is_in(table.column("col"), value_set=pcols)
+        .to_numpy(zero_copy_only=False)
+    )
+    meta = table.take(pa.array(rows, pa.int64()))
+    have = set(meta.schema.names)
+    vals = {c: (meta.column(c).to_pylist() if c in have
+                else [None] * len(rows))  # pre-bloom stores
+            for c in _META_COLS}
+    at = np.searchsorted(rows, cuts)
+    kept = []
+    for i, span in enumerate(spans):
+        group = {vals["col"][j]: {c: vals[c][j] for c in _META_COLS}
+                 for j in range(at[i], at[i + 1])}
+        if all(_group_passes(group, p) for p in pushed):
+            kept.append(span)
+    return table, kept
+
+
+def _kept_groups(chunks_df: DataFrame, pushed: list[_Pushed]) -> DataFrame:
+    """(part_id, chunk_id) of the page groups that pass every predicate
+    in ``pushed``. One metadata-only pass over the predicate columns'
+    footer rows (the payload ``data`` is never read), grouped by part so
+    each Python call sees whole page groups, through the same
+    :func:`_page_groups` evaluator the file-local reader runs. A group
+    with no chunk for any predicate column never reaches the pass, which
+    is what the evaluator decides for it under every ``where`` op."""
+    cols = sorted(set().union(*(p.cols() for p in pushed)))
+    bloom = (F.col("bloom") if "bloom" in chunks_df.columns
+             else F.lit(None).cast("binary"))  # pre-bloom chunk stores
+    meta = chunks_df.where(F.col("col").isin(cols)).select(
+        "part_id", "chunk_id", *_META_COLS[:-1], bloom.alias("bloom")
+    )
+
+    def keep(t: pa.Table) -> pa.Table:
+        t, spans = _page_groups(t, pushed)
+        starts = pa.array([s for s, _ in spans], pa.int64())
+        return t.select(["part_id", "chunk_id"]).take(starts)
+
+    return meta.groupBy("part_id").applyInArrow(
+        keep, "part_id long, chunk_id long"
+    )
 
 
 def count_rows(chunks_df: DataFrame) -> int:
@@ -2051,30 +2052,6 @@ def distinct_values(
     # unsupported fast-path logical (wide decimal FLBA dicts, bool):
     # plain projected decode — still column-pruned to one column
     return decode_table(chunks_df, StructType([field])).distinct()
-
-
-def decode_table_where(
-    chunks_df: DataFrame,
-    schema: StructType | None,
-    col: str,
-    lo: float | str | None = None,
-    hi: float | str | None = None,
-) -> DataFrame:
-    """Range-filtered decode: prune chunk groups by footer stats, decode
-    the survivors, then apply the exact row-level predicate.
-
-    Bounds are given in the column's *physical* numeric domain (the one
-    the footer stats live in): epoch-days for DATE, microseconds for
-    timestamps, unscaled integer for DECIMAL, the value itself otherwise.
-    """
-    if schema is None:
-        schema = output_schema_of_chunks(chunks_df)
-    out = decode_table(prune_chunks(chunks_df, col, lo, hi), schema)
-    if lo is not None:
-        out = out.where(F.col(col) >= _physical_bound(schema[col], lo))
-    if hi is not None:
-        out = out.where(F.col(col) <= _physical_bound(schema[col], hi))
-    return out
 
 
 def _isin_physical(field, values: list):
@@ -2245,8 +2222,12 @@ def scan_table(
     file-reader.go:54,110-112, with the pruning the reference's stats
     can't do).
 
-    ``where`` is an AND of predicates, each routed to the strongest
-    pruning pass available before any payload decode:
+    ``where`` is an AND of predicates. Before any payload decode, one
+    metadata pass over the predicate columns' footer rows drops the
+    page groups no row can match (:func:`_group_passes`, the same
+    evaluator :func:`pysparkenc.lineage.read_store` and the
+    ``pysparkenc`` data source run), each predicate through its
+    strongest test:
 
     - ``(col, "==", v)``     -> dict-page probe + bloom + stats
     - ``(col, "in", [v..])`` -> dict-page probe + bloom + stats
@@ -2256,11 +2237,10 @@ def scan_table(
       ``(col, "<", v)`` / ``(col, "between", (lo, hi))`` -> min/max
       stat range skip (strict ops prune with the inclusive superset)
     - ``("or", [p1, p2, ...])`` -> DISJUNCTION of simple predicates
-      (each ``pi`` any of the forms above, any columns). Prunes with
-      the UNION of the disjuncts' surviving chunk groups — a group is
-      dropped only when EVERY branch proves it empty — unless some
-      branch is non-prunable (``!=`` / ``not in``), in which case the
-      disjunction is residual-only.
+      (each ``pi`` any of the forms above, any columns). A group is
+      dropped only when EVERY branch proves it empty; a branch that
+      cannot prune (``!=`` / ``not in``) makes the disjunction
+      residual-only.
 
     Values for EVERY op are given in the column's *physical* numeric
     domain for converted types (epoch-days for DATE, micros for
@@ -2283,43 +2263,14 @@ def scan_table(
         schema = output_schema_of_chunks(chunks_df)
     where, sub = plan_scan(schema, columns, where)
 
-    def _prune_keys(chunks, col, op, v):
-        """Surviving-group keys under the strongest prune for one
-        simple predicate, or None when the op can't prove a group empty
-        (``!=``/``not in``: any chunk with >1 distinct value
-        survives)."""
-        if op in ("==", "="):
-            return _prune_keys_isin(chunks, col, [v])
-        if op == "in":
-            return _prune_keys_isin(chunks, col, list(v))
-        if op in _RANGE_OPS:
-            return _prune_keys_range(chunks, col, *_range_bounds(op, v))
-        return None
-
-    pruned = chunks_df
-    for w in where:
-        # an OR entry prunes with the UNION of its branches' survivors:
-        # a group is dropped only when EVERY branch proves it empty, and
-        # one residual-only branch keeps everything — skip the pass.
-        # The union is over the branches' KEY frames (one row per
-        # surviving group, per-branch distinct), never over nested
-        # semi-joins of the chunk table — unions of self-derived
-        # semi-joins mis-resolve in Spark's deduplication and can
-        # silently drop one side (pinned in tests/test_scan.py).
-        keys = [_prune_keys(pruned, col, op, v)
-                for col, op, v in _or_terms(w)]
-        if any(k is None for k in keys):
-            continue
-        keep = keys[0]
-        if len(keys) > 1:
-            keep = keep.distinct()
-            for k in keys[1:]:
-                keep = keep.unionByName(k.distinct())
-            keep = keep.distinct()
-        pruned = pruned.join(
-            F.broadcast(keep), ["part_id", "chunk_id"], "left_semi"
+    pushed = where_pushed(where)
+    if pushed:
+        # one metadata pass decides every entry; one semi-join applies it
+        chunks_df = chunks_df.join(
+            F.broadcast(_kept_groups(chunks_df, pushed)),
+            ["part_id", "chunk_id"], "left_semi",
         )
-    out = decode_table(pruned, sub, part_col=part_col)
+    out = decode_table(chunks_df, sub, part_col=part_col)
     for c in row_filters(sub, where):
         out = out.where(c)
     if columns is not None:

@@ -60,6 +60,7 @@ from .engine import (
     require_flat_scalar,
     restore_intervals,
     row_filters,
+    where_pushed,
 )
 
 LINEAGE_SCHEMA = StructType(
@@ -669,7 +670,9 @@ def read_store(
     ``pysparkenc`` reader plans committed runs with pyarrow, and each
     ``mapInArrow`` task decodes its chunk files, prunes page groups by
     ``where`` and drops deleted rows sequenced by run — no exchange, no
-    join, no Spark metadata job. ``("or", …)`` is residual-only."""
+    join, no Spark metadata job. Page groups are pruned by the same
+    evaluator as ``scan_table`` (:func:`pysparkenc.engine.where_pushed`),
+    ``("or", …)`` entries included."""
     if schema is None:
         live, _ = datasource._lineage_plan(path, as_of_run)
         schema = (datasource._recover_store_schema(path, live) if live
@@ -682,7 +685,7 @@ def read_store(
     reader = datasource.ChunkStoreReader(
         path, dec, {} if as_of_run is None else {"as_of_run": as_of_run}
     )
-    reader.pushed = datasource.where_pushed(where)
+    reader.pushed = where_pushed(where)
     parts = reader.partitions()
 
     def read(batches):

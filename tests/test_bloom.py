@@ -15,9 +15,10 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pysparkenc.engine import (
-    decode_table_where_isin,
+    _kept_groups,
     encode_table,
-    prune_chunks_isin,
+    scan_table,
+    where_pushed,
 )
 from pysparkenc.kernels.bloom import (
     bloom_build,
@@ -129,20 +130,18 @@ def test_bloom_prunes_midrange_absent_string(spark, keyed):
     # mid-range absent: md5 hex sorts inside [smin, smax] of every chunk,
     # so stats keep everything — only the bloom can prune
     absent = "user_aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa"
-    kept = prune_chunks_isin(enc, "uid", [absent]).where(
-        F.col("col") == "uid").count()
+    probe = where_pushed([("uid", "in", [absent])])
+    kept = _kept_groups(enc, probe).count()
     assert kept <= max(1, total // 4)  # FPP leaves at most a stray chunk
     # no-bloom chunks keep everything for the same probe
     enc2 = encode_table(df, rows_per_chunk=512, partition_by=None)
-    kept2 = prune_chunks_isin(enc2, "uid", [absent]).where(
-        F.col("col") == "uid").count()
-    assert kept2 == total
+    assert _kept_groups(enc2, probe).count() == total
 
 
 def test_bloom_exact_decode_present_probe(spark, keyed):
     df, enc = keyed
     present = [r.uid for r in df.limit(3).collect()]
-    out = decode_table_where_isin(enc, df.schema, "uid", present)
+    out = scan_table(enc, df.schema, where=[("uid", "in", present)])
     got = {r.uid for r in out.collect()}
     assert got == set(present)
 
@@ -150,9 +149,9 @@ def test_bloom_exact_decode_present_probe(spark, keyed):
 def test_bloom_int_probe_prunes_and_decodes(spark, keyed):
     df, enc = keyed
     total = enc.where(F.col("col") == "v").count()
-    kept = prune_chunks_isin(enc, "v", [123]).where(F.col("col") == "v").count()
+    kept = _kept_groups(enc, where_pushed([("v", "in", [123])])).count()
     assert 1 <= kept <= max(1, total // 4)
-    out = decode_table_where_isin(enc, df.schema, "v", [123, 456])
+    out = scan_table(enc, df.schema, where=[("v", "in", [123, 456])])
     assert sorted(r.v for r in out.collect()) == [123, 456]
 
 
@@ -161,12 +160,11 @@ def test_cross_typed_probe_ignores_bloom(spark, keyed):
     # a string probe against the int column must not consult the int
     # bloom (wrong domain) — and must not lose rows via a false prune
     total = enc.where(F.col("col") == "v").count()
-    kept = prune_chunks_isin(enc, "v", ["123"]).where(
-        F.col("col") == "v").count()
+    kept = _kept_groups(enc, where_pushed([("v", "in", ["123"])])).count()
     assert kept == total
     # a float-typed probe against the int column: stats may prune, the
     # bloom must not make 123.0 vanish
-    out = decode_table_where_isin(enc, df.schema, "v", [123.0])
+    out = scan_table(enc, df.schema, where=[("v", "in", [123.0])])
     assert [r.v for r in out.collect()] == [123]
 
 
@@ -178,7 +176,7 @@ def test_bloom_with_nulls_roundtrip(spark):
         F.col("id").alias("v"),
     )
     enc = encode_table(df, bloom=["k"], rows_per_chunk=256, partition_by=None)
-    out = decode_table_where_isin(enc, df.schema, "k", ["k7", "k500"])
+    out = scan_table(enc, df.schema, where=[("k", "in", ["k7", "k500"])])
     assert sorted(r.v for r in out.collect()) == [7, 500]
 
 

@@ -144,7 +144,8 @@ def test_reader_prunes_page_groups(spark, tmp_path):
         if filters:
             r.pushFilters(filters)
         return sum(
-            b.num_rows for f in files for b in r.read(InputPartition(f))
+            b.num_rows for f in files
+            for b in r.read(InputPartition((None, (f,))))
         )
 
     total = rows_read([])

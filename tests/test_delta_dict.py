@@ -122,13 +122,14 @@ def test_truncated_dict_page_raises():
 
 
 def test_dict_probe_pruning_survives_sorted_dicts(spark):
-    """prune_chunks_equals' dict-page probe reads tagged pages."""
+    """The ``==`` dict-page probe reads tagged pages."""
     from pyspark.sql import functions as F
 
     from pysparkenc.engine import (
-        decode_table,
+        _kept_groups,
         encode_table,
-        prune_chunks_equals,
+        scan_table,
+        where_pushed,
     )
 
     df = spark.range(20_000).select(
@@ -136,9 +137,8 @@ def test_dict_probe_pruning_survives_sorted_dicts(spark):
         (F.col("id")).alias("v"),
     )
     chunks = encode_table(df, num_partitions=4)
-    pruned = prune_chunks_equals(chunks, "k", 123456)  # absent value
-    kept = pruned.where(F.col("col") == "k").count()
-    assert kept == 0
-    hit = prune_chunks_equals(chunks, "k", 1007)
-    out = decode_table(hit).where(F.col("k") == 1007)
-    assert out.count() == 400
+    absent = where_pushed([("k", "==", 123456)])
+    assert _kept_groups(chunks, absent).count() == 0
+    assert _kept_groups(chunks, where_pushed([("k", "==", 1007)])).count()
+    out = scan_table(chunks, where=[("k", "==", 1007)])
+    assert out.where(F.col("k") == 1007).count() == out.count() == 400

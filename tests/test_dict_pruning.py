@@ -1,18 +1,28 @@
-"""Dictionary-page predicate pushdown (prune_chunks_equals): an equality
-probe tested against each chunk's dict page drops groups whose dictionary
-provably lacks the value — strictly stronger than min/max overlap (the
-reference's stats-only SkipRowGroup, file-reader.go:110-112, cannot do
-this because its dict pages are decode-internal)."""
+"""Dictionary-page predicate pushdown (``scan_table`` ``==`` / ``in``): an
+equality probe tested against each chunk's dict page drops groups whose
+dictionary provably lacks the value — strictly stronger than min/max
+overlap (the reference's stats-only SkipRowGroup, file-reader.go:110-112,
+cannot do this because its dict pages are decode-internal)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pysparkenc.engine import (
-    decode_table_where_equals,
+    _kept_groups,
     encode_table,
-    prune_chunks_equals,
+    scan_table,
+    where_pushed,
 )
+
+
+def _kept(chunks, where) -> int:
+    return _kept_groups(chunks, where_pushed(where)).count()
+
+
+def _groups(chunks) -> int:
+    return chunks.select("part_id", "chunk_id").distinct().count()
 
 
 def _langs_df(spark):
@@ -35,13 +45,8 @@ def test_dict_probe_drops_non_matching_groups(spark):
         for r in chunks.where(F.col("col") == "lang").select("codec").collect()
     }
     assert "dict_rle" in lang_codecs  # the probe's target codec is in play
-    kept = prune_chunks_equals(chunks, "lang", "de")
-
-    def groups(c):
-        return {(r["part_id"], r["chunk_id"])
-                for r in c.select("part_id", "chunk_id").distinct().collect()}
-
-    assert len(groups(kept)) < len(groups(chunks))  # groups actually dropped
+    # groups actually dropped
+    assert _kept(chunks, [("lang", "==", "de")]) < _groups(chunks)
     chunks.unpersist()
 
 
@@ -60,8 +65,8 @@ def test_dict_probe_beats_stats_between_min_and_max(spark):
         for r in chunks.where(F.col("col") == "w").select("codec").collect()
     } == {"dict_rle"}
     # "mango" is within [apple, zebra] -> stats alone cannot prune
-    assert prune_chunks_equals(chunks, "w", "mango").count() == 0
-    assert prune_chunks_equals(chunks, "w", "zebra").count() > 0
+    assert _kept(chunks, [("w", "==", "mango")]) == 0
+    assert _kept(chunks, [("w", "==", "zebra")]) > 0
     chunks.unpersist()
 
 
@@ -69,7 +74,7 @@ def test_equals_decode_exact_rows(spark):
     df = _langs_df(spark)
     chunks = encode_table(df, partition_by=("lang", "id")).persist()
     chunks.count()
-    got = decode_table_where_equals(chunks, df.schema, "lang", "fr")
+    got = scan_table(chunks, df.schema, where=[("lang", "==", "fr")])
     want = df.where(F.col("lang") == "fr")
     assert {r["id"] for r in got.collect()} == {r["id"] for r in want.collect()}
     chunks.unpersist()
@@ -83,10 +88,10 @@ def test_numeric_equals_falls_back_to_stats(spark):
     )
     chunks = encode_table(df, partition_by=("bucket", "id")).persist()
     chunks.count()
-    got = decode_table_where_equals(chunks, df.schema, "bucket", 7)
+    got = scan_table(chunks, df.schema, where=[("bucket", "==", 7)])
     assert {r["id"] for r in got.collect()} == set(range(700, 800))
     # and a value outside every chunk's range prunes everything
-    assert prune_chunks_equals(chunks, "bucket", 99).count() == 0
+    assert _kept(chunks, [("bucket", "==", 99)]) == 0
     chunks.unpersist()
 
 
@@ -98,48 +103,38 @@ def test_forced_plain_never_misprunes(spark):
         df, partition_by=("lang", "id"), codec={"lang": "ba_plain"}
     ).persist()
     chunks.count()
-    got = decode_table_where_equals(chunks, df.schema, "lang", "pt")
+    got = scan_table(chunks, df.schema, where=[("lang", "==", "pt")])
     assert got.count() == 250
     chunks.unpersist()
 
 
 def test_isin_probe_prunes_and_decodes_exact(spark):
-    from pysparkenc.engine import decode_table_where_isin, prune_chunks_isin
-
     df = _langs_df(spark)
     chunks = encode_table(
         df, partition_by=("lang", "id"), rows_per_chunk=64
     ).persist()
     chunks.count()
-    kept = prune_chunks_isin(chunks, "lang", ["de", "fr"])
-    kept_groups = {(r["part_id"], r["chunk_id"]) for r in
-                   kept.select("part_id", "chunk_id").distinct().collect()}
-    all_groups = {(r["part_id"], r["chunk_id"]) for r in
-                  chunks.select("part_id", "chunk_id").distinct().collect()}
-    assert len(kept_groups) < len(all_groups)
-    got = decode_table_where_isin(chunks, df.schema, "lang", ["de", "fr"])
+    where = [("lang", "in", ["de", "fr"])]
+    assert _kept(chunks, where) < _groups(chunks)
+    got = scan_table(chunks, df.schema, where=where)
     want = df.where(F.col("lang").isin("de", "fr"))
     assert {r["id"] for r in got.collect()} == {r["id"] for r in want.collect()}
     chunks.unpersist()
 
 
 def test_isin_numeric_and_validation(spark):
-    import pytest
-
-    from pysparkenc.engine import decode_table_where_isin, prune_chunks_isin
-
     df = spark.createDataFrame(
         [(i, i // 100) for i in range(1000)], "id long, bucket long"
     )
     chunks = encode_table(df, partition_by=("bucket", "id")).persist()
     chunks.count()
-    got = decode_table_where_isin(chunks, df.schema, "bucket", [2, 7])
+    got = scan_table(chunks, df.schema, where=[("bucket", "in", [2, 7])])
     assert {r["id"] for r in got.collect()} == set(range(200, 300)) | set(
         range(700, 800)
     )
-    assert prune_chunks_isin(chunks, "bucket", [50, 99]).count() == 0
+    assert _kept(chunks, [("bucket", "in", [50, 99])]) == 0
     with pytest.raises(ValueError):
-        prune_chunks_isin(chunks, "bucket", [])
+        scan_table(chunks, df.schema, where=[("bucket", "in", [])])
     with pytest.raises(TypeError):
-        prune_chunks_isin(chunks, "bucket", [1, "x"])
+        scan_table(chunks, df.schema, where=[("bucket", "in", [1, "x"])])
     chunks.unpersist()

@@ -85,10 +85,10 @@ def test_nested_interval_raises_typed_error(spark):
 
 
 def test_interval_pruned_range_decode(spark):
-    """decode_table_where over a day-time interval column: bounds in the
+    """scan_table range over a day-time interval column: bounds in the
     physical domain (microseconds) prune chunk groups by footer stats
     and the row-level predicate restores exact interval semantics."""
-    from pysparkenc.engine import decode_table_where
+    from pysparkenc.engine import scan_table
 
     df = spark.sql(
         "SELECT id, timestamp_micros(id * 1000000) - timestamp_micros(0)"
@@ -96,7 +96,7 @@ def test_interval_pruned_range_decode(spark):
     )
     chunks = encode_table(df, partition_by=("id",), num_partitions=4)
     lo, hi = 2_000 * 1_000_000, 2_500 * 1_000_000
-    got = decode_table_where(chunks, df.schema, "dur", lo=lo, hi=hi)
+    got = scan_table(chunks, df.schema, where=[("dur", "between", (lo, hi))])
     ids = sorted(r["id"] for r in got.select("id").collect())
     assert ids == list(range(2000, 2501))
 

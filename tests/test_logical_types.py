@@ -97,7 +97,7 @@ def test_decimal_schema_recovery(spark):
 def test_date_pruned_range_scan(spark):
     """Stat pruning + exact predicate on a DATE column: bounds are epoch
     days, the row filter compares real dates."""
-    from pysparkenc.engine import decode_table_where, encode_table
+    from pysparkenc.engine import encode_table, scan_table
 
     base = dt.date(1995, 1, 1)
     df = spark.createDataFrame(
@@ -107,7 +107,8 @@ def test_date_pruned_range_scan(spark):
     chunks = encode_table(df, num_partitions=4)
     lo = (dt.date(1995, 3, 1) - dt.date(1970, 1, 1)).days
     hi = (dt.date(1995, 4, 1) - dt.date(1970, 1, 1)).days
-    got = decode_table_where(chunks, df.schema, "d", lo, hi).count()
+    got = scan_table(chunks, df.schema,
+                     where=[("d", "between", (lo, hi))]).count()
     want = sum(
         1
         for i in range(2000)
@@ -118,14 +119,15 @@ def test_date_pruned_range_scan(spark):
 
 def test_decimal_pruned_range_scan(spark):
     """DECIMAL pruning bounds are unscaled ints (cents for scale 2)."""
-    from pysparkenc.engine import decode_table_where, encode_table
+    from pysparkenc.engine import encode_table, scan_table
 
     df = spark.createDataFrame(
         [(i, Decimal(i) / 100) for i in range(3000)],
         "id long, p decimal(12,2)",
     )
     chunks = encode_table(df, num_partitions=4)
-    got = decode_table_where(chunks, df.schema, "p", 150, 450).collect()
+    got = scan_table(chunks, df.schema,
+                     where=[("p", "between", (150, 450))]).collect()
     vals = sorted(r["p"] for r in got)
     assert vals[0] == Decimal("1.50") and vals[-1] == Decimal("4.50")
     assert len(vals) == 301

@@ -341,6 +341,29 @@ def test_read_store_with_deletes_plans_no_exchange(spark, tmp_path):
     assert "CartesianProduct" not in plan
 
 
+def test_scan_table_prunes_with_one_semi_join(spark):
+    """scan_table decides every prunable ``where`` entry, ORs included,
+    in one metadata pass over the predicate columns' footer rows, and
+    applies the surviving groups with ONE broadcast left-semi join —
+    not one join per entry."""
+    from pysparkenc.engine import encode_table, scan_table
+
+    df = spark.range(2000).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 7).alias("v"),
+        F.concat(F.lit("s"), (F.col("id") % 5).cast("string")).alias("s"),
+    )
+    chunks = encode_table(df, num_partitions=2, rows_per_chunk=256)
+    where = [("k", ">=", 100), ("v", "in", [1, 2]),
+             ("or", [("s", "==", "s1"), ("k", "<", 1500)])]
+    out = scan_table(chunks, df.schema, where=where)
+    assert plan_of(out, "simple").count("LeftSemi") == 1
+    want = df.where((F.col("k") >= 100) & F.col("v").isin(1, 2)
+                    & ((F.col("s") == "s1") | (F.col("k") < 1500)))
+    assert sorted(map(tuple, out.collect())) == sorted(
+        map(tuple, want.collect()))
+
+
 def _jobs_in(spark, group: str, action) -> int:
     """Spark jobs ``action`` starts, counted by job group."""
     sc = spark.sparkContext

@@ -7,10 +7,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from pysparkenc.engine import (
+    _kept_groups,
     decode_table,
-    decode_table_where,
     encode_table,
-    prune_chunks,
+    scan_table,
+    where_pushed,
 )
 from pysparkenc.synth import make_tokens_table
 
@@ -25,11 +26,11 @@ def test_pruning_drops_groups_and_matches_exact(spark):
     chunks.cache().count()
 
     total_groups = chunks.select("part_id", "chunk_id").distinct().count()
-    pruned = prune_chunks(chunks, "n_tok", 0, 40)
-    kept_groups = pruned.select("part_id", "chunk_id").distinct().count()
+    where = [("n_tok", "between", (0, 40))]
+    kept_groups = _kept_groups(chunks, where_pushed(where)).count()
     assert kept_groups <= total_groups
 
-    got = decode_table_where(chunks, df.schema, "n_tok", 0, 40)
+    got = scan_table(chunks, df.schema, where=where)
     want = decode_table(chunks, df.schema).where(F.col("n_tok") <= 40)
     g = {r["doc_id"]: r["tokens"] for r in got.collect()}
     w = {r["doc_id"]: r["tokens"] for r in want.collect()}
@@ -53,22 +54,28 @@ def test_pruning_keeps_chunks_with_nan_values(spark):
     chunks.cache().count()
 
     # range [0, 10] overlaps {1.0, 5.0}: the NaN-bearing chunk must survive
-    got = {r["id"]: r["x"] for r in
-           decode_table_where(chunks, df.schema, "x", 0, 10).collect()}
+    got = {r["id"]: r["x"] for r in scan_table(
+        chunks, df.schema, where=[("x", "between", (0, 10))]).collect()}
     assert set(got) == {1, 3}
 
     # lo-only filter: NaN rows sort greatest, so they pass `x >= 50`
-    got_lo = {r["id"] for r in
-              decode_table_where(chunks, df.schema, "x", 50, None).collect()}
+    got_lo = {r["id"] for r in scan_table(
+        chunks, df.schema, where=[("x", ">=", 50)]).collect()}
     assert got_lo == {2, 4, 5}
+    # the NaN max bounds nothing above: a lo bound past every real
+    # value still keeps the group
+    assert _kept_groups(chunks, where_pushed([("x", ">=", 1e9)])).count() == 1
 
     # all-NaN chunk: prunable on any hi bound, kept on lo-only
     df2 = spark.createDataFrame([(1, float("nan")), (2, float("nan"))],
                                 "id long, x double")
     ck2 = encode_table(df2, num_partitions=1)
     ck2.cache().count()
-    assert decode_table_where(ck2, df2.schema, "x", 0, 10).count() == 0
-    lo_only = decode_table_where(ck2, df2.schema, "x", 0, None).collect()
+    assert _kept_groups(
+        ck2, where_pushed([("x", "between", (0, 10))])).count() == 0
+    assert scan_table(
+        ck2, df2.schema, where=[("x", "between", (0, 10))]).count() == 0
+    lo_only = scan_table(ck2, df2.schema, where=[("x", ">=", 0)]).collect()
     assert {r["id"] for r in lo_only} == {1, 2}
     assert all(math.isnan(r["x"]) for r in lo_only)
     ck2.unpersist()
@@ -88,11 +95,11 @@ def test_string_pruning_drops_groups_and_matches_exact(spark):
     chunks.cache().count()
 
     total = chunks.select("part_id", "chunk_id").distinct().count()
-    pruned = prune_chunks(chunks, "k", "c", "f")
-    kept = pruned.select("part_id", "chunk_id").distinct().count()
+    where = [("k", "between", ("c", "f"))]
+    kept = _kept_groups(chunks, where_pushed(where)).count()
     assert 0 < kept < total  # pruning actually dropped groups
 
-    got = decode_table_where(chunks, df.schema, "k", "c", "f")
+    got = scan_table(chunks, df.schema, where=where)
     want = df.where((F.col("k") >= "c") & (F.col("k") <= "f"))
     assert {r["id"] for r in got.collect()} == {r["id"] for r in want.collect()}
     chunks.unpersist()
@@ -109,7 +116,9 @@ def test_string_pruning_long_values_never_dropped(spark):
     chunks.cache().count()
     # lo bound beyond the truncated 64-char prefix of value 1: the chunk
     # must survive because its max is unbounded in the stats
-    got = decode_table_where(chunks, df.schema, "k", "a" + "z" * 70, None)
+    where = [("k", ">=", "a" + "z" * 70)]
+    assert _kept_groups(chunks, where_pushed(where)).count() == 1
+    got = scan_table(chunks, df.schema, where=where)
     assert {r["id"] for r in got.collect()} == {1}
     chunks.unpersist()
 
@@ -120,9 +129,9 @@ def test_pruning_empty_range_decodes_nothing(spark):
                           num_partitions=8)
     chunks.cache().count()
     # n_tok is clipped to [8, 4096]; a disjoint range prunes EVERY group
-    pruned = prune_chunks(chunks, "n_tok", 10_000, 20_000)
-    assert pruned.count() == 0
-    assert decode_table_where(chunks, df.schema, "n_tok", 10_000, 20_000).count() == 0
+    where = [("n_tok", "between", (10_000, 20_000))]
+    assert _kept_groups(chunks, where_pushed(where)).count() == 0
+    assert scan_table(chunks, df.schema, where=where).count() == 0
     chunks.unpersist()
 
 
@@ -140,16 +149,44 @@ def test_sort_by_makes_pruning_decisive(spark):
     plain.count(); clustered.count()
 
     lo, hi = 30, 35
-    kept_plain = prune_chunks(plain, "n_tok", lo, hi).select(
-        "part_id", "chunk_id").distinct().count()
-    kept_sorted = prune_chunks(clustered, "n_tok", lo, hi).select(
-        "part_id", "chunk_id").distinct().count()
+    pushed = where_pushed([("n_tok", "between", (lo, hi))])
+    kept_plain = _kept_groups(plain, pushed).count()
+    kept_sorted = _kept_groups(clustered, pushed).count()
     assert kept_sorted < kept_plain
 
-    got = decode_table_where(clustered, df.schema, "n_tok", lo, hi)
+    got = scan_table(clustered, df.schema,
+                     where=[("n_tok", "between", (lo, hi))])
     g = {r["doc_id"]: r["tokens"] for r in got.collect()}
     want = {r["doc_id"]: r["tokens"]
             for r in df.where(F.col("n_tok").between(lo, hi)).collect()}
     assert g == want
 
     plain.unpersist(); clustered.unpersist(); df.unpersist()
+
+
+def test_isin_probe_sets_are_built_once_per_predicate(monkeypatch):
+    """The IN list's probe sets and bloom hashes are built when the
+    predicate is made, not again for every page group it is tested
+    against."""
+    from pysparkenc import engine
+
+    calls = []
+    real = engine._bloom_probe_hashes
+
+    def counted(svals, nvals):
+        calls.append(1)
+        return real(svals, nvals)
+
+    monkeypatch.setattr(engine, "_bloom_probe_hashes", counted)
+    p = engine._Pushed("k", "isin", tuple(range(0, 2000, 7)))
+    starts = range(0, 10_000, 100)
+    groups = [
+        {"k": {"codec": "plain", "dtype": "int64", "logical": "int64",
+               "n_rows": 100, "null_count": 0, "n_unique": 100,
+               "num_min": float(lo), "num_max": float(lo + 99),
+               "extra": None, "aux": None, "bloom": None}}
+        for lo in starts
+    ]
+    kept = [engine._group_passes(g, p) for g in groups]
+    assert calls == [1]
+    assert kept == [lo < 2000 for lo in starts]

@@ -31,9 +31,8 @@ from pysparkenc.datasource import (
     _list_parquet,
     _to_pushed,
     register,
-    where_pushed,
 )
-from pysparkenc.engine import scan_table
+from pysparkenc.engine import scan_table, where_pushed
 from pysparkenc.lineage import (
     apply_deletes,
     delete_rows,
@@ -211,9 +210,11 @@ def test_where_prunes_page_groups_in_the_reader(store):
     assert rows_read([("n", "==", 7)]) <= 2 * 64
     assert rows_read([("n", "in", [7, 8])]) <= 2 * 64
     assert rows_read([("n", "between", (100, 120))]) <= 2 * 64
+    # an OR of prunable branches keeps the union of their groups
+    assert rows_read([("or", [("n", "==", 7), ("n", "==", 8)])]) <= 2 * 64
     # residual-only shapes prune nothing
     assert rows_read([("n", "!=", 7)]) == total
-    assert rows_read([("or", [("n", "==", 7), ("n", "==", 8)])]) == total
+    assert rows_read([("or", [("n", "==", 7), ("n", "!=", 8)])]) == total
 
 
 def test_lineage_file_read_without_widened_schema_raises(store):
@@ -223,7 +224,7 @@ def test_lineage_file_read_without_widened_schema_raises(store):
     reader._widened = None
     f = _list_parquet(f"{store}/chunks/run_id=1")[0]
     with pytest.raises(RuntimeError, match="widened schema unset"):
-        next(reader._read_lineage_file(f, 1))
+        next(reader._read_file(f, 1))
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pysparkenc.engine import encode_table, scan_table
+from pysparkenc.engine import (
+    _kept_groups,
+    encode_table,
+    scan_table,
+    where_pushed,
+)
 
 
 @pytest.fixture(scope="module")
@@ -187,16 +192,10 @@ def test_scan_strict_inequalities(spark, li_chunks):
 
 
 def test_where_equals_isin_converted_domains(spark):
-    """The decode_table_where_equals / _isin siblings share scan_table's
-    physical-domain residual (unscaled int / micros), including
-    TIMESTAMP_NTZ under a non-UTC session timezone (an LTZ literal would
-    shift NTZ comparisons by the session zone)."""
-    from pysparkenc.engine import (
-        decode_table_where_equals,
-        decode_table_where_isin,
-        encode_table,
-    )
-
+    """``==`` / ``in`` values on converted-domain columns are physical
+    (unscaled int / micros) and the residual converts them back,
+    including TIMESTAMP_NTZ under a non-UTC session timezone (an LTZ
+    literal would shift NTZ comparisons by the session zone)."""
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
     try:
@@ -211,16 +210,16 @@ def test_where_equals_isin_converted_domains(spark):
         chunks = encode_table(df, num_partitions=2)
         chunks.cache().count()
         try:
-            got = decode_table_where_equals(chunks, df.schema, "price", 250)
+            got = scan_table(chunks, df.schema,
+                             where=[("price", "==", 250)])
             assert [r["id"] for r in got.collect()] == [250]
-            got = decode_table_where_isin(chunks, df.schema, "price",
-                                          [150, 299])
+            got = scan_table(chunks, df.schema,
+                             where=[("price", "in", [150, 299])])
             assert sorted(r["id"] for r in got.collect()) == [150, 299]
             # NTZ wall-clock micros, independent of session tz
-            got = decode_table_where_equals(chunks, df.schema, "ts_ntz",
-                                            9_000_000)
+            got = scan_table(chunks, df.schema,
+                             where=[("ts_ntz", "==", 9_000_000)])
             assert [r["id"] for r in got.collect()] == [9]
-            from pysparkenc.engine import scan_table
             got = scan_table(chunks, df.schema, columns=["id"],
                              where=[("ts_ntz", "==", 12_000_000)])
             assert [r["id"] for r in got.collect()] == [12]
@@ -260,8 +259,6 @@ def test_scan_or_prunes_with_union_of_survivors(spark):
     """A disjunction of prunable terms drops every chunk group NEITHER
     branch can contain — gated by counting surviving groups on a store
     clustered so both branches are selective."""
-    from pysparkenc.engine import decode_table, prune_chunks
-
     df = spark.range(0, 40_000).select(
         F.col("id").alias("k"), (F.col("id") % 97).alias("v")
     )
@@ -269,27 +266,18 @@ def test_scan_or_prunes_with_union_of_survivors(spark):
                           sort_by=("k",), rows_per_chunk=2048)
     chunks.cache().count()
     total = _groups(chunks)
-    lo_keep = _groups(prune_chunks(chunks, "k", None, 1000))
-    hi_keep = _groups(prune_chunks(chunks, "k", 39_000, None))
-    # the OR-pruned scan decodes at most the union of branch survivors
-    got = scan_table(
-        chunks, df.schema,
-        where=[("or", [("k", "<=", 1000), ("k", ">=", 39_000)])],
-    )
+    lo_keep = _kept_groups(chunks, where_pushed([("k", "<=", 1000)])).count()
+    hi_keep = _kept_groups(chunks,
+                           where_pushed([("k", ">=", 39_000)])).count()
+    where = [("or", [("k", "<=", 1000), ("k", ">=", 39_000)])]
+    got = scan_table(chunks, df.schema, where=where)
     want = df.where((F.col("k") <= 1000) | (F.col("k") >= 39_000))
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect()))
     assert lo_keep + hi_keep < total  # the gate is non-vacuous
-    # and the pruning really dropped groups: decode through the same
-    # prune path and count
-    from pysparkenc.engine import prune_chunks as _pc
-    keep = (
-        _pc(chunks, "k", None, 1000).select("part_id", "chunk_id")
-        .unionByName(
-            _pc(chunks, "k", 39_000, None).select("part_id", "chunk_id"))
-        .distinct().count()
-    )
-    assert keep <= lo_keep + hi_keep < total
+    # the OR-pruned scan decodes at most the union of branch survivors
+    keep = _kept_groups(chunks, where_pushed(where)).count()
+    assert 0 < keep <= lo_keep + hi_keep < total
     chunks.unpersist()
 
 

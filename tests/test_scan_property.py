@@ -1,6 +1,7 @@
-"""Property test for scan_table: any AND of supported predicates over a
-mixed-type store must equal the same filter applied to the original
-dataframe — pruning may only skip, never change results.
+"""Property test for scan_table: any AND of supported predicates, OR
+entries included, over a mixed-type store must equal the same filter
+applied to the original dataframe — pruning may only skip, never change
+results.
 
 One module-scoped store, a seeded sweep of generated predicate sets
 (hypothesis-style randomized composition without per-example Spark jobs
@@ -39,7 +40,21 @@ def store(spark):
 def _gen_predicate(rng: random.Random):
     kind = rng.choice(["int_eq", "int_range", "str_eq", "in_list",
                        "small_le", "str_range", "int_gt", "int_lt",
-                       "small_ne"])
+                       "small_ne", "or_prunable", "or_with_ne"])
+    if kind == "or_prunable":
+        # two prunable branches on different columns
+        (p1, c1), (p2, c2) = _gen_simple(rng, "int_eq"), _gen_simple(
+            rng, "str_eq")
+        return ("or", [p1, p2]), (c1 | c2)
+    if kind == "or_with_ne":
+        # a != branch: the disjunction prunes nothing
+        (p1, c1), (p2, c2) = _gen_simple(rng, "in_list"), _gen_simple(
+            rng, "small_ne")
+        return ("or", [p1, p2]), (c1 | c2)
+    return _gen_simple(rng, kind)
+
+
+def _gen_simple(rng: random.Random, kind: str):
     if kind == "small_ne":
         v = rng.randrange(0, 12)
         return ("v_small", "!=", v), (F.col("v_small") != v)

@@ -74,6 +74,59 @@ def test_projection_of_only_evolved_column_keeps_all_rows(spark, evolved):
     )
 
 
+def test_predicate_on_evolved_column_skips_pre_evolution_groups(
+    spark, evolved, tmp_path
+):
+    """A page group written before ``score`` existed has no ``score``
+    chunk and decodes it as all-null, so no ``==`` / ``in`` / range
+    predicate on ``score`` can match it: the one pruning evaluator
+    drops it, in ``scan_table``'s key pass and in the file-local reader
+    alike, while an IS NULL keeps it and an OR keeps it when another
+    branch may match."""
+    from pysparkenc.datasource import ChunkStoreReader
+    from pysparkenc.engine import (
+        _Pushed,
+        _kept_groups,
+        scan_table,
+        where_pushed,
+    )
+    from pysparkenc.lineage import encode_with_lineage, read_store
+
+    merged, schema = evolved
+    groups = merged.select("part_id", "chunk_id").distinct()
+    old_groups = groups.where(F.col("part_id") < 1000).count()
+    new_groups = groups.count() - old_groups
+    assert old_groups and new_groups
+    on_score = [("score", ">=", 0)]
+    assert _kept_groups(merged, where_pushed(on_score)).count() == new_groups
+    either = [("or", [("score", "==", 800), ("k", "<", 10)])]
+    kept = _kept_groups(merged, where_pushed(either)).count()
+    assert 2 <= kept < old_groups + new_groups
+    got = scan_table(merged, schema, columns=["k"], where=either)
+    assert sorted(r.k for r in got.collect()) == list(range(10)) + [400]
+
+    path = str(tmp_path / "store")
+    kw = dict(num_partitions=1, rows_per_chunk=128)
+    encode_with_lineage(spark.range(300).select(F.col("id").alias("k")),
+                        path, **kw)
+    encode_with_lineage(spark.range(300, 500).select(
+        F.col("id").alias("k"), (F.col("id") * 2).cast("int").alias("score"),
+    ), path, resume=False, **kw)
+    proj = StructType([StructField("score", IntegerType(), True)])
+
+    def rows_read(pushed):
+        r = ChunkStoreReader(path, proj)
+        r.pushed = pushed
+        return sum(b.num_rows for p in r.partitions() for b in r.read(p))
+
+    assert rows_read([]) == 500
+    assert rows_read(where_pushed(on_score)) == 200
+    # IS NULL keeps the all-null old groups, drops the null-free new ones
+    assert rows_read([_Pushed("score", "isnull")]) == 300
+    assert read_store(spark, path, where=on_score).count() == 200
+    assert read_store(spark, path, where=[("score", "==", 800)]).count() == 1
+
+
 def test_evolved_struct_subtree_reads_null(spark):
     old = spark.range(100).select(F.col("id").alias("k"))
     new = spark.range(100, 150).select(
