@@ -1170,9 +1170,11 @@ def q_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``pysparkenc`` Spark data source end-to-end, BOTH store
     layouts: (plain) write documents via ``df.write.format
     ("pysparkenc")``, read back through ``spark.read.format
-    ("pysparkenc")`` with Catalyst filters pushed into the reader (page
-    groups pruned by dict-page and stat probes before decode); and
-    (lineage) build a lineage store through BOTH write paths — half the
+    ("pysparkenc")`` and filter (the filters reach the reader and prune
+    page groups only on a session that enabled
+    ``spark.sql.python.filterPushdown.enabled`` before ``register``;
+    pushdown is opt-in, so by default Spark filters the decoded rows);
+    and (lineage) build a lineage store through BOTH write paths — half the
     documents via ``encode_with_lineage``, half APPENDED via
     ``df.write.format("pysparkenc")``, which must commit a real lineage
     run (r5) — commit an equality delete of a deterministic md5-keyed

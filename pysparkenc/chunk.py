@@ -374,7 +374,7 @@ def decode_numeric(chunk: dict) -> np.ndarray:
         n_unique = int(chunk["n_unique"])
         uniques = dict_page_decode_numeric(aux, dtype, n_unique)
         codes = dict_decode_codes(data, n, n_unique)
-        return uniques[codes]
+        return uniques.take(codes)  # take: no index widening pass
     if codec == "for_rle":
         offset = int(extra.get("for_offset", 0))
         bw = int(chunk["bit_width"])
@@ -417,13 +417,13 @@ def decode_bytes(chunk: dict) -> tuple[np.ndarray, bytes]:
         n_unique = int(chunk["n_unique"])
         d_off, d_data = dict_page_decode_bytes(aux, n_unique)
         codes = dict_decode_codes(data, n, n_unique)
-        lens = np.diff(d_off)[codes]
+        lens = np.diff(d_off).take(codes)
         offsets = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(lens, out=offsets[1:])
         raw = np.frombuffer(d_data, dtype=np.uint8)
         from .kernels.plain import _ramp
 
-        idx = np.repeat(d_off[codes], lens) + _ramp(lens)
+        idx = np.repeat(d_off.take(codes), lens) + _ramp(lens)
         return offsets, raw[idx].tobytes()
     if codec == "fsst":
         return fsst_decode(data, n)

@@ -27,20 +27,26 @@ Scale design:
   one file per task with unique names, so concurrent tasks never collide
   and a failed job never corrupts the previous store (old files are
   removed only in ``commit`` for overwrite mode).
-- **Catalyst filter pushdown** (``pushFilters``): equality / IN / range /
-  IsNotNull / StringStartsWith predicates on top-level scalar columns
-  prune whole page groups per file — dictionary-page membership probes
-  for ``dict_rle`` chunks, NaN-safe min/max and truncation-safe
-  smin/smax otherwise, decided by :func:`engine._group_passes` (the
-  one page-group evaluator, which ``scan_table`` and ``read_store`` run
-  too). Every filter is also returned to Spark for re-evaluation, so
-  pruning is a pure optimization and can never drop a row it
-  shouldn't: a group survives unless the stats *prove* it empty.
-  Caveat: Spark 4.1 reuses the reader planned with a DataFrame's last
-  pushed filters for later queries on it that push none, so a
-  ``load()`` DataFrame queried with a filter and then without one reads
-  too few rows. :func:`pysparkenc.lineage.read_store` runs this reader
-  without Spark's data source planner and is not affected.
+- **Catalyst filter pushdown** (``pushFilters``), an explicit opt-in:
+  with ``spark.sql.python.filterPushdown.enabled`` set to ``true`` before
+  :func:`register` (it is off by default, and ``register`` never sets
+  it), equality / IN / range / IsNotNull / StringStartsWith predicates
+  on top-level scalar columns prune whole page groups per file —
+  dictionary-page membership probes for ``dict_rle`` chunks, NaN-safe
+  min/max and truncation-safe smin/smax otherwise, decided by
+  :func:`engine._group_passes` (the one page-group evaluator, which
+  ``scan_table`` and ``read_store`` run too). Every filter is also
+  returned to Spark for re-evaluation, so pruning is a pure
+  optimization and can never drop a row it shouldn't: a group survives
+  unless the stats *prove* it empty.
+  Caveat, and the reason pushdown is opt-in: Spark 4.1 reuses the
+  reader planned with a DataFrame's last pushed filters for later
+  queries on it that push none, so with pushdown on, a ``load()``
+  DataFrame queried with a filter and then without one reads too few
+  rows. Re-``load()`` before each differently filtered query when it is
+  on. :func:`pysparkenc.lineage.read_store` runs this reader without
+  Spark's data source planner, prunes its ``where`` itself, and is not
+  affected either way.
 - Decode reuses :func:`engine._group_decoder` — the exact executor path
   ``decode_table`` runs under ``applyInArrow``, yielding Arrow record
   batches (zero row-at-a-time Python).
@@ -1138,7 +1144,7 @@ class ChunkStoreDataSource(DataSource):
         return read_store_schema(p)
 
     def reader(self, schema: StructType) -> ChunkStoreReader:
-        return ChunkStoreReader(self._path(), schema, dict(self.options))
+        return _UnpushedReader(self._path(), schema, dict(self.options))
 
     def streamReader(  # noqa: N802 (Spark API name)
         self, schema: StructType
@@ -1223,11 +1229,37 @@ class ChunkStoreDataSource(DataSource):
             )
 
 
+class _UnpushedReader(ChunkStoreReader):
+    """The reader without Catalyst filter pushdown: Spark refuses a
+    reader that implements ``pushFilters`` while
+    ``spark.sql.python.filterPushdown.enabled`` is off."""
+
+    pushFilters = DataSourceReader.pushFilters  # noqa: N815 (Spark API name)
+
+
+class PushdownChunkStoreDataSource(ChunkStoreDataSource):
+    """``pysparkenc`` with Catalyst filter pushdown into the reader;
+    :func:`register` installs it on sessions that opted in."""
+
+    def reader(self, schema: StructType) -> ChunkStoreReader:
+        return ChunkStoreReader(self._path(), schema, dict(self.options))
+
+
+_PUSHDOWN_CONF = "spark.sql.python.filterPushdown.enabled"
+
+
 def register(spark) -> None:
-    """Idempotently register the ``pysparkenc`` format on a session and
-    enable Python-source filter pushdown (off by default in Spark 4.1)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        spark.dataSource.register(ChunkStoreDataSource)
-    except Exception:
-        pass  # already registered
+    """Register the ``pysparkenc`` format on a session (idempotent; a
+    later call replaces the earlier registration).
+
+    Filter pushdown is an explicit opt-in that this function never turns
+    on: when ``spark.sql.python.filterPushdown.enabled`` is ``true`` (it
+    is off by default in Spark 4.1) at the time of the call, the format
+    pushes ``where`` filters into the reader to prune page groups;
+    otherwise it pushes none and Spark filters the decoded rows. With
+    pushdown on, mind the caveat in the module docstring: a ``load()``
+    DataFrame queried with a filter and then without one reads too few
+    rows."""
+    on = spark.conf.get(_PUSHDOWN_CONF, "false").lower() == "true"
+    spark.dataSource.register(
+        PushdownChunkStoreDataSource if on else ChunkStoreDataSource)

@@ -4,7 +4,7 @@ Operator map (SURVEY.md §2.1):
   E1  rle.hybrid_encode/hybrid_decode       RLE / bit-packed hybrid
   E2  delta.delta_bp_encode (width=32)      DELTA_BINARY_PACKED int32
   E3  delta.delta_bp_encode (width=64)      DELTA_BINARY_PACKED int64
-  E5  _bits.pack_varwidth/unpack_varwidth   bit-pack kernels, widths 0..64
+  E5  _bits.pack_*/unpack_const_width       bit-pack kernels, widths 0..64
   E7  dictenc.*                             dictionary pages + RLE codes
   E9  plain.plain_encode_bool + rle         boolean PLAIN / RLE
   E10/E11 plain.plain_encode_numeric        INT32/64, FLOAT/DOUBLE PLAIN

@@ -2,13 +2,15 @@
 
 These replace the reference's ~4600 lines of generated straight-line Go
 pack/unpack functions (``/root/reference/encoding/bitpacking32.go``,
-``bitpacking64.go``, generator ``bitpack-gen.go:138-164``) with two fully
-vectorized numpy expressions over the whole value stream at once: values are
-expanded to (or gathered from) a little-endian bit matrix and moved through
-``np.packbits``/``np.unpackbits`` with ``bitorder="little"``, which is exactly
-the Parquet bit-packed layout (value 0's least-significant bit occupies the
-lowest bit of the first byte — verified against the golden vector in
-``/root/reference/encoding/hybrid-encoder_test.go:126``).
+``bitpacking64.go``, generator ``bitpack-gen.go:138-164``) with vectorized
+numpy expressions over the whole value stream at once. Packing expands the
+values to a little-endian bit matrix and moves it through ``np.packbits``
+with ``bitorder="little"``, which is exactly the Parquet bit-packed layout
+(value 0's least-significant bit occupies the lowest bit of the first byte —
+verified against the golden vector in
+``/root/reference/encoding/hybrid-encoder_test.go:126``). Unpacking reads
+each of the 8 value lanes of a packed group as one shifted, masked column of
+little-endian words, with no bit matrix.
 
 No Spark imports here: kernels are unit-testable in isolation.
 """
@@ -50,8 +52,8 @@ def write_varint(out: bytearray, x: int) -> None:
 def read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
     """Read an unsigned varint at ``pos``; returns (value, new_pos).
 
-    Raises EOFError on truncation (mirrors the reference decoder returning
-    EOF from ``binary.ReadUvarint``).
+    Raises EOFError on truncation and ValueError past 64 bits (mirrors the
+    reference decoder's EOF and overflow errors from ``binary.ReadUvarint``).
     """
     result = 0
     shift = 0
@@ -63,6 +65,8 @@ def read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
         pos += 1
         result |= (b & 0x7F) << shift
         if not b & 0x80:
+            if shift == 63 and b > 1:
+                raise ValueError("uvarint overflows 64 bits")
             return result, pos
         shift += 7
         if shift > 63:
@@ -113,30 +117,6 @@ def pack_varwidth(values: np.ndarray, widths: np.ndarray) -> bytes:
     return np.packbits(stream, bitorder="little").tobytes()
 
 
-def unpack_varwidth(buf: bytes | memoryview, widths: np.ndarray) -> np.ndarray:
-    """Inverse of :func:`pack_varwidth`; returns uint64 values.
-
-    Raises EOFError if ``buf`` holds fewer than ``sum(widths)`` bits.
-    """
-    widths = np.asarray(widths, dtype=np.int64)
-    n = widths.size
-    if n == 0:
-        return np.zeros(0, dtype=np.uint64)
-    total_bits = int(widths.sum())
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    if raw.size * 8 < total_bits:
-        raise EOFError("truncated bit-packed payload")
-    bits = np.unpackbits(raw, bitorder="little", count=total_bits)
-    maxw = int(widths.max())
-    if maxw == 0:
-        return np.zeros(n, dtype=np.uint64)
-    shifts = np.arange(maxw, dtype=np.uint64)
-    mask = shifts.astype(np.int64) < widths[:, None]
-    mat = np.zeros((n, maxw), dtype=np.uint8)
-    mat[mask] = bits
-    return (mat.astype(np.uint64) << shifts).sum(axis=1, dtype=np.uint64)
-
-
 def pack_const_width(values: np.ndarray, bit_width: int) -> bytes:
     """Pack at one constant width; input length must be a multiple of 8
     (callers pad to whole 8-value groups, matching the reference's
@@ -162,7 +142,7 @@ def pack_const_width(values: np.ndarray, bit_width: int) -> bytes:
         for j in range(1, k):
             acc |= grp[:, j] << np.uint64(j * bit_width)
         return acc.astype(np.uint8).tobytes()
-    # general path, mirror of unpack_const_width: uint64 -> (n, 8) LE
+    # general path: uint64 -> (n, 8) LE
     # bytes -> per-row unpackbits -> keep bit_width bits -> one packbits
     # pass. Only the ceil(bit_width/8) low bytes can carry set bits for
     # valid input, so the unpack touches those alone — at width <= 8 that
@@ -176,45 +156,69 @@ def pack_const_width(values: np.ndarray, bit_width: int) -> bytes:
     return np.packbits(bits.ravel(), bitorder="little").tobytes()
 
 
+def _lane_dtype(bit_width: int) -> np.dtype:
+    """Narrowest unsigned little-endian lane that holds ``bit_width`` bits."""
+    for nbytes in (1, 2, 4, 8):
+        if bit_width <= 8 * nbytes:
+            return np.dtype(f"<u{nbytes}")
+    raise ValueError(f"bit width {bit_width} > 64")
+
+
 def unpack_const_width(buf: bytes | memoryview, bit_width: int, n: int) -> np.ndarray:
-    """Constant-width unpack without the (n, maxw) uint64 matrix of
-    unpack_varwidth: bit-transpose via unpackbits -> per-row packbits ->
-    zero-extended little-endian uint64 view. Peak memory n*bit_width bytes
-    instead of n*maxw*8 — the varwidth path goes memory-bound on large
-    chunks (a 1.1M-value dict-code stream decoded 6x slower through it)."""
-    if bit_width == 0:
-        return np.zeros(n, dtype=np.uint64)
-    if n == 0:
-        return np.zeros(0, dtype=np.uint64)
+    """Inverse of :func:`pack_const_width`: ``n`` values of ``bit_width``
+    bits, in the narrowest unsigned lane that holds them (``<u1`` up to
+    width 8, ``<u2`` to 16, ``<u4`` to 32, ``<u8`` to 64).
+
+    Widths 8/16/32/64 are a zero-copy view of ``buf``. Every other width
+    is decoded lane by lane: 8 values at width w fill exactly w bytes, so
+    the payload is a ``(groups, w)`` byte matrix, and value j of every
+    group starts at the same byte column and bit offset. Lane j is one
+    strided read of the little-endian word holding its bits, shifted
+    and masked (widths 58-63 OR in a ninth byte). That is 8 column
+    operations whatever ``n`` is, and no bit matrix.
+
+    Raises EOFError if ``buf`` holds fewer than ``n * bit_width`` bits.
+    """
+    lane = _lane_dtype(max(bit_width, 1))
+    if bit_width == 0 or n == 0:
+        return np.zeros(n, dtype=lane)
     raw = np.frombuffer(buf, dtype=np.uint8)
-    total_bits = n * bit_width
-    if raw.size * 8 < total_bits:
+    if raw.size * 8 < n * bit_width:
         raise EOFError("truncated bit-packed payload")
-    if bit_width % 8 == 0:
-        # byte-aligned: zero-extend the packed bytes straight into the
-        # uint64 lanes — no bit shuffling (inverse of the pack fast path)
-        nb = bit_width // 8
-        full = np.zeros((n, 8), dtype=np.uint8)
-        full[:, :nb] = raw[: n * nb].reshape(n, nb)
-        return full.view("<u8").ravel()
-    if bit_width in (1, 2, 4):
-        # sub-byte divisors: k values per byte via shift-and-mask
-        k = 8 // bit_width
-        nbytes = (n + k - 1) // k
-        b = raw[:nbytes].astype(np.uint64)
-        mask = np.uint64((1 << bit_width) - 1)
-        out = np.empty((nbytes, k), dtype=np.uint64)
-        for j in range(k):
-            out[:, j] = (b >> np.uint64(j * bit_width)) & mask
-        return out.ravel()[:n]
-    bits = np.unpackbits(raw, bitorder="little", count=total_bits).reshape(
-        n, bit_width
-    )
-    packed = np.packbits(bits, axis=1, bitorder="little")
-    nb = packed.shape[1]
-    full = np.zeros((n, 8), dtype=np.uint8)
-    full[:, :nb] = packed
-    return full.view("<u8").ravel()
+    if bit_width == 8 * lane.itemsize:
+        return raw[: n * lane.itemsize].view(lane)
+    groups = (n + 7) // 8
+    need = groups * bit_width
+    if raw.size < need + 8:
+        # room for an 8-byte word read at the last group's last lane; the
+        # bytes past n * bit_width are padding and masked off
+        padded = np.zeros(need + 8, dtype=np.uint8)
+        padded[: min(raw.size, need)] = raw[:need]
+        raw = padded
+    out = np.empty((groups, 8), dtype=lane)
+    mask = (1 << bit_width) - 1
+    for j in range(8):
+        k0, shift = divmod(j * bit_width, 8)
+        touched = (shift + bit_width + 7) // 8
+        win = _window(raw, k0, bit_width, groups, min(touched, 8))
+        acc = win >> win.dtype.type(shift)
+        if touched > 8:  # widths 58-63: a ninth byte holds the top bits
+            top = raw[k0 + 8 :: bit_width][:groups].astype(np.uint64)
+            acc |= top << np.uint64(64 - shift)
+        out[:, j] = acc & win.dtype.type(mask)
+    return out.ravel()[:n]
+
+
+def _window(
+    raw: np.ndarray, k0: int, bit_width: int, groups: int, nbytes: int
+) -> np.ndarray:
+    """Strided view of the ``(groups, bit_width)`` byte matrix ``raw``:
+    for each group, the ``nbytes`` bytes from column ``k0`` read as one
+    little-endian unsigned word, rounded up to 1, 2, 4 or 8 bytes (the
+    caller masks off the bytes that belong to the next lanes)."""
+    dt = _lane_dtype(8 * nbytes)
+    return np.ndarray(shape=(groups,), dtype=dt, buffer=raw, offset=k0,
+                      strides=(bit_width,))
 
 
 def bit_length_u32(arr: np.ndarray) -> np.ndarray:

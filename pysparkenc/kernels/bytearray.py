@@ -13,7 +13,8 @@ Re-expresses ``/root/reference/types/byte-array.go:120-348``:
   (``byte-array.go:225-348``).  The prefix computation here is vectorized:
   adjacent values are compared as padded byte matrices and the first
   mismatch position found with one argmin, instead of the reference's
-  byte-at-a-time loop.
+  byte-at-a-time loop. Decode resolves every prefix byte to the suffix byte
+  it copies with one sort by position, one running max and one gather.
 """
 
 from __future__ import annotations
@@ -42,18 +43,18 @@ def delta_length_encode(offsets: np.ndarray, data: bytes) -> bytes:
 def delta_length_decode(
     buf: bytes | memoryview, n: int
 ) -> tuple[np.ndarray, bytes]:
-    buf = bytes(buf)
-    lens, consumed = delta_bp_decode(buf, width=32)
+    mv = memoryview(buf).cast("B")
+    lens, consumed = delta_bp_decode(mv, width=32)
     if lens.size != n:
         raise ValueError(f"length stream holds {lens.size} values, expected {n}")
     if (lens < 0).any():
         raise ValueError("negative BYTE_ARRAY length")
     total = int(lens.sum())
-    if consumed + total > len(buf):
+    if consumed + total > len(mv):
         raise EOFError("there is no byte left")
     offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lens.astype(np.int64), out=offsets[1:])
-    return offsets, buf[consumed : consumed + total]
+    return offsets, bytes(mv[consumed : consumed + total])
 
 
 def delta_length_encoded_size(offsets: np.ndarray, data_len: int) -> int:
@@ -129,34 +130,47 @@ def delta_ba_encode(offsets: np.ndarray, data: bytes) -> bytes:
 
 
 def delta_ba_decode(buf: bytes | memoryview, n: int) -> tuple[np.ndarray, bytes]:
-    buf = bytes(buf)
-    prefix_lens, consumed = delta_bp_decode(buf, width=32)
+    mv = memoryview(buf).cast("B")
+    prefix_lens, consumed = delta_bp_decode(mv, width=32)
     if prefix_lens.size != n:
         raise ValueError("prefix stream length mismatch")
-    suffix_offsets, suffix_data = delta_length_decode(buf[consumed:], n)
-    # reconstruct with a per-value splice (byte-array.go:315-348); the chain
-    # dependency is sequential over values but each step is a memoryview
-    # slice, so cost is O(total bytes).
+    suffix_offsets, suffix_data = delta_length_decode(mv[consumed:], n)
     plens = prefix_lens.astype(np.int64)
     slens = np.diff(suffix_offsets)
     lens = plens + slens
+    if n and plens[0]:
+        raise ValueError("first value cannot have a prefix")
+    if (plens < 0).any():
+        raise ValueError("negative prefix length")
+    if (plens[1:] > lens[:-1]).any():
+        raise ValueError("prefix longer than the previous value")
     offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lens, out=offsets[1:])
-    out = bytearray(int(offsets[-1]))
-    sview = memoryview(suffix_data)
-    prev_start = 0
-    for i in range(n):
-        start = int(offsets[i])
-        pl = int(plens[i])
-        if pl:
-            if i == 0:
-                raise ValueError("first value cannot have a prefix")
-            out[start : start + pl] = out[prev_start : prev_start + pl]
-        s0 = int(suffix_offsets[i])
-        s1 = int(suffix_offsets[i + 1])
-        out[start + pl : start + pl + (s1 - s0)] = sview[s0:s1]
-        prev_start = start
-    return offsets, bytes(out)
+    total = int(offsets[-1])
+    out = np.empty(total, dtype=np.uint8)
+    # Byte t of value i is suffix byte t - plens[i] of value i when
+    # t >= plens[i], else byte t of value i - 1 (byte-array.go:315-348).
+    # The suffix bytes, in output order, are the suffix stream itself.
+    is_suffix = np.repeat(np.tile(np.array([False, True]), n),
+                          np.stack((plens, slens), axis=1).ravel())
+    out[is_suffix] = np.frombuffer(suffix_data, dtype=np.uint8)
+    if not is_suffix.all():
+        # A prefix byte at position t copies the latest suffix byte at
+        # position t of an earlier value: that value is the latest one at
+        # or before it whose prefix length is <= t. Ordered by (t, value),
+        # every position's first byte is a suffix byte (a prefix never
+        # outruns the previous value), so one running max over suffix
+        # ranks finds every source, and one gather copies it.
+        idx = np.int32 if total < 2**31 else np.int64
+        t = np.arange(total, dtype=idx) - np.repeat(offsets[:-1].astype(idx), lens)
+        # stable by t: a radix sort while t fits 16 bits
+        t = t.astype(np.min_scalar_type(int(lens.max()) - 1))
+        order = np.argsort(t, kind="stable")
+        rank = np.arange(total, dtype=idx)
+        rank[~is_suffix[order]] = 0
+        np.maximum.accumulate(rank, out=rank)
+        out[order] = out[order[rank]]
+    return offsets, out.tobytes()
 
 
 def delta_ba_encoded_size(offsets: np.ndarray, data: bytes) -> int:

@@ -33,6 +33,8 @@ Decoder rejects the reference's malformed-input set
 (``delta-binary-packed-decoder.go:29-94``): block size not a positive
 multiple of 128, miniblock count not a positive divisor with a
 multiple-of-32 quotient, bit width > 32 (int32) / > 64 (int64), truncation.
+It also refuses a value count that the remaining bytes cannot hold before it
+allocates for it.
 """
 
 from __future__ import annotations
@@ -45,8 +47,6 @@ from ._bits import (
     pack_varwidth,
     read_uvarint,
     read_varint,
-    unpack_const_width,
-    unpack_varwidth,
     write_uvarint,
     write_varint,
 )
@@ -156,7 +156,17 @@ def delta_bp_encode(
 def delta_bp_decode(
     buf: bytes | memoryview, *, width: int = 32
 ) -> tuple[np.ndarray, int]:
-    """Decode a full stream; returns (values, bytes_consumed)."""
+    """Decode a full stream; returns (values, bytes_consumed).
+
+    The four stream-header varints go through :func:`read_uvarint` /
+    :func:`read_varint`. The block headers are walked by one tight loop
+    with the min-delta varint parse inlined: per block it does integer
+    arithmetic (adding up the block's width bytes) and two list stores,
+    and makes no call. The values are then a fixed number of array
+    operations for the whole stream, whatever its widths: one width
+    check over every miniblock, one bit-field gather of every delta at
+    its miniblock's width, and one add-and-cumsum.
+    """
     if width == 32:
         sdtype, udtype = np.int32, np.uint32
         max_bw = 32
@@ -165,80 +175,135 @@ def delta_bp_decode(
         max_bw = 64
     else:
         raise ValueError("width must be 32 or 64")
-    buf = bytes(buf)
+    mv = memoryview(buf).cast("B")
+    size = len(mv)
     pos = 0
-    block_size, pos = read_uvarint(buf, pos)
-    miniblock_count, pos = read_uvarint(buf, pos)
+    block_size, pos = read_uvarint(mv, pos)
+    miniblock_count, pos = read_uvarint(mv, pos)
     mb_values = _check_params(block_size, miniblock_count)
-    n, pos = read_uvarint(buf, pos)
-    first, pos = read_varint(buf, pos)
+    n, pos = read_uvarint(mv, pos)
+    first, pos = read_varint(mv, pos)
     if n == 0:
         return np.zeros(0, dtype=sdtype), pos
-    out = np.empty(n, dtype=sdtype)
-    out[0] = sdtype(first)
     nd = n - 1
+    nblocks = -(-nd // block_size)
+    # every block carries a min-delta varint and its width bytes: refuse a
+    # forged count before allocating for it
+    if nblocks * (1 + miniblock_count) > size - pos:
+        raise EOFError("delta stream too short for its value count")
+    out = np.empty(n, dtype=sdtype)
+    # the first value wraps to the value width like every delta does
+    first_u = first & ((1 << width) - 1)
+    out[0] = first_u - ((first_u >> (width - 1)) << width)
     if nd == 0:
         return out, pos
-    # pass 1: walk block headers, index every miniblock segment
-    # (cheap scalar loop over BLOCKS; the value work is all in pass 2)
-    got = 0
-    block_mins: list[int] = []
-    mb_by_width: dict[int, tuple[list[int], list[int]]] = {}  # w -> (pos, out0)
-    mb_cursor = 0  # output slot in units of miniblocks
-    while got < nd:
-        min_delta, pos = read_varint(buf, pos)
-        block_mins.append(min_delta)
-        if pos + miniblock_count > len(buf):
-            raise EOFError("truncated miniblock width list")
-        bws = np.frombuffer(buf, dtype=np.uint8, count=miniblock_count,
-                            offset=pos)
-        pos += miniblock_count
-        if (bws > max_bw).any():
-            raise ValueError(f"invalid bit width > {max_bw}")
-        remaining = nd - got
-        nmb = min(miniblock_count, (remaining + mb_values - 1) // mb_values)
-        for k in range(nmb):
-            w = int(bws[k])
-            nbytes = (w * mb_values) // 8
-            if pos + nbytes > len(buf):
+
+    mb_bytes = mb_values // 8  # payload bytes per miniblock per width bit
+    blk_min, blk_wpos = [0] * nblocks, [0] * nblocks
+    r = got = 0
+    err = None
+    try:
+        while got < nd:
+            if pos >= size:
+                raise EOFError("truncated uvarint")
+            b = mv[pos]
+            pos += 1
+            ux = b & 0x7F
+            if b > 0x7F:  # multi-byte min delta, as _bits.read_uvarint
+                shift = 7
+                while True:
+                    if pos >= size:
+                        raise EOFError("truncated uvarint")
+                    b = mv[pos]
+                    pos += 1
+                    ux |= (b & 0x7F) << shift
+                    if b < 0x80:
+                        break
+                    shift += 7
+                    if shift > 63:
+                        raise ValueError("uvarint overflows 64 bits")
+                if shift == 63 and b > 1:
+                    raise ValueError("uvarint overflows 64 bits")
+            if pos + miniblock_count > size:
+                raise EOFError("truncated miniblock width list")
+            blk_min[r] = (ux >> 1) ^ -(ux & 1)
+            blk_wpos[r] = wpos = pos
+            r += 1
+            remaining = nd - got
+            if remaining >= block_size:
+                wend = pos + miniblock_count
+                got += block_size
+            else:  # the last block writes only the miniblocks it fills
+                wend = pos + (remaining + mb_values - 1) // mb_values
+                got = nd
+            wtotal = 0
+            while pos < wend:
+                wtotal += mv[pos]
+                pos += 1
+            pos = wpos + miniblock_count + wtotal * mb_bytes
+            if pos > size:
                 raise EOFError("truncated miniblock payload")
-            if w:
-                lst = mb_by_width.setdefault(w, ([], []))
-                lst[0].append(pos)
-                lst[1].append(mb_cursor + k)
-            pos += nbytes
-        got += min(remaining, nmb * mb_values)
-        mb_cursor += miniblock_count
+    except (EOFError, ValueError) as exc:
+        err = exc
+    # a bad width in a block read before the failure is the first error
+    raw = np.frombuffer(mv, dtype=np.uint8)
+    wpos = np.array(blk_wpos[:r], dtype=np.int64)
+    widths = raw[wpos[:, None] + np.arange(miniblock_count)]
+    if (widths > max_bw).any():
+        raise ValueError(f"invalid bit width > {max_bw}")
+    if err is not None:
+        raise err
 
-    # pass 2: ONE constant-width unpack per distinct width, scattered into
-    # a padded rebased buffer (zero-width miniblocks stay zero)
-    rebased = np.zeros(mb_cursor * mb_values, dtype=np.uint64)
-    seg_ramp = np.arange(mb_values, dtype=np.int64)
-    for w, (poss, out0s) in mb_by_width.items():
-        nbytes = (w * mb_values) // 8
-        joined = b"".join(buf[p : p + nbytes] for p in poss)
-        vals = unpack_const_width(joined, w, len(poss) * mb_values)
-        idx = (
-            np.asarray(out0s, dtype=np.int64)[:, None] * mb_values + seg_ramp
-        ).ravel()
-        rebased[idx] = vals
+    # miniblocks past the data in the last block are not on the wire
+    widths[-1, -(-(nd - (nblocks - 1) * block_size) // mb_values):] = 0
+    idx = np.uint32 if pos < 2**28 else np.uint64  # bit offsets fit
+    w = widths.astype(idx).reshape(-1, 1)
+    # value k of a miniblock starts k * width bits into its payload
+    payload_at = wpos.astype(idx)[:, None] + miniblock_count + mb_bytes * (
+        np.cumsum(widths, axis=1, dtype=idx) - widths)
+    bitpos = payload_at.reshape(-1, 1) * 8 + w * np.arange(mb_values, dtype=idx)
+    rebased = _bit_fields(raw[:pos], bitpos, w)
 
-    nblocks = len(block_mins)
-    mins = np.asarray(block_mins, dtype=np.int64)
+    mins = np.array(blk_min, dtype=np.int64)
     with np.errstate(over="ignore"):
         if width == 64:
             mins_u = mins.astype(udtype)
         else:
             mins_u = (mins & ((1 << width) - 1)).astype(udtype)
-        deltas = (
-            rebased[: nblocks * block_size][:nd].astype(udtype)
-            + np.repeat(mins_u, block_size)[:nd]
-        ).astype(sdtype)
-        out[1:] = (
-            np.cumsum(deltas.astype(udtype), dtype=udtype)
-            + udtype(first & ((1 << width) - 1))
-        ).astype(sdtype)
+        deltas = rebased.astype(udtype, copy=False).reshape(nblocks, block_size)
+        deltas += mins_u[:, None]
+        acc = out.view(udtype)[1:]
+        np.cumsum(deltas.ravel()[:nd], dtype=udtype, out=acc)
+        acc += udtype(first_u)
     return out, pos
+
+
+_FIELD_MASK = np.array([(1 << w) - 1 for w in range(65)], dtype=np.uint64)
+
+
+def _bit_fields(raw: np.ndarray, bitpos: np.ndarray, widths: np.ndarray) -> np.ndarray:
+    """The ``widths``-bit little-endian field at each bit offset ``bitpos``
+    of ``raw`` (``widths`` broadcasts against ``bitpos``).
+
+    Each field is one unaligned word read at its first byte, shifted
+    right by the bit offset and masked: a 4-byte word while every field
+    fits one (width <= 25), else 8 bytes, with widths 58-64 shifting in
+    the ninth byte they can spill into."""
+    maxw = int(widths.max(initial=0))
+    word = np.dtype("<u4") if maxw <= 25 else np.dtype("<u8")
+    padded = np.zeros(raw.size + 9, dtype=np.uint8)
+    padded[: raw.size] = raw
+    words = np.ndarray(shape=(raw.size + 1,), dtype=word, buffer=padded,
+                       strides=(1,))
+    at = bitpos >> 3
+    shift = (bitpos & 7).astype(word, copy=False)
+    vals = np.take(words, at)
+    vals >>= shift
+    if maxw > 56:
+        # (b << 1) << (63 - s) is b << (64 - s) without a shift by 64
+        vals |= (padded[at + 8].astype(word) << word.type(1)) << (word.type(63) - shift)
+    vals &= _FIELD_MASK[widths].astype(word)
+    return vals
 
 
 def delta_bp_encoded_size(

@@ -98,13 +98,14 @@ def dict_encode_codes(codes: np.ndarray, n_unique: int) -> bytes:
 
 
 def dict_decode_codes(buf: bytes | memoryview, n: int, n_unique: int) -> np.ndarray:
-    buf = bytes(buf)
-    if len(buf) < 1:
+    """The ``n`` codes as uint32, checked against the dictionary size."""
+    mv = memoryview(buf).cast("B")
+    if len(mv) < 1:
         raise EOFError("missing dictionary bit-width byte")
-    w = buf[0]
+    w = mv[0]
     if w > 32:
         raise ValueError(f"invalid bit-width {w}")
-    codes = hybrid_decode(buf[1:], w, n).astype(np.int64)
+    codes = hybrid_decode(mv[1:], w, n)
     if codes.size and codes.max() >= n_unique:
         raise ValueError(
             f"invalid index {int(codes.max())} for dictionary of {n_unique}"

@@ -42,11 +42,9 @@ import numpy as np
 
 from ._bits import (
     pack_const_width,
-    read_uvarint,
     unpack_const_width,
     write_uvarint,
 )
-from .plain import _ramp
 
 RLE_THRESHOLD = 8
 MAX_GROUPS_PER_RUN = 63  # (2^6 - 1) groups => 504 values per 1-byte header
@@ -157,79 +155,122 @@ def hybrid_decode(buf: bytes | memoryview, bit_width: int, n: int) -> np.ndarray
     """Decode ``n`` values; returns uint32 array.
 
     bit_width 0 means "infinite zeros" (hybrid-decoder.go:73-75).
+
+    One tight loop walks the run headers with the varint parse inlined:
+    per run it does integer arithmetic and two list stores, and makes no
+    call. Everything that touches values is then a fixed number of array
+    operations for the whole stream: one gather of every bit-packed
+    payload byte, one :func:`unpack_const_width`, one gather of the RLE
+    values, and one fill of the output.
     """
     if bit_width < 0 or bit_width > 32:
         raise ValueError(f"invalid bit width {bit_width}")
     if bit_width == 0:
         return np.zeros(n, dtype=np.uint32)
-    buf = bytes(buf)
-    pos = 0
-    got = 0
+    mv = memoryview(buf).cast("B")
+    size = len(mv)
     rle_nbytes = (bit_width + 7) // 8
-    limit = (1 << bit_width) - 1
+    # an RLE value fits the width iff its top byte does
+    top = rle_nbytes - 1
+    top_limit = ((1 << bit_width) - 1) >> (8 * top)
 
-    # pass 1: walk headers only (cheap scalar loop over RUNS, not values)
-    packed_segs: list[tuple[int, int, int, int]] = []  # (pos, nbytes, cnt, out0)
-    rle_vals: list[int] = []
-    rle_cnts: list[int] = []
-    rle_out0: list[int] = []
+    # per run: payload (or RLE value) position and header
+    cap = 256
+    run_pos, run_hdr = [0] * cap, [0] * cap
+    r = pos = got = 0
     while got < n:
-        header, pos = read_uvarint(buf, pos)
-        if header & 1:
-            groups = header >> 1
-            if groups == 0:
+        if r == cap:
+            run_pos += [0] * cap
+            run_hdr += [0] * cap
+            cap *= 2
+        if pos >= size:
+            raise EOFError("truncated uvarint")
+        h = mv[pos]
+        pos += 1
+        if h > 0x7F:  # multi-byte header, as _bits.read_uvarint
+            h &= 0x7F
+            shift = 7
+            while True:
+                if pos >= size:
+                    raise EOFError("truncated uvarint")
+                b = mv[pos]
+                pos += 1
+                h |= (b & 0x7F) << shift
+                if b < 0x80:
+                    break
+                shift += 7
+                if shift > 63:
+                    raise ValueError("uvarint overflows 64 bits")
+            if shift == 63 and b > 1:
+                raise ValueError("uvarint overflows 64 bits")
+        run_pos[r] = pos
+        run_hdr[r] = h
+        r += 1
+        if h & 1:
+            if h == 1:
                 raise ValueError("rle: empty bit-packed run")
-            nbytes = groups * bit_width
-            avail = len(buf) - pos
-            if avail <= 0:
+            if pos >= size:
                 raise EOFError("truncated bit-packed run")
-            # the reference zero-fills a short final read (Go Read
-            # partial-fill into a zeroed buffer, hybrid-decoder.go:138-149
-            # — exercised by hybrid-decoder_test.go:11-35)
-            packed_segs.append((pos, min(nbytes, avail), groups * 8, got))
-            pos += nbytes
-            got += groups * 8
+            pos += (h >> 1) * bit_width
+            got += (h >> 1) << 3
         else:
-            count = header >> 1
-            if count == 0:
+            if h == 0:
                 raise ValueError("rle: empty RLE run")
-            if pos + rle_nbytes > len(buf):
+            if pos + rle_nbytes > size:
                 raise EOFError("truncated RLE run value")
-            value = int.from_bytes(buf[pos : pos + rle_nbytes], "little")
-            pos += rle_nbytes
-            if value > limit:
+            if mv[pos + top] > top_limit:
                 raise ValueError("rle: RLE run value is too large")
-            rle_vals.append(value)
-            rle_cnts.append(count)
-            rle_out0.append(got)
-            got += count
+            pos += rle_nbytes
+            got += h >> 1
+    if r == 0:
+        return np.zeros(0, dtype=np.uint32)
 
-    out = np.zeros(got, dtype=np.uint32)
+    # only the last run may reach past n (its header even past int64):
+    # trim it to the groups / values that land in the output
+    h = run_hdr[r - 1]
+    last = n - (got - ((h >> 1) << 3 if h & 1 else h >> 1))
+    run_hdr[r - 1] = min(h, (((last + 7) >> 3) << 1) | 1 if h & 1 else last << 1)
+    hdr = np.array(run_hdr[:r], dtype=np.int64)
+    at = np.array(run_pos[:r], dtype=np.int64)
+    packed = (hdr & 1).astype(bool)
+    per_run = np.where(packed, (hdr >> 1) << 3, hdr >> 1)
+    per_run[-1] = last
+    raw = np.frombuffer(mv, dtype=np.uint8)
+    any_packed = packed.any()
 
-    # pass 2a: ONE unpack over every bit-packed payload (same width), then
-    # scatter each segment to its output window
-    if packed_segs:
-        joined = b"".join(
-            buf[p : p + nb].ljust(((cnt // 8) * bit_width), b"\x00")
-            for p, nb, cnt, _ in packed_segs
-        )
-        total_cnt = sum(cnt for _, _, cnt, _ in packed_segs)
-        vals = unpack_const_width(joined, bit_width, total_cnt)
-        src = 0
-        for _, _, cnt, out0 in packed_segs:
-            out[out0 : out0 + cnt] = vals[src : src + cnt]
-            src += cnt
+    if any_packed:
+        # every bit-packed payload byte in stream order, selected by a
+        # mask of alternating (gap, payload) spans; the reference
+        # zero-fills a short final read (Go Read partial-fill into a
+        # zeroed buffer, hybrid-decoder.go:138-149 — exercised by
+        # hybrid-decoder_test.go:11-35)
+        p0 = at[packed]
+        groups = hdr[packed] >> 1
+        p1 = np.minimum(p0 + groups * bit_width, size)
+        spans = np.stack((p0 - np.concatenate(([0], p1[:-1])), p1 - p0), axis=1)
+        in_payload = np.repeat(
+            np.tile(np.array([False, True]), p0.size), spans.ravel())
+        payload = raw[: in_payload.size][in_payload]
+        ngroups = int(groups.sum())
+        if payload.size < ngroups * bit_width:
+            payload = np.concatenate(
+                (payload, np.zeros(ngroups * bit_width - payload.size, np.uint8)))
+        vals = unpack_const_width(payload, bit_width, ngroups * 8)
+        if packed.all():
+            return vals[:n].astype(np.uint32)
 
-    # pass 2b: all RLE runs in one repeat + one fancy-index assignment
-    if rle_vals:
-        cnts = np.asarray(rle_cnts, dtype=np.int64)
-        starts = np.asarray(rle_out0, dtype=np.int64)
-        idx = np.repeat(starts, cnts) + _ramp(cnts)
-        out[idx] = np.repeat(
-            np.asarray(rle_vals, dtype=np.uint32), cnts
-        )
-
-    return out[:n]
+    # RLE values: rle_nbytes little-endian bytes after each header; the
+    # bit-packed runs' slots are then overwritten in one masked store
+    q = at[~packed]
+    value = np.zeros(r, dtype=np.uint32)
+    rle_value = raw[q].astype(np.uint32)
+    for k in range(1, rle_nbytes):
+        rle_value |= raw[q + k].astype(np.uint32) << np.uint32(8 * k)
+    value[~packed] = rle_value
+    out = np.repeat(value, per_run)
+    if any_packed:
+        out[np.repeat(packed, per_run)] = vals[: int(per_run[packed].sum())]
+    return out
 
 
 def hybrid_encode_with_size(values: np.ndarray, bit_width: int) -> bytes:
@@ -245,13 +286,13 @@ def hybrid_decode_with_size(
     """Decode a length-prefixed hybrid stream; returns (values, bytes_read)."""
     if bit_width == 0:
         return np.zeros(n, dtype=np.uint32), 0
-    buf = bytes(buf)
-    if len(buf) < 4:
+    mv = memoryview(buf).cast("B")
+    if len(mv) < 4:
         raise EOFError("truncated size prefix")
-    (size,) = struct.unpack_from("<I", buf, 0)
-    if 4 + size > len(buf):
+    (size,) = struct.unpack_from("<I", mv, 0)
+    if 4 + size > len(mv):
         raise EOFError("truncated sized hybrid stream")
-    return hybrid_decode(buf[4 : 4 + size], bit_width, n), 4 + size
+    return hybrid_decode(mv[4 : 4 + size], bit_width, n), 4 + size
 
 
 def hybrid_encoded_size(values: np.ndarray, bit_width: int) -> int:

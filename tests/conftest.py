@@ -19,3 +19,22 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def filter_pushdown(spark):
+    """Opt the session into Catalyst filter pushdown into the
+    ``pysparkenc`` reader for one test (off unless the session enables
+    it before ``datasource.register``)."""
+    from pysparkenc.datasource import _PUSHDOWN_CONF as key
+    from pysparkenc.datasource import register
+
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    register(spark)
+    yield
+    if old is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, old)
+    register(spark)

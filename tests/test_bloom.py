@@ -192,7 +192,7 @@ def test_bloom_excluded_from_enc_bytes(spark):
     assert bloomed.where(F.col("bloom").isNotNull()).count() > 0
 
 
-def test_datasource_bloom_option_roundtrip(spark, tmp_path):
+def test_datasource_bloom_option_roundtrip(spark, tmp_path, filter_pushdown):
     from pysparkenc.datasource import register
 
     register(spark)

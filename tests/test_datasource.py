@@ -54,7 +54,9 @@ def test_write_read_roundtrip(spark, tmp_path):
     assert b == o
 
 
-def test_filters_are_reapplied_correctly(spark, tmp_path):
+def test_filters_are_reapplied_correctly(
+    spark, tmp_path, filter_pushdown
+):
     store = str(tmp_path / "store")
     _mixed_df(spark).write.format("pysparkenc").mode("overwrite").save(store)
     back = spark.read.format("pysparkenc").load(store)
@@ -67,6 +69,35 @@ def test_filters_are_reapplied_correctly(spark, tmp_path):
         [i for i in range(3000) if i % 7 and str(i).startswith("29")]
     )
     assert back.where(F.col("id").isin(5, 6, 2999, 99999)).count() == 3
+
+
+@pytest.mark.parametrize("layout", ["flat", "lineage"])
+def test_filtered_then_unfiltered_query_counts_every_row(
+    spark, tmp_path, layout
+):
+    """``register`` leaves Python filter pushdown off, so one ``load()``
+    DataFrame queried with a pruning filter and then without one still
+    reads every row. (With pushdown on, Spark 4.1 reuses the reader it
+    planned for the filter, and the second count sees only the page
+    groups the filter kept.)"""
+    from pysparkenc.lineage import encode_with_lineage
+
+    store = str(tmp_path / "store")
+    src = spark.sql(
+        "SELECT id, concat('doc-', id) AS doc_id FROM range(3000)"
+    ).coalesce(1).sortWithinPartitions("id")
+    if layout == "flat":
+        src.write.format("pysparkenc").mode("overwrite").option(
+            "rows_per_chunk", "256").save(store)
+    else:
+        encode_with_lineage(src, store, num_partitions=1, rows_per_chunk=256,
+                            sort_by=("id",))
+    assert spark.conf.get(
+        "spark.sql.python.filterPushdown.enabled", "false") == "false"
+    df = spark.read.format("pysparkenc").load(store)
+    assert df.where(F.col("doc_id") == "doc-1234").count() == 1
+    assert df.count() == 3000
+    assert df.select("doc_id").distinct().count() == 3000
 
 
 def test_repeated_group_roundtrip(spark, tmp_path):
@@ -508,7 +539,9 @@ def test_lineage_store_append_then_delete_applies(spark, tmp_path):
     assert not vic & {r["doc_id"] for r in got.select("doc_id").collect()}
 
 
-def test_lineage_store_pushed_filters_still_prune(spark, tmp_path):
+def test_lineage_store_pushed_filters_still_prune(
+    spark, tmp_path, filter_pushdown
+):
     """Catalyst pushdown composes with the commit-aware plan: the
     pruned, delete-filtered format() read returns exactly the rows the
     predicate selects."""
@@ -528,7 +561,9 @@ def test_lineage_store_pushed_filters_still_prune(spark, tmp_path):
     assert exp.exceptAll(got).count() == 0
 
 
-def test_isnull_and_not_isnull_pushdown(spark, tmp_path):
+def test_isnull_and_not_isnull_pushdown(
+    spark, tmp_path, filter_pushdown
+):
     """IS NULL prunes groups that recorded zero nulls; NOT(IS NULL)
     unwraps to the not-null prune. Both stay correct (Spark re-applies
     the filters) and the translation accepts them."""

@@ -30,7 +30,6 @@ from pysparkenc.datasource import (
     ChunkStoreReader,
     _list_parquet,
     _to_pushed,
-    register,
 )
 from pysparkenc.engine import scan_table, where_pushed
 from pysparkenc.lineage import (
@@ -249,8 +248,7 @@ def typed(spark, tmp_path_factory):
     )
     encode_with_lineage(src, path, num_partitions=2, rows_per_chunk=128,
                         sort_by=("id",))
-    register(spark)
-    return src, spark.read.format("pysparkenc").load(path)
+    return src, path
 
 
 PUSHDOWN = {
@@ -273,8 +271,10 @@ PUSHDOWN = {
 
 
 @pytest.mark.parametrize("kind", sorted(PUSHDOWN))
-def test_pushed_filters_on_converted_columns(typed, kind):
-    src, ds = typed
+def test_pushed_filters_on_converted_columns(spark, typed, kind,
+                                            filter_pushdown):
+    src, path = typed
+    ds = spark.read.format("pysparkenc").load(path)
     for cond in PUSHDOWN[kind]:
         want = src.where(cond).count()
         assert want > 0, cond
