@@ -1,12 +1,12 @@
 """Lifecycle management for persisted intermediates.
 
 Several operators persist an intermediate DataFrame (LSH band tables,
-bucketized signatures, partition-plan counts) because two or more
-downstream consumers — a degenerate-bucket guard aggregate plus both
-sides of a self-join — would otherwise each recompute the full upstream
-pipeline. The intermediate must stay cached until the *returned*
-DataFrame has been materialized, which only the caller controls, so the
-functions themselves cannot unpersist eagerly.
+bucketized signatures) because two or more downstream consumers — a
+degenerate-bucket guard aggregate plus both sides of a self-join —
+would otherwise each recompute the full upstream pipeline. The
+intermediate must stay cached until the *returned* DataFrame has been
+materialized, which only the caller controls, so the functions
+themselves cannot unpersist eagerly.
 
 ``tether(result, *cached)`` ties the cached intermediates' lifetime to
 the result object: they are unpersisted automatically when the result
@@ -41,11 +41,6 @@ def _unpersist_all(cached: list[DataFrame]) -> None:
         except Exception:
             # session already stopped / JVM gone — nothing left to free
             pass
-        # chain: a tethered-but-not-persisted frame (e.g. the partition-
-        # planned intermediate inside encode_table) forwards the release
-        # to ITS caches, so handing the outermost result to tether() is
-        # enough to free the whole chain
-        release(df)
 
 
 def tether(result: DataFrame, *cached: DataFrame) -> DataFrame:
@@ -55,8 +50,8 @@ def tether(result: DataFrame, *cached: DataFrame) -> DataFrame:
     release is available via :func:`release`. The finalizer holds the
     only extra reference to the cached frames, so nothing here extends
     the result's own lifetime — but it DOES keep each ``cached`` frame
-    (and through chaining, its own caches) alive until the result dies,
-    which is exactly the window the cache is useful for.
+    alive until the result dies, which is exactly the window the cache
+    is useful for.
     """
     fin = weakref.finalize(result, _unpersist_all, list(cached))
     fin.atexit = False  # don't churn py4j during interpreter shutdown

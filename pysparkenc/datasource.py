@@ -163,6 +163,8 @@ _LINEAGE_PA_SCHEMA = pa.schema(
         ("n_chunks", pa.int64()),
         ("wall_sec", pa.float64()),
         ("status", pa.string()),
+        ("partition_by", pa.string()),
+        ("num_partitions", pa.int64()),
     ]
 )
 
@@ -739,7 +741,8 @@ def _lineage_max_run(path: str) -> int:
 
 
 def _chunk_lineage_rows(
-    path: str, run_id: int, batch_id: int, wall_sec: float
+    path: str, run_id: int, batch_id: int, wall_sec: float,
+    plan: tuple[str | None, int | None] = (None, None),
 ) -> list[tuple]:
     """The ``done`` lineage rows of a run whose chunks have landed under
     ``chunks/run_id=<r>/``, one per part id, built from the chunk files'
@@ -747,7 +750,10 @@ def _chunk_lineage_rows(
     column-chunk row of one page group carries the group's ``n_rows``,
     so a part's rows are the sum over its page groups of the group's
     max; ``n_chunks`` counts its chunk rows. Computed from what actually
-    landed, so a retried or lost task cannot skew the commit record."""
+    landed, so a retried or lost task cannot skew the commit record.
+    ``plan`` is the run's ``(partition_by, num_partitions)`` record (see
+    :func:`pysparkenc.lineage.encode_with_lineage`); None where the run
+    has no resumable partition plan."""
     cols = ["part_id", "chunk_id", "n_rows", "n_values", "plain_bytes",
             "enc_bytes"]
     files = _list_parquet(os.path.join(_chunk_dir(path), f"run_id={run_id}"))
@@ -769,7 +775,7 @@ def _chunk_lineage_rows(
     ).sort_by("part_id")
     return [
         (int(run_id), int(batch_id), p, nr, nv, pb, eb, nc,
-         float(wall_sec), "done")
+         float(wall_sec), "done", *plan)
         for p, nr, nv, pb, eb, nc in zip(
             *(parts.column(c).to_pylist() for c in (
                 "part_id", "n_rows_max_sum", "n_values_sum_sum",
@@ -785,7 +791,8 @@ def _append_lineage_rows(path: str, rows: list[tuple]) -> None:
     dot-prefixed temp name (invisible to lineage readers) and
     ``os.replace``d into ``lineage/``, so all of a commit record becomes
     visible at once or none of it — a killed commit can never leave a
-    batch half-visible to the ``batch_id`` replay check."""
+    batch half-visible to the ``batch_id`` replay check. A row shorter
+    than the schema leaves its trailing columns null."""
     t = pa.Table.from_pylist(
         [dict(zip(_LINEAGE_PA_SCHEMA.names, r)) for r in rows],
         schema=_LINEAGE_PA_SCHEMA,

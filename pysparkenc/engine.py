@@ -17,10 +17,11 @@ the Spark-idiomatic pipeline from SURVEY.md §3:
   the partition size — the scale lever for 10^12-sequence tables.
 - Skew: ``plan_partitions`` gives every distinct value of the leading
   partition key a contiguous bucket range sized proportionally to its row
-  count (a tiny aggregate + broadcast join), then salts within the range by
-  hashing the secondary key. Hot sources spread over many partitions;
-  every partition stays single-source, which keeps chunks homogeneous and
-  dictionary/RLE-friendly.
+  count, then salts within the range by hashing the secondary key. The
+  plan is one per-key count collected to the driver, sized there with
+  numpy and applied as one broadcast join. Hot sources spread over many
+  partitions; every partition stays single-source, which keeps chunks
+  homogeneous and dictionary/RLE-friendly.
 - decode_table groups the chunk rows back with ``applyInArrow`` and emits
   the original schema; round-trip is bit-identical (token-array equality
   per row — the BASELINE.json invariant).
@@ -345,6 +346,9 @@ def _hashable_type(dt) -> bool:
 
 _PREIMAGE_CACHE: dict[int, list[int]] = {}
 
+# distinct leading-key values past which plan_partitions refuses to plan
+_MAX_PLAN_KEYS = 1_000_000
+
 
 def _slot_preimages(spark: SparkSession, n: int) -> list[int]:
     """``out[s]`` = a long v with ``pmod(murmur3(v), n) == s`` — i.e.
@@ -394,8 +398,10 @@ def plan_partitions(
     salting by the range key itself would send EVERY row of a hot key to
     one bucket of its range, re-creating exactly the skew the range plan
     exists to defuse. Row-content salting keeps part_id a pure function
-    of the row (same input ⇒ same part_id at any cluster size — the
-    property lineage resume's anti-join depends on).
+    of the row given the input and ``num_partitions`` (same input and
+    plan ⇒ same part_id at any cluster size — the property lineage
+    resume's anti-join depends on, which is why the lineage records
+    ``num_partitions``).
 
     Buckets are OVERSAMPLED 8× past ``num_partitions`` and striped onto
     slots round-robin (``part_id = global_bucket mod n``): with exactly
@@ -406,8 +412,6 @@ def plan_partitions(
     IS the physical partition index — :func:`encode_table` places it
     exactly via :func:`_slot_preimages` instead of re-hashing (hash
     placement would re-merge distinct buckets into hot tasks)."""
-    from pyspark.sql import Window
-
     key0 = partition_by[0]
     num_buckets = num_partitions * 8
     salt_keys = list(partition_by[1:])
@@ -416,51 +420,47 @@ def plan_partitions(
             f.name for f in df.schema.fields
             if f.name != key0 and _hashable_type(f.dataType)
         ] or [key0]
-    # The plan never touches the driver: counts -> proportional bucket
-    # sizes -> prefix-sum offsets, all as one tiny aggregate + one
-    # single-partition window over n_distinct(key0) rows (an executor
-    # task, not a .collect()). The guard still bounds the BROADCAST of
-    # the plan — past it, the leading key is too fine for range planning
-    # and pure hash partitioning is the right tool anyway.
-    from pyspark import StorageLevel
-
-    # persist: the guard count below must not trigger a second full scan
-    # of df when the plan is built (the counts table itself is tiny)
-    counts = df.groupBy(key0).count().persist(StorageLevel.MEMORY_AND_DISK)
-    n_keys = counts.count()
-    if n_keys > 1_000_000:
+    # The plan is built on the driver from ONE collected aggregate: the
+    # per-key counts arrive as Arrow, already in asc_nulls_first key
+    # order (one coalesced task sorts them, so the order is Spark's),
+    # and numpy turns them into bucket sizes and prefix-sum offsets. The
+    # guard bounds both the collect and the broadcast of the plan — past
+    # it, the leading key is too fine for range planning and pure hash
+    # partitioning is the right tool anyway.
+    counts = (
+        df.groupBy(key0).count()
+        .coalesce(1)
+        .sortWithinPartitions(F.col(key0).asc_nulls_first())
+        .limit(_MAX_PLAN_KEYS + 1)
+        .toArrow()
+    )
+    if counts.num_rows > _MAX_PLAN_KEYS:
         raise ValueError(
             f"partition key {key0} has over 1e6 distinct values; "
             "use a coarser leading key or partition_by=None (pure hash)"
         )
-    total = F.sum("count").over(Window.partitionBy())
-    buckets = F.greatest(
-        F.lit(1),
-        F.round(F.lit(num_buckets) * F.col("count") / total).cast("int"),
-    )
-    # null-safe global order: nulls sort first, deterministically
-    order = Window.orderBy(F.col(key0).asc_nulls_first())
-    plan = (
-        counts.withColumn("__buckets", buckets)
-        .withColumn(
-            "__offset",
-            F.coalesce(
-                F.sum("__buckets").over(
-                    order.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).cast("int"),
-        )
-        .select(F.col(key0).alias("__k0"), "__offset", "__buckets")
+    n = counts.column("count").to_numpy().astype(np.int64)
+    # Spark's F.round(num_buckets * count / total): a long product, a
+    # double quotient, then HALF_UP on the double's exact value
+    share = (num_buckets * n).astype(np.float64) / np.float64(n.sum())
+    whole = np.floor(share)
+    buckets = np.maximum(1, whole + (share - whole >= 0.5)).astype(np.int32)
+    offsets = (np.cumsum(buckets) - buckets).astype(np.int32)
+    plan = df.sparkSession.createDataFrame(
+        pa.table({"__k0": counts.column(0), "__offset": offsets,
+                  "__buckets": buckets}),
+        StructType([
+            StructField("__k0", df.schema[key0].dataType, True),
+            StructField("__offset", IntegerType(), False),
+            StructField("__buckets", IntegerType(), False),
+        ]),
     )
     salted = F.pmod(
         F.abs(F.xxhash64(*[F.col(c) for c in salt_keys])), F.col("__buckets")
     )
     # eqNullSafe: a nullable leading key still gets its bucket range (an
     # inner equi-join would silently drop null-key rows)
-    from .caching import tether
-
-    planned = (
+    return (
         df.join(F.broadcast(plan), F.col(key0).eqNullSafe(F.col("__k0")))
         .withColumn("__bucket", (F.col("__offset") + salted).cast("long"))
         .withColumn(
@@ -469,7 +469,6 @@ def plan_partitions(
         )
         .drop("__k0", "__offset", "__buckets")
     )
-    return tether(planned, counts)
 
 
 # ---------------------------------------------------------------------------
@@ -769,6 +768,11 @@ def encode_table(
     (chunk rows still record the user's part_id — only task placement
     coarsens). Raise ``num_partitions`` structure upstream or pre-split
     if >8192 exact groups are required.
+    ``num_partitions``: encode partitions (= encode tasks). The default
+    is ``defaultParallelism``, so the encode stage runs as ONE wave of
+    tasks: every task pays a fixed Python-boundary cost, and a second
+    wave pays it again without adding balance — the skew plan already
+    oversamples 8× and stripes its buckets onto the slots.
     ``sort_by``: cluster rows by these columns INSIDE each partition
     before chunking (``sortWithinPartitions`` — a local sort, no extra
     shuffle). Sorted pages hand the codecs longer runs and smaller
@@ -779,7 +783,7 @@ def encode_table(
     """
     spark = df.sparkSession
     if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
+        num_partitions = spark.sparkContext.defaultParallelism
 
     def _contains_interval(dt) -> bool:
         if isinstance(dt, (DayTimeIntervalType, YearMonthIntervalType)):
@@ -948,14 +952,7 @@ def encode_table(
                                           compression, bloom_for, kcache)
                 seq += 1
 
-    encoded = shuffled.mapInArrow(encode_iter, CHUNK_SCHEMA)
-    if partition_by:
-        # chain the partition-plan counts cache to the encode output's
-        # lifetime (caching.tether releases it when `encoded` is dropped)
-        from .caching import tether
-
-        encoded = tether(encoded, with_part)
-    return encoded
+    return shuffled.mapInArrow(encode_iter, CHUNK_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -2,10 +2,12 @@
 
 north_rule: "resumable from checkpoint with per-partition lineage +
 metrics". The unit of work is the engine's ``part_id`` (deterministic:
-hash/range of the partition keys — same input ⇒ same part_ids at any
-cluster size). An encode run writes, per part_id, the encoded chunk rows
-*and* one lineage row ``(run_id, part_id, n_rows, n_values, plain_bytes,
-enc_bytes, n_chunks, wall_sec, status)``.
+hash/range of the partition keys — same input and partition plan ⇒ same
+part_ids at any cluster size). An encode run writes, per part_id, the
+encoded chunk rows *and* one lineage row ``(run_id, part_id, n_rows,
+n_values, plain_bytes, enc_bytes, n_chunks, wall_sec, status,
+partition_by, num_partitions)``; the last two record the plan a resume
+must reuse.
 
 Commit protocol (Iceberg-snapshot-shaped, on plain parquet dirs):
 
@@ -33,6 +35,7 @@ change, not a redesign.
 
 from __future__ import annotations
 
+import json
 import time
 
 import pyarrow.compute as pc
@@ -75,6 +78,12 @@ LINEAGE_SCHEMA = StructType(
         StructField("n_chunks", LongType(), False),
         StructField("wall_sec", DoubleType(), False),
         StructField("status", StringType(), False),
+        # the run's partition plan (encode_with_lineage, which resumes
+        # by part id); null on runs written before it was recorded and
+        # on runs nothing resumes (compaction, the data-source writer,
+        # deletes, markers)
+        StructField("partition_by", StringType(), True),
+        StructField("num_partitions", LongType(), True),
     ]
 )
 
@@ -101,7 +110,6 @@ def _record_run_schema(path: str, run_id: int, schema) -> None:
     introduced column X?"). Informational metadata: readers derive the
     live union schema from chunk metadata, so a missing record never
     blocks a read."""
-    import json
     import os
 
     os.makedirs(_schemas_dir(path), exist_ok=True)
@@ -112,7 +120,6 @@ def _record_run_schema(path: str, run_id: int, schema) -> None:
 def run_schemas(path: str) -> dict[int, "StructType"]:
     """Per-run schemas recorded by :func:`encode_with_lineage` /
     :func:`compact_store`, keyed by run id."""
-    import json
     import os
 
     d = _schemas_dir(path)
@@ -302,6 +309,44 @@ def _next_run_id(spark: SparkSession | None, path: str) -> int:
                *_on_disk_run_ids(path), 0) + 1
 
 
+def _resume_plan(
+    done, partition_by: str, num_partitions: int | None
+) -> int | None:
+    """The ``num_partitions`` a resume over the committed ``done``
+    lineage rows must use: the recorded one when the caller passes
+    None. Raises ValueError when the caller's plan differs from the
+    recorded plan, or the runs record different plans — resuming under
+    another plan moves rows to other part ids, so the skip set would
+    drop some rows and encode others twice. No recorded plan (rows
+    committed before plans were recorded) leaves the caller's value."""
+    recorded = {
+        (by, n) for by, n in zip(done.column("partition_by").to_pylist(),
+                                 done.column("num_partitions").to_pylist())
+        if n is not None
+    }
+    if not recorded:
+        return num_partitions
+    if len(recorded) > 1:
+        raise ValueError(
+            "cannot resume: the committed runs record different partition "
+            f"plans {sorted(recorded)} (partition_by, num_partitions); "
+            "pass resume=False to append a new dataset"
+        )
+    ((rec_by, rec_n),) = recorded
+    if num_partitions is None:
+        num_partitions = int(rec_n)
+    if (partition_by, num_partitions) != (rec_by, rec_n):
+        raise ValueError(
+            f"cannot resume with partition_by={json.loads(partition_by)}, "
+            f"num_partitions={num_partitions}: the committed parts were "
+            f"planned with partition_by={json.loads(rec_by)}, "
+            f"num_partitions={rec_n}, and part ids differ between plans. "
+            "Resume with the recorded plan (num_partitions=None reuses "
+            "it), or pass resume=False to append a new dataset"
+        )
+    return num_partitions
+
+
 def encode_with_lineage(
     df: DataFrame,
     path: str,
@@ -329,6 +374,20 @@ def encode_with_lineage(
     silently reduces to a no-op (the result then carries a ``hint``
     saying so).
 
+    A part id is a pure function of the row only for a fixed partition
+    plan, so every run records its ``partition_by`` and resolved
+    ``num_partitions`` in its done lineage rows. A resume that finds
+    committed parts reuses the recorded ``num_partitions`` when the
+    caller passes None, and raises ``ValueError`` before writing when
+    the caller's plan differs from the recorded one (or the committed
+    runs record different plans). Rows committed before plans were
+    recorded carry none, so a store holding only such rows resumes as
+    it always did: with the caller's plan, unchecked.
+
+    ``num_partitions`` defaults to ``defaultParallelism``: the encode
+    stage then runs as one wave of tasks (see
+    :func:`pysparkenc.engine.encode_table`).
+
     Returns run metrics. ``drop_part_ids`` is a test-only fault injector:
     those partitions' output is discarded before commit, simulating a job
     killed after a partial run — the next call with ``resume=True``
@@ -348,8 +407,11 @@ def encode_with_lineage(
     spark = df.sparkSession
     t0 = time.time()
     # replay and resume both read the done rows, with pyarrow: the
-    # chunk write below is this call's only Spark job
-    lin = datasource._lineage_table(path, ("batch_id", "part_id", "status"))
+    # partition plan's aggregate and the chunk write are this call's
+    # only Spark jobs
+    lin = datasource._lineage_table(
+        path, ("batch_id", "part_id", "status", "partition_by",
+               "num_partitions"))
     done = lin.filter(pc.equal(lin.column("status"), "done"))
     if batch_id is not None:
         already = pc.sum(pc.equal(done.column("batch_id"), int(batch_id)))
@@ -369,14 +431,19 @@ def encode_with_lineage(
                 "replayed_batch": True,
             }
     datasource._check_schema_evolution(path, df.schema)
+    done_parts = (set(done.column("part_id").to_pylist()) if resume
+                  else set())
+    plan_by = json.dumps(list(partition_by or ()))
+    if done_parts:
+        num_partitions = _resume_plan(done, plan_by, num_partitions)
+    if num_partitions is None:
+        num_partitions = spark.sparkContext.defaultParallelism
     run_id = _next_run_id(spark, path)
     chunks = encode_table(
         df, partition_by=partition_by, num_partitions=num_partitions,
         codec=codec, compression=compression, rows_per_chunk=rows_per_chunk,
         target_chunk_bytes=target_chunk_bytes, sort_by=sort_by, bloom=bloom,
     )
-    done_parts = (set(done.column("part_id").to_pylist()) if resume
-                  else set())
     skip = done_parts | {int(p) for p in drop_part_ids or ()}
     if skip:
         chunks = chunks.where(~F.col("part_id").isin(sorted(skip)))
@@ -390,7 +457,8 @@ def encode_with_lineage(
     wall = time.time() - t0
     # lineage commit AFTER chunk rows land, built from what landed
     rows = datasource._chunk_lineage_rows(
-        path, run_id, -1 if batch_id is None else int(batch_id), wall
+        path, run_id, -1 if batch_id is None else int(batch_id), wall,
+        (plan_by, num_partitions),
     )
     datasource._commit_lineage_rows(
         path, run_id, rows,

@@ -309,26 +309,9 @@ def _hyperplanes(planes: int, dim: int, table: int = 0) -> list[list[int]]:
     return out
 
 
-def hyperplane_bucket(
-    vec: Column, planes: int = 8, dim: int = 64, table: int = 0
-) -> Column:
-    """LSH bucket id as a Catalyst expression: sign bits of ±1-hyperplane
-    projections. Kept for per-row/interactive use; batch pipelines go
-    through :func:`_bucketize` (one matmul per Arrow batch) instead."""
-    acc = F.lit(0).cast("long")
-    for p, row in enumerate(_hyperplanes(planes, dim, table)):
-        plane = F.array(*[F.lit(float(x)) for x in row])
-        proj = _dot(vec, plane)
-        acc = acc + F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-            F.lit(0).cast("long")
-        )
-    return acc
-
-
 def _planes_matrix(planes: int, dim: int, tables: int):
-    """(tables*planes, dim) ±1 matrix, same md5 seeding as the Column
-    path — bucket ids agree between the two implementations up to IEEE
-    summation order on exact-zero projections."""
+    """(tables*planes, dim) ±1 matrix: the md5-seeded hyperplanes of
+    :func:`_hyperplanes`, one ``planes``-row block per LSH table."""
     import numpy as np
 
     rows = []

@@ -69,16 +69,14 @@ def test_release_frees_near_dup_and_plan_caches(spark, docs):
     assert _n_cached(spark) == base
 
 
-def test_release_chains_through_encode_table(spark, docs):
-    # encode_table tethers its internal partition-planned frame, which in
-    # turn tethers the counts cache — releasing the OUTERMOST result must
-    # free the whole chain
+def test_encode_table_caches_nothing(spark, docs):
+    # the partition plan is collected to the driver: encoding persists no
+    # intermediate, so there is nothing to tether or release
     base = _n_cached(spark)
     enc = engine.encode_table(docs, partition_by=("doc_id",), num_partitions=4)
     enc.count()
-    assert _n_cached(spark) > base
-    assert release(enc) is True
     assert _n_cached(spark) == base
+    assert release(enc) is False
 
 
 def test_exact_mode_has_no_cache_to_tether(spark):

@@ -534,6 +534,90 @@ def test_compact_max_run_bytes_selects_small_runs(spark, tmp_path):
     assert m2["run_id"] == -1 and m2["selected_runs"] == []
 
 
+def _recorded_plans(spark, path):
+    return {
+        (r["run_id"], r["partition_by"], r["num_partitions"])
+        for r in read_lineage(spark, path).where(F.col("status") == "done")
+        .collect()
+    }
+
+
+def _committed_doc_ids(spark, path, schema):
+    return [r["doc_id"] for r in decode_table(
+        read_committed_chunks(spark, path), schema).select("doc_id").collect()]
+
+
+@pytest.fixture()
+def docs300(spark):
+    df = make_tokens_table(spark, 300, seed=5)
+    df.cache().count()
+    yield df
+    df.unpersist()
+
+
+def test_resume_with_another_num_partitions_refuses_before_writing(
+        spark, docs300, tmp_path):
+    """A part id is a function of the row only under one plan: resuming
+    an 8-part run with 4 parts would skip rows that moved to committed
+    ids and encode others twice. The resume raises before writing
+    anything; one that leaves num_partitions=None reuses the recorded 8
+    and completes the store with every doc exactly once."""
+    import os
+
+    path = str(tmp_path / "enc")
+    by = ("source", "doc_id")
+    encode_with_lineage(docs300, path, partition_by=by, num_partitions=8,
+                        drop_part_ids=frozenset({1, 2, 3}))
+    listing = sorted(os.listdir(f"{path}/chunks")), sorted(
+        os.listdir(f"{path}/lineage"))
+    with pytest.raises(ValueError, match="num_partitions=8"):
+        encode_with_lineage(docs300, path, partition_by=by, num_partitions=4)
+    with pytest.raises(ValueError, match="partition_by"):
+        encode_with_lineage(docs300, path, partition_by=("doc_id",))
+    assert (sorted(os.listdir(f"{path}/chunks")),
+            sorted(os.listdir(f"{path}/lineage"))) == listing
+
+    m = encode_with_lineage(docs300, path, partition_by=by)
+    assert m["skipped_partitions"] == 5
+    ids = _committed_doc_ids(spark, path, docs300.schema)
+    assert len(ids) == 300 and len(set(ids)) == 300
+    plan = '["source", "doc_id"]'
+    assert _recorded_plans(spark, path) == {(1, plan, 8), (2, plan, 8)}
+
+
+def test_resume_refuses_runs_recording_different_plans(spark, docs300,
+                                                        tmp_path):
+    path = str(tmp_path / "enc")
+    encode_with_lineage(docs300, path, num_partitions=2)
+    encode_with_lineage(docs300, path, num_partitions=3, resume=False)
+    with pytest.raises(ValueError, match="different partition plans"):
+        encode_with_lineage(docs300, path)
+    # an append ignores the committed plans
+    assert encode_with_lineage(docs300, path, num_partitions=4,
+                               resume=False)["rows"] == 300
+
+
+def test_resume_over_unrecorded_plan_keeps_callers_plan(spark, docs300,
+                                                        tmp_path):
+    """Lineage written before plans were recorded has no plan columns:
+    they read as null, and a resume runs with the caller's plan,
+    unchecked, as it always did."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "enc")
+    by = ("source", "doc_id")
+    encode_with_lineage(docs300, path, partition_by=by, num_partitions=8,
+                        drop_part_ids=frozenset({1, 2, 3}))
+    for f in (tmp_path / "enc" / "lineage").glob("*.parquet"):
+        t = pq.read_table(f)
+        pq.write_table(t.drop(["partition_by", "num_partitions"]), f)
+    assert _recorded_plans(spark, path) == {(1, None, None)}
+    m = encode_with_lineage(docs300, path, partition_by=by, num_partitions=8)
+    assert m["skipped_partitions"] == 5
+    ids = _committed_doc_ids(spark, path, docs300.schema)
+    assert len(ids) == 300 and len(set(ids)) == 300
+
+
 def test_resume_noop_append_carries_hint(spark, tmp_path):
     """encode_with_lineage with default resume=True on a store whose
     part ids are all committed is a no-op (correct for a true resume) —
@@ -584,8 +668,10 @@ def _spark_lineage_oracle(spark, path, run_id, batch_id=-1):
 
 
 def _committed_rows(spark, path, run_id):
+    # wall time and the recorded partition plan are not aggregated from
+    # the chunk files
     cols = [f.name for f in read_lineage(spark, path).schema.fields
-            if f.name != "wall_sec"]
+            if f.name not in ("wall_sec", "partition_by", "num_partitions")]
     return sorted(
         tuple(r) for r in read_lineage(spark, path)
         .where((F.col("run_id") == run_id) & (F.col("status") == "done"))

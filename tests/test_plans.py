@@ -136,15 +136,14 @@ def test_encode_pipeline_single_python_stage(spark):
     df = make_tokens_table(spark, 200, seed=3)
     plan = plan_of(encode_table(df, partition_by=("source", "doc_id"),
                                 num_partitions=4), "simple")
-    # exactly two Arrow-batched Python stages EXECUTE: the synthetic
-    # generator and the codec kernels; the partition plan is served from
-    # the persisted counts cache (whose InMemoryRelation printout repeats
-    # the generator subtree without re-executing it) and stays JVM-side
-    executed = plan.split("InMemoryRelation")[0]
-    assert executed.count("MapInArrow") == 2
+    # exactly two Arrow-batched Python stages: the synthetic generator
+    # and the codec kernels
+    assert plan.count("MapInArrow") == 2
     assert "BatchEvalPython" not in plan
-    # the distributed partition plan: window prefix-sum, broadcast join
-    assert "Window" in plan and "BroadcastHashJoin" in plan
+    # the partition plan was built on the driver: it arrives as a local
+    # table through one broadcast join, with no window and no cache
+    assert "BroadcastHashJoin" in plan and "LocalTableScan" in plan
+    assert "Window" not in plan and "InMemoryRelation" not in plan
 
 
 def test_decode_groups_without_sort(spark):
@@ -402,3 +401,33 @@ def test_encode_with_lineage_jobs_match_a_plain_write(spark, tmp_path):
     want = _jobs_in(spark, "plain-write", lambda: plain("plain"))
     got = _jobs_in(spark, "lineage-write", lineage)
     assert 0 < got <= want, (got, want)
+
+
+def test_encode_with_lineage_fresh_store_job_count(spark, tmp_path):
+    """Planning on the driver costs one collected aggregate: a fresh-store
+    ``encode_with_lineage`` runs at most 5 Spark jobs (8 with the old
+    persisted count, window and tether)."""
+    from pysparkenc.lineage import encode_with_lineage
+    from pysparkenc.synth import make_tokens_table
+
+    src = str(tmp_path / "src")
+    make_tokens_table(spark, 300, seed=9).write.parquet(src)
+    df = spark.read.parquet(src)
+
+    def run(name):
+        assert encode_with_lineage(df, str(tmp_path / name),
+                                   partition_by=("source", "doc_id"),
+                                   )["rows"] == 300
+
+    run("warm-up")  # the session's first encode starts one-off jobs
+    assert _jobs_in(spark, "fresh-store", lambda: run("store")) <= 5
+
+
+def test_encode_table_default_is_one_task_wave(spark):
+    from pysparkenc.engine import encode_table
+    from pysparkenc.synth import make_tokens_table
+
+    df = make_tokens_table(spark, 200, seed=3)
+    slots = spark.sparkContext.defaultParallelism
+    for kw in ({}, {"partition_by": ("source", "doc_id")}):
+        assert encode_table(df, **kw).rdd.getNumPartitions() == slots

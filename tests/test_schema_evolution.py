@@ -32,9 +32,11 @@ def evolved(spark):
         F.array(F.col("id").cast("int")).alias("tags"),
     )
     # two independent encode jobs appended into one store: disjoint
-    # part_id ranges, exactly what lineage/datasource appends produce
-    c_old = encode_table(old, rows_per_chunk=128, partition_by=None)
-    c_new = encode_table(new, rows_per_chunk=128, partition_by=None)
+    # part_id ranges, exactly what lineage/datasource appends produce;
+    # 8 parts each, so the k < 10 rows miss some old page groups
+    kw = dict(rows_per_chunk=128, partition_by=None, num_partitions=8)
+    c_old = encode_table(old, **kw)
+    c_new = encode_table(new, **kw)
     c_new = c_new.withColumn("part_id", F.col("part_id") + 1000)
     evolved_schema = StructType(
         [
