@@ -43,13 +43,15 @@ import sys
 
 from pyspark.sql import SparkSession, functions as F
 
-from .engine import aggregate_chunks, audit_chunks
+from . import datasource
+from .engine import aggregate_chunks, audit_chunks, count_rows
 from .lineage import (
     delete_rows,
     encode_with_lineage,
     read_committed_chunks,
     read_store,
     snapshots,
+    store_distinct_values,
     upsert_rows,
 )
 
@@ -207,14 +209,11 @@ def cmd_stats(args: argparse.Namespace) -> int:
     ``pending_deletes`` header line) instead of letting a takedown-era
     store silently report pre-takedown counts; compaction re-aligns
     metadata with the visible table."""
-    from .lineage import read_delete_sets
-
     spark = _session("pysparkenc-stats")
     chunks = read_committed_chunks(spark, args.input)
-    from .engine import count_rows
-
     print(json.dumps({"total_rows": count_rows(chunks)}))
-    dels = read_delete_sets(spark, args.input)
+    _, dels = datasource._lineage_plan(args.input)
+    dels = datasource._delete_sets(args.input, dels)
     if dels:
         note = ("figures below are physical (pre-delete); run "
                 "compact to materialize")
@@ -223,7 +222,8 @@ def cmd_stats(args: argparse.Namespace) -> int:
                      "visible-table (deletes applied)")
         print(json.dumps({
             "pending_deletes": len(dels),
-            "pending_delete_keys": sum(k.count() for _, k in dels),
+            "pending_delete_keys": sum(
+                datasource._parquet_rows(d) for _, d, _ in dels),
             "note": note,
         }))
     meta = chunks.groupBy("col").agg(
@@ -261,27 +261,12 @@ def cmd_stats(args: argparse.Namespace) -> int:
                 row["sum"] = a["sum_val"]
         print(json.dumps(row))
     if args.distinct:
-        from .engine import (
-            distinct_values,
-            output_schema_of_chunks,
-            require_flat_scalar,
-        )
-
         try:
-            if args.visible:
-                # visible-table semantics: scan through read_store so
-                # committed equality deletes apply (no dict-page fast
-                # path — correctness over metadata speed). Same column
-                # validation as the physical mode, so both reject
-                # unknown/nested columns identically (exit 2).
-                require_flat_scalar(
-                    output_schema_of_chunks(chunks), args.distinct
-                )
-                dv = read_store(
-                    spark, args.input, columns=[args.distinct]
-                ).distinct()
-            else:
-                dv = distinct_values(chunks, args.distinct)
+            # --visible: committed equality deletes apply (the column
+            # decodes through read_store while any is pending); both
+            # modes reject unknown/nested columns identically (exit 2)
+            dv = store_distinct_values(spark, args.input, args.distinct,
+                                       visible=args.visible)
         except (KeyError, TypeError) as e:
             # unknown / nested column: JSON error + exit 2, no traceback
             # (the cmd_decode convention)
@@ -417,8 +402,9 @@ def main(argv: list[str] | None = None) -> int:
                           "store: pending deletes still included)")
     stt.add_argument("--visible", action="store_true",
                      help="with --distinct: compute over the VISIBLE "
-                          "table (equality deletes applied) via a full "
-                          "scan instead of the dict-page fast path")
+                          "table (equality deletes applied); the column "
+                          "decodes instead of the dict-page fast path "
+                          "while deletes are pending")
     stt.set_defaults(fn=cmd_stats)
 
     his = sub.add_parser("history")

@@ -63,6 +63,7 @@ import datetime
 import decimal
 import json
 import os
+import re
 import time
 import uuid
 from collections.abc import Iterator, Sequence
@@ -151,6 +152,32 @@ def _list_parquet(d: str) -> list[str]:
     )
 
 
+def _parquet_rows(d: str) -> int:
+    """Rows in the parquet files of ``d``, summed from their footers."""
+    return sum(pq.read_metadata(f).num_rows for f in _list_parquet(d))
+
+
+def _run_dir(path: str, kind: str, run_id: int) -> str:
+    """``<path>/<kind>/run_id=<r>``: the chunk files (``kind``
+    :data:`_CHUNK_DIR`) or delete keys (:data:`_DELETES_DIR`) of run
+    ``r`` of a lineage store."""
+    return os.path.join(path, kind, f"run_id={int(run_id)}")
+
+
+def _run_dirs(path: str, kind: str) -> dict[int, str]:
+    """Every ``run_id=<r>`` directory under ``<path>/<kind>``, committed
+    or not, keyed by run id."""
+    base = os.path.join(path, kind)
+    if not os.path.isdir(base):
+        return {}
+    out = {}
+    for name in os.listdir(base):
+        m = re.fullmatch(r"run_id=(\d+)", name)
+        if m and os.path.isdir(os.path.join(base, name)):
+            out[int(m.group(1))] = os.path.join(base, name)
+    return out
+
+
 _LINEAGE_PA_SCHEMA = pa.schema(
     [
         ("run_id", pa.int64()),
@@ -174,8 +201,9 @@ def _lineage_table(path: str, cols: Sequence[str]) -> pa.Table:
     pyarrow table under the nullable :data:`_LINEAGE_PA_SCHEMA` types
     whatever nullability each file's writer declared. A file written
     before a column existed reads it as nulls, and a missing or null
-    ``batch_id`` reads as -1 (batch mode) — the same defaults as
-    :func:`pysparkenc.lineage.read_lineage`, without a Spark job."""
+    ``batch_id`` reads as -1 (batch mode). The only reader of the
+    lineage files: :func:`pysparkenc.lineage.read_lineage` is this table
+    as a DataFrame."""
     target = pa.schema([_LINEAGE_PA_SCHEMA.field(c) for c in cols])
     tabs = []
     for f in _list_parquet(_lineage_dir(path)):
@@ -199,18 +227,27 @@ def _lineage_table(path: str, cols: Sequence[str]) -> pa.Table:
 def _lineage_plan(
     path: str, as_of_run: int | None = None
 ) -> tuple[dict[int, tuple[int, ...]], list[tuple[int, str]]]:
-    """Driver-side commit plan for a lineage store, pure pyarrow (no
-    SparkSession): the same visibility rules as
-    :func:`pysparkenc.lineage.read_committed_chunks` +
-    :func:`~pysparkenc.lineage.read_delete_sets`.
+    """THE commit-visibility rule of a lineage store, decided on the
+    driver with pyarrow (no SparkSession). Every reader and maintenance
+    call plans from it: ``read_store``, the data source,
+    ``read_committed_chunks``, ``read_delete_sets``, ``compact_store``
+    and ``expire_runs``.
 
-    Returns ``(live, deletes)`` where ``live`` maps each run id to its
-    committed, unsuperseded part ids (orphan chunks from a crashed
-    encode are invisible; a compacted-but-unexpired store contributes
-    ONLY the compacted layout — never both) and ``deletes`` lists the
-    visible equality-delete runs as ``(del_run_id, key_dir)``. The scan
-    is one metadata read of the (tiny, one-row-per-partition) lineage
-    records."""
+    - A ``(run, part)`` is live when it has a ``done`` row and no
+      ``superseded`` marker. Orphan chunks of a crashed encode are
+      invisible, and a compacted-but-unexpired store contributes ONLY
+      the compacted layout, never both.
+    - A delete run is live when it has a ``delete`` row and no
+      whole-run marker (``superseded`` with ``part_id`` -1).
+    - ``as_of_run`` keeps done and delete rows of runs ``<= as_of_run``
+      and markers whose compacting run (their ``batch_id``) is
+      ``<= as_of_run``, so time travel to before a compaction reads the
+      original layout.
+
+    Returns ``(live, deletes)``: ``live`` maps each run id to its live
+    part ids, and ``deletes`` lists the live delete runs as
+    ``(del_run_id, key_dir)``. The scan is one metadata read of the
+    (tiny, one-row-per-partition) lineage records."""
     tab = _lineage_table(path, ("run_id", "batch_id", "part_id", "status"))
     if not tab.num_rows:
         return {}, []
@@ -235,10 +272,7 @@ def _lineage_plan(
     # delete runs
     sup_del_runs = {int(r) for r, p in sup_pairs if p == -1}
     del_runs = sorted({int(r) for r in run[dels].tolist()} - sup_del_runs)
-    deletes = [
-        (r, os.path.join(path, _DELETES_DIR, f"run_id={r}"))
-        for r in del_runs
-    ]
+    deletes = [(r, _run_dir(path, _DELETES_DIR, r)) for r in del_runs]
     return {r: tuple(sorted(ps)) for r, ps in live.items()}, deletes
 
 
@@ -281,8 +315,7 @@ def _recover_store_schema(
     groups: set[tuple[int, int, int]] = set()
     for r, parts in sorted(live.items()):
         pset = set(parts)
-        d = os.path.join(_chunk_dir(path), f"run_id={r}")
-        for f in _list_parquet(d):
+        for f in _list_parquet(_run_dir(path, _CHUNK_DIR, r)):
             t = pq.read_table(
                 f, columns=["col", "col_idx", "logical", "null_count",
                             "part_id", "chunk_id"]
@@ -598,9 +631,9 @@ class ChunkStoreReader(DataSourceReader):
                     or [InputPartition(None)])
         parts: list[InputPartition] = []
         for r in sorted(self.live):
-            run_dir = os.path.join(_chunk_dir(self.path), f"run_id={r}")
             # bin-pack within a run only: delete sequencing is per-run
             # (a file's writing run comes from its dir)
+            run_dir = _run_dir(self.path, _CHUNK_DIR, r)
             for g in _bin_pack(_list_parquet(run_dir)):
                 parts.append(InputPartition((r, g)))
         return parts or [InputPartition(None)]
@@ -756,7 +789,7 @@ def _chunk_lineage_rows(
     has no resumable partition plan."""
     cols = ["part_id", "chunk_id", "n_rows", "n_values", "plain_bytes",
             "enc_bytes"]
-    files = _list_parquet(os.path.join(_chunk_dir(path), f"run_id={run_id}"))
+    files = _list_parquet(_run_dir(path, _CHUNK_DIR, run_id))
     if not files:
         return []
     target = pa.schema([(c, pa.int64()) for c in cols])
@@ -964,7 +997,7 @@ class ChunkStoreWriter(DataSourceArrowWriter):
         :func:`pysparkenc.lineage.encode_with_lineage`: a crash before
         the lineage rename leaves only invisible orphans."""
         run_id = int(self.lineage_run_id)
-        run_dir = os.path.join(_chunk_dir(self.path), f"run_id={run_id}")
+        run_dir = _run_dir(self.path, _CHUNK_DIR, run_id)
         staged = [f for m in messages if m for f in m.files]
         if not staged:
             # nothing landed: withdraw the claimed (empty) run dir
@@ -1000,9 +1033,8 @@ class ChunkStoreWriter(DataSourceArrowWriter):
             # withdraw the claimed run dir if nothing was published to
             # it (a later retry of the job allocates a fresh id anyway)
             try:
-                os.rmdir(os.path.join(
-                    _chunk_dir(self.path), f"run_id={self.lineage_run_id}"
-                ))
+                os.rmdir(_run_dir(self.path, _CHUNK_DIR,
+                                  self.lineage_run_id))
             except OSError:
                 pass
 
@@ -1205,10 +1237,7 @@ class ChunkStoreDataSource(DataSource):
         run_id = _next_run_id(None, path)
         # claim the id on disk NOW: a job crashed before commit leaves
         # an empty/orphan dir, which _next_run_id treats as occupied
-        os.makedirs(
-            os.path.join(path, _CHUNK_DIR, f"run_id={run_id}"),
-            exist_ok=True,
-        )
+        os.makedirs(_run_dir(path, _CHUNK_DIR, run_id), exist_ok=True)
         return ChunkStoreWriter(
             path, schema, dict(self.options), overwrite,
             lineage_run_id=run_id,

@@ -18,9 +18,12 @@ Commit protocol (Iceberg-snapshot-shaped, on plain parquet dirs):
   actually landed) and published as ONE parquet file, written under a
   dot-temp name and atomically renamed into ``lineage/`` — the lineage
   row IS the commit record, and a commit is visible whole or not at all;
-- readers (:func:`read_committed_chunks`) semi-join chunks against
-  ``status='done'`` lineage on (run_id, part_id): orphan chunks from a
-  crashed run are invisible, so append-after-crash never double-counts;
+- which chunks and delete runs are visible is decided in ONE place,
+  :func:`pysparkenc.datasource._lineage_plan`, on the driver with
+  pyarrow: a (run_id, part_id) is live when it has a ``done`` row and no
+  ``superseded`` marker, so orphan chunks from a crashed run are
+  invisible and append-after-crash never double-counts. Every reader
+  and maintenance call here plans from it;
 - resume skips the part ids the lineage records as done and re-encodes
   only missing partitions;
 - replay checks, run-id allocation, the schema-evolution guard and the
@@ -38,8 +41,8 @@ from __future__ import annotations
 import json
 import time
 
+import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -55,10 +58,8 @@ from .engine import (
     aggregate_chunks,
     arrow_safe_schema,
     count_rows,
-    decode_table,
     distinct_values,
     encode_table,
-    output_schema_of_chunks,
     plan_scan,
     require_flat_scalar,
     restore_intervals,
@@ -86,18 +87,6 @@ LINEAGE_SCHEMA = StructType(
         StructField("num_partitions", LongType(), True),
     ]
 )
-
-
-def _chunks_dir(path: str) -> str:
-    return f"{path}/chunks"
-
-
-def _lineage_dir(path: str) -> str:
-    return f"{path}/lineage"
-
-
-def _deletes_dir(path: str) -> str:
-    return f"{path}/deletes"
 
 
 def _schemas_dir(path: str) -> str:
@@ -134,37 +123,21 @@ def run_schemas(path: str) -> dict[int, "StructType"]:
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
-    """Lineage rows under ``path``, read with the EXPLICIT schema (never
-    inferred): a directory written before a schema extension (e.g. the
-    ``batch_id`` column) still reads cleanly — missing columns surface as
-    nulls and ``batch_id`` defaults to -1 (batch mode) instead of an
-    AnalysisException on a mixed-schema directory."""
-    try:
-        lin = spark.read.schema(LINEAGE_SCHEMA).parquet(_lineage_dir(path))
-    except Exception:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    return lin.withColumn(
-        "batch_id", F.coalesce(F.col("batch_id"), F.lit(-1)).cast("long")
-    )
-
-
-def completed_part_ids(spark: SparkSession, path: str) -> DataFrame:
-    return (
-        read_lineage(spark, path)
-        .where(F.col("status") == "done")
-        .select("part_id")
-        .distinct()
-    )
+    """Lineage rows under ``path`` as a DataFrame over a local table
+    (collecting it starts no Spark job): the pyarrow
+    :func:`pysparkenc.datasource._lineage_table`, so a directory written
+    before a schema extension (e.g. the ``batch_id`` column) still reads
+    cleanly — missing columns surface as nulls and ``batch_id`` defaults
+    to -1 (batch mode)."""
+    return spark.createDataFrame(
+        datasource._lineage_table(path, LINEAGE_SCHEMA.names))
 
 
 def read_committed_chunks(
-    spark: SparkSession,
-    path: str,
-    *,
-    as_of_run: int | None = None,
-    runs: tuple[int, ...] | None = None,
+    spark: SparkSession, path: str, *, as_of_run: int | None = None
 ) -> DataFrame:
-    """Chunk rows whose partition committed (has a done lineage row).
+    """Chunk rows of the live partitions of
+    :func:`pysparkenc.datasource._lineage_plan`.
 
     ``part_id`` is remapped to ``run_id * 2^32 + part_id`` so chunk groups
     stay unique across runs: batch-resume assigns each part_id to exactly
@@ -173,47 +146,26 @@ def read_committed_chunks(
 
     ``as_of_run`` is snapshot time travel (the Iceberg
     ``VERSION AS OF`` contract on this layout): each run's single-file
-    lineage append IS a snapshot boundary, so filtering the commit
-    records to ``run_id <= as_of_run`` reproduces exactly the table a
+    lineage append IS a snapshot boundary, so planning from the commit
+    records of runs ``<= as_of_run`` reproduces exactly the table a
     reader saw the moment that run committed — later appends (batch
-    resumes or streaming micro-batches) become invisible. Pure metadata:
-    the chunk scan itself is pruned by the same broadcast semi-join,
-    never rewritten.
-
-    ``runs``: restrict to those runs' chunks. ``run_id`` is a hive
-    partition column of the chunk directory, so the filter prunes at
-    FILE LISTING — unselected runs' files are never opened (the scan
-    shape selective compaction needs)."""
-    chunks = spark.read.parquet(_chunks_dir(path))
-    if runs is not None:
-        chunks = chunks.where(F.col("run_id").isin([int(r) for r in runs]))
-    lin = read_lineage(spark, path)
-    done = (
-        lin.where(F.col("status") == "done")
-        .select("run_id", "part_id")
-        .distinct()
-    )
-    # compaction markers: a 'superseded' row names an old (run_id,
-    # part_id) replaced by the compaction run recorded in ITS batch_id —
-    # so time travel to a run BEFORE the compaction naturally ignores
-    # the marker and still reads the original layout
-    sup = lin.where(F.col("status") == "superseded")
-    if as_of_run is not None:
-        done = done.where(F.col("run_id") <= int(as_of_run))
-        sup = sup.where(F.col("batch_id") <= int(as_of_run))
-    done = done.join(
-        F.broadcast(sup.select("run_id", "part_id").distinct()),
-        ["run_id", "part_id"],
-        "left_anti",
-    )
+    resumes or streaming micro-batches) become invisible. The plan is
+    driver-side metadata; the chunk scan only filters on it, by
+    ``run_id`` (a hive partition column, so other runs' files are never
+    listed) and by the combined part id."""
+    live, _ = datasource._lineage_plan(path, as_of_run)
+    key = (F.col("run_id") * F.lit(1 << 32) + F.col("part_id")).cast("long")
     return (
-        chunks.join(F.broadcast(done), ["run_id", "part_id"], "left_semi")
-        .withColumn(
-            "part_id",
-            (F.col("run_id") * F.lit(1 << 32) + F.col("part_id")).cast("long"),
-        )
+        spark.read.parquet(datasource._chunk_dir(path))
+        .where(F.col("run_id").isin(sorted(live)))
+        .withColumn("part_id", key)
+        .where(F.col("part_id").isin(
+            [(r << 32) + p for r, ps in live.items() for p in ps]))
         .drop("run_id")
     )
+
+
+_SNAPSHOT_SUMS = ("n_rows", "n_values", "plain_bytes", "enc_bytes")
 
 
 def snapshots(spark: SparkSession, path: str) -> DataFrame:
@@ -225,73 +177,58 @@ def snapshots(spark: SparkSession, path: str) -> DataFrame:
     markers), ``quarantined`` (a run self-superseded by the concurrent-
     commit detector — its markers carry ``batch_id == run_id``), or
     ``delete`` (equality-delete commit; ``n_rows`` is its key count).
-    Aggregated from the lineage commit records — no chunk payload is
-    touched."""
-    lin = read_lineage(spark, path)
-    sup = lin.where(F.col("status") == "superseded")
+    Aggregated from the lineage commit records with pyarrow on the
+    driver — no chunk payload is touched and collecting the result
+    starts no Spark job."""
+    lin = datasource._lineage_table(
+        path, ("run_id", "batch_id", "part_id", *_SNAPSHOT_SUMS,
+               "wall_sec", "status"))
+    status = lin.column("status")
+    sup = lin.filter(pc.equal(status, "superseded"))
     # self-supersede (batch_id == run_id) is the quarantine signature;
     # without the split a quarantined append would masquerade as a
     # successful compaction in the history
-    quarantined = (
-        sup.where(F.col("batch_id") == F.col("run_id"))
-        .select("run_id").distinct()
-        .withColumn("__quar", F.lit(True))
-    )
-    compacting = (
-        sup.where(F.col("batch_id") != F.col("run_id"))
-        .select(F.col("batch_id").alias("run_id"))
-        .distinct()
-        .withColumn("__compact", F.lit(True))
-    )
-    base = (
-        lin.where(F.col("status") == "done")
-        .groupBy("run_id", "batch_id")
-        .agg(
-            F.count(F.lit(1)).alias("partitions"),
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("n_values").alias("n_values"),
-            F.sum("plain_bytes").alias("plain_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.max("wall_sec").alias("wall_sec"),
-        )
-        .join(F.broadcast(quarantined), "run_id", "left")
-        .join(F.broadcast(compacting), "run_id", "left")
-        .withColumn(
-            "operation",
-            F.when(F.col("__quar"), F.lit("quarantined"))
-            .when(F.col("__compact"), F.lit("compact"))
-            .when(F.col("batch_id") >= 0, F.lit("stream-append"))
-            .otherwise(F.lit("append")),
-        )
-        .drop("__quar", "__compact")
-    )
-    dels = lin.where(F.col("status") == "delete").select(
-        "run_id", "batch_id",
-        F.lit(0).cast("long").alias("partitions"),
-        F.col("n_rows"),
-        F.lit(0).cast("long").alias("n_values"),
-        F.lit(0).cast("long").alias("plain_bytes"),
-        F.lit(0).cast("long").alias("enc_bytes"),
-        "wall_sec",
-        F.lit("delete").alias("operation"),
-    )
-    return base.unionByName(dels).orderBy(F.col("run_id").desc())
+    self_sup = pc.equal(sup.column("batch_id"), sup.column("run_id"))
+    quarantined = sup.filter(self_sup).column("run_id").combine_chunks()
+    compacting = sup.filter(pc.invert(self_sup)).column(
+        "batch_id").combine_chunks()
+    done = lin.filter(pc.equal(status, "done")).group_by(
+        ["run_id", "batch_id"]).aggregate(
+        [("part_id", "count", pc.CountOptions(mode="all")),
+         *((c, "sum") for c in _SNAPSHOT_SUMS), ("wall_sec", "max")])
+    run = done.column("run_id")
+    op = pc.if_else(
+        pc.is_in(run, quarantined), "quarantined", pc.if_else(
+            pc.is_in(run, compacting), "compact", pc.if_else(
+                pc.greater_equal(done.column("batch_id"), 0),
+                "stream-append", "append")))
+    dels = lin.filter(pc.equal(status, "delete"))
+    zeros = pa.array([0] * dels.num_rows, pa.int64())
+    out = pa.concat_tables([
+        pa.table({
+            "run_id": run, "batch_id": done.column("batch_id"),
+            "partitions": done.column("part_id_count"),
+            **{c: done.column(f"{c}_sum") for c in _SNAPSHOT_SUMS},
+            "wall_sec": done.column("wall_sec_max"), "operation": op,
+        }),
+        pa.table({
+            "run_id": dels.column("run_id"),
+            "batch_id": dels.column("batch_id"), "partitions": zeros,
+            "n_rows": dels.column("n_rows"), "n_values": zeros,
+            "plain_bytes": zeros, "enc_bytes": zeros,
+            "wall_sec": dels.column("wall_sec"),
+            "operation": pa.array(["delete"] * dels.num_rows, pa.string()),
+        }),
+    ])
+    return spark.createDataFrame(out.sort_by([("run_id", "descending")]))
 
 
 def _on_disk_run_ids(path: str) -> set[int]:
     """Run ids with ANY files on disk — chunk dirs or delete-key dirs,
     committed or not. Local-filesystem layout (object stores would route
     the listing through their client, same as :func:`expire_runs`)."""
-    import glob
-    import re as _re
-
-    ids: set[int] = set()
-    for base in (_chunks_dir(path), _deletes_dir(path)):
-        for d in glob.glob(f"{base}/run_id=*"):
-            m = _re.search(r"run_id=(\d+)$", d)
-            if m:
-                ids.add(int(m.group(1)))
-    return ids
+    return {r for kind in (datasource._CHUNK_DIR, datasource._DELETES_DIR)
+            for r in datasource._run_dirs(path, kind)}
 
 
 def _next_run_id(spark: SparkSession | None, path: str) -> int:
@@ -452,7 +389,7 @@ def encode_with_lineage(
         chunks.withColumn("run_id", F.lit(run_id))
         .write.mode("append")
         .partitionBy("run_id")
-        .parquet(_chunks_dir(path))
+        .parquet(datasource._chunk_dir(path))
     )
     wall = time.time() - t0
     # lineage commit AFTER chunk rows land, built from what landed
@@ -571,14 +508,13 @@ def delete_rows(
             )
     run_id = _next_run_id(spark, path)
     keys = keys_df.select(*key_cols).distinct()
-    key_dir = f"{_deletes_dir(path)}/run_id={run_id}"
+    key_dir = datasource._run_dir(path, datasource._DELETES_DIR, run_id)
     # overwrite is belt-and-braces: _next_run_id never hands out an id
     # with files already on disk (a crashed attempt's orphan key files
     # keep their id forever; vacuum_store reclaims them), so this dir is
     # always fresh — overwrite guards the invariant anyway
     keys.write.mode("overwrite").parquet(key_dir)
-    n = sum(pq.read_metadata(f).num_rows
-            for f in datasource._list_parquet(key_dir))
+    n = datasource._parquet_rows(key_dir)
     # Stores are SINGLE-WRITER (same contract as encode/compact): two
     # concurrent committers can race _next_run_id to the same id, and
     # the overwrite key-file write means only the last writer's list
@@ -654,28 +590,17 @@ def upsert_rows(
 def read_delete_sets(
     spark: SparkSession, path: str, *, as_of_run: int | None = None
 ) -> list[tuple[int, DataFrame]]:
-    """Committed, unsuperseded delete runs visible at ``as_of_run``, as
-    ``(delete_run_id, keys_df)`` pairs. Only lineage-committed runs are
-    read (orphan key files from a crashed :func:`delete_rows` stay
-    invisible); a compaction marks materialized delete runs
-    ``superseded`` (``part_id = -1``) and they drop out here. The
-    driver-side list is one tiny metadata collect — its length is the
-    number of delete COMMITS, not keys."""
-    lin = read_lineage(spark, path)
-    dels = lin.where(F.col("status") == "delete").select("run_id")
-    sup = lin.where(
-        (F.col("status") == "superseded") & (F.col("part_id") == -1)
-    ).select("run_id", "batch_id")
-    if as_of_run is not None:
-        dels = dels.where(F.col("run_id") <= int(as_of_run))
-        sup = sup.where(F.col("batch_id") <= int(as_of_run))
-    live = dels.join(sup.select("run_id"), "run_id", "left_anti")
-    out: list[tuple[int, DataFrame]] = []
-    for r in sorted(int(x["run_id"]) for x in live.distinct().collect()):
-        out.append(
-            (r, spark.read.parquet(f"{_deletes_dir(path)}/run_id={r}"))
-        )
-    return out
+    """The live delete runs of :func:`pysparkenc.datasource._lineage_plan`
+    at ``as_of_run``, as ``(delete_run_id, keys_df)`` pairs. Only
+    lineage-committed runs are read (orphan key files from a crashed
+    :func:`delete_rows` stay invisible); a compaction marks materialized
+    delete runs ``superseded`` (``part_id = -1``) and they drop out here.
+    The list is planned on the driver — its length is the number of
+    delete COMMITS, not keys. A committed delete run whose key files are
+    gone raises ValueError."""
+    _, dels = datasource._lineage_plan(path, as_of_run)
+    return [(r, spark.read.parquet(key_dir))
+            for r, key_dir, _ in datasource._delete_sets(path, dels)]
 
 
 def apply_deletes(
@@ -730,6 +655,7 @@ def read_store(
     as_of_run: int | None = None,
     columns: list[str] | None = None,
     where=(),
+    runs: tuple[int, ...] | None = None,
 ) -> DataFrame:
     """THE store read path: committed chunks -> pruned projected scan ->
     equality deletes applied, all snapshot-consistent at ``as_of_run``;
@@ -740,11 +666,14 @@ def read_store(
     ``where`` and drops deleted rows sequenced by run — no exchange, no
     join, no Spark metadata job. Page groups are pruned by the same
     evaluator as ``scan_table`` (:func:`pysparkenc.engine.where_pushed`),
-    ``("or", …)`` entries included."""
+    ``("or", …)`` entries included.
+
+    ``runs``: read only those runs' live rows (every visible delete
+    still applies to them); the schema then comes from their chunks
+    alone. Unselected runs' files are never opened — the scan shape
+    selective compaction needs."""
     if schema is None:
-        live, _ = datasource._lineage_plan(path, as_of_run)
-        schema = (datasource._recover_store_schema(path, live) if live
-                  else StructType([]))
+        schema = _store_schema(path, as_of_run, runs)
     where, sub = plan_scan(schema, columns, where)
     dec, restore = arrow_safe_schema(sub)
     # the reader runs without Spark's data source planner: its planning
@@ -754,6 +683,8 @@ def read_store(
         path, dec, {} if as_of_run is None else {"as_of_run": as_of_run}
     )
     reader.pushed = where_pushed(where)
+    if runs is not None:
+        reader.live = {r: ps for r, ps in reader.live.items() if r in runs}
     parts = reader.partitions()
 
     def read(batches):
@@ -766,6 +697,20 @@ def read_store(
         out = out.where(cond)
     out = restore_intervals(out, restore)
     return out.select(*columns) if columns is not None else out
+
+
+def _store_schema(
+    path: str, as_of_run: int | None = None,
+    runs: tuple[int, ...] | None = None,
+) -> StructType:
+    """The logical schema of the store's live runs at ``as_of_run``
+    (only ``runs`` when given), recovered from chunk metadata on the
+    driver; empty when no data run is live."""
+    live, _ = datasource._lineage_plan(path, as_of_run)
+    if runs is not None:
+        live = {r: ps for r, ps in live.items() if r in runs}
+    return (datasource._recover_store_schema(path, live) if live
+            else StructType([]))
 
 
 # ---------------------------------------------------------------------------
@@ -824,11 +769,12 @@ def store_distinct_values(
     dict pages can't know which rows a delete drops, so
     :func:`read_store` decodes ``col`` alone (the reader decodes the
     delete keys it needs itself) and the result distincts."""
-    chunks = read_committed_chunks(spark, path, as_of_run=as_of_run)
-    schema = output_schema_of_chunks(chunks)
+    schema = _store_schema(path, as_of_run)
     require_flat_scalar(schema, col)
     if not (visible and _delete_key_cols(path, as_of_run)):
-        return distinct_values(chunks, col, schema)
+        return distinct_values(
+            read_committed_chunks(spark, path, as_of_run=as_of_run), col,
+            schema)
     return read_store(
         spark, path, schema, as_of_run=as_of_run, columns=[col]
     ).distinct()
@@ -917,8 +863,10 @@ def compact_store(
     for this layout. Streaming appends leave a long tail of small runs
     (tiny pages, one chunk-file dir per micro-batch; the codec selector
     adapts per page but can't merge across them); compaction decodes the
-    committed table (fully distributed — the same decode path queries
-    use) and re-encodes it with ``target_chunk_bytes`` page sizing.
+    visible table through :func:`read_store` (file-local: one
+    ``mapInArrow`` task per chunk-file group, deletes dropped in the
+    task, no decode shuffle and no join) and re-encodes it with
+    ``target_chunk_bytes`` page sizing.
 
     SELECTIVE compaction (the 100 TB contract — routine maintenance
     must not rewrite the table): ``runs=(...)`` rewrites only those
@@ -967,76 +915,46 @@ def compact_store(
                 "snapshot would rewrite history (and resurrect rows "
                 "deleted after it). Time travel is for reads."
             )
-    # exact: shiftright recovers the writing run from the combined id
-    # (double division loses low bits past 2^53)
-    all_live = (
-        read_committed_chunks(spark, path, as_of_run=as_of_run)
-        .select(
-            F.shiftright(F.col("part_id"), 32).alias("run_id"),
-            F.pmod(F.col("part_id"), F.lit(1 << 32)).cast("long")
-            .alias("part_id"),
-            "enc_bytes",
-        )
-        .groupBy("run_id", "part_id")
-        .agg(F.sum("enc_bytes").cast("long").alias("enc_bytes"))
-        .collect()
-    )
-    if not all_live:
+    live, dels = datasource._lineage_plan(path, as_of_run)
+    if not live:
         return {"run_id": -1, "partitions": 0, "superseded": 0,
                 "selected_runs": [], "bytes_selected": 0,
                 "wall_sec": time.time() - t0}
-    live_runs = {int(r["run_id"]) for r in all_live}
+    # a run's live bytes: the enc_bytes of its live parts' done rows
+    # (each the sum over the part's chunk rows, _chunk_lineage_rows)
+    pairs = {(r, p) for r, ps in live.items() for p in ps}
+    lin = datasource._lineage_table(
+        path, ("run_id", "part_id", "enc_bytes", "status"))
+    run_bytes = dict.fromkeys(live, 0)
+    for r, p, b, st in zip(*(c.to_pylist() for c in lin.columns)):
+        if st == "done" and (r, p) in pairs:
+            run_bytes[r] += b
     if runs is not None:
         selected = {int(r) for r in runs}
-        unknown = selected - live_runs
+        unknown = selected - set(live)
         if unknown:
             raise ValueError(
                 f"runs {sorted(unknown)} have no live committed "
-                f"partitions (live runs: {sorted(live_runs)})"
+                f"partitions (live runs: {sorted(live)})"
             )
     elif max_run_bytes is not None:
-        per_run: dict[int, int] = {}
-        for r in all_live:
-            per_run[int(r["run_id"])] = (
-                per_run.get(int(r["run_id"]), 0) + int(r["enc_bytes"])
-            )
-        selected = {r for r, b in per_run.items() if b < int(max_run_bytes)}
+        selected = {r for r, b in run_bytes.items() if b < int(max_run_bytes)}
         if not selected:
             return {"run_id": -1, "partitions": 0, "superseded": 0,
                     "selected_runs": [], "bytes_selected": 0,
                     "wall_sec": time.time() - t0}
     else:
-        selected = live_runs
-    old = [r for r in all_live if int(r["run_id"]) in selected]
-    bytes_selected = sum(int(r["enc_bytes"]) for r in old)
-    remaining = live_runs - selected
-    deletes = read_delete_sets(spark, path, as_of_run=as_of_run)
+        selected = set(live)
+    remaining = set(live) - selected
     # a delete run d applies to rows written by runs < d: it can retire
     # only when every remaining (unselected) data run is >= d
-    min_remaining = min(remaining) if remaining else None
-    dead_deletes = [
-        dr for dr, _ in deletes
-        if min_remaining is None or min_remaining >= dr
-    ]
-    # run_id is a hive partition column: the runs= filter prunes at
-    # file listing, so bytes READ (not just rewritten) scale with the
-    # selection, not the table
-    chunks_in = read_committed_chunks(
-        spark, path, as_of_run=as_of_run,
-        runs=tuple(sorted(selected)) if remaining else None,
-    )
-    if deletes:
-        # materialize equality deletes into the rewritten rows: the
-        # compacted run holds the post-delete subset; fully-retired
-        # delete runs are superseded below so readers stop scanning
-        # their key files
-        pc = "__pysparkenc_part"
-        df = apply_deletes(
-            decode_table(chunks_in, schema, part_col=pc), deletes,
-            part_col=pc,
-        ).drop(pc)
-    else:
-        df = decode_table(chunks_in, schema)
+    dead_deletes = [d for d, _ in dels
+                    if not remaining or min(remaining) >= d]
+    # the file-local reader drops visible deletes, sequenced by run, so
+    # the compacted run holds the post-delete rows; unselected runs'
+    # files are never opened
+    df = read_store(spark, path, schema, as_of_run=as_of_run,
+                    runs=tuple(sorted(selected)))
     run_id = _next_run_id(spark, path)
     chunks = encode_table(
         df, partition_by=partition_by, num_partitions=num_partitions,
@@ -1048,20 +966,19 @@ def compact_store(
         chunks.withColumn("run_id", F.lit(run_id))
         .write.mode("append")
         .partitionBy("run_id")
-        .parquet(_chunks_dir(path))
+        .parquet(datasource._chunk_dir(path))
     )
     wall = time.time() - t0
     rows = datasource._chunk_lineage_rows(path, run_id, -1, wall)
     markers = [
-        (int(r["run_id"]), run_id, int(r["part_id"]), 0, 0, 0, 0, 0,
-         float(wall), "superseded")
-        for r in old
+        (r, run_id, p, 0, 0, 0, 0, 0, float(wall), "superseded")
+        for r in sorted(selected) for p in live[r]
     ] + [
         # fully-retired delete runs: part_id -1 is the whole-run marker
-        # read_delete_sets filters on. A delete some REMAINING run still
-        # predates stays live — its keys keep applying to the runs this
+        # of the commit plan. A delete some REMAINING run still predates
+        # stays live — its keys keep applying to the runs this
         # compaction didn't rewrite.
-        (int(dr), run_id, -1, 0, 0, 0, 0, 0, float(wall), "superseded")
+        (dr, run_id, -1, 0, 0, 0, 0, 0, float(wall), "superseded")
         for dr in dead_deletes
     ]
     # ONE file = the atomic publish-and-supersede commit
@@ -1073,9 +990,9 @@ def compact_store(
     return {
         "run_id": run_id,
         "partitions": len(rows),
-        "superseded": len(old),
+        "superseded": sum(len(live[r]) for r in selected),
         "selected_runs": sorted(selected),
-        "bytes_selected": bytes_selected,
+        "bytes_selected": sum(run_bytes[r] for r in selected),
         "superseded_delete_runs": sorted(dead_deletes),
         "wall_sec": time.time() - t0,
     }
@@ -1083,42 +1000,33 @@ def compact_store(
 
 def expire_runs(spark: SparkSession, path: str) -> dict:
     """Physically delete chunk directories of runs whose EVERY committed
-    partition is superseded (Iceberg ``expire_snapshots``): time travel
-    to those runs stops working; current reads are untouched because the
-    semi-join never selects superseded chunk groups. Local-filesystem
-    stores only (this sandbox's layout); object stores would route the
-    deletes through their own client."""
+    partition is superseded (Iceberg ``expire_snapshots``), and the key
+    files of materialized delete runs: time travel to those runs stops
+    working; current reads are untouched because the commit plan never
+    selects them. Planned on the driver (no Spark job). Local-filesystem
+    stores only; object stores would route the deletes through their
+    own client."""
     import shutil
 
-    lin = read_lineage(spark, path)
-    done = lin.where(F.col("status") == "done").select("run_id", "part_id")
-    sup = lin.where(F.col("status") == "superseded").select(
-        "run_id", "part_id"
-    ).distinct()
-    live = done.join(sup, ["run_id", "part_id"], "left_anti")
-    dead_runs = sorted(
-        {int(r["run_id"]) for r in done.select("run_id").distinct().collect()}
-        - {int(r["run_id"]) for r in live.select("run_id").distinct().collect()}
-    )
-    removed = []
-    for r in dead_runs:
-        d = f"{_chunks_dir(path)}/run_id={r}"
-        shutil.rmtree(d, ignore_errors=True)
-        removed.append(r)
-    # materialized (superseded, part_id = -1) delete runs: key files are
-    # dead weight once no reader will scan them
-    dels = lin.where(F.col("status") == "delete").select("run_id").distinct()
-    dead_dels = sorted(
-        int(r["run_id"])
-        for r in dels.join(
-            sup.where(F.col("part_id") == -1).select("run_id").distinct(),
-            "run_id",
-            "left_semi",
-        ).collect()
-    )
-    for r in dead_dels:
-        shutil.rmtree(f"{_deletes_dir(path)}/run_id={r}", ignore_errors=True)
-    return {"expired_runs": removed, "expired_delete_runs": dead_dels}
+    live, dels = datasource._lineage_plan(path)
+    lin = datasource._lineage_table(path, ("run_id", "status"))
+
+    def committed(status: str) -> set[int]:
+        return set(lin.filter(pc.equal(lin.column("status"), status))
+                   .column("run_id").to_pylist())
+
+    out = {}
+    for key, kind, dead in (
+        ("expired_runs", datasource._CHUNK_DIR,
+         committed("done") - set(live)),
+        ("expired_delete_runs", datasource._DELETES_DIR,
+         committed("delete") - {r for r, _ in dels}),
+    ):
+        out[key] = sorted(dead)
+        for r in out[key]:
+            shutil.rmtree(datasource._run_dir(path, kind, r),
+                          ignore_errors=True)
+    return out
 
 
 def vacuum_store(
@@ -1141,17 +1049,14 @@ def vacuum_store(
     *committed* runs — together they bound a maintained store's disk
     footprint to its live data plus the time-travel window.
 
-    Local-filesystem stores only (this sandbox's layout); object stores
-    would route listing + deletes through their own client."""
+    Local-filesystem stores only; object stores would route listing +
+    deletes through their own client."""
     import os
     import shutil
 
     now = time.time()
-    committed = {
-        int(r["run_id"])
-        for r in read_lineage(spark, path).select("run_id").distinct()
-        .collect()
-    }
+    committed = set(
+        datasource._lineage_table(path, ("run_id",)).column(0).to_pylist())
 
     def newest_mtime(d: str) -> float:
         newest = os.path.getmtime(d)
@@ -1174,37 +1079,28 @@ def vacuum_store(
                     pass
         return total
 
-    vacuumed: dict[str, list[int]] = {"chunks": [], "deletes": []}
+    def stale(d: str) -> bool:
+        return now - newest_mtime(d) >= grace_sec
+
+    def reclaim(d: str) -> None:
+        nonlocal reclaimed
+        reclaimed += dir_bytes(d)
+        shutil.rmtree(d, ignore_errors=True)
+
+    vacuumed: dict[str, list[int]] = {}
     removed_tmp = 0
     reclaimed = 0
-    for kind, base in (
-        ("chunks", _chunks_dir(path)), ("deletes", _deletes_dir(path))
-    ):
-        if not os.path.isdir(base):
-            continue
-        for name in sorted(os.listdir(base)):
-            d = os.path.join(base, name)
-            if not os.path.isdir(d):
-                continue
-            if name.startswith("run_id="):
-                try:
-                    rid = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if rid in committed:
-                    continue
-            elif name == "_temporary":
-                pass  # stale job-attempt debris, age-gated below
-            else:
-                continue
-            if now - newest_mtime(d) < grace_sec:
-                continue
-            reclaimed += dir_bytes(d)
-            shutil.rmtree(d, ignore_errors=True)
-            if name == "_temporary":
-                removed_tmp += 1
-            else:
+    for kind in (datasource._CHUNK_DIR, datasource._DELETES_DIR):
+        vacuumed[kind] = []
+        for rid, d in sorted(datasource._run_dirs(path, kind).items()):
+            if rid not in committed and stale(d):
+                reclaim(d)
                 vacuumed[kind].append(rid)
+        # stale job-attempt debris of killed Spark writes
+        tmp = os.path.join(path, kind, "_temporary")
+        if os.path.isdir(tmp) and stale(tmp):
+            reclaim(tmp)
+            removed_tmp += 1
     # stale _staging files: the data-source writers (batch lineage
     # appends + the streaming sink) stage task output there and publish
     # by rename at commit — a killed task/job leaves its stage files
@@ -1223,8 +1119,8 @@ def vacuum_store(
             except OSError:  # pragma: no cover - racing writer
                 pass
     return {
-        "vacuumed_runs": vacuumed["chunks"],
-        "vacuumed_delete_runs": vacuumed["deletes"],
+        "vacuumed_runs": vacuumed[datasource._CHUNK_DIR],
+        "vacuumed_delete_runs": vacuumed[datasource._DELETES_DIR],
         "removed_tmp_dirs": removed_tmp,
         "removed_staging_files": staged,
         "bytes_reclaimed": reclaimed,

@@ -10,7 +10,7 @@ Exactly-once comes from three cooperating mechanisms:
 - Spark's streaming checkpoint replays a failed micro-batch;
 - the lineage commit protocol (chunks first, lineage row after) makes a
   *partially-written* batch's orphan chunks invisible to readers
-  (``lineage.read_committed_chunks``);
+  (every read plans from ``datasource._lineage_plan``);
 - per-``batch_id`` idempotency closes the remaining at-least-once window:
   if a batch fully committed but the job died before Spark persisted the
   checkpoint offset, the replayed batch finds its done lineage rows and

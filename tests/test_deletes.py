@@ -11,6 +11,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from pysparkenc.engine import scan_table
@@ -23,6 +24,7 @@ from pysparkenc.lineage import (
     read_committed_chunks,
     read_delete_sets,
     read_store,
+    store_count_rows,
 )
 from pysparkenc.synth import make_tokens_table
 
@@ -264,8 +266,9 @@ def test_many_delete_runs_one_join(spark, tmp_path):
     assert got.count() == 54
     assert set(ids[:6]).isdisjoint(set(_ids(got)))
 
-    # plan of the Spark-side delete application (compact_store's
-    # path; read_store drops deleted rows inside its file-local reader):
+    # plan of apply_deletes, the Spark-side delete application kept as
+    # the oracle (read_store and compact_store drop deleted rows inside
+    # the file-local reader):
     # the three same-keyset delete runs coalesce into the SAME number of
     # anti-joins a single delete run plans (one union side) — the join
     # count must not grow with the number of delete commits
@@ -609,3 +612,42 @@ def test_delete_key_type_mismatch_refused_at_commit(spark, tmp_path):
     assert sorted(
         r["v"] for r in spark.read.format("pysparkenc").load(store).collect()
     ) == [20]
+
+
+@pytest.fixture(scope="module")
+def keyless_delete_store(spark, tmp_path_factory):
+    """A store whose committed delete run lost its key files."""
+    import shutil
+
+    store = str(tmp_path_factory.mktemp("corrupt") / "store")
+    df = make_tokens_table(spark, 40, seed=67)
+    encode_with_lineage(df, store, num_partitions=2)
+    d = delete_rows(spark, store, df.limit(3).select("doc_id"))
+    shutil.rmtree(f"{store}/deletes/run_id={d['run_id']}")
+    return store
+
+
+def _stats(spark, store):
+    from pysparkenc.cli import main
+
+    return main(["stats", "--input", store])
+
+
+@pytest.mark.parametrize("call", [
+    lambda spark, store: read_store(spark, store),
+    lambda spark, store: store_count_rows(spark, store),
+    lambda spark, store: read_delete_sets(spark, store),
+    lambda spark, store: compact_store(spark, store),
+    _stats,
+], ids=["read_store", "store_count_rows", "read_delete_sets",
+        "compact_store", "cli_stats"])
+def test_keyless_committed_delete_raises_value_error(
+        spark, keyless_delete_store, call):
+    """Every call that plans the store's deletes refuses a committed
+    delete run without key files with the same typed error, before it
+    writes anything."""
+    lineage_files = sorted(os.listdir(f"{keyless_delete_store}/lineage"))
+    with pytest.raises(ValueError, match="no key files"):
+        call(spark, keyless_delete_store)
+    assert sorted(os.listdir(f"{keyless_delete_store}/lineage")) == (
+        lineage_files)

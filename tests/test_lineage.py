@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from pysparkenc.engine import decode_table
 from pysparkenc.lineage import (
-    completed_part_ids,
     encode_with_lineage,
     read_committed_chunks,
     read_lineage,
@@ -23,6 +22,11 @@ from pysparkenc.synth import make_tokens_table
 
 N_DOCS = 600
 N_PARTS = 8
+
+
+def _done_part_ids(spark, path):
+    return {r["part_id"] for r in read_lineage(spark, path)
+            .where(F.col("status") == "done").collect()}
 
 
 @pytest.fixture()
@@ -57,7 +61,7 @@ def test_partial_run_resumes_only_missing(spark, tokens_df, tmp_path):
         tokens_df, path, partition_by=("source", "doc_id"),
         num_partitions=N_PARTS, drop_part_ids=frozenset({0, 1}),
     )
-    done1 = {r["part_id"] for r in completed_part_ids(spark, path).collect()}
+    done1 = _done_part_ids(spark, path)
     assert done1.isdisjoint({0, 1})
 
     # run 2 resumes: encodes exactly the missing partitions
@@ -67,7 +71,7 @@ def test_partial_run_resumes_only_missing(spark, tokens_df, tmp_path):
     )
     assert m2["skipped_partitions"] == m1["partitions"]
     assert m1["rows"] + m2["rows"] == N_DOCS
-    done2 = {r["part_id"] for r in completed_part_ids(spark, path).collect()}
+    done2 = _done_part_ids(spark, path)
     assert {0, 1} <= done2
 
     # committed view decodes bit-identically to the input
@@ -175,7 +179,7 @@ def test_snapshots_history(spark, tokens_df, tmp_path):
     # partition 0 is the one forced hole)
     assert 1 <= hist[0]["partitions"] <= 2
     assert hist[0]["partitions"] + hist[1]["partitions"] == (
-        completed_part_ids(spark, path).count()
+        len(_done_part_ids(spark, path))
     )
     assert sum(r["n_rows"] for r in hist) == N_DOCS
     assert all(r["enc_bytes"] > 0 for r in hist)
@@ -704,3 +708,80 @@ def test_commit_rows_match_the_spark_aggregation(spark, tokens_df, tmp_path):
         assert len(want) == n_parts
         assert _committed_rows(spark, path, run_id) == want
     assert m["partitions"] == 3
+
+
+def _spark_sql_visibility(spark, path, as_of_run):
+    """The visibility rule as Spark SQL over the lineage records — the
+    formulas ``read_committed_chunks`` and ``read_delete_sets`` ran
+    before the commit plan was decided on the driver, kept as the
+    oracle: done minus superseded pairs semi-joined to the chunk scan,
+    and delete runs minus whole-run (part_id -1) markers."""
+    lin = read_lineage(spark, path)
+    done = (lin.where(F.col("status") == "done")
+            .select("run_id", "part_id").distinct())
+    sup = lin.where(F.col("status") == "superseded")
+    dels = lin.where(F.col("status") == "delete").select("run_id")
+    sup_dels = sup.where(F.col("part_id") == -1)
+    if as_of_run is not None:
+        done = done.where(F.col("run_id") <= as_of_run)
+        sup = sup.where(F.col("batch_id") <= as_of_run)
+        dels = dels.where(F.col("run_id") <= as_of_run)
+        sup_dels = sup_dels.where(F.col("batch_id") <= as_of_run)
+    live = done.join(F.broadcast(sup.select("run_id", "part_id").distinct()),
+                     ["run_id", "part_id"], "left_anti")
+    pairs = (spark.read.parquet(f"{path}/chunks")
+             .join(F.broadcast(live), ["run_id", "part_id"], "left_semi")
+             .select("run_id", "part_id").distinct().collect())
+    live_dels = dels.join(sup_dels.select("run_id"), "run_id", "left_anti")
+    return ({(r["run_id"], r["part_id"]) for r in pairs},
+            sorted({r["run_id"] for r in live_dels.collect()}))
+
+
+def test_commit_plan_matches_the_spark_sql_rule(spark, tmp_path,
+                                                monkeypatch):
+    """read_committed_chunks and read_delete_sets, planned by
+    datasource._lineage_plan, return the same (run, part) pairs and
+    delete runs as the Spark SQL rule at every as_of_run of a store
+    holding an append, a stream batch, a delete, a selective and a full
+    compaction (which supersedes the delete) and a quarantined run."""
+    import pysparkenc.lineage as L
+    from pysparkenc.lineage import compact_store, delete_rows, read_delete_sets
+
+    path = str(tmp_path / "store")
+    df = make_tokens_table(spark, 120, seed=61)
+    stream = make_tokens_table(spark, 40, seed=62).withColumn(
+        "doc_id", F.concat(F.lit("s-"), "doc_id"))
+    encode_with_lineage(df, path, num_partitions=3)  # run 1
+    encode_with_lineage(stream, path, num_partitions=2, resume=False,
+                        batch_id=7)  # run 2
+    delete_rows(spark, path, df.limit(5).select("doc_id"))  # run 3
+    sel = compact_store(spark, path, runs=(2,), num_partitions=1)  # run 4
+    assert sel["superseded_delete_runs"] == []  # run 1 still predates it
+    full = compact_store(spark, path, num_partitions=2)  # run 5
+    assert full["superseded_delete_runs"] == [3]
+    encode_with_lineage(df.limit(30), path, num_partitions=1,
+                        resume=False)  # run 6
+    # a colliding writer on run 6 quarantines it (self-supersede)
+    monkeypatch.setattr(L, "_next_run_id", lambda s, p: 6)
+    with pytest.raises(RuntimeError, match="quarantined"):
+        encode_with_lineage(df.limit(30), path, num_partitions=1,
+                            resume=False)
+    monkeypatch.undo()
+    ops = {r["run_id"]: r["operation"]
+           for r in L.snapshots(spark, path).collect()}
+    assert ops == {1: "append", 2: "stream-append", 3: "delete",
+                   4: "compact", 5: "compact", 6: "quarantined"}
+
+    for as_of in (*range(1, 7), None):
+        want_pairs, want_dels = _spark_sql_visibility(spark, path, as_of)
+        got_pairs = {
+            (r["part_id"] >> 32, r["part_id"] & 0xFFFFFFFF)
+            for r in read_committed_chunks(spark, path, as_of_run=as_of)
+            .select("part_id").distinct().collect()
+        }
+        assert got_pairs == want_pairs, as_of
+        assert [r for r, _ in read_delete_sets(
+            spark, path, as_of_run=as_of)] == want_dels, as_of
+    # the rule did change the visible layout along the way
+    assert _spark_sql_visibility(spark, path, 3)[1] == [3]
+    assert {r for r, _ in _spark_sql_visibility(spark, path, None)[0]} == {5}

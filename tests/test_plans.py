@@ -431,3 +431,68 @@ def test_encode_table_default_is_one_task_wave(spark):
     slots = spark.sparkContext.defaultParallelism
     for kw in ({}, {"partition_by": ("source", "doc_id")}):
         assert encode_table(df, **kw).rdd.getNumPartitions() == slots
+
+
+@pytest.fixture()
+def maintained_store(spark, tmp_path):
+    """Two data runs and one delete run."""
+    from pysparkenc.lineage import delete_rows, encode_with_lineage
+    from pysparkenc.synth import make_tokens_table
+
+    store = str(tmp_path / "store")
+    df = make_tokens_table(spark, 300, seed=13)
+    for i in range(2):
+        encode_with_lineage(
+            df.withColumn("doc_id", F.concat(F.lit(f"r{i}-"), "doc_id")),
+            store, partition_by=("source", "doc_id"), num_partitions=2,
+            resume=False)
+    delete_rows(spark, store, spark.createDataFrame(
+        [("r0-" + r["doc_id"],) for r in df.limit(5).collect()],
+        "doc_id string"))
+    return store
+
+
+def test_lineage_metadata_calls_run_no_spark_job(spark, maintained_store):
+    """The history, expiry and orphan reclaim plan from the lineage
+    records on the driver: collecting ``snapshots`` and running
+    ``expire_runs`` / ``vacuum_store`` start no Spark job."""
+    from pysparkenc.lineage import (
+        compact_store,
+        expire_runs,
+        snapshots,
+        vacuum_store,
+    )
+
+    compact_store(spark, maintained_store, runs=(2,))
+    assert _jobs_in(spark, "snapshots", lambda: snapshots(
+        spark, maintained_store).collect()) == 0
+    assert _jobs_in(spark, "expire", lambda: expire_runs(
+        spark, maintained_store)) == 0
+    assert _jobs_in(spark, "vacuum", lambda: vacuum_store(
+        spark, maintained_store, grace_sec=0.0)) == 0
+
+
+@pytest.mark.parametrize("runs", [(2,), None], ids=["runs", "full"])
+def test_compaction_decodes_file_locally(spark, maintained_store,
+                                         monkeypatch, runs):
+    """Compaction decodes through the file-local reader: its plan has a
+    ``MapInArrow`` decode, no grouped ``FlatMapGroupsInArrow`` decode
+    and no delete anti-join, and it runs at most 8 Spark jobs."""
+    import pysparkenc.lineage as L
+
+    plans = []
+    encode = L.encode_table
+
+    def spy(df, **kw):
+        out = encode(df, **kw)
+        plans.append(plan_of(out))
+        return out
+
+    monkeypatch.setattr(L, "encode_table", spy)
+    jobs = _jobs_in(spark, f"compact-{runs}", lambda: L.compact_store(
+        spark, maintained_store, runs=runs))
+    assert jobs <= 8
+    (plan,) = plans
+    assert "MapInArrow" in plan
+    assert "FlatMapGroupsInArrow" not in plan
+    assert "LeftAnti" not in plan

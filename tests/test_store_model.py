@@ -1,11 +1,12 @@
 """Model-based test of the lineage store's table-maintenance surface.
 
-Random interleavings of append / delete / upsert / compact / expire run
-against both the real store and a plain Python dict model of
-"key -> current row"; after every scenario the visible table must equal
-the model exactly. This is the property the whole Iceberg-shaped layer
-promises: whatever the operation history, readers see one current row
-per live key.
+Random interleavings of append / delete / upsert / compact (full or of
+a random subset of live runs) / expire run against both the real store
+and a plain Python dict model of "key -> current row"; after every
+scenario the visible table must equal the model exactly, and the
+snapshot history must list exactly the runs the scenario committed.
+This is the property the whole Iceberg-shaped layer promises: whatever
+the operation history, readers see one current row per live key.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from pysparkenc.datasource import _lineage_plan
 from pysparkenc.lineage import (
     compact_store,
     delete_rows,
@@ -22,6 +24,7 @@ from pysparkenc.lineage import (
     expire_runs,
     read_lineage,
     read_store,
+    snapshots,
     upsert_rows,
     vacuum_store,
 )
@@ -49,18 +52,20 @@ def _run_scenario(spark, store, seed):
     # vacuum the r5 orphan reclaim — both must compose with everything
     # else in any order
     ops = ["append"] + [
-        rng.choice(["append", "delete", "upsert", "compact", "expire",
-                    "ds_append", "vacuum"])
+        rng.choice(["append", "delete", "upsert", "compact",
+                    "compact_runs", "expire", "ds_append", "vacuum"])
         for _ in range(rng.randrange(4, 7))
     ]
-    snapshots: list[tuple[int, dict[str, int], bool]] = []
+    snaps: list[tuple[int, dict[str, int], bool]] = []
+    committed: set[int] = set()
     for op in ops:
         if op == "append":
             items = [(k, rng.randrange(1000)) for k in fresh(rng.randrange(3, 9))]
             m = encode_with_lineage(_mk_rows(spark, items), store,
                                     num_partitions=2, resume=False)
             model.update(items)
-            snapshots.append((m["run_id"], dict(model), False))
+            committed.add(m["run_id"])
+            snaps.append((m["run_id"], dict(model), False))
         elif op == "delete" and model:
             victims = rng.sample(sorted(model), min(len(model),
                                                     rng.randrange(1, 4)))
@@ -69,7 +74,8 @@ def _run_scenario(spark, store, seed):
                             .select("k"), key_cols=("k",))
             for k in victims:
                 del model[k]
-            snapshots.append((d["run_id"], dict(model), False))
+            committed.add(d["run_id"])
+            snaps.append((d["run_id"], dict(model), False))
         elif op == "upsert" and model:
             upd = rng.sample(sorted(model), min(len(model), 2))
             items = [(k, rng.randrange(1000)) for k in upd]
@@ -77,10 +83,24 @@ def _run_scenario(spark, store, seed):
             u = upsert_rows(spark, store, _mk_rows(spark, items),
                             key_cols=("k",), num_partitions=1)
             model.update(items)
-            snapshots.append((u["append_run"], dict(model), False))
+            committed |= {u["delete_run"], u["append_run"]}
+            snaps.append((u["append_run"], dict(model), False))
         elif op == "compact" and model:
             c = compact_store(spark, store, num_partitions=2)
-            snapshots.append((c["run_id"], dict(model), False))
+            committed.add(c["run_id"])
+            snaps.append((c["run_id"], dict(model), False))
+        elif op == "compact_runs" and model:
+            live = sorted(_lineage_plan(store)[0])
+            runs = rng.sample(live, rng.randrange(1, len(live) + 1))
+            c = compact_store(spark, store, runs=tuple(runs),
+                              num_partitions=2)
+            assert c["selected_runs"] == sorted(runs)
+            # a compaction whose selected rows were all deleted writes
+            # no rows: it commits only the supersede markers, and the
+            # history lists no run of its own
+            if c["partitions"]:
+                committed.add(c["run_id"])
+                snaps.append((c["run_id"], dict(model), False))
         elif op == "ds_append":
             from pysparkenc.datasource import register
 
@@ -94,7 +114,8 @@ def _run_scenario(spark, store, seed):
                 read_lineage(spark, store)
                 .agg(F.max("run_id").alias("m")).collect()[0]["m"]
             )
-            snapshots.append((run_id, dict(model), False))
+            committed.add(run_id)
+            snaps.append((run_id, dict(model), False))
         elif op == "vacuum":
             # grace 0: anything uncommitted is reclaimable NOW; visible
             # results must be identical before and after
@@ -104,7 +125,7 @@ def _run_scenario(spark, store, seed):
             # time travel to runs superseded by a compaction stops
             # working once expire removes their chunk dirs — snapshots
             # taken BEFORE this point become unverifiable
-            snapshots = [(r, m, True) for r, m, _ in snapshots]
+            snaps = [(r, m, True) for r, m, _ in snaps]
 
     got = {r["k"]: r["v"] for r in read_store(spark, store).collect()}
     assert got == model, (seed, ops)
@@ -121,7 +142,10 @@ def _run_scenario(spark, store, seed):
     # time travel: every commit boundary must reproduce the model as it
     # was then (skip snapshots taken before an expire pass — their
     # chunk files may be gone by design)
-    live = [(r, m) for r, m, dead in snapshots if not dead]
+    assert {r["run_id"] for r in snapshots(spark, store).collect()} == (
+        committed), (seed, ops)
+
+    live = [(r, m) for r, m, dead in snaps if not dead]
     for run_id, snap in rng.sample(live, min(2, len(live))):
         at = {
             r["k"]: r["v"]
@@ -130,6 +154,6 @@ def _run_scenario(spark, store, seed):
         assert at == snap, (seed, ops, run_id)
 
 
-@pytest.mark.parametrize("seed", range(5))
+@pytest.mark.parametrize("seed", range(7))
 def test_random_op_interleavings_match_model(spark, tmp_path, seed):
     _run_scenario(spark, str(tmp_path / f"store{seed}"), seed)
