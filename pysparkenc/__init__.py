@@ -11,6 +11,7 @@ lineage with checkpoint resume, and salted/range skew-aware partitioning.
 
 __version__ = "0.1.0"
 
+from . import zipcache  # noqa: E402,F401  (see its docstring)
 from .caching import release  # noqa: E402  (public cache-release hook)
 
 __all__ = ["release"]

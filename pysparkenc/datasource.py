@@ -768,9 +768,14 @@ class _FileCommit(WriterCommitMessage):
 
 def _lineage_max_run(path: str) -> int:
     """Highest run id in the lineage records (0 when empty), read on
-    the driver with pyarrow."""
-    return int(pc.max(_lineage_table(path, ("run_id",)).column(0)).as_py()
-               or 0)
+    the driver with pyarrow. A compaction that wrote no rows commits
+    only supersede markers, which carry its id in ``batch_id``, so that
+    column counts too, on ``superseded`` rows only (stream batches keep
+    their batch id there on done rows)."""
+    tab = _lineage_table(path, ("run_id", "batch_id", "status"))
+    sup = tab.filter(pc.equal(tab.column("status"), "superseded"))
+    return max(int(pc.max(tab.column("run_id")).as_py() or 0),
+               int(pc.max(sup.column("batch_id")).as_py() or 0))
 
 
 def _chunk_lineage_rows(

@@ -347,9 +347,19 @@ def encode_with_lineage(
     # partition plan's aggregate and the chunk write are this call's
     # only Spark jobs
     lin = datasource._lineage_table(
-        path, ("batch_id", "part_id", "status", "partition_by",
+        path, ("run_id", "batch_id", "part_id", "status", "partition_by",
                "num_partitions"))
-    done = lin.filter(pc.equal(lin.column("status"), "done"))
+    status = lin.column("status")
+    # a quarantined run (self-superseded, batch_id == run_id) committed
+    # nothing readers see: its done rows neither replay a batch nor
+    # resume a part. Parts superseded by a compaction stay done.
+    sup = lin.filter(pc.equal(status, "superseded"))
+    quarantined = sup.filter(pc.equal(
+        sup.column("batch_id"), sup.column("run_id"))).column("run_id")
+    done = lin.filter(pc.and_(
+        pc.equal(status, "done"),
+        pc.invert(pc.is_in(lin.column("run_id"),
+                           quarantined.combine_chunks()))))
     if batch_id is not None:
         already = pc.sum(pc.equal(done.column("batch_id"), int(batch_id)))
         already = int(already.as_py() or 0)

@@ -785,3 +785,59 @@ def test_commit_plan_matches_the_spark_sql_rule(spark, tmp_path,
     # the rule did change the visible layout along the way
     assert _spark_sql_visibility(spark, path, 3)[1] == [3]
     assert {r for r, _ in _spark_sql_visibility(spark, path, None)[0]} == {5}
+
+
+def test_resume_after_quarantine_reencodes_its_parts(spark, monkeypatch,
+                                                     tmp_path):
+    """A part whose only done rows belong to a quarantined run is not
+    committed: the re-run the quarantine error asks for encodes it
+    again. Before, the skip-set took every done row, the re-run encoded
+    nothing, and the store kept only part 1's rows for good."""
+    import pysparkenc.lineage as L
+    from pysparkenc.lineage import read_store
+
+    path = str(tmp_path / "enc")
+    df = make_tokens_table(spark, 60, seed=5)
+    kw = dict(partition_by=("source", "doc_id"), num_partitions=2)
+    m1 = encode_with_lineage(df, path, drop_part_ids=frozenset({0}), **kw)
+    # two resumes race to run 2: the first commits part 0, the second
+    # (nothing left to encode) finds a run it did not write and
+    # quarantines it
+    monkeypatch.setattr(L, "_next_run_id", lambda s, p: 2)
+    assert encode_with_lineage(df, path, **kw)["run_id"] == 2
+    with pytest.raises(RuntimeError, match="quarantined"):
+        encode_with_lineage(df, path, **kw)
+    monkeypatch.undo()
+    assert read_store(spark, path).count() == m1["rows"] < 60
+
+    m3 = encode_with_lineage(df, path, **kw)
+    assert (m3["run_id"], m3["skipped_partitions"]) == (3, 1)
+    assert m1["rows"] + m3["rows"] == 60
+    ids = [r["doc_id"] for r in read_store(spark, path).collect()]
+    assert len(ids) == 60 and len(set(ids)) == 60
+    # a part superseded by a compaction stays done: the one-part
+    # compaction leaves part 1 done only in superseded run 1
+    compact_run = L.compact_store(spark, path, num_partitions=1)["run_id"]
+    m5 = encode_with_lineage(df, path, **kw)
+    assert m5["rows"] == 0 and m5["skipped_partitions"] == 2
+    assert compact_run == 4 and read_store(spark, path).count() == 60
+
+
+def test_marker_only_compaction_keeps_its_run_id(spark, tmp_path):
+    """A compaction whose selected rows were all deleted writes no
+    rows and commits only supersede markers, which carry its id in
+    ``batch_id``. The next run still gets a fresh id, so the history
+    does not label that append ``compact``."""
+    from pysparkenc.lineage import compact_store, delete_rows, snapshots
+
+    path = str(tmp_path / "enc")
+    df = make_tokens_table(spark, 40, seed=9)
+    encode_with_lineage(df, path, num_partitions=2)  # run 1
+    delete_rows(spark, path, df.select("doc_id"))  # run 2
+    m = compact_store(spark, path, runs=(1,))
+    assert (m["run_id"], m["partitions"]) == (3, 0)
+    assert encode_with_lineage(df, path, num_partitions=2,
+                               resume=False)["run_id"] == 4
+    ops = {r["run_id"]: r["operation"]
+           for r in snapshots(spark, path).collect()}
+    assert ops == {1: "append", 2: "delete", 4: "append"}
