@@ -34,9 +34,10 @@ Scale design:
   on top-level scalar columns prune whole page groups per file —
   dictionary-page membership probes for ``dict_rle`` chunks, NaN-safe
   min/max and truncation-safe smin/smax otherwise, decided by
-  :func:`engine._group_passes` (the one page-group evaluator, which
-  ``scan_table`` and ``read_store`` run too). Every filter is also
-  returned to Spark for re-evaluation, so pruning is a pure
+  :func:`engine._group_passes` inside :func:`engine._walk_groups` (the
+  one page-group walk, which ``scan_table`` and ``read_store`` run
+  too). Every filter is also returned to Spark for re-evaluation, so
+  pruning is a pure
   optimization and can never drop a row it shouldn't: a group survives
   unless the stats *prove* it empty.
   Caveat, and the reason pushdown is opt-in: Spark 4.1 reuses the
@@ -47,9 +48,9 @@ Scale design:
   on. :func:`pysparkenc.lineage.read_store` runs this reader without
   Spark's data source planner, prunes its ``where`` itself, and is not
   affected either way.
-- Decode reuses :func:`engine._group_decoder` — the exact executor path
-  ``decode_table`` runs under ``applyInArrow``, yielding Arrow record
-  batches (zero row-at-a-time Python).
+- Decode is :func:`engine._walk_groups` once per file — the walk
+  ``decode_table`` runs under ``applyInArrow`` — and yields each page
+  group's Arrow record batches (zero row-at-a-time Python).
 
 The reference is a library around parquet files, not a query engine
 (file-reader.go:99-107); this module is the Spark-native equivalent of
@@ -592,7 +593,6 @@ class ChunkStoreReader(DataSourceReader):
         self.live: dict[int, tuple[int, ...]] = {}
         self.deletes: list[tuple[int, str, tuple[str, ...]]] = []
         self._key_tabs: dict[int, pa.Table] = {}  # executor-side cache
-        self._decoder = None  # executor-side _group_decoder cache
         self._widened: tuple[StructType, list[str]] | None = None
         if self.lineage:
             self.live, dels = _lineage_plan(path, self.as_of_run)
@@ -691,7 +691,7 @@ class ChunkStoreReader(DataSourceReader):
 
     def _read_file(self, path: str, run_id: int | None):
         """Decode the page groups of one chunk file that pass
-        ``self.pushed`` (:func:`engine._page_groups`), minus the rows
+        ``self.pushed`` (:func:`engine._walk_groups`), minus the rows
         deleted by runs sequenced after ``run_id``. A flat store's file
         (``run_id`` None) has every part id live and no delete sets."""
         # set in __init__ for every store with live runs — the only
@@ -705,50 +705,23 @@ class ChunkStoreReader(DataSourceReader):
                 "(a lineage file read was planned without live runs)"
             )
         decode_schema, user_cols = self._widened
-        allowed: set[str] = set()
-        for f in decode_schema.fields:
-            allowed |= engine._subtree_chunk_names(f.name, f.dataType)
         live = ([] if run_id is None
                 else [("part_id", "in", list(self.live.get(run_id, ())))])
         # DNF filters: (requested columns OR the col_idx-0 anchor chunk)
         # AND committed partitions only (orphan part ids from a crashed
-        # encode never decode). The anchor term mirrors decode_table's
-        # schema-evolution rule (engine.py): a group written before
-        # EVERY requested column existed must still decode — as
-        # all-null rows — so one chunk per group must survive to carry
-        # its row count; col_idx 0 exists in every group. Flat appends
-        # require an identical schema, so there it only adds col 0.
+        # encode never decode). The anchor carries the row count of a
+        # group written before EVERY requested column existed, which
+        # the walk decodes as all-null rows; col_idx 0 exists in every
+        # group. Flat appends require an identical schema, so there it
+        # only adds col 0.
         table = pq.read_table(
             path,
-            filters=[[("col", "in", sorted(allowed)), *live],
+            filters=[[("col", "in", engine._requested_chunks(decode_schema)),
+                      *live],
                      [("col_idx", "==", 0), *live]],
         )
-        if table.num_rows == 0:
-            return
-        # blank unrequested anchor payloads (metadata-only carriers),
-        # exactly like decode_table's anchor handling
-        req = pc.is_in(table.column("col"),
-                       value_set=pa.array(sorted(allowed), pa.string()))
-        if not pc.all(req).as_py():
-            blank_data = pc.if_else(
-                req, table.column("data"),
-                pa.scalar(None, table.schema.field("data").type),
-            )
-            blank_aux = pc.if_else(
-                req, table.column("aux"),
-                pa.scalar(None, table.schema.field("aux").type),
-            )
-            table = table.set_column(
-                table.schema.get_field_index("data"), "data", blank_data
-            ).set_column(
-                table.schema.get_field_index("aux"), "aux", blank_aux
-            )
-        if self._decoder is None:  # once per task, not per file
-            self._decoder = engine._group_decoder(decode_schema)
-        table, spans = engine._page_groups(table, self.pushed)
         dels = [] if run_id is None else self._keys_for(run_id)
-        for s, e in spans:
-            out = self._decoder(table.slice(s, e - s))
+        for out in engine._walk_groups(decode_schema, table, self.pushed):
             for _, keys_tab in dels:
                 mask = _delete_drop_mask(out, keys_tab)
                 if mask is not None:

@@ -312,20 +312,27 @@ def _fixed_to_decimal(
     )
 
 
-def _subtree_chunk_names(path: str, dt) -> set[str]:
-    """Every chunk name the subtree rooted at (path, dt) may emit — the
-    decode-side projection filter (SetSelectedColumns + SkipChunk analogue,
+def _requested_chunks(schema: StructType) -> list[str]:
+    """Sorted names of every chunk a decode of ``schema`` may read, its
+    value, validity and length chunks at any depth: the decode-side
+    projection filter (SetSelectedColumns + SkipChunk analogue,
     schema/schema.go:212-232, layout/chunk.go:28-51)."""
-    names = {path, f"{path}#def"}
-    if isinstance(dt, StructType):
-        for f in dt.fields:
-            names |= _subtree_chunk_names(f"{path}.{f.name}", f.dataType)
-    elif isinstance(dt, ArrayType):
-        names |= _subtree_chunk_names(f"{path}#item", dt.elementType)
-    elif isinstance(dt, MapType):
-        names |= _subtree_chunk_names(f"{path}#key", dt.keyType)
-        names |= _subtree_chunk_names(f"{path}#val", dt.valueType)
-    return names
+    names: set[str] = set()
+
+    def add(path: str, dt) -> None:
+        names.update((path, f"{path}#def"))
+        if isinstance(dt, StructType):
+            for f in dt.fields:
+                add(f"{path}.{f.name}", f.dataType)
+        elif isinstance(dt, ArrayType):
+            add(f"{path}#item", dt.elementType)
+        elif isinstance(dt, MapType):
+            add(f"{path}#key", dt.keyType)
+            add(f"{path}#val", dt.valueType)
+
+    for f in schema.fields:
+        add(f.name, f.dataType)
+    return sorted(names)
 
 
 # ---------------------------------------------------------------------------
@@ -1214,157 +1221,183 @@ def _decode_scalar_array(
     return ba.cast(_arrow_type_of(logical))
 
 
-def _group_decoder(schema: StructType):
-    """Build the chunk-group decode function for ``schema``: a callable
-    taking a pa.Table of CHUNK_SCHEMA rows (one partition's pages, any
-    number of chunk_ids) and returning the decoded pa.Table. Shared by
-    :func:`decode_table` (executor-side via ``applyInArrow``) and the
-    ``pysparkenc`` Python data source reader (per input file)."""
-    out_pa_schema = pa.schema(
+def _corrupt(ck: dict, what: str) -> ValueError:
+    """The typed error for a chunk row whose footer contradicts what the
+    encoder (:func:`_encode_arrow_batch`) writes."""
+    return ValueError(f"corrupt chunk {ck['col']!r} (part_id {ck['part_id']}, "
+                      f"chunk_id {ck['chunk_id']}): {what}")
+
+
+def _extra_of(ck: dict) -> dict:
+    """A chunk's ``extra`` stats, written as ``""`` or a JSON object."""
+    try:
+        extra = json.loads(ck["extra"] or "{}")
+    except ValueError:
+        extra = None
+    if not isinstance(extra, dict):
+        raise _corrupt(ck, f"extra {ck['extra']!r} is not a JSON object")
+    return extra
+
+
+def _arrow_schema(schema: StructType) -> pa.Schema:
+    return pa.schema(
         [(f.name, _arrow_full_type(f.dataType, f.name)) for f in schema.fields]
     )
 
-    meta_cols = ("col", "codec", "dtype", "n_rows", "n_values", "null_count",
-                 "n_unique", "bit_width", "crc32", "extra")
 
-    def decode_one_group(by_col: dict[str, dict], n_rows: int) -> pa.Table:
-        def present(path: str, dt) -> bool:
-            if isinstance(dt, StructType):
-                return f"{path}#def" in by_col or any(
-                    present(f"{path}.{f.name}", f.dataType) for f in dt.fields
-                )
-            return path in by_col
+_WALK_COLS = ("part_id", "chunk_id", "col", "codec", "dtype", "n_rows",
+              "n_values", "null_count", "n_unique", "bit_width", "crc32",
+              "extra")
 
-        def build(path: str, dt, n_slots: int) -> pa.Array:
-            if not present(path, dt):
-                # schema evolution: this chunk group predates the column
-                # (an appended store whose later batches added it) — the
-                # reader contract matches parquet/iceberg: absent columns
-                # read as typed nulls. Declare evolved columns nullable.
-                return pa.nulls(n_slots, type=_arrow_full_type(dt, path))
-            if isinstance(dt, StructType):
-                defck = by_col.get(f"{path}#def")
-                if defck is not None:
-                    svalid = chunklib.decode_bool(defck)
-                    validity = pa.py_buffer(
-                        np.packbits(svalid, bitorder="little")
-                    )
-                    nc = int(n_slots - svalid.sum())
-                else:
-                    validity, nc = None, 0
-                children = [
-                    build(f"{path}.{f.name}", f.dataType, n_slots)
-                    for f in dt.fields
+
+def _walk_groups(
+    schema: StructType, table: pa.Table, pushed: Iterable[_Pushed] = ()
+) -> Iterator[pa.Table]:
+    """THE page-group walk, the reference's skip-then-load loop
+    (file-reader.go:110-112, 141-191), run per file by the file-local
+    reader and per grouped-map call by :func:`decode_table`: cut
+    ``table``'s chunk rows into page groups once, drop every group
+    ``pushed`` proves empty (:func:`_page_groups`), then check and
+    decode each survivor, yielding a pa.Table of ``schema`` per group.
+
+    Only the schema's chunk paths are decoded, from zero-copy views of
+    the Arrow buffers. Any other row of a group (the col_idx-0 anchor
+    of a group written before every requested column existed) only
+    supplies ``n_rows``. A footer that contradicts the encoder raises
+    :func:`_corrupt`: one ``n_rows`` per group, ``n_values`` equal to
+    the present slots (all slots for a validity chunk), ``extra`` a
+    JSON object."""
+    if table.num_rows == 0:
+        return
+    out_schema = _arrow_schema(schema)
+    wanted = set(_requested_chunks(schema))
+    table, spans = _page_groups(table, list(pushed))
+    metas = {c: table.column(c).to_pylist() for c in _WALK_COLS}
+    data = table.column("data").combine_chunks()
+    aux = table.column("aux").combine_chunks()
+    by_col: dict[str, dict] = {}  # the current group's requested chunks
+
+    def present(path: str, dt) -> bool:
+        if isinstance(dt, StructType):
+            return f"{path}#def" in by_col or any(
+                present(f"{path}.{f.name}", f.dataType) for f in dt.fields
+            )
+        return path in by_col
+
+    def counted(ck: dict, n: int) -> dict:
+        if ck["n_values"] != n:
+            raise _corrupt(ck, f"n_values {ck['n_values']} != {n} slots")
+        return ck
+
+    def build(path: str, dt, n_slots: int) -> pa.Array:
+        if not present(path, dt):
+            # schema evolution: this chunk group predates the column
+            # (an appended store whose later batches added it) — the
+            # reader contract matches parquet/iceberg: absent columns
+            # read as typed nulls. Declare evolved columns nullable.
+            return pa.nulls(n_slots, type=_arrow_full_type(dt, path))
+        defck = by_col.get(f"{path}#def")
+        valid = bitmap = None
+        n_null = 0
+        if defck is not None:
+            valid = chunklib.decode_bool(counted(defck, n_slots))
+            bitmap = pa.py_buffer(np.packbits(valid, bitorder="little"))
+            n_null = int(n_slots - valid.sum())
+        if isinstance(dt, StructType):
+            children = [
+                build(f"{path}.{f.name}", f.dataType, n_slots)
+                for f in dt.fields
+            ]
+            # from_buffers, not from_arrays: Spark's applyInArrow
+            # checks the result type *including field nullability*,
+            # and from_arrays always yields all-nullable fields
+            stype = pa.struct(
+                [
+                    pa.field(f.name, children[i].type, f.nullable)
+                    for i, f in enumerate(dt.fields)
                 ]
-                # from_buffers, not from_arrays: Spark's applyInArrow
-                # checks the result type *including field nullability*,
-                # and from_arrays always yields all-nullable fields
-                stype = pa.struct(
-                    [
-                        pa.field(f.name, children[i].type, f.nullable)
-                        for i, f in enumerate(dt.fields)
-                    ]
+            )
+            return pa.Array.from_buffers(
+                stype, n_slots, [bitmap], null_count=n_null,
+                children=children,
+            )
+        ck = counted(by_col[path], n_slots - n_null)
+        if isinstance(dt, (ArrayType, MapType)):
+            lengths = chunklib.decode_numeric({**ck, "dtype": "int32"})
+            if valid is not None:
+                full_len = np.zeros(n_slots, dtype=np.int64)
+                full_len[valid] = lengths
+            else:
+                full_len = lengths.astype(np.int64)
+            offsets = np.zeros(n_slots + 1, dtype=np.int32)
+            np.cumsum(full_len, out=offsets[1:])
+            n_elem = int(offsets[-1])
+            if isinstance(dt, MapType):
+                keys = build(f"{path}#key", dt.keyType, n_elem)
+                items = build(f"{path}#val", dt.valueType, n_elem)
+                entries = pa.Array.from_buffers(
+                    pa.struct(
+                        [
+                            pa.field("key", keys.type, False),
+                            pa.field("value", items.type,
+                                     dt.valueContainsNull),
+                        ]
+                    ),
+                    n_elem, [None], null_count=0,
+                    children=[keys, items],
+                )
+                mtype = pa.map_(
+                    pa.field("key", keys.type, False),
+                    pa.field("value", items.type, dt.valueContainsNull),
                 )
                 return pa.Array.from_buffers(
-                    stype, n_slots, [validity], null_count=nc,
-                    children=children,
+                    mtype, n_slots,
+                    [bitmap, pa.py_buffer(offsets)],
+                    null_count=n_null, children=[entries],
                 )
-            defck = by_col.get(f"{path}#def")
-            valid = chunklib.decode_bool(defck) if defck is not None else None
-            if isinstance(dt, (ArrayType, MapType)):
-                lengths = chunklib.decode_numeric(
-                    {**by_col[path], "dtype": "int32"}
-                )
-                if valid is not None:
-                    full_len = np.zeros(n_slots, dtype=np.int64)
-                    full_len[valid] = lengths
-                else:
-                    full_len = lengths.astype(np.int64)
-                offsets = np.zeros(n_slots + 1, dtype=np.int32)
-                np.cumsum(full_len, out=offsets[1:])
-                n_elem = int(offsets[-1])
-                validity_buf = (
-                    pa.py_buffer(np.packbits(valid, bitorder="little"))
-                    if valid is not None
-                    else None
-                )
-                n_null = int((~valid).sum()) if valid is not None else 0
-                if isinstance(dt, MapType):
-                    keys = build(f"{path}#key", dt.keyType, n_elem)
-                    items = build(f"{path}#val", dt.valueType, n_elem)
-                    entries = pa.Array.from_buffers(
-                        pa.struct(
-                            [
-                                pa.field("key", keys.type, False),
-                                pa.field("value", items.type,
-                                         dt.valueContainsNull),
-                            ]
-                        ),
-                        n_elem, [None], null_count=0,
-                        children=[keys, items],
-                    )
-                    mtype = pa.map_(
-                        pa.field("key", keys.type, False),
-                        pa.field("value", items.type, dt.valueContainsNull),
-                    )
-                    return pa.Array.from_buffers(
-                        mtype, n_slots,
-                        [validity_buf, pa.py_buffer(offsets)],
-                        null_count=n_null, children=[entries],
-                    )
-                child_arr = build(f"{path}#item", dt.elementType, n_elem)
-                ltype = pa.list_(
-                    pa.field("item", child_arr.type, dt.containsNull)
-                )
-                return pa.Array.from_buffers(
-                    ltype, n_slots,
-                    [validity_buf, pa.py_buffer(offsets)],
-                    null_count=n_null, children=[child_arr],
-                )
-            logical = _logical_of_dtype(dt, path)
-            return _decode_scalar_array(by_col[path], logical, n_slots, valid)
+            child_arr = build(f"{path}#item", dt.elementType, n_elem)
+            ltype = pa.list_(
+                pa.field("item", child_arr.type, dt.containsNull)
+            )
+            return pa.Array.from_buffers(
+                ltype, n_slots,
+                [bitmap, pa.py_buffer(offsets)],
+                null_count=n_null, children=[child_arr],
+            )
+        logical = _logical_of_dtype(dt, path)
+        return _decode_scalar_array(ck, logical, n_slots, valid)
 
+    for s, e in spans:
+        rows = [{c: metas[c][j] for c in _WALK_COLS} for j in range(s, e)]
+        counts = [ck["n_rows"] for ck in rows]
+        n_rows = max(set(counts), key=counts.count)
+        by_col = {}
+        for j, ck in enumerate(rows, s):
+            if ck["n_rows"] != n_rows:
+                raise _corrupt(ck, f"n_rows {ck['n_rows']} != the page "
+                                   f"group's {n_rows}")
+            _extra_of(ck)
+            if ck["col"] in wanted:
+                ck["data"] = memoryview(data[j].as_buffer())
+                ck["aux"] = (memoryview(aux[j].as_buffer())
+                             if aux[j].is_valid else None)
+                by_col[ck["col"]] = ck
         arrays = [build(f.name, f.dataType, n_rows) for f in schema.fields]
-        return pa.Table.from_arrays(arrays, schema=out_pa_schema)
+        yield pa.Table.from_arrays(arrays, schema=out_schema)
 
-    def decode_pages(table: pa.Table) -> pa.Table:
-        """Split the multi-page group back into its (chunk_id) pages,
-        decode each, and return one concatenated table. Payloads are
-        referenced as zero-copy memoryviews of the Arrow binary buffers —
-        never copied into per-row Python bytes."""
-        cid = table.column("chunk_id").to_numpy()
-        order = np.argsort(cid, kind="stable")
-        sorted_cid = cid[order]
-        page_starts = np.concatenate(
-            [[0], np.flatnonzero(np.diff(sorted_cid)) + 1, [cid.size]]
-        )
-        metas = {c: table.column(c).to_pylist() for c in meta_cols}
-        data_arr = table.column("data").combine_chunks()
-        aux_arr = table.column("aux").combine_chunks()
-        pieces: list[pa.Table] = []
-        for s, e in zip(page_starts[:-1], page_starts[1:]):
-            by_col: dict[str, dict] = {}
-            for j in order[s:e]:
-                j = int(j)
-                d = {c: metas[c][j] for c in meta_cols}
-                # data is null for schema-evolution anchor chunks (kept
-                # only to carry n_rows; never decoded)
-                d["data"] = (
-                    memoryview(data_arr[j].as_buffer())
-                    if data_arr[j].is_valid
-                    else None
-                )
-                d["aux"] = (
-                    memoryview(aux_arr[j].as_buffer())
-                    if aux_arr[j].is_valid
-                    else None
-                )
-                by_col[d["col"]] = d
-            n_rows = int(next(iter(by_col.values()))["n_rows"])
-            pieces.append(decode_one_group(by_col, n_rows))
-        return pieces[0] if len(pieces) == 1 else pa.concat_tables(pieces)
 
-    return decode_pages
+def _group_decoder(schema: StructType):
+    """The whole-table form of :func:`_walk_groups`: a callable taking a
+    pa.Table of CHUNK_SCHEMA rows (and optional pruning predicates) and
+    returning every surviving page group decoded as one pa.Table, empty
+    with the output schema when none survives."""
+
+    def decode(table: pa.Table, pushed: Iterable[_Pushed] = ()) -> pa.Table:
+        pieces = list(_walk_groups(schema, table, pushed))
+        return (pa.concat_tables(pieces) if pieces
+                else _arrow_schema(schema).empty_table())
+
+    return decode
 
 
 def arrow_safe_schema(
@@ -1424,6 +1457,11 @@ def decode_table(
     analogue of the reference's SetSelectedColumns + SkipChunk
     (schema/schema.go:212-232, layout/chunk.go:28-51).
 
+    The chunk rows shuffle once, grouped by (``part_id``, page group //
+    ``pages_per_group``), so every ``applyInArrow`` call holds whole page
+    groups and runs the same page-group walk as the file-local reader
+    (:func:`_walk_groups`).
+
     ``pages_per_group`` batches that many consecutive chunk groups (pages)
     of a partition into ONE ``applyInArrow`` call: page granularity keeps
     its encode-side selector benefits while the decode amortizes the
@@ -1442,29 +1480,34 @@ def decode_table(
     (:func:`pysparkenc.lineage.apply_deletes`). Costs nothing: the id is a
     grouping key the decode shuffle already carries.
     """
+    return _decode_chunks(chunks_df, schema, [], pages_per_group, part_col)
+
+
+def _decode_chunks(
+    chunks_df: DataFrame,
+    schema: StructType | None,
+    pushed: list[_Pushed],
+    pages_per_group: int = 64,
+    part_col: str | None = None,
+) -> DataFrame:
+    """:func:`decode_table`, dropping the page groups ``pushed`` proves
+    empty inside the walk (:func:`scan_table`)."""
     if schema is None:
         schema = output_schema_of_chunks(chunks_df)
     schema, iv_restore = arrow_safe_schema(schema)
-    allowed: set[str] = set()
-    for f in schema.fields:
-        allowed |= _subtree_chunk_names(f.name, f.dataType)
-    requested = F.col("col").isin(sorted(allowed))
+    requested = F.col("col").isin(_requested_chunks(schema))
     # schema-evolution anchor: a group written before EVERY requested
     # column existed (appended store, later batches added the column)
     # must still decode — as all-null rows — so it needs one chunk to
-    # carry its row count. col_idx 0 exists in every group; its payload
-    # is nulled out right here so the anchor costs metadata, not bytes,
-    # through the shuffle (and nothing at all when it is also requested).
+    # carry its row count. col_idx 0 exists in every group.
     chunks_df = chunks_df.where(requested | (F.col("col_idx") == 0))
+    # the walk never reads an anchor's payload: nulling it here only
+    # cuts the bytes the shuffle moves
     chunks_df = chunks_df.withColumn(
         "data", F.when(requested, F.col("data"))
     ).withColumn("aux", F.when(requested, F.col("aux")))
     decode_pages = _group_decoder(schema)
-
-    grouped = chunks_df.withColumn(
-        "__pg",
-        F.floor(F.col("chunk_id") / F.lit(pages_per_group)).cast("long"),
-    )
+    out_schema = schema
     if part_col is not None:
         if part_col in {f.name for f in schema.fields}:
             raise ValueError(f"part_col {part_col!r} collides with a column")
@@ -1472,20 +1515,19 @@ def decode_table(
             schema.fields + [StructField(part_col, LongType(), False)]
         )
 
-        def decode_with_part(t: pa.Table) -> pa.Table:
-            res = decode_pages(t)
-            pid = t.column("part_id")[0].as_py()
-            return res.append_column(
-                part_col, pa.array([pid] * res.num_rows, pa.int64())
-            )
+    def decode(t: pa.Table) -> pa.Table:
+        res = decode_pages(t, pushed)
+        if part_col is None:
+            return res
+        pid = t.column("part_id")[0].as_py()
+        return res.append_column(
+            part_col, pa.array([pid] * res.num_rows, pa.int64())
+        )
 
-        out = grouped.groupBy("part_id", "__pg").applyInArrow(
-            lambda t: decode_with_part(t), out_schema
-        )
-    else:
-        out = grouped.groupBy("part_id", "__pg").applyInArrow(
-            lambda t: decode_pages(t), schema
-        )
+    out = chunks_df.withColumn(
+        "__pg",
+        F.floor(F.col("chunk_id") / F.lit(pages_per_group)).cast("long"),
+    ).groupBy("part_id", "__pg").applyInArrow(decode, out_schema)
     return restore_intervals(out, iv_restore)
 
 
@@ -1796,7 +1838,7 @@ def _group_passes(meta: dict[str, dict], p: _Pushed) -> bool:
         # IS NULL can only match a group that recorded some nulls
         nc = d["null_count"]
         return nc is None or nc > 0
-    extra = json.loads(d["extra"] or "{}")
+    extra = _extra_of(d)
     if p.kind == "prefix":
         pref = str(p.values[0])
         smin, smax = extra.get("smin"), extra.get("smax")
@@ -1814,8 +1856,9 @@ def _group_passes(meta: dict[str, dict], p: _Pushed) -> bool:
     return _chunk_passes_range(d["num_min"], d["num_max"], extra, p.lo, p.hi)
 
 
-_META_COLS = ("col", "codec", "dtype", "logical", "n_rows", "null_count",
-              "n_unique", "num_min", "num_max", "extra", "aux", "bloom")
+_META_COLS = ("part_id", "chunk_id", "col", "codec", "dtype", "logical",
+              "n_rows", "null_count", "n_unique", "num_min", "num_max",
+              "extra", "aux", "bloom")
 
 
 def _page_groups(
@@ -1858,31 +1901,6 @@ def _page_groups(
         if all(_group_passes(group, p) for p in pushed):
             kept.append(span)
     return table, kept
-
-
-def _kept_groups(chunks_df: DataFrame, pushed: list[_Pushed]) -> DataFrame:
-    """(part_id, chunk_id) of the page groups that pass every predicate
-    in ``pushed``. One metadata-only pass over the predicate columns'
-    footer rows (the payload ``data`` is never read), grouped by part so
-    each Python call sees whole page groups, through the same
-    :func:`_page_groups` evaluator the file-local reader runs. A group
-    with no chunk for any predicate column never reaches the pass, which
-    is what the evaluator decides for it under every ``where`` op."""
-    cols = sorted(set().union(*(p.cols() for p in pushed)))
-    bloom = (F.col("bloom") if "bloom" in chunks_df.columns
-             else F.lit(None).cast("binary"))  # pre-bloom chunk stores
-    meta = chunks_df.where(F.col("col").isin(cols)).select(
-        "part_id", "chunk_id", *_META_COLS[:-1], bloom.alias("bloom")
-    )
-
-    def keep(t: pa.Table) -> pa.Table:
-        t, spans = _page_groups(t, pushed)
-        starts = pa.array([s for s, _ in spans], pa.int64())
-        return t.select(["part_id", "chunk_id"]).take(starts)
-
-    return meta.groupBy("part_id").applyInArrow(
-        keep, "part_id long, chunk_id long"
-    )
 
 
 def count_rows(chunks_df: DataFrame) -> int:
@@ -2219,12 +2237,11 @@ def scan_table(
     file-reader.go:54,110-112, with the pruning the reference's stats
     can't do).
 
-    ``where`` is an AND of predicates. Before any payload decode, one
-    metadata pass over the predicate columns' footer rows drops the
-    page groups no row can match (:func:`_group_passes`, the same
-    evaluator :func:`pysparkenc.lineage.read_store` and the
-    ``pysparkenc`` data source run), each predicate through its
-    strongest test:
+    ``where`` is an AND of predicates. The decode's page-group walk
+    (:func:`_walk_groups`, which :func:`pysparkenc.lineage.read_store`
+    and the ``pysparkenc`` data source run too) drops every page group
+    no row can match before decoding it (:func:`_group_passes`), each
+    predicate through its strongest test:
 
     - ``(col, "==", v)``     -> dict-page probe + bloom + stats
     - ``(col, "in", [v..])`` -> dict-page probe + bloom + stats
@@ -2252,6 +2269,12 @@ def scan_table(
     (pruning is an optimization, never a correctness dependency), and
     predicate-only columns are dropped from the result.
 
+    Pruning runs after the decode shuffle, inside each grouped-map call,
+    so over an in-memory chunk DataFrame the payloads of pruned groups
+    still cross the shuffle. :func:`pysparkenc.lineage.read_store`
+    prunes a persisted store's page groups in the file-local reader,
+    with no shuffle at all.
+
     ``part_col``: forwarded to :func:`decode_table` — keep each row's
     chunk-group partition id as an extra LongType column (survives the
     ``columns`` projection).
@@ -2260,14 +2283,8 @@ def scan_table(
         schema = output_schema_of_chunks(chunks_df)
     where, sub = plan_scan(schema, columns, where)
 
-    pushed = where_pushed(where)
-    if pushed:
-        # one metadata pass decides every entry; one semi-join applies it
-        chunks_df = chunks_df.join(
-            F.broadcast(_kept_groups(chunks_df, pushed)),
-            ["part_id", "chunk_id"], "left_semi",
-        )
-    out = decode_table(chunks_df, sub, part_col=part_col)
+    out = _decode_chunks(chunks_df, sub, where_pushed(where),
+                         part_col=part_col)
     for c in row_filters(sub, where):
         out = out.where(c)
     if columns is not None:

@@ -38,3 +38,12 @@ def filter_pushdown(spark):
     else:
         spark.conf.set(key, old)
     register(spark)
+
+
+def kept_groups(chunks, pushed) -> int:
+    """Page groups of the chunk DataFrame ``chunks`` that survive the
+    pruning predicates ``pushed``, counted by the evaluator every read
+    path's page-group walk runs (``engine._page_groups``)."""
+    from pysparkenc.engine import _page_groups
+
+    return len(_page_groups(chunks.toArrow(), pushed)[1])

@@ -14,8 +14,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from conftest import kept_groups
 from pysparkenc.engine import (
-    _kept_groups,
     encode_table,
     scan_table,
     where_pushed,
@@ -131,11 +131,11 @@ def test_bloom_prunes_midrange_absent_string(spark, keyed):
     # so stats keep everything — only the bloom can prune
     absent = "user_aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa"
     probe = where_pushed([("uid", "in", [absent])])
-    kept = _kept_groups(enc, probe).count()
+    kept = kept_groups(enc, probe)
     assert kept <= max(1, total // 4)  # FPP leaves at most a stray chunk
     # no-bloom chunks keep everything for the same probe
     enc2 = encode_table(df, rows_per_chunk=512, partition_by=None)
-    assert _kept_groups(enc2, probe).count() == total
+    assert kept_groups(enc2, probe) == total
 
 
 def test_bloom_exact_decode_present_probe(spark, keyed):
@@ -149,7 +149,7 @@ def test_bloom_exact_decode_present_probe(spark, keyed):
 def test_bloom_int_probe_prunes_and_decodes(spark, keyed):
     df, enc = keyed
     total = enc.where(F.col("col") == "v").count()
-    kept = _kept_groups(enc, where_pushed([("v", "in", [123])])).count()
+    kept = kept_groups(enc, where_pushed([("v", "in", [123])]))
     assert 1 <= kept <= max(1, total // 4)
     out = scan_table(enc, df.schema, where=[("v", "in", [123, 456])])
     assert sorted(r.v for r in out.collect()) == [123, 456]
@@ -160,7 +160,7 @@ def test_cross_typed_probe_ignores_bloom(spark, keyed):
     # a string probe against the int column must not consult the int
     # bloom (wrong domain) — and must not lose rows via a false prune
     total = enc.where(F.col("col") == "v").count()
-    kept = _kept_groups(enc, where_pushed([("v", "in", ["123"])])).count()
+    kept = kept_groups(enc, where_pushed([("v", "in", ["123"])]))
     assert kept == total
     # a float-typed probe against the int column: stats may prune, the
     # bloom must not make 123.0 vanish

@@ -13,6 +13,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from conftest import kept_groups
 from pysparkenc.chunk import (
     decode_bytes,
     decode_numeric,
@@ -126,7 +127,6 @@ def test_dict_probe_pruning_survives_sorted_dicts(spark):
     from pyspark.sql import functions as F
 
     from pysparkenc.engine import (
-        _kept_groups,
         encode_table,
         scan_table,
         where_pushed,
@@ -138,7 +138,7 @@ def test_dict_probe_pruning_survives_sorted_dicts(spark):
     )
     chunks = encode_table(df, num_partitions=4)
     absent = where_pushed([("k", "==", 123456)])
-    assert _kept_groups(chunks, absent).count() == 0
-    assert _kept_groups(chunks, where_pushed([("k", "==", 1007)])).count()
+    assert kept_groups(chunks, absent) == 0
+    assert kept_groups(chunks, where_pushed([("k", "==", 1007)]))
     out = scan_table(chunks, where=[("k", "==", 1007)])
     assert out.where(F.col("k") == 1007).count() == out.count() == 400

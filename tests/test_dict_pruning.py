@@ -9,8 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import kept_groups
 from pysparkenc.engine import (
-    _kept_groups,
     encode_table,
     scan_table,
     where_pushed,
@@ -18,7 +18,7 @@ from pysparkenc.engine import (
 
 
 def _kept(chunks, where) -> int:
-    return _kept_groups(chunks, where_pushed(where)).count()
+    return kept_groups(chunks, where_pushed(where))
 
 
 def _groups(chunks) -> int:

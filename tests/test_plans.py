@@ -340,27 +340,56 @@ def test_read_store_with_deletes_plans_no_exchange(spark, tmp_path):
     assert "CartesianProduct" not in plan
 
 
-def test_scan_table_prunes_with_one_semi_join(spark):
-    """scan_table decides every prunable ``where`` entry, ORs included,
-    in one metadata pass over the predicate columns' footer rows, and
-    applies the surviving groups with ONE broadcast left-semi join —
-    not one join per entry."""
-    from pysparkenc.engine import encode_table, scan_table
+def test_scan_table_prunes_before_decode(spark, tmp_path, filter_pushdown):
+    """Every read path drops the page groups ``where`` proves empty
+    before decoding them: with one such group's payload corrupted, the
+    filtered reads return the right rows, while a plain decode of the
+    same chunks fails its CRC check. ``scan_table`` prunes inside its
+    one Python decode stage, with no join."""
+    import glob
+    import os
 
-    df = spark.range(2000).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 7).alias("v"),
-        F.concat(F.lit("s"), (F.col("id") % 5).cast("string")).alias("s"),
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pysparkenc.engine import decode_table, scan_table
+    from pysparkenc.lineage import (
+        encode_with_lineage,
+        read_committed_chunks,
+        read_store,
     )
-    chunks = encode_table(df, num_partitions=2, rows_per_chunk=256)
-    where = [("k", ">=", 100), ("v", "in", [1, 2]),
-             ("or", [("s", "==", "s1"), ("k", "<", 1500)])]
-    out = scan_table(chunks, df.schema, where=where)
-    assert plan_of(out, "simple").count("LeftSemi") == 1
-    want = df.where((F.col("k") >= 100) & F.col("v").isin(1, 2)
-                    & ((F.col("s") == "s1") | (F.col("k") < 1500)))
-    assert sorted(map(tuple, out.collect())) == sorted(
-        map(tuple, want.collect()))
+
+    path = str(tmp_path / "store")
+    df = spark.range(2000).select(F.col("id").alias("k"),
+                                  (F.col("id") % 7).alias("v"))
+    encode_with_lineage(df, path, num_partitions=1, rows_per_chunk=250,
+                        sort_by=("k",))
+    # flip a payload byte of the k chunk of the page group holding the
+    # smallest keys; its stats prove no k >= 1000 lives there
+    (f,) = glob.glob(f"{path}/chunks/run_id=*/*.parquet")
+    t = pq.read_table(f)
+    rows = t.to_pylist()
+    low = min((r for r in rows if r["col"] == "k"),
+              key=lambda r: r["num_max"])
+    assert low["num_max"] < 1000
+    low["data"] = bytes([low["data"][0] ^ 0xFF]) + low["data"][1:]
+    pq.write_table(pa.Table.from_pylist(rows, schema=t.schema), f)
+    # Hadoop's checksum sidecar would reject the rewritten file
+    os.remove(os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc"))
+
+    where = [("k", ">=", 1000)]
+    want = sorted(map(tuple, df.where(F.col("k") >= 1000).collect()))
+    scanned = scan_table(read_committed_chunks(spark, path), where=where)
+    plan = plan_of(scanned, "simple")
+    assert "Join" not in plan
+    assert plan.count("FlatMapGroupsInArrow") == 1
+    assert sorted(map(tuple, scanned.collect())) == want
+    stored = read_store(spark, path, where=where)
+    assert sorted(map(tuple, stored.collect())) == want
+    loaded = spark.read.format("pysparkenc").load(path).where("k >= 1000")
+    assert sorted(map(tuple, loaded.collect())) == want
+    with pytest.raises(Exception, match="crc32 mismatch"):
+        decode_table(read_committed_chunks(spark, path)).collect()
 
 
 def _jobs_in(spark, group: str, action) -> int:

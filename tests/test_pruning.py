@@ -6,8 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from conftest import kept_groups
 from pysparkenc.engine import (
-    _kept_groups,
     decode_table,
     encode_table,
     scan_table,
@@ -27,8 +27,7 @@ def test_pruning_drops_groups_and_matches_exact(spark):
 
     total_groups = chunks.select("part_id", "chunk_id").distinct().count()
     where = [("n_tok", "between", (0, 40))]
-    kept_groups = _kept_groups(chunks, where_pushed(where)).count()
-    assert kept_groups <= total_groups
+    assert kept_groups(chunks, where_pushed(where)) <= total_groups
 
     got = scan_table(chunks, df.schema, where=where)
     want = decode_table(chunks, df.schema).where(F.col("n_tok") <= 40)
@@ -64,15 +63,15 @@ def test_pruning_keeps_chunks_with_nan_values(spark):
     assert got_lo == {2, 4, 5}
     # the NaN max bounds nothing above: a lo bound past every real
     # value still keeps the group
-    assert _kept_groups(chunks, where_pushed([("x", ">=", 1e9)])).count() == 1
+    assert kept_groups(chunks, where_pushed([("x", ">=", 1e9)])) == 1
 
     # all-NaN chunk: prunable on any hi bound, kept on lo-only
     df2 = spark.createDataFrame([(1, float("nan")), (2, float("nan"))],
                                 "id long, x double")
     ck2 = encode_table(df2, num_partitions=1)
     ck2.cache().count()
-    assert _kept_groups(
-        ck2, where_pushed([("x", "between", (0, 10))])).count() == 0
+    assert kept_groups(
+        ck2, where_pushed([("x", "between", (0, 10))])) == 0
     assert scan_table(
         ck2, df2.schema, where=[("x", "between", (0, 10))]).count() == 0
     lo_only = scan_table(ck2, df2.schema, where=[("x", ">=", 0)]).collect()
@@ -96,7 +95,7 @@ def test_string_pruning_drops_groups_and_matches_exact(spark):
 
     total = chunks.select("part_id", "chunk_id").distinct().count()
     where = [("k", "between", ("c", "f"))]
-    kept = _kept_groups(chunks, where_pushed(where)).count()
+    kept = kept_groups(chunks, where_pushed(where))
     assert 0 < kept < total  # pruning actually dropped groups
 
     got = scan_table(chunks, df.schema, where=where)
@@ -117,7 +116,7 @@ def test_string_pruning_long_values_never_dropped(spark):
     # lo bound beyond the truncated 64-char prefix of value 1: the chunk
     # must survive because its max is unbounded in the stats
     where = [("k", ">=", "a" + "z" * 70)]
-    assert _kept_groups(chunks, where_pushed(where)).count() == 1
+    assert kept_groups(chunks, where_pushed(where)) == 1
     got = scan_table(chunks, df.schema, where=where)
     assert {r["id"] for r in got.collect()} == {1}
     chunks.unpersist()
@@ -130,7 +129,7 @@ def test_pruning_empty_range_decodes_nothing(spark):
     chunks.cache().count()
     # n_tok is clipped to [8, 4096]; a disjoint range prunes EVERY group
     where = [("n_tok", "between", (10_000, 20_000))]
-    assert _kept_groups(chunks, where_pushed(where)).count() == 0
+    assert kept_groups(chunks, where_pushed(where)) == 0
     assert scan_table(chunks, df.schema, where=where).count() == 0
     chunks.unpersist()
 
@@ -150,8 +149,8 @@ def test_sort_by_makes_pruning_decisive(spark):
 
     lo, hi = 30, 35
     pushed = where_pushed([("n_tok", "between", (lo, hi))])
-    kept_plain = _kept_groups(plain, pushed).count()
-    kept_sorted = _kept_groups(clustered, pushed).count()
+    kept_plain = kept_groups(plain, pushed)
+    kept_sorted = kept_groups(clustered, pushed)
     assert kept_sorted < kept_plain
 
     got = scan_table(clustered, df.schema,

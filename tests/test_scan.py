@@ -5,8 +5,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import kept_groups
 from pysparkenc.engine import (
-    _kept_groups,
     encode_table,
     scan_table,
     where_pushed,
@@ -266,9 +266,9 @@ def test_scan_or_prunes_with_union_of_survivors(spark):
                           sort_by=("k",), rows_per_chunk=2048)
     chunks.cache().count()
     total = _groups(chunks)
-    lo_keep = _kept_groups(chunks, where_pushed([("k", "<=", 1000)])).count()
-    hi_keep = _kept_groups(chunks,
-                           where_pushed([("k", ">=", 39_000)])).count()
+    lo_keep = kept_groups(chunks, where_pushed([("k", "<=", 1000)]))
+    hi_keep = kept_groups(chunks,
+                           where_pushed([("k", ">=", 39_000)]))
     where = [("or", [("k", "<=", 1000), ("k", ">=", 39_000)])]
     got = scan_table(chunks, df.schema, where=where)
     want = df.where((F.col("k") <= 1000) | (F.col("k") >= 39_000))
@@ -276,7 +276,7 @@ def test_scan_or_prunes_with_union_of_survivors(spark):
         map(tuple, want.collect()))
     assert lo_keep + hi_keep < total  # the gate is non-vacuous
     # the OR-pruned scan decodes at most the union of branch survivors
-    keep = _kept_groups(chunks, where_pushed(where)).count()
+    keep = kept_groups(chunks, where_pushed(where))
     assert 0 < keep <= lo_keep + hi_keep < total
     chunks.unpersist()
 
