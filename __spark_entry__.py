@@ -1167,9 +1167,10 @@ def _fast_tmp() -> str | None:
 
 
 def q_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ``pysparkenc`` Spark data source end-to-end, BOTH store
-    layouts: (plain) write documents via ``df.write.format
-    ("pysparkenc")``, read back through ``spark.read.format
+    """The ``pysparkenc`` Spark data source end-to-end on two lineage
+    stores: (plain) write documents via ``df.write.format
+    ("pysparkenc")`` with ``mode("overwrite")``, which commits one run
+    to the fresh path, read back through ``spark.read.format
     ("pysparkenc")`` and filter (the filters reach the reader and prune
     page groups only on a session that enabled
     ``spark.sql.python.filterPushdown.enabled`` before ``register``;

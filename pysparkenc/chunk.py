@@ -94,7 +94,11 @@ def _open_payload(chunk: dict) -> tuple[bytes, bytes, dict]:
     data = chunk["data"]
     aux = chunk.get("aux") or b""
     if chunk.get("crc32") is not None and _chunk_crc(data, aux) != chunk["crc32"]:
-        raise ValueError(f"chunk {chunk.get('col')}: crc32 mismatch")
+        # named like engine._corrupt when the row locates the chunk
+        where = (f" (part_id {chunk['part_id']}, chunk_id {chunk['chunk_id']})"
+                 if "part_id" in chunk and "chunk_id" in chunk else "")
+        raise ValueError(
+            f"corrupt chunk {chunk.get('col')!r}{where}: crc32 mismatch")
     extra = json.loads(chunk["extra"]) if chunk.get("extra") else {}
     comp = extra.get("comp")
     if comp:

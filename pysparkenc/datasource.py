@@ -5,28 +5,38 @@ API, Spark 4):
     df.write.format("pysparkenc").mode("overwrite").save(path)
     spark.read.format("pysparkenc").load(path).where("id > 100")
 
-On a lineage-managed store (one written by
-:func:`pysparkenc.lineage.encode_with_lineage`), BOTH directions speak
-the commit protocol: reads plan from committed runs and apply delete
-sets (never orphan chunks, never a double-read of a compacted store),
-and ``mode("append")`` writes commit a real lineage run — fresh run id,
-chunks under ``run_id=<r>/``, then the driver-side commit
-(:func:`_commit_lineage_rows`) every lineage write goes through.
-``mode("overwrite")`` and stream writes refuse with a typed error
-naming the supported path.
+Every store is a lineage store, the layout
+:func:`pysparkenc.lineage.encode_with_lineage` writes, and every
+direction speaks its commit protocol:
+
+- reads plan from committed runs and apply delete sets
+  (:func:`_lineage_plan`); the ``as_of_run`` option time travels;
+- ``mode("append")`` commits one fresh run: chunks under
+  ``chunks/run_id=<r>/``, then the driver-side commit
+  (:func:`_commit_lineage_rows`) every lineage write goes through;
+- ``mode("overwrite")`` commits the new run together with supersede
+  markers for every live part and delete run, the full-compaction
+  commit shape: a snapshot, so time travel still reads the old table;
+- ``writeStream`` commits one run per micro-batch, tagged with its
+  ``batchId``; a replayed batch commits nothing;
+- ``readStream`` tails committed runs (:class:`ChunkStoreStreamReader`).
 
 Store layout (plain files, any fs path the driver and executors share)::
 
-    <path>/_pysparkenc_schema.json   logical Spark schema + format version
-    <path>/chunks/part-*.parquet     chunk rows (engine.CHUNK_SCHEMA)
+    <path>/chunks/run_id=<r>/*.parquet    chunk rows (engine.CHUNK_SCHEMA)
+    <path>/deletes/run_id=<r>/*.parquet   equality-delete key tuples
+    <path>/lineage/*.parquet              commit records
+    <path>/schemas/run-<r>.json           each run's logical schema
+
+A directory in the retired flat layout is refused (:func:`_refuse_flat`).
 
 Scale design:
 
-- One input partition per chunk parquet file — the driver holds O(files)
-  metadata, never chunk rows; each task streams its own file. Writes are
-  one file per task with unique names, so concurrent tasks never collide
-  and a failed job never corrupts the previous store (old files are
-  removed only in ``commit`` for overwrite mode).
+- Read tasks bin-pack committed ``(run, file)`` pairs by bytes: the
+  driver holds O(files) metadata, never chunk rows, and each task
+  streams its own files. Write tasks stage one uniquely named file each
+  under ``_staging/``; only the driver's commit renames them into the
+  run dir, so a failed job never touches the committed store.
 - **Catalyst filter pushdown** (``pushFilters``), an explicit opt-in:
   with ``spark.sql.python.filterPushdown.enabled`` set to ``true`` before
   :func:`register` (it is off by default, and ``register`` never sets
@@ -62,7 +72,6 @@ from __future__ import annotations
 
 import datetime
 import decimal
-import json
 import os
 import re
 import time
@@ -99,50 +108,31 @@ from pyspark.sql.types import StructType
 
 from . import engine
 
-FORMAT_VERSION = 1
-_SCHEMA_FILE = "_pysparkenc_schema.json"
 _CHUNK_DIR = "chunks"
 _LINEAGE_DIR = "lineage"
 _DELETES_DIR = "deletes"
-
-
-def _schema_path(path: str) -> str:
-    return os.path.join(path, _SCHEMA_FILE)
+_STAGING_DIR = "_staging"
 
 
 def _chunk_dir(path: str) -> str:
     return os.path.join(path, _CHUNK_DIR)
 
 
-def _list_chunk_files(path: str) -> list[str]:
-    d = _chunk_dir(path)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-    )
-
-
-def read_store_schema(path: str) -> StructType:
-    with open(_schema_path(path)) as fh:
-        meta = json.load(fh)
-    return StructType.fromJson(meta["schema"])
-
-
-# ---------------------------------------------------------------------------
-# lineage-managed stores (written by pysparkenc.lineage): commit-aware plan
-# ---------------------------------------------------------------------------
-
 def _lineage_dir(path: str) -> str:
     return os.path.join(path, _LINEAGE_DIR)
 
 
-def is_lineage_store(path: str) -> bool:
-    """True when ``path`` is a lineage-managed store (written by
-    :func:`pysparkenc.lineage.encode_with_lineage`): chunk files live
-    under ``chunks/run_id=<r>/`` and visibility is governed by the
-    lineage commit records, not by file listing."""
-    return os.path.isdir(_lineage_dir(path))
+def _refuse_flat(path: str) -> None:
+    """Raise on a directory in the retired flat layout (a schema sidecar
+    and no lineage records): its file listing is not a commit history,
+    so no lineage reader or writer may touch it."""
+    if (os.path.exists(os.path.join(path, "_pysparkenc_schema.json"))
+            and not os.path.isdir(_lineage_dir(path))):
+        raise ValueError(
+            f"{path} is a flat-layout pysparkenc store "
+            "(_pysparkenc_schema.json, no lineage/): the flat layout is no "
+            "longer supported; re-encode its data into a new store"
+        )
 
 
 def _list_parquet(d: str) -> list[str]:
@@ -275,6 +265,90 @@ def _lineage_plan(
     del_runs = sorted({int(r) for r in run[dels].tolist()} - sup_del_runs)
     deletes = [(r, _run_dir(path, _DELETES_DIR, r)) for r in del_runs]
     return {r: tuple(sorted(ps)) for r, ps in live.items()}, deletes
+
+
+def _done_rows(path: str, cols: Sequence[str] = ()) -> pa.Table:
+    """The ``done`` lineage rows of ``path`` (``run_id``, ``batch_id``
+    and ``cols``), minus those of runs the concurrent-commit detector
+    quarantined (self-superseded, ``batch_id == run_id``): a quarantined
+    run committed nothing readers see, so its rows neither replay a
+    batch nor resume a part. Parts a compaction superseded stay done."""
+    lin = _lineage_table(path, ("run_id", "batch_id", "status", *cols))
+    status = lin.column("status")
+    sup = lin.filter(pc.equal(status, "superseded"))
+    quarantined = sup.filter(pc.equal(
+        sup.column("batch_id"), sup.column("run_id"))).column("run_id")
+    return lin.filter(pc.and_(
+        pc.equal(status, "done"),
+        pc.invert(pc.is_in(lin.column("run_id"),
+                           quarantined.combine_chunks()))))
+
+
+def _batch_committed(done: pa.Table, batch_id: int) -> int:
+    """How many of the :func:`_done_rows` ``done`` carry ``batch_id``.
+    Non-zero means that micro-batch committed, and its replay must
+    commit nothing: the replay rule of both
+    ``encode_with_lineage(batch_id=)`` and the stream sink. Sound because
+    a commit record is one atomic file — any visible done row of a batch
+    implies all of them are."""
+    n = pc.sum(pc.equal(done.column("batch_id"), int(batch_id)))
+    return int(n.as_py() or 0)
+
+
+def _run_operations(lin: pa.Table, aggs: Sequence[tuple] = ()) -> pa.Table:
+    """One row per run with ``done`` rows in the lineage table ``lin``
+    (at least ``run_id``, ``batch_id``, ``part_id`` and ``status``):
+    ``run_id``, ``batch_id``, ``part_id_count``, the ``aggs``
+    aggregations (pyarrow ``group_by`` specs) and its ``operation``:
+
+    - ``quarantined``: self-superseded by the concurrent-commit detector
+      (its markers carry ``batch_id == run_id``);
+    - ``compact``: its id is the ``batch_id`` of OTHER runs' supersede
+      markers — a compaction, or an overwrite write, which commits the
+      same shape;
+    - ``stream-append``: a micro-batch, with a ``batch_id``;
+    - ``append``: any other batch write.
+
+    The one classification ``snapshots`` and the stream source share."""
+    status = lin.column("status")
+    sup = lin.filter(pc.equal(status, "superseded"))
+    # without the split a quarantined append would masquerade as a
+    # successful compaction
+    self_sup = pc.equal(sup.column("batch_id"), sup.column("run_id"))
+    quarantined = sup.filter(self_sup).column("run_id").combine_chunks()
+    compacting = sup.filter(pc.invert(self_sup)).column(
+        "batch_id").combine_chunks()
+    done = lin.filter(pc.equal(status, "done")).group_by(
+        ["run_id", "batch_id"]).aggregate(
+        [("part_id", "count", pc.CountOptions(mode="all")), *aggs])
+    run = done.column("run_id")
+    return done.append_column("operation", pc.if_else(
+        pc.is_in(run, quarantined), "quarantined", pc.if_else(
+            pc.is_in(run, compacting), "compact", pc.if_else(
+                pc.greater_equal(done.column("batch_id"), 0),
+                "stream-append", "append"))))
+
+
+def _supersede_markers(
+    run_id: int, parts: dict[int, tuple[int, ...]], del_runs: Sequence[int],
+    wall_sec: float,
+) -> list[tuple]:
+    """The supersede markers run ``run_id`` commits with its done rows:
+    one per ``(run, part)`` of ``parts`` and one whole-run marker
+    (``part_id`` -1) per delete run of ``del_runs``. Each carries
+    ``run_id`` in ``batch_id``, which scopes it for time travel
+    (:func:`_lineage_plan`): ``as_of_run`` before the commit still reads
+    what it superseded. ``compact_store`` and an overwrite write commit
+    this shape; the concurrent-commit quarantine in
+    :func:`_commit_lineage_rows` is the same markers for the run's own
+    parts."""
+    return [
+        (r, run_id, p, 0, 0, 0, 0, 0, float(wall_sec), "superseded")
+        for r in sorted(parts) for p in parts[r]
+    ] + [
+        (d, run_id, -1, 0, 0, 0, 0, 0, float(wall_sec), "superseded")
+        for d in del_runs
+    ]
 
 
 def _delete_sets(
@@ -548,24 +622,27 @@ def _to_pushed(
     return out
 
 
-def _bin_pack(files: list[str], target: int = 32 << 20) -> list[tuple[str, ...]]:
-    """Bin-pack small files into byte-targeted read partitions: each
-    partition costs a Python worker round-trip, so a store left by many
-    streaming micro-batches (hundreds of tiny chunk files) must not pay
-    it per FILE. Compacted stores with ~target-sized files get one file
-    per partition — full parallelism either way."""
-    groups: list[tuple[str, ...]] = []
-    cur: list[str] = []
+def _bin_pack(
+    files: list[tuple[int, str]], target: int = 32 << 20
+) -> list[tuple[tuple[int, str], ...]]:
+    """Bin-pack ``(run, file)`` pairs into byte-targeted read partitions:
+    each partition costs a Python worker round-trip, so a store left by
+    many small appends or streaming micro-batches (hundreds of tiny
+    chunk files, one run each) must not pay it per FILE. Compacted
+    stores with ~target-sized files get one file per partition — full
+    parallelism either way."""
+    groups: list[tuple[tuple[int, str], ...]] = []
+    cur: list[tuple[int, str]] = []
     acc = 0
-    for f in files:
+    for run_file in files:
         try:
-            sz = os.path.getsize(f)
+            sz = os.path.getsize(run_file[1])
         except OSError:
             sz = target
         if cur and acc + sz > target:
             groups.append(tuple(cur))
             cur, acc = [], 0
-        cur.append(f)
+        cur.append(run_file)
         acc += sz
     if cur:
         groups.append(tuple(cur))
@@ -583,37 +660,22 @@ class ChunkStoreReader(DataSourceReader):
         options = options or {}
         aor = options.get("as_of_run")
         self.as_of_run = int(aor) if aor is not None else None
-        # Lineage-managed stores (written by pysparkenc.lineage): the
-        # file listing is NOT the table — visibility is governed by the
-        # commit records. Plan from committed runs, skip superseded
+        # the file listing is NOT the table — visibility is governed by
+        # the commit records. Plan from committed runs, skip superseded
         # layouts (a compacted-but-unexpired store is read exactly once)
         # and apply equality-delete sets. lineage.read_store runs this
         # same reader under mapInArrow.
-        self.lineage = is_lineage_store(path)
-        self.live: dict[int, tuple[int, ...]] = {}
-        self.deletes: list[tuple[int, str, tuple[str, ...]]] = []
+        self.live, dels = _lineage_plan(path, self.as_of_run)
+        self.deletes = _delete_sets(path, dels)
         self._key_tabs: dict[int, pa.Table] = {}  # executor-side cache
-        self._widened: tuple[StructType, list[str]] | None = None
-        if self.lineage:
-            self.live, dels = _lineage_plan(path, self.as_of_run)
-            self.deletes = _delete_sets(path, dels)
-            # widen ONCE, driver-side: when a delete key column falls
-            # outside the read schema this consults every committed
-            # file's metadata (_recover_store_schema) — doing it per
-            # chunk file turned a pruned scan into O(files^2) I/O.
-            # Only when live data runs exist: a store holding deletes
-            # but no data has no schema to recover AND nothing to read
-            # (partitions() yields one empty partition), so the read
-            # must stay an empty DataFrame, not a load-time error.
-            if self.live:
-                self._widened = self._widened_schema()
-        elif self.as_of_run is not None:
-            raise ValueError(
-                "as_of_run is only meaningful on a lineage-managed store "
-                f"(no lineage/ dir under {path})"
-            )
-        else:
-            self._widened = self._widened_schema()  # no deletes: as is
+        # widen ONCE, driver-side: when a delete key column falls
+        # outside the read schema this consults every committed file's
+        # metadata (_recover_store_schema) — doing it per chunk file
+        # turned a pruned scan into O(files^2) I/O. Only when live data
+        # runs exist: a store holding deletes but no data has no schema
+        # to recover AND nothing to read (partitions() yields one empty
+        # partition), so the read stays an empty DataFrame.
+        self._widened = self._widened_schema() if self.live else None
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         self.pushed = _to_pushed(filters, self.user_schema)
@@ -622,27 +684,17 @@ class ChunkStoreReader(DataSourceReader):
         return iter(filters)
 
     def partitions(self) -> list[InputPartition]:
-        """(run id, files) per read task; the run id is None on a flat
-        store. Zero files: one empty partition so the scan yields an
-        empty DataFrame instead of failing."""
-        if not self.lineage:
-            groups = _bin_pack(_list_chunk_files(self.path))
-            return ([InputPartition((None, g)) for g in groups]
-                    or [InputPartition(None)])
-        parts: list[InputPartition] = []
-        for r in sorted(self.live):
-            # bin-pack within a run only: delete sequencing is per-run
-            # (a file's writing run comes from its dir)
-            run_dir = _run_dir(self.path, _CHUNK_DIR, r)
-            for g in _bin_pack(_list_parquet(run_dir)):
-                parts.append(InputPartition((r, g)))
-        return parts or [InputPartition(None)]
+        """The live runs' ``(run id, file)`` pairs, bin-packed across
+        runs into read tasks; each file keeps its run id for delete
+        sequencing. No live file: one empty partition, so the scan
+        yields an empty DataFrame instead of failing."""
+        pairs = [(r, f) for r in sorted(self.live)
+                 for f in _list_parquet(_run_dir(self.path, _CHUNK_DIR, r))]
+        return ([InputPartition(g) for g in _bin_pack(pairs)]
+                or [InputPartition(None)])
 
     def read(self, partition: InputPartition):
-        if partition.value is None:
-            return
-        run_id, files = partition.value
-        for f in files:
+        for run_id, f in partition.value or ():
             yield from self._read_file(f, run_id)
 
     # -- file decode: delete sets and page-group pruning ----------------
@@ -689,11 +741,10 @@ class ChunkStoreReader(DataSourceReader):
             out.append((del_run, t))
         return out
 
-    def _read_file(self, path: str, run_id: int | None):
-        """Decode the page groups of one chunk file that pass
-        ``self.pushed`` (:func:`engine._walk_groups`), minus the rows
-        deleted by runs sequenced after ``run_id``. A flat store's file
-        (``run_id`` None) has every part id live and no delete sets."""
+    def _read_file(self, path: str, run_id: int):
+        """Decode the page groups of one chunk file of run ``run_id``
+        that pass ``self.pushed`` (:func:`engine._walk_groups`), minus
+        the rows deleted by runs sequenced after ``run_id``."""
         # set in __init__ for every store with live runs — the only
         # callers are partitions planned FROM self.live; falling back
         # to a per-file recompute here would silently reintroduce the
@@ -702,25 +753,23 @@ class ChunkStoreReader(DataSourceReader):
         if self._widened is None:
             raise RuntimeError(
                 f"pysparkenc reader for {self.path}: widened schema unset "
-                "(a lineage file read was planned without live runs)"
+                "(a file read was planned without live runs)"
             )
         decode_schema, user_cols = self._widened
-        live = ([] if run_id is None
-                else [("part_id", "in", list(self.live.get(run_id, ())))])
+        live = [("part_id", "in", list(self.live.get(run_id, ())))]
         # DNF filters: (requested columns OR the col_idx-0 anchor chunk)
         # AND committed partitions only (orphan part ids from a crashed
         # encode never decode). The anchor carries the row count of a
         # group written before EVERY requested column existed, which
         # the walk decodes as all-null rows; col_idx 0 exists in every
-        # group. Flat appends require an identical schema, so there it
-        # only adds col 0.
+        # group.
         table = pq.read_table(
             path,
             filters=[[("col", "in", engine._requested_chunks(decode_schema)),
                       *live],
                      [("col_idx", "==", 0), *live]],
         )
-        dels = [] if run_id is None else self._keys_for(run_id)
+        dels = self._keys_for(run_id)
         for out in engine._walk_groups(decode_schema, table, self.pushed):
             for _, keys_tab in dels:
                 mask = _delete_drop_mask(out, keys_tab)
@@ -737,6 +786,13 @@ class ChunkStoreReader(DataSourceReader):
 @dataclass
 class _FileCommit(WriterCommitMessage):
     files: tuple = ()
+
+
+def _remove_staged(messages) -> None:
+    for m in messages:
+        for f in m.files if m else ():
+            if os.path.exists(f):
+                os.remove(f)
 
 
 def _lineage_max_run(path: str) -> int:
@@ -839,10 +895,7 @@ def _commit_lineage_rows(
     quarantined = ""
     if parts:
         _append_lineage_rows(
-            path,
-            [(run_id, run_id, p, 0, 0, 0, 0, 0, 0.0, "superseded")
-             for p in parts],
-        )
+            path, _supersede_markers(run_id, {run_id: parts}, (), 0.0))
         quarantined = (
             f"Run {run_id} has been quarantined (all its partitions "
             "superseded — readers no longer see it; expire_runs reclaims "
@@ -856,11 +909,16 @@ def _commit_lineage_rows(
 
 
 class ChunkStoreWriter(DataSourceArrowWriter):
+    """``df.write.format("pysparkenc")``: each task stages its encoded
+    chunk rows as one file under ``_staging/``, and the driver's
+    ``commit`` publishes them as ONE lineage run (:meth:`_commit_run`).
+    With ``overwrite`` that run also supersedes every live part and
+    delete run."""
+
     def __init__(self, path: str, schema: StructType, options: dict,
-                 overwrite: bool, lineage_run_id: int | None = None):
+                 overwrite: bool):
         self.path = path
-        self.fields = schema.fields
-        self.schema_json = schema.jsonValue()
+        self.schema = schema
         self.overwrite = overwrite
         codec = options.get("codec")
         self.codec_for: dict[str, str] = {}
@@ -876,17 +934,7 @@ class ChunkStoreWriter(DataSourceArrowWriter):
         self.bloom_for: dict[str, float] = {
             c.strip(): fpp for c in bloom_opt.split(",") if c.strip()
         }
-        # lineage mode (append to a lineage-managed store): the run id
-        # was allocated driver-side by ChunkStoreDataSource.writer(),
-        # which also claimed chunks/run_id=<r> on disk so a crashed job
-        # can never have its id reused (the never-reuse invariant
-        # _next_run_id enforces; vacuum_store reclaims the debris)
-        self.lineage_run_id = lineage_run_id
-        # captured at job start (driver): the files an overwrite replaces
-        self.previous_files = (
-            tuple(_list_chunk_files(path)) if lineage_run_id is None else ()
-        )
-        self.job_millis = int(time.time() * 1000)
+        self.t0 = time.time()
         for f in schema.fields:
             engine._logical_of(f)  # fail on unsupported types driver-side
 
@@ -913,7 +961,7 @@ class ChunkStoreWriter(DataSourceArrowWriter):
                 sub = batch.slice(start, step)
                 out.append(
                     engine._encode_arrow_batch(
-                        sub, self.fields, pid, seq, None,
+                        sub, self.schema.fields, pid, seq, None,
                         self.codec_for, self.default_codec, self.compression,
                         self.bloom_for, kcache,
                     )
@@ -929,206 +977,135 @@ class ChunkStoreWriter(DataSourceArrowWriter):
             return _FileCommit(())
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else 0
-        if self.lineage_run_id is not None:
-            # stage-then-publish: the task writes under _staging/ and
-            # only commit() renames into the run dir, so a task retried
-            # mid-write can never leave a half-written or duplicate file
-            # inside a run that then COMMITS (the flat layout tolerates
-            # list-time debris; a committed lineage run must not)
-            staging = os.path.join(self.path, "_staging")
-            os.makedirs(staging, exist_ok=True)
-            fname = os.path.join(
-                staging, f"stage-{pid:05d}-{uuid.uuid4().hex}.parquet"
-            )
-            pq.write_table(table, fname)
-            return _FileCommit((fname,))
-        os.makedirs(_chunk_dir(self.path), exist_ok=True)
-        # job-millis prefix keeps append file names monotone across jobs
-        # (same driver), so a streaming tail's name watermark never skips
-        # a later append; uuid suffix keeps concurrent tasks collision-free
+        # stage-then-publish: only the driver's commit renames into a
+        # run dir, so a task retried mid-write can never leave a
+        # half-written or duplicate file inside a run that then commits
+        staging = os.path.join(self.path, _STAGING_DIR)
+        os.makedirs(staging, exist_ok=True)
         fname = os.path.join(
-            _chunk_dir(self.path),
-            f"part-{self.job_millis:013d}-{pid:05d}-{uuid.uuid4().hex}.parquet",
+            staging, f"stage-{pid:05d}-{uuid.uuid4().hex}.parquet"
         )
         pq.write_table(table, fname)
         return _FileCommit((fname,))
 
-    def commit(self, messages):
-        if self.lineage_run_id is not None:
-            self._commit_lineage(messages)
-            return
-        if self.overwrite:
-            new = {f for m in messages if m for f in m.files}
-            for f in self.previous_files:
-                if f not in new and os.path.exists(f):
-                    os.remove(f)
-        os.makedirs(self.path, exist_ok=True)
-        with open(_schema_path(self.path), "w") as fh:
-            json.dump(
-                {"version": FORMAT_VERSION, "schema": self.schema_json}, fh
-            )
+    def commit(self, messages) -> None:
+        self._commit_run(messages, -1)
 
-    def _commit_lineage(self, messages) -> None:
-        """Publish staged files into ``chunks/run_id=<r>/``, then commit
-        the run's lineage rows through :func:`_commit_lineage_rows` —
-        the same chunks-first-then-lineage commit as
+    def _commit_run(self, messages, batch_id: int) -> None:
+        """Publish the staged files as ONE lineage run on the driver: a
+        fresh run id (past every id in the lineage or on disk), the
+        files renamed into ``chunks/run_id=<r>/``, then the run's done
+        rows — tagged with ``batch_id``, plus the overwrite's supersede
+        markers — through :func:`_commit_lineage_rows`. The same
+        chunks-first-then-lineage commit as
         :func:`pysparkenc.lineage.encode_with_lineage`: a crash before
-        the lineage rename leaves only invisible orphans."""
-        run_id = int(self.lineage_run_id)
-        run_dir = _run_dir(self.path, _CHUNK_DIR, run_id)
+        the lineage rename leaves only invisible orphans. A micro-batch
+        (``batch_id`` >= 0) that already committed commits nothing
+        (:func:`_batch_committed`). The run's schema is recorded even
+        when no row landed, so an empty write reads back empty under
+        its schema."""
+        from .lineage import _next_run_id, _record_run_schema
+
         staged = [f for m in messages if m for f in m.files]
-        if not staged:
-            # nothing landed: withdraw the claimed (empty) run dir
-            try:
-                os.rmdir(run_dir)
-            except OSError:
-                pass
+        if batch_id >= 0 and _batch_committed(_done_rows(self.path),
+                                              batch_id):
+            _remove_staged(messages)
             return
-        os.makedirs(run_dir, exist_ok=True)
+        run_id = _next_run_id(None, self.path)
+        run_dir = _run_dir(self.path, _CHUNK_DIR, run_id)
         for f in staged:
+            os.makedirs(run_dir, exist_ok=True)
             os.replace(f, os.path.join(run_dir, os.path.basename(f)
                                        .replace("stage-", "part-", 1)))
+        wall = time.time() - self.t0
+        markers = []
+        if self.overwrite:
+            live, dels = _lineage_plan(self.path)
+            markers = _supersede_markers(run_id, live, [r for r, _ in dels],
+                                         wall)
         _commit_lineage_rows(
             self.path, run_id,
-            _chunk_lineage_rows(self.path, run_id, -1,
-                                time.time() - self.job_millis / 1000),
+            _chunk_lineage_rows(self.path, run_id, batch_id, wall) + markers,
             "re-run the write, which will commit under a fresh run id.",
         )
-        from .lineage import _record_run_schema
+        _record_run_schema(self.path, run_id, self.schema)
 
-        _record_run_schema(
-            self.path, run_id, StructType(list(self.fields))
-        )
-
-    def abort(self, messages):
-        for m in messages:
-            if m is None:
-                continue
-            for f in m.files:
-                if os.path.exists(f):
-                    os.remove(f)
-        if self.lineage_run_id is not None:
-            # withdraw the claimed run dir if nothing was published to
-            # it (a later retry of the job allocates a fresh id anyway)
-            try:
-                os.rmdir(_run_dir(self.path, _CHUNK_DIR,
-                                  self.lineage_run_id))
-            except OSError:
-                pass
+    def abort(self, messages) -> None:
+        _remove_staged(messages)
 
 
 class ChunkStoreStreamReader(DataSourceStreamReader):
     """Structured-Streaming source: ``spark.readStream.format("pysparkenc")``.
 
-    Incremental tailing of a chunk store. File names are the offset
-    domain: both writers emit names that only ever *grow* the sorted
-    file list at the end for their own stream (``stream-b<batch>-…`` is
-    monotone in batch id), and chunk files are immutable once visible,
-    so an offset is simply the high-water file name. Each micro-batch
-    reads the files in ``(start, end]`` — one input partition per file,
-    decoded executor-side by the batch reader's file decoder.
-    Batch-written ``part-…`` files carry a job-millis prefix, so
-    successive appends from one driver also sort above the watermark.
-    Don't mix writer kinds on a tailed store: ``part-`` names always
-    sort below ``stream-`` names, so a batch append to a store already
-    fed by the streaming sink would land under the high-water mark and
-    be skipped.
+    Tails committed runs. The offset is the highest committed run id
+    (:func:`_lineage_max_run`). A micro-batch ``(lo, hi]`` emits the
+    ``append`` and ``stream-append`` runs in that range (classified by
+    :func:`_run_operations`, as ``snapshots`` lists them) exactly as
+    ``read_store(path, as_of_run=hi, runs=...)`` reads them: deletes
+    visible at ``hi`` apply, sequenced by run. Compaction, overwrite and
+    quarantined runs are never emitted. An append run that a compaction
+    or overwrite rewrote before the tail read it raises a ValueError
+    naming it: its rows now live in a run the tail does not emit, so
+    they could be neither emitted once nor skipped without loss.
     """
 
     def __init__(self, path: str, schema: StructType):
         self.path = path
-        self._files = ChunkStoreReader(path, schema)  # the file decoder
+        self.schema = schema
 
     def initialOffset(self) -> dict:  # noqa: N802 (Spark API name)
-        return {"hwm": ""}
+        return {"run": 0}
 
     def latestOffset(self) -> dict:  # noqa: N802
-        files = _list_chunk_files(self.path)
-        hwm = os.path.basename(files[-1]) if files else ""
-        return {"hwm": hwm}
+        return {"run": _lineage_max_run(self.path)}
 
-    def partitions(self, start: dict, end: dict):
-        lo, hi = start.get("hwm", ""), end.get("hwm", "")
-        files = [
-            f
-            for f in _list_chunk_files(self.path)
-            if lo < os.path.basename(f) <= hi
-        ]
-        return [InputPartition(f) for f in files] or [InputPartition(None)]
+    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        lo, hi = int(start["run"]), int(end["run"])
+        ops = _run_operations(
+            _lineage_table(self.path, ("run_id", "batch_id", "part_id",
+                                       "status")))
+        appends = sorted(
+            r for r, op in zip(ops.column("run_id").to_pylist(),
+                               ops.column("operation").to_pylist())
+            if lo < r <= hi and op in ("append", "stream-append"))
+        if not appends:
+            return []
+        reader = ChunkStoreReader(self.path, self.schema, {"as_of_run": hi})
+        gone = [r for r in appends if r not in reader.live]
+        if gone:
+            raise ValueError(
+                f"stream source on {self.path}: append run(s) {gone} were "
+                f"rewritten by a compaction or overwrite before this query "
+                f"read them (offsets {lo}..{hi}); restart the query from a "
+                "new checkpoint"
+            )
+        reader.live = {r: reader.live[r] for r in appends}
+        # the planned reader travels with each partition: read() runs
+        # in an executor, where nothing of this call's state survives
+        return [InputPartition((reader, p.value))
+                for p in reader.partitions() if p.value]
 
     def read(self, partition: InputPartition):
-        if partition.value is None:
-            return
-        yield from self._files._read_file(partition.value, None)
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the query checkpoint; nothing to clean up
+        reader, pairs = partition.value
+        yield from reader.read(InputPartition(pairs))
 
 
 class ChunkStoreStreamWriter(ChunkStoreWriter, DataSourceStreamArrowWriter):
     """Structured-Streaming sink: ``df.writeStream.format("pysparkenc")``.
 
-    Exactly-once without a transaction log: tasks stage uniquely-named
-    files under ``_staging/``; the driver's per-batch ``commit`` renames
-    them onto DETERMINISTIC targets ``chunks/stream-b<batch>-<i>.parquet``
-    with ``os.replace``. A replayed batch (crash anywhere between write
-    and checkpoint advance) re-stages and re-replaces the *same* targets,
-    so every (batch, slot) lands exactly once — the same idempotence
-    scheme as :mod:`pysparkenc.lineage` keyed by batch_id, pushed down to
-    the file layer. Rows of a replayed batch are assumed to land in the
-    same task order (Spark replays a batch from the same checkpointed
-    offsets and plan).
+    Each micro-batch commits one lineage run on the driver, its done
+    rows tagged with ``batchId`` (:meth:`ChunkStoreWriter._commit_run`).
+    A replayed batch (a crash after the commit, before the checkpoint
+    advanced) finds those rows, deletes its staged files and commits
+    nothing — the replay rule of ``encode_with_lineage(batch_id=)``. A
+    store takes one streaming query: two queries reuse batch ids.
     """
 
-    def _staging_dir(self) -> str:
-        return os.path.join(self.path, "_staging")
-
-    def write(self, iterator: Iterator[pa.RecordBatch]) -> _FileCommit:
-        table = self._encode_iterator(iterator)
-        if table is None:
-            return _FileCommit(())
-        os.makedirs(self._staging_dir(), exist_ok=True)
-        fname = os.path.join(
-            self._staging_dir(), f"stage-{uuid.uuid4().hex}.parquet"
-        )
-        pq.write_table(table, fname)
-        return _FileCommit((fname,))
-
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        os.makedirs(_chunk_dir(self.path), exist_ok=True)
-        staged = [f for m in messages if m for f in m.files]
-        for i, f in enumerate(sorted(staged)):
-            target = os.path.join(
-                _chunk_dir(self.path),
-                f"stream-b{batchId:012d}-{i:05d}.parquet",
-            )
-            os.replace(f, target)
-        # a prior attempt of this batch may have committed MORE slots
-        # (replay with fewer tasks): clear any leftover higher slots
-        i = len(staged)
-        while True:
-            leftover = os.path.join(
-                _chunk_dir(self.path),
-                f"stream-b{batchId:012d}-{i:05d}.parquet",
-            )
-            if not os.path.exists(leftover):
-                break
-            os.remove(leftover)
-            i += 1
-        if not os.path.exists(_schema_path(self.path)):
-            with open(_schema_path(self.path), "w") as fh:
-                json.dump(
-                    {"version": FORMAT_VERSION, "schema": self.schema_json},
-                    fh,
-                )
+        self._commit_run(messages, int(batchId))
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        for m in messages:
-            if m is None:
-                continue
-            for f in m.files:
-                if os.path.exists(f):
-                    os.remove(f)
+        _remove_staged(messages)
 
 
 # ---------------------------------------------------------------------------
@@ -1148,17 +1125,15 @@ class ChunkStoreDataSource(DataSource):
             raise ValueError(
                 "pysparkenc needs a path: .load(path) / .save(path)"
             )
+        _refuse_flat(p)
         return p
 
     def schema(self) -> StructType:
-        p = self._path()
-        if not os.path.exists(_schema_path(p)) and is_lineage_store(p):
-            # lineage stores carry no schema sidecar — recover it from
-            # committed chunk metadata (driver-side, payload-free)
-            aor = self.options.get("as_of_run")
-            live, _ = _lineage_plan(p, int(aor) if aor is not None else None)
-            return _recover_store_schema(p, live)
-        return read_store_schema(p)
+        from .lineage import _store_schema
+
+        aor = self.options.get("as_of_run")
+        return _store_schema(self._path(),
+                             int(aor) if aor is not None else None)
 
     def reader(self, schema: StructType) -> ChunkStoreReader:
         return _UnpushedReader(self._path(), schema, dict(self.options))
@@ -1166,81 +1141,25 @@ class ChunkStoreDataSource(DataSource):
     def streamReader(  # noqa: N802 (Spark API name)
         self, schema: StructType
     ) -> ChunkStoreStreamReader:
-        p = self._path()
-        if is_lineage_store(p):
-            # the streaming tail's offset domain is the flat file-name
-            # watermark — it cannot express commit visibility (orphan
-            # chunks, supersede, deletes). Refuse rather than tail
-            # uncommitted files.
-            raise ValueError(
-                f"{p} is a lineage-managed store; streaming reads must go "
-                "through pysparkenc.lineage (read_store per snapshot / "
-                "as_of_run), not readStream.format('pysparkenc')"
-            )
-        return ChunkStoreStreamReader(p, schema)
+        return ChunkStoreStreamReader(self._path(), schema)
 
     def writer(self, schema: StructType, overwrite: bool) -> ChunkStoreWriter:
-        path = self._path()
-        if is_lineage_store(path):
-            return self._lineage_writer(path, schema, overwrite)
-        sp = _schema_path(path)
-        if not overwrite and os.path.exists(sp):
-            existing = read_store_schema(path)
-            if existing != schema:
-                raise ValueError(
-                    "append schema does not match existing pysparkenc store: "
-                    f"{existing.simpleString()} vs {schema.simpleString()}"
-                )
-        return ChunkStoreWriter(path, schema, dict(self.options), overwrite)
-
-    def _lineage_writer(
-        self, path: str, schema: StructType, overwrite: bool
-    ) -> ChunkStoreWriter:
-        """Append to a lineage-managed store AS a lineage commit: a
-        fresh run id (never reusing a disk-occupied one), chunks under
-        ``chunks/run_id=<r>/``, and the per-partition lineage rows
-        appended atomically at job commit — so write.format() and
-        encode_with_lineage produce indistinguishable runs and neither
-        read path can ever disagree about them."""
-        if overwrite:
-            raise ValueError(
-                f"{path} is a lineage-managed store; mode('overwrite') "
-                "would bypass its snapshot history — append here, or "
-                "rewrite through pysparkenc.lineage (compact_store / "
-                "delete_rows / upsert_rows)"
-            )
-        _check_schema_evolution(path, schema)
-        from .lineage import _next_run_id
-
-        run_id = _next_run_id(None, path)
-        # claim the id on disk NOW: a job crashed before commit leaves
-        # an empty/orphan dir, which _next_run_id treats as occupied
-        os.makedirs(_run_dir(path, _CHUNK_DIR, run_id), exist_ok=True)
-        return ChunkStoreWriter(
-            path, schema, dict(self.options), overwrite,
-            lineage_run_id=run_id,
-        )
+        return self._writer(ChunkStoreWriter, schema, overwrite)
 
     def streamWriter(  # noqa: N802 (Spark API name)
         self, schema: StructType, overwrite: bool
     ) -> ChunkStoreStreamWriter:
-        p = self._path()
-        self._check_not_lineage(p)
-        return ChunkStoreStreamWriter(p, schema, dict(self.options), overwrite)
+        return self._writer(ChunkStoreStreamWriter, schema, overwrite)
 
-    @staticmethod
-    def _check_not_lineage(path: str) -> None:
-        if is_lineage_store(path):
-            # the flat stream sink's file-name idempotence scheme cannot
-            # express lineage commits; the supported streaming path into
-            # a lineage store is foreachBatch + encode_with_lineage
-            # (batch_id=), which is exactly-once by construction
-            raise ValueError(
-                f"{path} is a lineage-managed store; stream writes must go "
-                "through foreachBatch + pysparkenc.lineage."
-                "encode_with_lineage(batch_id=batch_id), not "
-                "writeStream.format('pysparkenc')"
-            )
+    def _writer(self, cls, schema: StructType, overwrite: bool):
+        """An append follows the lineage schema-evolution rule
+        (:func:`_check_schema_evolution`: columns may be added, a type
+        change is refused); an overwrite starts a new table and skips
+        it."""
+        path = self._path()
+        if not overwrite:
+            _check_schema_evolution(path, schema)
+        return cls(path, schema, dict(self.options), overwrite)
 
 
 class _UnpushedReader(ChunkStoreReader):

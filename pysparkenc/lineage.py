@@ -96,9 +96,9 @@ def _schemas_dir(path: str) -> str:
 def _record_run_schema(path: str, run_id: int, schema) -> None:
     """Write the run's logical schema as ``schemas/run-<id>.json`` —
     the per-run schema record schema evolution audits need ("which run
-    introduced column X?"). Informational metadata: readers derive the
-    live union schema from chunk metadata, so a missing record never
-    blocks a read."""
+    introduced column X?"). Reads use it when every live run recorded
+    the same one and fall back to chunk metadata otherwise
+    (:func:`_store_schema`), so a missing record never blocks a read."""
     import os
 
     os.makedirs(_schemas_dir(path), exist_ok=True)
@@ -171,45 +171,34 @@ _SNAPSHOT_SUMS = ("n_rows", "n_values", "plain_bytes", "enc_bytes")
 def snapshots(spark: SparkSession, path: str) -> DataFrame:
     """Snapshot history: one row per committed run (Iceberg's
     ``snapshots`` metadata table analogue), newest first, with an
-    ``operation`` column: ``append`` (batch encode), ``stream-append``
-    (micro-batch with a ``batch_id``), ``compact`` (a run whose id
-    appears as the compacting ``batch_id`` of OTHER runs' superseded
-    markers), ``quarantined`` (a run self-superseded by the concurrent-
-    commit detector — its markers carry ``batch_id == run_id``), or
-    ``delete`` (equality-delete commit; ``n_rows`` is its key count).
+    ``operation`` column from :func:`pysparkenc.datasource._run_operations`
+    (the classification the stream source tails by): ``append`` (batch
+    encode or data-source append), ``stream-append`` (micro-batch with a
+    ``batch_id``), ``compact`` (a run whose id appears as the compacting
+    ``batch_id`` of OTHER runs' superseded markers), ``quarantined`` (a
+    run self-superseded by the concurrent-commit detector — its markers
+    carry ``batch_id == run_id``), or ``delete`` (equality-delete
+    commit; ``n_rows`` is its key count). A ``format("pysparkenc")``
+    overwrite of a store with live data lists as ``compact``: it commits
+    the same shape, its rows plus supersede markers for everything live.
     Aggregated from the lineage commit records with pyarrow on the
     driver — no chunk payload is touched and collecting the result
     starts no Spark job."""
     lin = datasource._lineage_table(
         path, ("run_id", "batch_id", "part_id", *_SNAPSHOT_SUMS,
                "wall_sec", "status"))
-    status = lin.column("status")
-    sup = lin.filter(pc.equal(status, "superseded"))
-    # self-supersede (batch_id == run_id) is the quarantine signature;
-    # without the split a quarantined append would masquerade as a
-    # successful compaction in the history
-    self_sup = pc.equal(sup.column("batch_id"), sup.column("run_id"))
-    quarantined = sup.filter(self_sup).column("run_id").combine_chunks()
-    compacting = sup.filter(pc.invert(self_sup)).column(
-        "batch_id").combine_chunks()
-    done = lin.filter(pc.equal(status, "done")).group_by(
-        ["run_id", "batch_id"]).aggregate(
-        [("part_id", "count", pc.CountOptions(mode="all")),
-         *((c, "sum") for c in _SNAPSHOT_SUMS), ("wall_sec", "max")])
-    run = done.column("run_id")
-    op = pc.if_else(
-        pc.is_in(run, quarantined), "quarantined", pc.if_else(
-            pc.is_in(run, compacting), "compact", pc.if_else(
-                pc.greater_equal(done.column("batch_id"), 0),
-                "stream-append", "append")))
-    dels = lin.filter(pc.equal(status, "delete"))
+    done = datasource._run_operations(
+        lin, [*((c, "sum") for c in _SNAPSHOT_SUMS), ("wall_sec", "max")])
+    dels = lin.filter(pc.equal(lin.column("status"), "delete"))
     zeros = pa.array([0] * dels.num_rows, pa.int64())
     out = pa.concat_tables([
         pa.table({
-            "run_id": run, "batch_id": done.column("batch_id"),
+            "run_id": done.column("run_id"),
+            "batch_id": done.column("batch_id"),
             "partitions": done.column("part_id_count"),
             **{c: done.column(f"{c}_sum") for c in _SNAPSHOT_SUMS},
-            "wall_sec": done.column("wall_sec_max"), "operation": op,
+            "wall_sec": done.column("wall_sec_max"),
+            "operation": done.column("operation"),
         }),
         pa.table({
             "run_id": dels.column("run_id"),
@@ -346,23 +335,10 @@ def encode_with_lineage(
     # replay and resume both read the done rows, with pyarrow: the
     # partition plan's aggregate and the chunk write are this call's
     # only Spark jobs
-    lin = datasource._lineage_table(
-        path, ("run_id", "batch_id", "part_id", "status", "partition_by",
-               "num_partitions"))
-    status = lin.column("status")
-    # a quarantined run (self-superseded, batch_id == run_id) committed
-    # nothing readers see: its done rows neither replay a batch nor
-    # resume a part. Parts superseded by a compaction stay done.
-    sup = lin.filter(pc.equal(status, "superseded"))
-    quarantined = sup.filter(pc.equal(
-        sup.column("batch_id"), sup.column("run_id"))).column("run_id")
-    done = lin.filter(pc.and_(
-        pc.equal(status, "done"),
-        pc.invert(pc.is_in(lin.column("run_id"),
-                           quarantined.combine_chunks()))))
+    done = datasource._done_rows(
+        path, ("part_id", "partition_by", "num_partitions"))
     if batch_id is not None:
-        already = pc.sum(pc.equal(done.column("batch_id"), int(batch_id)))
-        already = int(already.as_py() or 0)
+        already = datasource._batch_committed(done, batch_id)
         if already:
             return {
                 "run_id": -1,
@@ -713,14 +689,29 @@ def _store_schema(
     path: str, as_of_run: int | None = None,
     runs: tuple[int, ...] | None = None,
 ) -> StructType:
-    """The logical schema of the store's live runs at ``as_of_run``
-    (only ``runs`` when given), recovered from chunk metadata on the
-    driver; empty when no data run is live."""
+    """THE schema rule of every read, ``read_store`` and the
+    ``pysparkenc`` data source alike, for the store's live runs at
+    ``as_of_run`` (only ``runs`` when given):
+
+    - the run schema they all recorded (``schemas/run-<id>.json``), when
+      every one recorded the same: it also carries the element and value
+      nullability of arrays and maps, which chunk metadata does not;
+    - otherwise their union, recovered from chunk metadata on the
+      driver (:func:`pysparkenc.datasource._recover_store_schema`);
+    - with no live data run, the newest recorded run schema at or before
+      ``as_of_run`` — an empty write or overwrite records one, so it
+      reads back empty under its schema — or an empty schema."""
     live, _ = datasource._lineage_plan(path, as_of_run)
     if runs is not None:
         live = {r: ps for r, ps in live.items() if r in runs}
-    return (datasource._recover_store_schema(path, live) if live
-            else StructType([]))
+    recorded = run_schemas(path)
+    if live:
+        mine = [recorded.get(r) for r in live]
+        if None not in mine and all(s == mine[0] for s in mine):
+            return mine[0]
+        return datasource._recover_store_schema(path, live)
+    older = [r for r in recorded if as_of_run is None or r <= as_of_run]
+    return recorded[max(older)] if older else StructType([])
 
 
 # ---------------------------------------------------------------------------
@@ -980,17 +971,10 @@ def compact_store(
     )
     wall = time.time() - t0
     rows = datasource._chunk_lineage_rows(path, run_id, -1, wall)
-    markers = [
-        (r, run_id, p, 0, 0, 0, 0, 0, float(wall), "superseded")
-        for r in sorted(selected) for p in live[r]
-    ] + [
-        # fully-retired delete runs: part_id -1 is the whole-run marker
-        # of the commit plan. A delete some REMAINING run still predates
-        # stays live — its keys keep applying to the runs this
-        # compaction didn't rewrite.
-        (dr, run_id, -1, 0, 0, 0, 0, 0, float(wall), "superseded")
-        for dr in dead_deletes
-    ]
+    # a delete some REMAINING run still predates stays live: its keys
+    # keep applying to the runs this compaction didn't rewrite
+    markers = datasource._supersede_markers(
+        run_id, {r: live[r] for r in selected}, dead_deletes, wall)
     # ONE file = the atomic publish-and-supersede commit
     datasource._commit_lineage_rows(
         path, run_id, rows + markers,

@@ -6,7 +6,12 @@ needs: new token files land in a directory (or Kafka/Iceberg feed), each
 micro-batch is encoded with the full batch engine — salted partitioning,
 codec auto-selection, per-partition lineage — via ``foreachBatch``.
 
-Exactly-once comes from three cooperating mechanisms:
+Both streaming paths commit lineage runs: :func:`encode_stream` here,
+and ``writeStream.format("pysparkenc")`` (one run per micro-batch, its
+rows encoded per task without the partition plan);
+``readStream.format("pysparkenc")`` tails the committed append runs
+(:class:`pysparkenc.datasource.ChunkStoreStreamReader`). Exactly-once
+comes from three cooperating mechanisms:
 - Spark's streaming checkpoint replays a failed micro-batch;
 - the lineage commit protocol (chunks first, lineage row after) makes a
   *partially-written* batch's orphan chunks invisible to readers
@@ -14,7 +19,9 @@ Exactly-once comes from three cooperating mechanisms:
 - per-``batch_id`` idempotency closes the remaining at-least-once window:
   if a batch fully committed but the job died before Spark persisted the
   checkpoint offset, the replayed batch finds its done lineage rows and
-  no-ops instead of committing twice.
+  no-ops instead of committing twice (``datasource._batch_committed``,
+  the rule both paths share). Batch ids restart with each query, so a
+  store takes one streaming query.
 
 ``foreachBatch`` (not a streaming mapInArrow) is deliberate: the skew plan
 in ``plan_partitions`` needs a per-batch aggregate, which is exactly the

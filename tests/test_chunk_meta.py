@@ -55,16 +55,13 @@ FORGED = [
 ]
 
 
-@pytest.mark.parametrize("col,field,value,what", FORGED,
-                         ids=[f[1] for f in FORGED])
-@pytest.mark.parametrize("read", [
+READS = pytest.mark.parametrize("read", [
     lambda spark, path: read_store(spark, path),
     lambda spark, path: decode_table(read_committed_chunks(spark, path)),
 ], ids=["read_store", "decode_table"])
-def test_forged_footer_field_raises_value_error(
-        spark, clean_store, tmp_path, read, col, field, value, what):
-    path = str(tmp_path / "store")
-    _forge(clean_store, path, col, field, value)
+
+
+def _raises_naming_chunk(spark, read, path, col, what) -> None:
     with pytest.raises(Exception) as ei:
         read(spark, path).collect()
     # the reader names the file's part id, decode_table the combined
@@ -72,4 +69,28 @@ def test_forged_footer_field_raises_value_error(
     assert re.search(
         rf"ValueError: corrupt chunk '{col}' \(part_id (0|4294967296), "
         rf"chunk_id 1\): {re.escape(what)}", str(ei.value)), str(ei.value)
+
+
+@pytest.mark.parametrize("col,field,value,what", FORGED,
+                         ids=[f[1] for f in FORGED])
+@READS
+def test_forged_footer_field_raises_value_error(
+        spark, clean_store, tmp_path, read, col, field, value, what):
+    path = str(tmp_path / "store")
+    _forge(clean_store, path, col, field, value)
+    _raises_naming_chunk(spark, read, path, col, what)
+
+
+@READS
+def test_corrupt_payload_names_the_chunk(spark, clean_store, tmp_path, read):
+    """A flipped payload byte fails its CRC with the chunk's part and
+    chunk id, so a multi-file store can locate it."""
+    (f,) = glob.glob(f"{clean_store}/chunks/run_id=*/*.parquet")
+    (row,) = [r for r in pq.read_table(f).to_pylist()
+              if r["col"] == "v" and r["chunk_id"] == 1]
+    data = bytearray(row["data"])
+    data[len(data) // 2] ^= 0xFF
+    path = str(tmp_path / "store")
+    _forge(clean_store, path, "v", "data", bytes(data))
+    _raises_naming_chunk(spark, read, path, "v", "crc32 mismatch")
 

@@ -4,6 +4,7 @@ filter-pushdown through ``spark.read.format("pysparkenc")``."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,7 +20,6 @@ from pyspark.sql.datasource import (
 
 from pysparkenc.datasource import (
     ChunkStoreReader,
-    _list_chunk_files,
     register,
 )
 
@@ -27,6 +27,16 @@ from pysparkenc.datasource import (
 @pytest.fixture(autouse=True)
 def _registered(spark):
     register(spark)
+
+
+def _chunk_files(store):
+    """``(run id, chunk file)`` of every chunk file of a store."""
+    return sorted(
+        (int(d.split("=", 1)[1]), os.path.join(store, "chunks", d, f))
+        for d in os.listdir(os.path.join(store, "chunks"))
+        for f in os.listdir(os.path.join(store, "chunks", d))
+        if f.endswith(".parquet")
+    )
 
 
 def _mixed_df(spark):
@@ -48,7 +58,7 @@ def test_write_read_roundtrip(spark, tmp_path):
     df = _mixed_df(spark)
     df.write.format("pysparkenc").mode("overwrite").save(store)
     back = spark.read.format("pysparkenc").load(store)
-    assert back.schema == df.schema  # inferred from _pysparkenc_schema.json
+    assert back.schema == df.schema  # the recorded run schema
     o = {r["id"]: r.asDict(True) for r in df.collect()}
     b = {r["id"]: r.asDict(True) for r in back.collect()}
     assert b == o
@@ -71,9 +81,9 @@ def test_filters_are_reapplied_correctly(
     assert back.where(F.col("id").isin(5, 6, 2999, 99999)).count() == 3
 
 
-@pytest.mark.parametrize("layout", ["flat", "lineage"])
+@pytest.mark.parametrize("writer", ["format", "lineage"])
 def test_filtered_then_unfiltered_query_counts_every_row(
-    spark, tmp_path, layout
+    spark, tmp_path, writer
 ):
     """``register`` leaves Python filter pushdown off, so one ``load()``
     DataFrame queried with a pruning filter and then without one still
@@ -86,7 +96,7 @@ def test_filtered_then_unfiltered_query_counts_every_row(
     src = spark.sql(
         "SELECT id, concat('doc-', id) AS doc_id FROM range(3000)"
     ).coalesce(1).sortWithinPartitions("id")
-    if layout == "flat":
+    if writer == "format":
         src.write.format("pysparkenc").mode("overwrite").option(
             "rows_per_chunk", "256").save(store)
     else:
@@ -134,12 +144,20 @@ def test_overwrite_replaces_previous_store(spark, tmp_path):
 
 
 def test_append_accumulates_and_checks_schema(spark, tmp_path):
+    """Appends to a fresh path and then to the store follow the lineage
+    schema rule: a column may be added, a type change is refused."""
     store = str(tmp_path / "store")
     spark.range(100).write.format("pysparkenc").mode("append").save(store)
     spark.range(50).write.format("pysparkenc").mode("append").save(store)
     assert spark.read.format("pysparkenc").load(store).count() == 150
-    with pytest.raises(Exception, match="does not match"):
-        spark.sql("SELECT id, 'x' AS extra FROM range(5)").write.format(
+    spark.sql("SELECT id, 'x' AS extra FROM range(5)").write.format(
+        "pysparkenc"
+    ).mode("append").save(store)
+    back = spark.read.format("pysparkenc").load(store)
+    assert back.count() == 155
+    assert back.where(F.col("extra").isNull()).count() == 150
+    with pytest.raises(Exception, match="schema evolution"):
+        spark.sql("SELECT 'x' AS id FROM range(5)").write.format(
             "pysparkenc"
         ).mode("append").save(store)
 
@@ -168,7 +186,7 @@ def test_reader_prunes_page_groups(spark, tmp_path):
         "rows_per_chunk", "2048"
     ).save(store)
     schema = spark.read.format("pysparkenc").load(store).schema
-    files = _list_chunk_files(store)
+    files = _chunk_files(store)
 
     def rows_read(filters):
         r = ChunkStoreReader(store, schema)
@@ -176,7 +194,7 @@ def test_reader_prunes_page_groups(spark, tmp_path):
             r.pushFilters(filters)
         return sum(
             b.num_rows for f in files
-            for b in r.read(InputPartition((None, (f,))))
+            for b in r.read(InputPartition((f,)))
         )
 
     total = rows_read([])
@@ -194,9 +212,10 @@ def test_reader_prunes_page_groups(spark, tmp_path):
 def test_unique_file_per_task(spark, tmp_path):
     store = str(tmp_path / "store")
     spark.range(1000).repartition(5).write.format("pysparkenc").mode("append").save(store)
-    files = _list_chunk_files(store)
+    files = _chunk_files(store)
     assert len(files) == 5
-    assert len(set(os.path.basename(f) for f in files)) == 5
+    assert {r for r, _ in files} == {1}  # one run, one file per task
+    assert len(set(os.path.basename(f) for _, f in files)) == 5
 
 
 def test_stream_write_availablenow(spark, tmp_path):
@@ -223,37 +242,34 @@ def test_stream_write_availablenow(spark, tmp_path):
 
 
 def test_stream_commit_is_replay_idempotent(spark, tmp_path):
-    """A replayed batch (same batchId) must replace, not duplicate, its
-    files — including clearing leftover slots from a wider prior attempt."""
+    """A replayed batchId (a crash after the commit, before the
+    checkpoint advanced) commits nothing and leaves ``_staging/`` empty,
+    whatever its task count; the next batchId commits a fresh run."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from pysparkenc.datasource import ChunkStoreStreamWriter, _FileCommit
+    from pysparkenc.datasource import ChunkStoreStreamWriter
+    from pysparkenc.lineage import read_lineage, read_store
 
     store = str(tmp_path / "store")
-    schema = spark.range(1).schema
-    w = ChunkStoreStreamWriter(store, schema, {}, False)
-    chunks = tmp_path / "store" / "chunks"
+    w = ChunkStoreStreamWriter(store, spark.range(1).schema, {}, False)
     staging = tmp_path / "store" / "_staging"
-    staging.mkdir(parents=True)
 
-    def stage(n):
-        msgs = []
-        for i in range(n):
-            f = str(staging / f"stage-{i}.parquet")
-            pq.write_table(pa.table({"x": [i]}), f)
-            msgs.append(_FileCommit((f,)))
-        return msgs
+    def stage(*sizes):
+        return [w.write(iter([pa.record_batch({"id": list(range(n))})]))
+                for n in sizes]
 
-    w.commit(stage(3), batchId=7)
-    assert len(list(chunks.iterdir())) == 3
-    # replay with fewer tasks: slots shrink to 2, the stale third is gone
-    w.commit(stage(2), batchId=7)
-    names = sorted(p.name for p in chunks.iterdir())
-    assert names == [
-        "stream-b000000000007-00000.parquet",
-        "stream-b000000000007-00001.parquet",
-    ]
+    w.commit(stage(7), batchId=7)
+    assert read_store(spark, store).count() == 7
+    w.commit(stage(2), batchId=7)  # replay with fewer tasks
+    w.commit(stage(5, 1, 1), batchId=7)  # and with more
+    assert read_store(spark, store).count() == 7
+    assert not any(staging.iterdir())
+    w.commit(stage(2), batchId=8)
+    assert read_store(spark, store).count() == 9
+    done = read_lineage(spark, store).where("status = 'done'")
+    assert sorted((r["run_id"], r["batch_id"]) for r in
+                  done.select("run_id", "batch_id").distinct().collect()) == [
+        (1, 7), (2, 8)]
 
 
 def test_stream_read_tails_appends(spark, tmp_path):
@@ -290,6 +306,151 @@ def test_stream_read_tails_appends(spark, tmp_path):
     assert b == o
 
 
+def _stream_into(spark, src, store, ckpt):
+    """Drain every file of ``src`` into ``store`` through the sink."""
+    q = (
+        spark.readStream.schema("id long, name string").parquet(src)
+        .writeStream.format("pysparkenc")
+        .option("path", store)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+
+def _tail(spark, store, out, ckpt):
+    """Drain the committed runs of ``store`` not yet read under
+    ``ckpt`` into the parquet dir ``out``; raises what the query
+    raised."""
+    q = (
+        spark.readStream.format("pysparkenc").load(store)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    if q.exception() is not None:
+        raise q.exception()
+
+
+def _rows(lo, hi):
+    return f"SELECT id, concat('n-', id) AS name FROM range({lo}, {hi})"
+
+
+def test_stream_write_delete_then_tail_equals_read_store(spark, tmp_path):
+    """Two sink batches (one checkpoint, so batch ids continue), then a
+    delete: a tail started afterwards reads exactly what read_store
+    reads — the deletes visible at its end offset apply."""
+    from pysparkenc.lineage import delete_rows, read_store, snapshots
+
+    src, store, ck, out, ck2 = (
+        str(tmp_path / x) for x in ("src", "store", "ck", "out", "ck2"))
+    spark.sql(_rows(0, 300)).coalesce(1).write.parquet(src)
+    _stream_into(spark, src, store, ck)
+    spark.sql(_rows(300, 500)).coalesce(1).write.mode("append").parquet(src)
+    _stream_into(spark, src, store, ck)
+    ops = {(r["batch_id"], r["operation"])
+           for r in snapshots(spark, store).collect()}
+    assert ops == {(0, "stream-append"), (1, "stream-append")}
+    delete_rows(spark, store, spark.sql(
+        "SELECT id FROM range(0, 500) WHERE id % 10 = 0"), key_cols=("id",))
+    _tail(spark, store, out, ck2)
+    got = spark.read.parquet(out)
+    exp = read_store(spark, store)
+    assert got.count() == exp.count() == 450
+    assert got.exceptAll(exp).count() == 0
+    assert exp.exceptAll(got).count() == 0
+
+
+def test_stream_tail_across_compaction(spark, tmp_path):
+    """A compaction of runs the tail already read is invisible to it; a
+    compaction of a run it has not read raises, naming the run, rather
+    than dropping or duplicating its rows."""
+    from pysparkenc.lineage import compact_store
+
+    store, out, ck = (str(tmp_path / x) for x in ("store", "out", "ck"))
+    for lo, hi in ((0, 100), (100, 150)):
+        spark.sql(_rows(lo, hi)).write.format("pysparkenc").mode(
+            "append").save(store)
+    _tail(spark, store, out, ck)
+    compact_store(spark, store, num_partitions=1)  # runs 1, 2: read
+    spark.sql(_rows(150, 170)).write.format("pysparkenc").mode(
+        "append").save(store)
+    _tail(spark, store, out, ck)
+    assert sorted(r["id"] for r in spark.read.parquet(out).collect()) == (
+        list(range(170)))
+    spark.sql(_rows(170, 190)).write.format("pysparkenc").mode(
+        "append").save(store)  # run 5, never read
+    compact_store(spark, store, runs=(5,), num_partitions=1)
+    with pytest.raises(Exception, match=r"append run\(s\) \[5\] were rewritten"):
+        _tail(spark, store, out, ck)
+
+
+def test_overwrite_is_a_snapshot(spark, tmp_path):
+    """Overwrite of a store holding data and deletes reads only the new
+    rows, lists as a compaction, and time travel to the runs before it
+    still reads the old table; an empty overwrite reads back empty
+    under its own schema."""
+    from pysparkenc.lineage import delete_rows, read_store, snapshots
+
+    store = str(tmp_path / "store")
+    spark.range(100).write.format("pysparkenc").mode("append").save(store)
+    spark.range(100, 120).write.format("pysparkenc").mode("append").save(
+        store)
+    delete_rows(spark, store, spark.range(10), key_cols=("id",))  # run 3
+    new = spark.sql("SELECT concat('s', id) AS id, id AS v FROM range(7)")
+    new.write.format("pysparkenc").mode("overwrite").save(store)  # run 4
+    for got in (spark.read.format("pysparkenc").load(store),
+                read_store(spark, store)):
+        assert got.schema == new.schema
+        assert got.exceptAll(new).count() == 0
+        assert new.exceptAll(got).count() == 0
+    ops = {r["run_id"]: r["operation"]
+           for r in snapshots(spark, store).collect()}
+    assert ops == {1: "append", 2: "append", 3: "delete", 4: "compact"}
+    old = spark.read.format("pysparkenc").option("as_of_run", 3).load(store)
+    assert sorted(r["id"] for r in old.collect()) == list(range(10, 120))
+    assert read_store(spark, store, as_of_run=2).count() == 120
+
+    spark.range(5).selectExpr("id AS w").limit(0).write.format(
+        "pysparkenc").mode("overwrite").save(store)
+    empty = spark.read.format("pysparkenc").load(store)
+    assert empty.columns == ["w"] and empty.count() == 0
+    assert read_store(spark, store).columns == ["w"]
+    assert read_store(spark, store, as_of_run=4).count() == 7
+
+
+def test_flat_layout_is_refused(spark, tmp_path):
+    """A directory in the retired flat layout (schema sidecar, chunk
+    files, no lineage/) is refused on load, save and both stream
+    directions, naming the path; nothing is written into it."""
+    import json
+
+    from pysparkenc.datasource import ChunkStoreDataSource
+
+    flat = tmp_path / "flat"
+    (flat / "chunks").mkdir(parents=True)
+    (flat / "_pysparkenc_schema.json").write_text(json.dumps(
+        {"version": 1, "schema": spark.range(1).schema.jsonValue()}))
+    before = sorted(p.name for p in flat.rglob("*"))
+    msg = "flat layout is no longer supported"
+    with pytest.raises(Exception, match=msg):
+        spark.read.format("pysparkenc").load(str(flat)).count()
+    for mode in ("append", "overwrite"):
+        with pytest.raises(Exception, match=msg):
+            spark.range(3).write.format("pysparkenc").mode(mode).save(
+                str(flat))
+    ds = ChunkStoreDataSource({"path": str(flat)})
+    with pytest.raises(ValueError, match=re.escape(str(flat))):
+        ds.streamReader(spark.range(1).schema)
+    with pytest.raises(ValueError, match=msg):
+        ds.streamWriter(spark.range(1).schema, False)
+    assert sorted(p.name for p in flat.rglob("*")) == before
+
+
 def test_reader_bin_packs_small_files_into_partitions(spark, tmp_path):
     """Many tiny chunk files (a streaming-append tail) must NOT cost one
     Python worker round-trip each: partitions() bin-packs them by bytes.
@@ -306,12 +467,10 @@ def test_reader_bin_packs_small_files_into_partitions(spark, tmp_path):
     back = spark.read.format("pysparkenc").load(store)
     assert back.count() == docs.count()
     reader = ChunkStoreReader(store, back.schema)
-    from pysparkenc.datasource import _list_chunk_files
-
-    n_files = len(_list_chunk_files(store))
+    n_files = len(_chunk_files(store))
     n_parts = len(reader.partitions())
     assert n_files >= 12
-    assert n_parts < n_files  # tiny files actually grouped
+    assert n_parts < n_files  # tiny files of many runs actually grouped
 
 
 # ---------------------------------------------------------------------------
@@ -419,20 +578,36 @@ def test_lineage_store_multicol_delete_keys(spark, tmp_path):
     assert exp.exceptAll(back).count() == 0
 
 
-def test_lineage_store_write_and_stream_guards(spark, tmp_path):
-    """Overwrite and stream I/O on a lineage store refuse with typed
-    errors naming the supported path (append commits a real run — see
-    the tests below)."""
-    from pysparkenc.datasource import ChunkStoreDataSource
+def test_lineage_store_stream_replay_commits_nothing(spark, tmp_path):
+    """writeStream into a store encode_with_lineage wrote commits one
+    run per micro-batch; when Spark replays a batch whose commit landed
+    (its checkpoint commit entry lost), the sink commits nothing and
+    leaves ``_staging/`` empty."""
+    from pysparkenc.lineage import read_store, snapshots
 
-    store, df = _lineage_store(spark, tmp_path)
-    ds = ChunkStoreDataSource({"path": store})
-    with pytest.raises(ValueError, match="lineage-managed"):
-        ds.writer(df.schema, overwrite=True)
-    with pytest.raises(ValueError, match="lineage-managed"):
-        ds.streamReader(df.schema)
-    with pytest.raises(ValueError, match="lineage-managed"):
-        ds.streamWriter(df.schema, False)
+    store, df = _lineage_store(spark, tmp_path)  # run 1, 160 rows
+    src, ck = str(tmp_path / "src"), str(tmp_path / "ck")
+    extra = df.withColumn("doc_id", F.concat(F.lit("s_"), F.col("doc_id")))
+    extra.limit(30).coalesce(1).write.parquet(src)
+
+    def drain():
+        q = (spark.readStream.schema(extra.schema).parquet(src)
+             .writeStream.format("pysparkenc").option("path", store)
+             .option("checkpointLocation", ck)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        assert q.exception() is None, q.exception()
+
+    drain()
+    assert read_store(spark, store).count() == 190
+    for f in ("0", ".0.crc"):  # batch 0's commit entry: it replays
+        os.remove(os.path.join(ck, "commits", f))
+    drain()
+    assert read_store(spark, store).count() == 190
+    assert [(r["run_id"], r["batch_id"], r["operation"])
+            for r in snapshots(spark, store).collect()] == [
+        (2, 0, "stream-append"), (1, -1, "append")]
+    assert not os.listdir(os.path.join(store, "_staging"))
 
 
 def test_lineage_store_append_commits_a_run(spark, tmp_path):

@@ -1,8 +1,10 @@
 """Model-based test of the lineage store's table-maintenance surface.
 
 Random interleavings of append / delete / upsert / compact (full or of
-a random subset of live runs) / expire run against both the real store
-and a plain Python dict model of "key -> current row"; after every
+a random subset of live runs) / expire / ``format("pysparkenc")`` append
+and overwrite / ``writeStream.format("pysparkenc")`` micro-batches run
+against both the real store and a plain Python dict model of
+"key -> current row"; after every
 scenario the visible table must equal the model exactly, and the
 snapshot history must list exactly the runs the scenario committed.
 This is the property the whole Iceberg-shaped layer promises: whatever
@@ -48,14 +50,22 @@ def _run_scenario(spark, store, seed):
         return out
 
     # always start with an append so every op has something to act on.
-    # ds_append drives the SECOND write path (df.write.format) and
-    # vacuum the r5 orphan reclaim — both must compose with everything
-    # else in any order
+    # ds_append / ds_overwrite drive the data-source writer,
+    # stream_append its stream sink (one checkpoint and one source dir
+    # per scenario, so batch ids continue) and vacuum the orphan
+    # reclaim — all must compose with everything else in any order
     ops = ["append"] + [
         rng.choice(["append", "delete", "upsert", "compact",
-                    "compact_runs", "expire", "ds_append", "vacuum"])
+                    "compact_runs", "expire", "ds_append", "ds_overwrite",
+                    "stream_append", "vacuum"])
         for _ in range(rng.randrange(4, 7))
     ]
+    src, ckpt = store + "_src", store + "_ckpt"
+
+    def last_run() -> int:
+        return int(read_lineage(spark, store)
+                   .agg(F.max("run_id").alias("m")).collect()[0]["m"])
+
     snaps: list[tuple[int, dict[str, int], bool]] = []
     committed: set[int] = set()
     for op in ops:
@@ -101,19 +111,37 @@ def _run_scenario(spark, store, seed):
             if c["partitions"]:
                 committed.add(c["run_id"])
                 snaps.append((c["run_id"], dict(model), False))
-        elif op == "ds_append":
+        elif op in ("ds_append", "ds_overwrite"):
             from pysparkenc.datasource import register
 
             register(spark)
             items = [(k, rng.randrange(1000))
                      for k in fresh(rng.randrange(2, 6))]
+            mode = "append" if op == "ds_append" else "overwrite"
             (_mk_rows(spark, items).repartition(1)
-             .write.format("pysparkenc").mode("append").save(store))
+             .write.format("pysparkenc").mode(mode).save(store))
+            if op == "ds_overwrite":
+                model.clear()
             model.update(items)
-            run_id = int(
-                read_lineage(spark, store)
-                .agg(F.max("run_id").alias("m")).collect()[0]["m"]
-            )
+            run_id = last_run()
+            committed.add(run_id)
+            snaps.append((run_id, dict(model), False))
+        elif op == "stream_append":
+            from pysparkenc.datasource import register
+
+            register(spark)
+            items = [(k, rng.randrange(1000))
+                     for k in fresh(rng.randrange(2, 6))]
+            _mk_rows(spark, items).coalesce(1).write.mode("append").parquet(
+                src)
+            q = (spark.readStream.schema("k string, v long").parquet(src)
+                 .writeStream.format("pysparkenc").option("path", store)
+                 .option("checkpointLocation", ckpt)
+                 .trigger(availableNow=True).start())
+            q.awaitTermination(120)
+            assert q.exception() is None, (seed, ops, q.exception())
+            model.update(items)
+            run_id = last_run()
             committed.add(run_id)
             snaps.append((run_id, dict(model), False))
         elif op == "vacuum":
