@@ -481,8 +481,8 @@ def q_roundtrip_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     two extra columns through the same ``encode_with_lineage`` (which
     validates shared-column types and records per-run schemas);
     ``read_store`` then decodes BOTH runs under the evolved union
-    schema, old groups reading the new columns as typed nulls (they
-    ride on a payload-free anchor chunk for their row count). The
+    schema, old groups reading the new columns as typed nulls (any chunk
+    row of a page group supplies its row count). The
     oracle mirrors the even/odd split with CASE, so every null position
     and every evolved value is hash-checked."""
     import atexit

@@ -318,7 +318,9 @@ def cmd_compact(args: argparse.Namespace) -> int:
 
 def cmd_vacuum(args: argparse.Namespace) -> int:
     """Reclaim orphaned run directories (a writer killed between its
-    data write and its lineage commit) and stale _temporary job dirs.
+    rename into the run dir and its lineage commit), stale staged files
+    under _staging/ (killed write tasks) and the stale _temporary job
+    dirs of stores written before every write staged with pyarrow.
     Readers never see these; vacuum frees the bytes."""
     from pysparkenc.lineage import vacuum_store
 

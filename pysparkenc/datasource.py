@@ -11,9 +11,8 @@ direction speaks its commit protocol:
 
 - reads plan from committed runs and apply delete sets
   (:func:`_lineage_plan`); the ``as_of_run`` option time travels;
-- ``mode("append")`` commits one fresh run: chunks under
-  ``chunks/run_id=<r>/``, then the driver-side commit
-  (:func:`_commit_lineage_rows`) every lineage write goes through;
+- ``mode("append")`` commits one fresh run through the one store writer
+  (:func:`_stage_task`, :func:`_commit_run`) every store write runs;
 - ``mode("overwrite")`` commits the new run together with supersede
   markers for every live part and delete run, the full-compaction
   commit shape: a snapshot, so time travel still reads the old table;
@@ -35,8 +34,9 @@ Scale design:
 - Read tasks bin-pack committed ``(run, file)`` pairs by bytes: the
   driver holds O(files) metadata, never chunk rows, and each task
   streams its own files. Write tasks stage one uniquely named file each
-  under ``_staging/``; only the driver's commit renames them into the
-  run dir, so a failed job never touches the committed store.
+  (one parquet row group) under ``_staging/``; only the driver's commit
+  renames them into the run dir, so a failed job never touches the
+  committed store.
 - **Catalyst filter pushdown** (``pushFilters``), an explicit opt-in:
   with ``spark.sql.python.filterPushdown.enabled`` set to ``true`` before
   :func:`register` (it is off by default, and ``register`` never sets
@@ -76,7 +76,7 @@ import os
 import re
 import time
 import uuid
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterable, Iterator, Sequence
 from dataclasses import dataclass
 
 import numpy as np
@@ -215,6 +215,17 @@ def _lineage_table(path: str, cols: Sequence[str]) -> pa.Table:
     return tab
 
 
+def _quarantined(lin: pa.Table) -> pa.Array:
+    """Run ids the concurrent-commit detector quarantined in the lineage
+    table ``lin`` (at least ``run_id``, ``batch_id`` and ``status``):
+    runs with a self-supersede marker, ``batch_id == run_id``
+    (:func:`_commit_run`). A quarantined run committed nothing
+    readers see — neither its rows nor its markers on other runs."""
+    sup = lin.filter(pc.equal(lin.column("status"), "superseded"))
+    return sup.filter(pc.equal(sup.column("batch_id"), sup.column("run_id"))
+                      ).column("run_id").combine_chunks().unique()
+
+
 def _lineage_plan(
     path: str, as_of_run: int | None = None
 ) -> tuple[dict[int, tuple[int, ...]], list[tuple[int, str]]]:
@@ -228,6 +239,9 @@ def _lineage_plan(
       ``superseded`` marker. Orphan chunks of a crashed encode are
       invisible, and a compacted-but-unexpired store contributes ONLY
       the compacted layout, never both.
+    - The markers a :func:`_quarantined` run committed on OTHER runs
+      (a compaction or overwrite whose commit collided) supersede
+      nothing: the runs they name stay live.
     - A delete run is live when it has a ``delete`` row and no
       whole-run marker (``superseded`` with ``part_id`` -1).
     - ``as_of_run`` keeps done and delete rows of runs ``<= as_of_run``
@@ -253,6 +267,9 @@ def _lineage_plan(
         done &= run <= int(as_of_run)
         sup &= batch <= int(as_of_run)
         dels &= run <= int(as_of_run)
+    quarantined = np.isin(batch, _quarantined(tab.filter(pa.array(sup)))
+                          .to_numpy())
+    sup &= ~quarantined | (batch == run)
     done_pairs = set(zip(run[done].tolist(), part[done].tolist()))
     sup_pairs = set(zip(run[sup].tolist(), part[sup].tolist()))
     live_pairs = done_pairs - sup_pairs
@@ -274,14 +291,9 @@ def _done_rows(path: str, cols: Sequence[str] = ()) -> pa.Table:
     run committed nothing readers see, so its rows neither replay a
     batch nor resume a part. Parts a compaction superseded stay done."""
     lin = _lineage_table(path, ("run_id", "batch_id", "status", *cols))
-    status = lin.column("status")
-    sup = lin.filter(pc.equal(status, "superseded"))
-    quarantined = sup.filter(pc.equal(
-        sup.column("batch_id"), sup.column("run_id"))).column("run_id")
     return lin.filter(pc.and_(
-        pc.equal(status, "done"),
-        pc.invert(pc.is_in(lin.column("run_id"),
-                           quarantined.combine_chunks()))))
+        pc.equal(lin.column("status"), "done"),
+        pc.invert(pc.is_in(lin.column("run_id"), _quarantined(lin)))))
 
 
 def _batch_committed(done: pa.Table, batch_id: int) -> int:
@@ -314,9 +326,9 @@ def _run_operations(lin: pa.Table, aggs: Sequence[tuple] = ()) -> pa.Table:
     sup = lin.filter(pc.equal(status, "superseded"))
     # without the split a quarantined append would masquerade as a
     # successful compaction
-    self_sup = pc.equal(sup.column("batch_id"), sup.column("run_id"))
-    quarantined = sup.filter(self_sup).column("run_id").combine_chunks()
-    compacting = sup.filter(pc.invert(self_sup)).column(
+    quarantined = _quarantined(lin)
+    compacting = sup.filter(pc.not_equal(
+        sup.column("batch_id"), sup.column("run_id"))).column(
         "batch_id").combine_chunks()
     done = lin.filter(pc.equal(status, "done")).group_by(
         ["run_id", "batch_id"]).aggregate(
@@ -340,7 +352,7 @@ def _supersede_markers(
     (:func:`_lineage_plan`): ``as_of_run`` before the commit still reads
     what it superseded. ``compact_store`` and an overwrite write commit
     this shape; the concurrent-commit quarantine in
-    :func:`_commit_lineage_rows` is the same markers for the run's own
+    :func:`_commit_run` is the same markers for the run's own
     parts."""
     return [
         (r, run_id, p, 0, 0, 0, 0, 0, float(wall_sec), "superseded")
@@ -431,8 +443,8 @@ def _recover_store_schema(
 
 
 def _check_schema_evolution(path: str, schema: StructType) -> None:
-    """Appending a run to a lineage store may ADD or OMIT columns (the
-    union decodes with typed nulls via the col_idx-0 anchor), but a
+    """Appending a run to a lineage store may ADD or OMIT columns (a
+    page group without a column decodes it as typed nulls), but a
     shared column must keep its logical type — a silent type change
     would make the union schema ambiguous and decode one run's chunks
     under the wrong kernel. Driver-side and metadata-only; a store with
@@ -756,19 +768,25 @@ class ChunkStoreReader(DataSourceReader):
                 "(a file read was planned without live runs)"
             )
         decode_schema, user_cols = self._widened
-        live = [("part_id", "in", list(self.live.get(run_id, ())))]
-        # DNF filters: (requested columns OR the col_idx-0 anchor chunk)
-        # AND committed partitions only (orphan part ids from a crashed
-        # encode never decode). The anchor carries the row count of a
-        # group written before EVERY requested column existed, which
-        # the walk decodes as all-null rows; col_idx 0 exists in every
-        # group.
-        table = pq.read_table(
-            path,
-            filters=[[("col", "in", engine._requested_chunks(decode_schema)),
-                      *live],
-                     [("col_idx", "==", 0), *live]],
-        )
+        # committed partitions only (orphan part ids from a crashed
+        # encode never decode), then the requested chunks. Any chunk row
+        # carries its group's n_rows, so a group with no requested chunk
+        # (written before EVERY requested column existed) keeps one
+        # other row, without payloads, and decodes as all-null rows
+        full = pq.read_table(path, filters=pc.field("part_id").isin(
+            list(self.live.get(run_id, ()))))
+        req = pc.is_in(full.column("col"), pa.array(
+            engine._requested_chunks(decode_schema), pa.string()))
+        key = ((full.column("part_id").to_numpy().astype(np.int64) << 32)
+               + full.column("chunk_id").to_numpy())
+        lone = np.flatnonzero(~np.isin(
+            key, key[req.to_numpy(zero_copy_only=False)]))
+        table = full.filter(req)
+        if lone.size:  # the dropped payloads concatenate as nulls
+            lone = lone[np.unique(key[lone], return_index=True)[1]]
+            table = pa.concat_tables([table, full.drop_columns(
+                list({"data", "aux", "bloom"} & set(full.column_names))
+            ).take(lone)], promote_options="default")
         dels = self._keys_for(run_id)
         for out in engine._walk_groups(decode_schema, table, self.pushed):
             for _, keys_tab in dels:
@@ -785,14 +803,60 @@ class ChunkStoreReader(DataSourceReader):
 
 @dataclass
 class _FileCommit(WriterCommitMessage):
-    files: tuple = ()
+    files: tuple  # the task's staged file, none when it had no rows
+    t0: float  # task start: the run's wall_sec counts from the earliest
 
 
-def _remove_staged(messages) -> None:
-    for m in messages:
-        for f in m.files if m else ():
-            if os.path.exists(f):
-                os.remove(f)
+def _remove_staged(files) -> None:
+    for f in files:
+        if os.path.exists(f):
+            os.remove(f)
+
+
+def _stage_task(
+    batches: Iterable[pa.RecordBatch], path: str,
+    pages=None, skip: frozenset = frozenset(),
+) -> str | None:
+    """THE task side of every store write: ``batches``, encoded into page
+    groups by ``pages`` (delete keys as they are), written with pyarrow
+    as ONE parquet file of one row group under ``_staging/``. Returns
+    its name, or None when the task had no rows or its partition id is
+    in ``skip``: the part ids a resume finds committed, which are the
+    TASK ids chunk rows record (a planned ``part_id`` equals its task id
+    only on the exact route of :func:`engine._plan_encode`)."""
+    from pyspark import TaskContext
+
+    tc = TaskContext.get()
+    pid = tc.partitionId() if tc is not None else 0
+    if pid in skip:
+        for _ in batches:  # drained, never encoded
+            pass
+        return None
+    out = [b for b in (pages(batches) if pages else batches)
+           if b.num_rows]
+    if not out:
+        return None
+    staging = os.path.join(path, _STAGING_DIR)
+    os.makedirs(staging, exist_ok=True)
+    f = os.path.join(staging, f"stage-{pid:05d}-{uuid.uuid4().hex}.parquet")
+    table = pa.Table.from_batches(out)
+    # statistics of the payload columns prune nothing and cost ~3% of a
+    # chunk file's bytes
+    pq.write_table(table, f, write_statistics=[
+        c for c in table.column_names if c not in ("data", "aux", "bloom")])
+    return f
+
+
+def _stage_df(df, path: str, pages=None, skip=frozenset()) -> list[str]:
+    """Run :func:`_stage_task` as the ``mapInArrow`` body of every task
+    of ``df`` (one Spark job) and collect the staged file names."""
+
+    def task(batches):
+        f = _stage_task(batches, path, pages, skip)
+        if f is not None:
+            yield pa.RecordBatch.from_pydict({"file": [f]})
+
+    return [r[0] for r in df.mapInArrow(task, "file string").collect()]
 
 
 def _lineage_max_run(path: str) -> int:
@@ -871,47 +935,83 @@ def _append_lineage_rows(path: str, rows: list[tuple]) -> None:
     os.replace(tmp, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
 
 
-def _commit_lineage_rows(
-    path: str, run_id: int, rows: list[tuple], retry: str
-) -> None:
-    """THE lineage commit of run ``run_id``: append ``rows`` (its done
-    or delete rows plus any supersede markers) as one atomic file, then
-    check that the store is single-writer. Two committers that raced to
-    one run id interleave their chunk files under the same run dir and
-    double-commit its parts; if the run's committed rows differ from the
-    ones this call appended, every done part of the run is superseded by
-    a quarantine marker (``batch_id == run_id``) so readers stop seeing
-    the mixed run, and the commit raises. ``retry`` tells the caller
-    what to re-run. Local-filesystem layout, like the reader."""
+def _commit_run(
+    path: str, staged: Sequence[str], *, t0: float, retry: str,
+    schema: StructType | None = None, batch_id: int = -1,
+    plan: tuple[str | None, int | None] = (None, None),
+    supersede: tuple[dict, Sequence[int]] | None = None,
+    keys: pa.Schema | None = None,
+) -> tuple[int, list[tuple]] | None:
+    """THE driver side of every store write: publish the files
+    :func:`_stage_task` staged as ONE lineage run. In order: (1) a
+    replayed micro-batch (``batch_id`` >= 0, :func:`_batch_committed`)
+    removes its files and returns None; (2) a fresh run id; (3) the
+    files renamed into ``chunks/run_id=<r>/``, or ``deletes/`` for a
+    delete run (``keys``, its key schema: with no key staged an empty
+    key file lands, since readers take key columns from a footer); (4)
+    the lineage rows built from what landed, plus the
+    :func:`_supersede_markers` of ``supersede``; (5) those rows appended
+    as one atomic file, then the single-writer check: if the run's
+    committed rows differ (two committers raced to one run id), every
+    done part of the run is quarantined (``batch_id == run_id``) and
+    the commit raises, telling the caller to ``retry``; (6) ``schema``
+    recorded. A crash before (5) leaves only orphans no reader sees.
+    Returns ``(run_id, rows)``."""
+    from .lineage import _next_run_id, _record_run_schema
+
+    if batch_id >= 0 and _batch_committed(_done_rows(path), batch_id):
+        _remove_staged(staged)
+        return None
+    run_id = _next_run_id(None, path)
+    run_dir = _run_dir(path, _CHUNK_DIR if keys is None else _DELETES_DIR,
+                       run_id)
+    if staged or keys is not None:
+        os.makedirs(run_dir, exist_ok=True)
+    for f in staged:
+        os.replace(f, os.path.join(run_dir, os.path.basename(f)
+                                   .replace("stage-", "part-", 1)))
+    wall = time.time() - t0
+    if keys is None:
+        rows = _chunk_lineage_rows(path, run_id, batch_id, wall, plan)
+    else:
+        if not staged:
+            pq.write_table(keys.empty_table(), os.path.join(
+                run_dir, f"part-00000-{uuid.uuid4().hex}.parquet"))
+        rows = [(run_id, -1, -1, _parquet_rows(run_dir), 0, 0, 0, 0, wall,
+                 "delete")]
+    if supersede is not None:
+        rows += _supersede_markers(run_id, *supersede, wall)
     if rows:
         _append_lineage_rows(path, rows)
     lin = _lineage_table(path, ("run_id", "part_id", "status"))
     lin = lin.filter(pc.equal(lin.column("run_id"), int(run_id)))
     mine = sum(1 for r in rows if r[0] == run_id)
-    if lin.num_rows == mine:
-        return
-    done = lin.filter(pc.equal(lin.column("status"), "done"))
-    parts = sorted(set(done.column("part_id").to_pylist()))
-    quarantined = ""
-    if parts:
-        _append_lineage_rows(
-            path, _supersede_markers(run_id, {run_id: parts}, (), 0.0))
-        quarantined = (
-            f"Run {run_id} has been quarantined (all its partitions "
-            "superseded — readers no longer see it; expire_runs reclaims "
-            "its files). "
+    if lin.num_rows != mine:
+        done = lin.filter(pc.equal(lin.column("status"), "done"))
+        parts = sorted(set(done.column("part_id").to_pylist()))
+        quarantined = ""
+        if parts:
+            _append_lineage_rows(
+                path, _supersede_markers(run_id, {run_id: parts}, (), 0.0))
+            quarantined = (
+                f"Run {run_id} has been quarantined (all its partitions "
+                "superseded — readers no longer see it; expire_runs "
+                "reclaims its files). "
+            )
+        raise RuntimeError(
+            f"concurrent commit detected on run {run_id}: {lin.num_rows} "
+            f"lineage rows landed where this writer appended {mine}. "
+            f"{quarantined}Stores are single-writer — {retry}"
         )
-    raise RuntimeError(
-        f"concurrent commit detected on run {run_id}: {lin.num_rows} "
-        f"lineage rows landed where this writer appended {mine}. "
-        f"{quarantined}Stores are single-writer — {retry}"
-    )
+    if schema is not None:
+        _record_run_schema(path, run_id, schema)
+    return run_id, rows
 
 
 class ChunkStoreWriter(DataSourceArrowWriter):
     """``df.write.format("pysparkenc")``: each task stages its encoded
-    chunk rows as one file under ``_staging/``, and the driver's
-    ``commit`` publishes them as ONE lineage run (:meth:`_commit_run`).
+    chunk rows as one file (:func:`_stage_task`), and the driver's
+    ``commit`` publishes them as ONE lineage run (:func:`_commit_run`).
     With ``overwrite`` that run also supersedes every live part and
     delete run."""
 
@@ -920,118 +1020,49 @@ class ChunkStoreWriter(DataSourceArrowWriter):
         self.path = path
         self.schema = schema
         self.overwrite = overwrite
-        codec = options.get("codec")
-        self.codec_for: dict[str, str] = {}
-        self.default_codec = codec or None
-        self.compression = options.get("compression") or None
-        self.rows_per_chunk = int(options.get("rows_per_chunk", "4096"))
         tcb = options.get("target_chunk_bytes")
-        self.target_chunk_bytes = int(tcb) if tcb else None
         # .option("bloom", "doc_id,source") — per-chunk SBBF on those
         # columns; .option("bloom_fpp", "0.005") tunes the target rate
         bloom_opt = options.get("bloom") or ""
         fpp = float(options.get("bloom_fpp", "0.01"))
-        self.bloom_for: dict[str, float] = {
-            c.strip(): fpp for c in bloom_opt.split(",") if c.strip()
-        }
+        self.pages = engine._page_encoder(
+            schema.fields, {},
+            default_codec=options.get("codec") or None,
+            compression=options.get("compression") or None,
+            bloom_for={c.strip(): fpp
+                       for c in bloom_opt.split(",") if c.strip()},
+            rows_per_chunk=int(options.get("rows_per_chunk", "4096")),
+            target_chunk_bytes=int(tcb) if tcb else None,
+        )
         self.t0 = time.time()
         for f in schema.fields:
             engine._logical_of(f)  # fail on unsupported types driver-side
 
-    def _encode_iterator(
-        self, iterator: Iterator[pa.RecordBatch]
-    ) -> pa.Table | None:
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        out: list[pa.RecordBatch] = []
-        seq = 0
-        kcache: dict = {}  # per-task FSST symbol reuse across pages
-        for batch in iterator:
-            if batch.num_rows == 0:
-                continue
-            if self.target_chunk_bytes:
-                row_b = max(1.0, batch.nbytes / batch.num_rows)
-                raw = max(512, min(65536, int(self.target_chunk_bytes / row_b)))
-                step = 1 << (raw.bit_length() - 1)
-            else:
-                step = self.rows_per_chunk or batch.num_rows
-            for start in range(0, batch.num_rows, step):
-                sub = batch.slice(start, step)
-                out.append(
-                    engine._encode_arrow_batch(
-                        sub, self.schema.fields, pid, seq, None,
-                        self.codec_for, self.default_codec, self.compression,
-                        self.bloom_for, kcache,
-                    )
-                )
-                seq += 1
-        return pa.Table.from_batches(out) if out else None
-
     def write(self, iterator: Iterator[pa.RecordBatch]) -> _FileCommit:
-        from pyspark import TaskContext
+        t0 = time.time()
+        f = _stage_task(iterator, self.path, self.pages)
+        return _FileCommit(() if f is None else (f,), t0)
 
-        table = self._encode_iterator(iterator)
-        if table is None:
-            return _FileCommit(())
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        # stage-then-publish: only the driver's commit renames into a
-        # run dir, so a task retried mid-write can never leave a
-        # half-written or duplicate file inside a run that then commits
-        staging = os.path.join(self.path, _STAGING_DIR)
-        os.makedirs(staging, exist_ok=True)
-        fname = os.path.join(
-            staging, f"stage-{pid:05d}-{uuid.uuid4().hex}.parquet"
-        )
-        pq.write_table(table, fname)
-        return _FileCommit((fname,))
-
-    def commit(self, messages) -> None:
-        self._commit_run(messages, -1)
-
-    def _commit_run(self, messages, batch_id: int) -> None:
-        """Publish the staged files as ONE lineage run on the driver: a
-        fresh run id (past every id in the lineage or on disk), the
-        files renamed into ``chunks/run_id=<r>/``, then the run's done
-        rows — tagged with ``batch_id``, plus the overwrite's supersede
-        markers — through :func:`_commit_lineage_rows`. The same
-        chunks-first-then-lineage commit as
-        :func:`pysparkenc.lineage.encode_with_lineage`: a crash before
-        the lineage rename leaves only invisible orphans. A micro-batch
-        (``batch_id`` >= 0) that already committed commits nothing
-        (:func:`_batch_committed`). The run's schema is recorded even
-        when no row landed, so an empty write reads back empty under
+    def commit(self, messages, batchId: int = -1) -> None:  # noqa: N803
+        """Publish the staged files as one run; ``batchId`` is the stream
+        sink's micro-batch (-1 for a batch write). The schema is recorded
+        even when no row landed, so an empty write reads back empty under
         its schema."""
-        from .lineage import _next_run_id, _record_run_schema
-
-        staged = [f for m in messages if m for f in m.files]
-        if batch_id >= 0 and _batch_committed(_done_rows(self.path),
-                                              batch_id):
-            _remove_staged(messages)
-            return
-        run_id = _next_run_id(None, self.path)
-        run_dir = _run_dir(self.path, _CHUNK_DIR, run_id)
-        for f in staged:
-            os.makedirs(run_dir, exist_ok=True)
-            os.replace(f, os.path.join(run_dir, os.path.basename(f)
-                                       .replace("stage-", "part-", 1)))
-        wall = time.time() - self.t0
-        markers = []
+        messages = [m for m in messages if m]
+        supersede = None
         if self.overwrite:
             live, dels = _lineage_plan(self.path)
-            markers = _supersede_markers(run_id, live, [r for r, _ in dels],
-                                         wall)
-        _commit_lineage_rows(
-            self.path, run_id,
-            _chunk_lineage_rows(self.path, run_id, batch_id, wall) + markers,
-            "re-run the write, which will commit under a fresh run id.",
+            supersede = (live, [r for r, _ in dels])
+        _commit_run(
+            self.path, [f for m in messages for f in m.files],
+            # the tasks may have started before this writer was built
+            t0=min([self.t0, *(m.t0 for m in messages)]),
+            retry="re-run the write, which will commit under a fresh run id.",
+            schema=self.schema, batch_id=int(batchId), supersede=supersede,
         )
-        _record_run_schema(self.path, run_id, self.schema)
 
-    def abort(self, messages) -> None:
-        _remove_staged(messages)
+    def abort(self, messages, batchId: int = -1) -> None:  # noqa: N803
+        _remove_staged(f for m in messages if m for f in m.files)
 
 
 class ChunkStoreStreamReader(DataSourceStreamReader):
@@ -1094,18 +1125,12 @@ class ChunkStoreStreamWriter(ChunkStoreWriter, DataSourceStreamArrowWriter):
     """Structured-Streaming sink: ``df.writeStream.format("pysparkenc")``.
 
     Each micro-batch commits one lineage run on the driver, its done
-    rows tagged with ``batchId`` (:meth:`ChunkStoreWriter._commit_run`).
+    rows tagged with ``batchId`` (:func:`_commit_run`).
     A replayed batch (a crash after the commit, before the checkpoint
     advanced) finds those rows, deletes its staged files and commits
     nothing — the replay rule of ``encode_with_lineage(batch_id=)``. A
     store takes one streaming query: two queries reuse batch ids.
     """
-
-    def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        self._commit_run(messages, int(batchId))
-
-    def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        _remove_staged(messages)
 
 
 # ---------------------------------------------------------------------------

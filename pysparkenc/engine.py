@@ -52,7 +52,7 @@ from __future__ import annotations
 
 import dataclasses
 import json
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -355,6 +355,10 @@ _PREIMAGE_CACHE: dict[int, list[int]] = {}
 
 # distinct leading-key values past which plan_partitions refuses to plan
 _MAX_PLAN_KEYS = 1_000_000
+
+# most encode partitions routed through slot preimages, so that task i
+# holds exactly the rows planned for part_id i; past it rows are hashed
+_EXACT_ROUTE_MAX = 8192
 
 
 def _slot_preimages(spark: SparkSession, n: int) -> list[int]:
@@ -772,9 +776,9 @@ def encode_table(
     placement honors each distinct part_id as its own Spark partition
     only up to 8192 distinct values; beyond that the route falls back to
     hashing part_id, which may co-locate distinct part_ids in one task
-    (chunk rows still record the user's part_id — only task placement
-    coarsens). Raise ``num_partitions`` structure upstream or pre-split
-    if >8192 exact groups are required.
+    (chunk rows record the task's partition id, so those part_ids share
+    its chunk groups). Raise ``num_partitions`` structure upstream or
+    pre-split if >8192 exact groups are required.
     ``num_partitions``: encode partitions (= encode tasks). The default
     is ``defaultParallelism``, so the encode stage runs as ONE wave of
     tasks: every task pays a fixed Python-boundary cost, and a second
@@ -788,6 +792,57 @@ def encode_table(
     3.50 -> 4.72 plain/enc. Decode order is unaffected (chunk tables
     are unordered; the engine's contract is set equality).
     """
+    planned, pages = _plan_encode(
+        df, partition_by, part_id_col, num_partitions, codec, group_key_col,
+        compression, rows_per_chunk, target_chunk_bytes, bloom, sort_by)
+    return planned.mapInArrow(pages, CHUNK_SCHEMA)
+
+
+def _page_encoder(
+    fields, codec_for: dict, default_codec: str | None = None,
+    compression: str | None = None, bloom_for: dict | None = None,
+    rows_per_chunk: int | None = 4096, target_chunk_bytes: int | None = None,
+    group_key_col: str | None = None,
+):
+    """The page loop of every encode task (:func:`encode_table` and
+    :func:`pysparkenc.datasource._stage_task`): a function that cuts each
+    Arrow batch into zero-copy row slices, one page group of chunk rows
+    each."""
+
+    def encode(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        tc = TaskContext.get()
+        pid = tc.partitionId() if tc is not None else 0
+        seq = 0
+        kcache: dict = {}  # per-task FSST symbol reuse across pages
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            gk = None
+            if group_key_col in batch.schema.names:
+                gk = str(batch.column(group_key_col)[0])
+            if target_chunk_bytes:
+                row_b = max(1.0, batch.nbytes / batch.num_rows)
+                raw = max(512, min(65536, int(target_chunk_bytes / row_b)))
+                step = 1 << (raw.bit_length() - 1)
+            else:
+                step = rows_per_chunk or batch.num_rows
+            for start in range(0, batch.num_rows, step):
+                sub = batch.slice(start, step)
+                yield _encode_arrow_batch(sub, fields, pid, seq, gk,
+                                          codec_for, default_codec,
+                                          compression, bloom_for, kcache)
+                seq += 1
+
+    return encode
+
+
+def _plan_encode(
+    df: DataFrame, partition_by=None, part_id_col=None, num_partitions=None,
+    codec=None, group_key_col=None, compression=None, rows_per_chunk=4096,
+    target_chunk_bytes=None, bloom=None, sort_by=None,
+) -> tuple[DataFrame, Callable]:
+    """:func:`encode_table` (same parameters) up to its encode stage: the
+    planned, clustered DataFrame and the page encoder."""
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
@@ -893,7 +948,7 @@ def encode_table(
     # — undoing the skew plan's balance. Routing through a hash-preimage
     # value per slot makes partition i hold exactly the rows with
     # part_id == i (tc.partitionId() below then equals the planned id).
-    if num_partitions <= 8192:
+    if num_partitions <= _EXACT_ROUTE_MAX:
         pre = _slot_preimages(spark, num_partitions)
         # literals MUST be LongType: Murmur3 of an int32 differs from the
         # int64 hash the preimages were probed against
@@ -927,39 +982,13 @@ def encode_table(
     if cluster:
         shuffled = shuffled.sortWithinPartitions(*cluster)
 
-    gk_col = group_key_col
     # part_id_col is layout metadata, not data — never encoded; interval
     # columns keep their ORIGINAL field (the batch carries the converted
     # ints, the logical string records the interval type)
     fields = [f for f in orig_fields if f.name != part_id_col]
-
-    def encode_iter(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        seq = 0
-        kcache: dict = {}  # per-task FSST symbol reuse across pages
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            gk = None
-            if gk_col is not None and gk_col in batch.schema.names:
-                gk = str(
-                    batch.column(batch.schema.get_field_index(gk_col))[0]
-                )
-            if target_chunk_bytes:
-                row_b = max(1.0, batch.nbytes / batch.num_rows)
-                raw = max(512, min(65536, int(target_chunk_bytes / row_b)))
-                step = 1 << (raw.bit_length() - 1)
-            else:
-                step = rows_per_chunk or batch.num_rows
-            for start in range(0, batch.num_rows, step):
-                sub = batch.slice(start, step)
-                yield _encode_arrow_batch(sub, fields, pid, seq, gk,
-                                          codec_for, default_codec,
-                                          compression, bloom_for, kcache)
-                seq += 1
-
-    return shuffled.mapInArrow(encode_iter, CHUNK_SCHEMA)
+    return shuffled, _page_encoder(
+        fields, codec_for, default_codec, compression, bloom_for,
+        rows_per_chunk, target_chunk_bytes, group_key_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1124,7 +1153,7 @@ def assemble_schema_from_meta(
 
     Nullability: a column is nullable when any chunk recorded nulls OR
     when some group lacks the column entirely (schema evolution — the
-    anchor rule decodes those groups' rows as nulls, so the recovered
+    page-group walk decodes those groups' rows as nulls, so the recovered
     field must admit them). ``total_groups`` is the EXACT number of
     distinct ``(part_id, chunk_id)`` groups across the store; callers
     that cannot supply it fall back to the per-column max, which is
@@ -1261,12 +1290,12 @@ def _walk_groups(
     decode each survivor, yielding a pa.Table of ``schema`` per group.
 
     Only the schema's chunk paths are decoded, from zero-copy views of
-    the Arrow buffers. Any other row of a group (the col_idx-0 anchor
-    of a group written before every requested column existed) only
-    supplies ``n_rows``. A footer that contradicts the encoder raises
-    :func:`_corrupt`: one ``n_rows`` per group, ``n_values`` equal to
-    the present slots (all slots for a validity chunk), ``extra`` a
-    JSON object."""
+    the Arrow buffers. Any other row of a group only supplies
+    ``n_rows``, so a group written before every requested column
+    existed decodes as all-null rows. A footer that contradicts the
+    encoder raises :func:`_corrupt`: one ``n_rows`` per group,
+    ``n_values`` equal to the present slots (all slots for a validity
+    chunk), ``extra`` a JSON object."""
     if table.num_rows == 0:
         return
     out_schema = _arrow_schema(schema)
@@ -1496,16 +1525,15 @@ def _decode_chunks(
         schema = output_schema_of_chunks(chunks_df)
     schema, iv_restore = arrow_safe_schema(schema)
     requested = F.col("col").isin(_requested_chunks(schema))
-    # schema-evolution anchor: a group written before EVERY requested
-    # column existed (appended store, later batches added the column)
-    # must still decode — as all-null rows — so it needs one chunk to
-    # carry its row count. col_idx 0 exists in every group.
-    chunks_df = chunks_df.where(requested | (F.col("col_idx") == 0))
-    # the walk never reads an anchor's payload: nulling it here only
-    # cuts the bytes the shuffle moves
-    chunks_df = chunks_df.withColumn(
-        "data", F.when(requested, F.col("data"))
-    ).withColumn("aux", F.when(requested, F.col("aux")))
+    # any chunk row carries its page group's n_rows, so a group written
+    # before EVERY requested column existed (an appended store whose
+    # later runs added the column) still decodes, as all-null rows: keep
+    # each column's primary chunk (no '#' in its path; every group holds
+    # one). The walk never reads the payloads of the other columns:
+    # nulling them here only cuts the bytes the shuffle moves
+    chunks_df = chunks_df.where(
+        requested | ~F.col("col").contains("#")).withColumns({
+            c: F.when(requested, F.col(c)) for c in ("data", "aux", "bloom")})
     decode_pages = _group_decoder(schema)
     out_schema = schema
     if part_col is not None:
@@ -2037,12 +2065,11 @@ def distinct_values(
             .select(F.lit(None).cast(field.dataType).alias(col))
         )
         # schema evolution: chunk groups written BEFORE the column
-        # existed decode as all-null rows (the col_idx-0 anchor rule in
-        # decode_table) — they have no chunk for `col` at all, so they
-        # contribute NULL here exactly as a full decode would
+        # existed decode as all-null rows — they have no chunk for `col`
+        # at all, so they contribute NULL here exactly as a full decode
+        # would
         evolved_null = (
-            chunks_df.where(F.col("col_idx") == 0)
-            .select("part_id", "chunk_id")
+            chunks_df.select("part_id", "chunk_id")
             .join(
                 meta.select("part_id", "chunk_id").distinct(),
                 ["part_id", "chunk_id"],

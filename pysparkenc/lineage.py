@@ -9,23 +9,23 @@ n_values, plain_bytes, enc_bytes, n_chunks, wall_sec, status,
 partition_by, num_partitions)``; the last two record the plan a resume
 must reuse.
 
-Commit protocol (Iceberg-snapshot-shaped, on plain parquet dirs):
+Commit protocol (Iceberg-snapshot-shaped, on plain parquet dirs), run by
+every store write (:mod:`pysparkenc.datasource`'s one writer):
 
-- chunk rows land under ``chunks/run_id=<r>/`` first, through the Spark
-  write — the only Spark job of a commit;
-- the commit record is then built on the driver with pyarrow from the
-  run's chunk METADATA columns (one lineage row per partition, from what
-  actually landed) and published as ONE parquet file, written under a
-  dot-temp name and atomically renamed into ``lineage/`` — the lineage
-  row IS the commit record, and a commit is visible whole or not at all;
+- each task writes its rows with pyarrow as ONE file under ``_staging/``
+  — the only Spark job of a commit;
+- the driver renames them into ``chunks/run_id=<r>/``, builds the commit
+  record with pyarrow from their chunk METADATA (one lineage row per
+  partition, from what actually landed) and publishes it as ONE parquet
+  file, atomically renamed into ``lineage/`` — the lineage row IS the
+  commit record, and a commit is visible whole or not at all;
 - which chunks and delete runs are visible is decided in ONE place,
   :func:`pysparkenc.datasource._lineage_plan`, on the driver with
   pyarrow: a (run_id, part_id) is live when it has a ``done`` row and no
   ``superseded`` marker, so orphan chunks from a crashed run are
   invisible and append-after-crash never double-counts. Every reader
   and maintenance call here plans from it;
-- resume skips the part ids the lineage records as done and re-encodes
-  only missing partitions;
+- resume encodes only the part ids the lineage records no done row for;
 - replay checks, run-id allocation, the schema-evolution guard and the
   single-writer collision check all read the lineage and chunk metadata
   with pyarrow on the driver (:mod:`pysparkenc.datasource`), which, like
@@ -44,6 +44,7 @@ import time
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -59,7 +60,7 @@ from .engine import (
     arrow_safe_schema,
     count_rows,
     distinct_values,
-    encode_table,
+    _plan_encode,
     plan_scan,
     require_flat_scalar,
     restore_intervals,
@@ -107,8 +108,8 @@ def _record_run_schema(path: str, run_id: int, schema) -> None:
 
 
 def run_schemas(path: str) -> dict[int, "StructType"]:
-    """Per-run schemas recorded by :func:`encode_with_lineage` /
-    :func:`compact_store`, keyed by run id."""
+    """Per-run schemas every data run records at commit
+    (:func:`pysparkenc.datasource._commit_run`), keyed by run id."""
     import os
 
     d = _schemas_dir(path)
@@ -221,16 +222,15 @@ def _on_disk_run_ids(path: str) -> set[int]:
 
 
 def _next_run_id(spark: SparkSession | None, path: str) -> int:
-    """Allocate the next run id: one past the max run id visible in the
-    lineage OR on disk. The on-disk scan closes the crash window between
-    a run's data write and its lineage append: a writer killed there
-    leaves committed-invisible orphan files under ``run_id=<r>``, and a
-    retry that REUSED ``r`` would interleave its files with the orphans —
-    decode survives (pages key last-wins per column) but the run's
-    lineage metrics and every footer-metadata aggregate would double.
-    Skipping disk-occupied ids makes orphans permanently invisible
-    instead; :func:`vacuum_store` reclaims them. Pure pyarrow and file
-    listing: ``spark`` is unused (the data-source writer passes None)."""
+    """Allocate the next run id at commit: one past the max run id in the
+    lineage OR on disk (chunk or delete-key dirs, committed or not). The
+    on-disk scan closes the crash window between a run's rename into
+    ``run_id=<r>`` and its lineage append: a retry that REUSED ``r``
+    would interleave its files with the orphans — decode survives but
+    the run's lineage metrics and every footer-metadata aggregate would
+    double. Skipping disk-occupied ids makes orphans permanently
+    invisible instead; :func:`vacuum_store` reclaims them. Pure pyarrow
+    and file listing: ``spark`` is unused (the commit passes None)."""
     return max(datasource._lineage_max_run(path),
                *_on_disk_run_ids(path), 0) + 1
 
@@ -315,7 +315,7 @@ def encode_with_lineage(
     :func:`pysparkenc.engine.encode_table`).
 
     Returns run metrics. ``drop_part_ids`` is a test-only fault injector:
-    those partitions' output is discarded before commit, simulating a job
+    those partitions' tasks encode nothing, simulating a job
     killed after a partial run — the next call with ``resume=True``
     encodes only the missing partitions.
 
@@ -325,34 +325,38 @@ def encode_with_lineage(
     replayed with the same batch_id — and must become a no-op, or readers
     see every row twice. A committed batch is detected by its done lineage
     rows; that detection is sound because the lineage append itself is a
-    single-file atomic commit (see below) — any visible done row for a
-    batch implies ALL of its rows are visible. The pre-commit crash window
-    is covered by the chunks-then-lineage protocol (orphan chunks stay
-    invisible and the replay re-encodes everything).
+    single-file atomic commit — any visible done row for a batch implies
+    ALL of its rows are visible. The pre-commit crash window is covered
+    by the chunks-then-lineage protocol (orphan chunks stay invisible
+    and the replay re-encodes everything).
     """
     spark = df.sparkSession
     t0 = time.time()
     # replay and resume both read the done rows, with pyarrow: the
-    # partition plan's aggregate and the chunk write are this call's
-    # only Spark jobs
+    # partition plan's aggregate and the encode-and-stage job are this
+    # call's only Spark jobs
     done = datasource._done_rows(
         path, ("part_id", "partition_by", "num_partitions"))
-    if batch_id is not None:
-        already = datasource._batch_committed(done, batch_id)
-        if already:
-            return {
-                "run_id": -1,
-                "batch_id": int(batch_id),
-                "wall_sec": time.time() - t0,
-                "partitions": 0,
-                "rows": 0,
-                "values": 0,
-                "plain_bytes": 0,
-                "enc_bytes": 0,
-                "skipped_partitions": already,
-                "compression_ratio": 1.0,
-                "replayed_batch": True,
-            }
+
+    def replayed() -> dict:
+        return {
+            "run_id": -1,
+            "batch_id": int(batch_id),
+            "wall_sec": time.time() - t0,
+            "partitions": 0,
+            "rows": 0,
+            "values": 0,
+            "plain_bytes": 0,
+            "enc_bytes": 0,
+            "skipped_partitions": datasource._batch_committed(
+                datasource._done_rows(path), batch_id),
+            "compression_ratio": 1.0,
+            "replayed_batch": True,
+        }
+
+    # checked before the encode too, so a replay encodes nothing
+    if batch_id is not None and datasource._batch_committed(done, batch_id):
+        return replayed()
     datasource._check_schema_evolution(path, df.schema)
     done_parts = (set(done.column("part_id").to_pylist()) if resume
                   else set())
@@ -361,33 +365,24 @@ def encode_with_lineage(
         num_partitions = _resume_plan(done, plan_by, num_partitions)
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    run_id = _next_run_id(spark, path)
-    chunks = encode_table(
+    planned, pages = _plan_encode(
         df, partition_by=partition_by, num_partitions=num_partitions,
         codec=codec, compression=compression, rows_per_chunk=rows_per_chunk,
         target_chunk_bytes=target_chunk_bytes, sort_by=sort_by, bloom=bloom,
     )
-    skip = done_parts | {int(p) for p in drop_part_ids or ()}
-    if skip:
-        chunks = chunks.where(~F.col("part_id").isin(sorted(skip)))
-
-    (
-        chunks.withColumn("run_id", F.lit(run_id))
-        .write.mode("append")
-        .partitionBy("run_id")
-        .parquet(datasource._chunk_dir(path))
+    # the tasks of committed (resume) and dropped (fault injection)
+    # parts encode nothing
+    skip = frozenset(done_parts | {int(p) for p in drop_part_ids or ()})
+    committed = datasource._commit_run(
+        path, datasource._stage_df(planned, path, pages, skip), t0=t0,
+        retry="re-run the encode, which will commit under a fresh run id.",
+        schema=df.schema, batch_id=-1 if batch_id is None else int(batch_id),
+        plan=(plan_by, num_partitions),
     )
+    if committed is None:
+        return replayed()
+    run_id, rows = committed
     wall = time.time() - t0
-    # lineage commit AFTER chunk rows land, built from what landed
-    rows = datasource._chunk_lineage_rows(
-        path, run_id, -1 if batch_id is None else int(batch_id), wall,
-        (plan_by, num_partitions),
-    )
-    datasource._commit_lineage_rows(
-        path, run_id, rows,
-        "re-run the encode, which will commit under a fresh run id.",
-    )
-    _record_run_schema(path, run_id, df.schema)
     # rows are LINEAGE_SCHEMA tuples: n_rows, n_values, plain_bytes,
     # enc_bytes sit at 3..6
     plain = sum(r[5] for r in rows)
@@ -431,10 +426,10 @@ def delete_rows(
     not rewrite the store.
 
     A delete is itself a lineage-committed run: the distinct key tuples
-    land under ``deletes/run_id=<r>/`` first, then ONE single-file
-    lineage append with ``status='delete'`` publishes them (same
-    chunks-then-lineage protocol as data — a crash before the lineage
-    append leaves orphan key files that readers never see).
+    land under ``deletes/run_id=<r>/`` first (an empty key set as one
+    empty file), then ONE lineage file with ``status='delete'`` publishes
+    them — the commit of every store write, so a crash before it leaves
+    orphan key files that readers never see.
 
     Sequencing matches Iceberg: the delete applies only to rows written
     by runs with ``run_id < r``. A row with the same key appended AFTER
@@ -492,26 +487,19 @@ def delete_rows(
                 "keys DataFrame to the store's column types before "
                 "committing the delete"
             )
-    run_id = _next_run_id(spark, path)
     keys = keys_df.select(*key_cols).distinct()
-    key_dir = datasource._run_dir(path, datasource._DELETES_DIR, run_id)
-    # overwrite is belt-and-braces: _next_run_id never hands out an id
-    # with files already on disk (a crashed attempt's orphan key files
-    # keep their id forever; vacuum_store reclaims them), so this dir is
-    # always fresh — overwrite guards the invariant anyway
-    keys.write.mode("overwrite").parquet(key_dir)
-    n = datasource._parquet_rows(key_dir)
     # Stores are SINGLE-WRITER (same contract as encode/compact): two
     # concurrent committers can race _next_run_id to the same id, and
-    # the overwrite key-file write means only the last writer's list
-    # survives — the commit check fails LOUDLY then, since a silently
-    # dropped takedown list is the one unacceptable outcome.
-    datasource._commit_lineage_rows(
-        path, run_id,
-        [(run_id, -1, -1, n, 0, 0, 0, 0, time.time() - t0, "delete")],
-        "only the last-written key files survive; re-apply this delete "
-        "list.",
+    # then both key lists land in the one delete run — the commit check
+    # fails LOUDLY, since a takedown list must never commit silently
+    # mixed with another.
+    run_id, rows = datasource._commit_run(
+        path, datasource._stage_df(keys, path), t0=t0,
+        retry="both writers' key files landed in one delete run; re-apply "
+        "this delete list.",
+        keys=to_arrow_schema(keys.schema),
     )
+    n = rows[0][3]
     return {"run_id": run_id, "keys": int(n), "wall_sec": time.time() - t0}
 
 
@@ -886,7 +874,8 @@ def compact_store(
     lineage append publishes BOTH the new run's done rows AND a
     'superseded' marker per old (run_id, part_id) — so readers switch
     from the old layout to the new one in a single rename; a crash
-    before it leaves only invisible orphan chunks. Markers carry the
+    before it leaves only invisible orphan chunks, and a quarantined
+    (collided) commit's markers supersede nothing. Markers carry the
     compaction run id in ``batch_id``, which scopes them for time
     travel: ``as_of_run`` BEFORE the compaction still reads the original
     layout byte-for-byte; AFTER it, only the compacted run.
@@ -956,31 +945,23 @@ def compact_store(
     # files are never opened
     df = read_store(spark, path, schema, as_of_run=as_of_run,
                     runs=tuple(sorted(selected)))
-    run_id = _next_run_id(spark, path)
-    chunks = encode_table(
+    planned, pages = _plan_encode(
         df, partition_by=partition_by, num_partitions=num_partitions,
         codec=codec, compression=compression,
         rows_per_chunk=None if target_chunk_bytes else 4096,
         target_chunk_bytes=target_chunk_bytes, sort_by=sort_by,
     )
-    (
-        chunks.withColumn("run_id", F.lit(run_id))
-        .write.mode("append")
-        .partitionBy("run_id")
-        .parquet(datasource._chunk_dir(path))
+    # ONE lineage file = the atomic publish-and-supersede commit; a
+    # delete some REMAINING run still predates stays live: its keys keep
+    # applying to the runs this compaction didn't rewrite
+    run_id, rows = datasource._commit_run(
+        path, datasource._stage_df(planned, path, pages), t0=t0,
+        retry="re-run the compaction, which will commit under a fresh run "
+        "id.",
+        schema=df.schema,
+        supersede=({r: live[r] for r in selected}, dead_deletes),
     )
-    wall = time.time() - t0
-    rows = datasource._chunk_lineage_rows(path, run_id, -1, wall)
-    # a delete some REMAINING run still predates stays live: its keys
-    # keep applying to the runs this compaction didn't rewrite
-    markers = datasource._supersede_markers(
-        run_id, {r: live[r] for r in selected}, dead_deletes, wall)
-    # ONE file = the atomic publish-and-supersede commit
-    datasource._commit_lineage_rows(
-        path, run_id, rows + markers,
-        "re-run the compaction, which will commit under a fresh run id.",
-    )
-    _record_run_schema(path, run_id, df.schema)
+    rows = [r for r in rows if r[9] == "done"]
     return {
         "run_id": run_id,
         "partitions": len(rows),
@@ -1028,20 +1009,21 @@ def vacuum_store(
 ) -> dict:
     """Reclaim ORPHANED files (Iceberg ``remove_orphan_files``): run
     directories — chunk files or delete-key files — with no lineage row
-    at all, the debris of a writer killed between its data write and its
-    lineage append. The commit protocol already makes them invisible to
-    every reader (and :func:`_next_run_id` never reuses their ids), so
-    this is purely a storage reclaim; query results are identical before
-    and after, which the test pins row-for-row.
+    at all, the debris of a writer killed between its rename into the
+    run dir and its lineage append. The commit protocol already makes
+    them invisible to every reader (and :func:`_next_run_id` never
+    reuses their ids), so this is purely a storage reclaim; query
+    results are identical before and after, which the test pins.
 
     ``grace_sec`` protects an IN-FLIGHT writer that simply hasn't
     committed yet: a directory whose newest file is younger than the
     grace window is kept (Iceberg's ``older_than`` contract; default one
-    day). Stale Spark ``_temporary`` job-attempt dirs in the same
-    layout, left by killed write jobs, are removed under the same age
-    rule. Complements :func:`expire_runs`, which reclaims SUPERSEDED
-    *committed* runs — together they bound a maintained store's disk
-    footprint to its live data plus the time-travel window.
+    day). Stale ``_staging/`` files of killed write tasks, and the Spark
+    ``_temporary`` job dirs stores written before pyarrow staging may
+    hold, go under the same age rule. Complements :func:`expire_runs`,
+    which reclaims SUPERSEDED *committed* runs — together they bound a
+    maintained store's disk footprint to its live data plus the
+    time-travel window.
 
     Local-filesystem stores only; object stores would route listing +
     deletes through their own client."""
@@ -1090,15 +1072,16 @@ def vacuum_store(
             if rid not in committed and stale(d):
                 reclaim(d)
                 vacuumed[kind].append(rid)
-        # stale job-attempt debris of killed Spark writes
+        # stale job-attempt debris of killed Spark file-writer jobs
+        # (stores written before every write staged with pyarrow)
         tmp = os.path.join(path, kind, "_temporary")
         if os.path.isdir(tmp) and stale(tmp):
             reclaim(tmp)
             removed_tmp += 1
-    # stale _staging files: the data-source writers (batch lineage
-    # appends + the streaming sink) stage task output there and publish
-    # by rename at commit — a killed task/job leaves its stage files
-    # behind. Same age rule; never referenced by any commit record.
+    # stale _staging files: every store write stages task output there
+    # and publishes by rename at commit — a killed task/job leaves its
+    # stage files behind. Same age rule; never referenced by any commit
+    # record.
     staged = 0
     staging = os.path.join(path, "_staging")
     if os.path.isdir(staging):

@@ -5,7 +5,6 @@ naming the chunk, on both read paths: the file-local reader
 from __future__ import annotations
 
 import glob
-import os
 import re
 import shutil
 
@@ -42,8 +41,6 @@ def _forge(src: str, dst: str, col: str, field: str, value) -> None:
     (row,) = [r for r in rows if r["col"] == col and r["chunk_id"] == 1]
     row[field] = value
     pq.write_table(pa.Table.from_pylist(rows, schema=t.schema), f)
-    # Hadoop's checksum sidecar would reject the rewritten file
-    os.remove(os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc"))
 
 
 # what the encoder writes: one n_rows per page group, one value per

@@ -883,3 +883,72 @@ def test_delete_drop_mask_matches_tuple_set_model():
         assert got == want, (rows, keys)
 
     check()
+
+
+def test_stream_run_wall_counts_from_task_start(spark, tmp_path):
+    """A micro-batch's run records ``wall_sec`` from the earliest task
+    start its commit messages carry, not from when the driver built the
+    writer, so the encode time shows in ``snapshots``."""
+    import dataclasses
+
+    import pyarrow as pa
+
+    from pysparkenc.datasource import ChunkStoreStreamWriter
+    from pysparkenc.lineage import snapshots
+
+    store = str(tmp_path / "store")
+    w = ChunkStoreStreamWriter(store, spark.range(1).schema, {}, False)
+    msg = w.write(iter([pa.record_batch({"id": [1, 2, 3]})]))
+    w.commit([dataclasses.replace(msg, t0=msg.t0 - 2.0)], batchId=0)
+    (snap,) = snapshots(spark, store).collect()
+    assert snap["wall_sec"] >= 2.0
+
+
+def test_every_store_write_stages_with_pyarrow(spark, tmp_path):
+    """One writer: ``encode_with_lineage``, ``compact_store``,
+    ``delete_rows`` (an empty key set included) and the ``format``
+    append, overwrite and ``writeStream`` each land their files as
+    ``part-<pid>-<uuid>.parquet`` in the run dir. Spark's file writer
+    leaves nothing behind (no ``_SUCCESS``, ``.crc`` or ``_temporary``)
+    and ``_staging/`` ends empty."""
+    from pysparkenc.lineage import (
+        compact_store,
+        delete_rows,
+        encode_with_lineage,
+        read_store,
+    )
+    from pysparkenc.synth import make_tokens_table
+
+    store, src, ckpt = (str(tmp_path / x) for x in ("store", "src", "ckpt"))
+    df = make_tokens_table(spark, 120, seed=31)
+    df.write.parquet(src)
+    df = spark.read.parquet(src)
+    encode_with_lineage(df, store, partition_by=("source", "doc_id"),
+                        num_partitions=2)
+    delete_rows(spark, store, df.limit(3).select("doc_id"))
+    delete_rows(spark, store, df.limit(0).select("doc_id"))
+    compact_store(spark, store, num_partitions=2)
+    df.write.format("pysparkenc").mode("append").save(store)
+    q = (spark.readStream.schema(df.schema).parquet(src)
+         .writeStream.format("pysparkenc").option("path", store)
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert q.exception() is None
+    df.write.format("pysparkenc").mode("overwrite").save(store)
+    assert read_store(spark, store).count() == 120
+
+    name = re.compile(r"part-\d{5}-[0-9a-f]{32}\.parquet")
+    runs = 0
+    for kind in ("chunks", "deletes"):
+        for d in os.listdir(os.path.join(store, kind)):
+            assert re.fullmatch(r"run_id=\d+", d), (kind, d)
+            files = os.listdir(os.path.join(store, kind, d))
+            assert files and all(name.fullmatch(f) for f in files), files
+            runs += 1
+    assert runs == 7  # 5 data runs, 2 delete runs
+    for root, dirs, files in os.walk(store):
+        for f in dirs + files:
+            assert f != "_SUCCESS" and f != "_temporary", root
+            assert not f.endswith(".crc"), os.path.join(root, f)
+    assert not os.listdir(os.path.join(store, "_staging"))

@@ -651,3 +651,32 @@ def test_keyless_committed_delete_raises_value_error(
         call(spark, keyless_delete_store)
     assert sorted(os.listdir(f"{keyless_delete_store}/lineage")) == (
         lineage_files)
+
+
+@pytest.mark.parametrize("rewrite", ["compact", "overwrite"])
+def test_quarantined_rewrite_withdraws_its_markers(spark, tmp_path,
+                                                   monkeypatch, rewrite):
+    """A compaction or overwrite whose commit collides with a committed
+    run is quarantined together with that run, and the supersede
+    markers it committed on the OTHER runs supersede nothing: the store
+    still reads runs 1 and 2, where it read empty when the markers
+    stayed in force."""
+    import pyarrow as pa
+
+    import pysparkenc.lineage as L
+    from pysparkenc.datasource import ChunkStoreWriter
+
+    store = str(tmp_path / "store")
+    for lo in (0, 10, 20):  # runs 1, 2 and 3
+        encode_with_lineage(spark.range(lo, lo + 10), store,
+                            num_partitions=1, resume=False)
+    monkeypatch.setattr(L, "_next_run_id", lambda s, p: 3)
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        if rewrite == "compact":
+            compact_store(spark, store, num_partitions=1)
+        else:
+            w = ChunkStoreWriter(store, spark.range(1).schema, {}, True)
+            w.commit([w.write(iter([pa.record_batch({"id": [100, 101]})]))])
+    monkeypatch.undo()
+    got = sorted(r["id"] for r in read_store(spark, store).collect())
+    assert got == list(range(20))

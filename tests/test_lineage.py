@@ -82,6 +82,31 @@ def test_partial_run_resumes_only_missing(spark, tokens_df, tmp_path):
     assert got == orig
 
 
+@pytest.mark.parametrize("partition_by", [("source", "doc_id"), None])
+def test_resume_on_hashed_route_skips_by_task(spark, tokens_df, tmp_path,
+                                              monkeypatch, partition_by):
+    """Past ``engine._EXACT_ROUTE_MAX`` encode partitions, rows are hashed
+    to tasks, so a row's planned ``part_id`` no longer names the task
+    that encodes it. The part ids chunk rows and the lineage record are
+    task ids, and a crash and its resume must skip by them: every row
+    lands exactly once."""
+    import pysparkenc.engine as E
+
+    monkeypatch.setattr(E, "_EXACT_ROUTE_MAX", 1)
+    path = str(tmp_path / "enc")
+    kw = dict(partition_by=partition_by, num_partitions=4)
+    m1 = encode_with_lineage(tokens_df, path,
+                             drop_part_ids=frozenset({0}), **kw)
+    assert 0 not in _done_part_ids(spark, path)
+    m2 = encode_with_lineage(tokens_df, path, **kw)
+    assert m2["skipped_partitions"] == m1["partitions"]
+    assert m1["rows"] + m2["rows"] == N_DOCS
+    decoded = decode_table(read_committed_chunks(spark, path),
+                           tokens_df.schema)
+    ids = [r["doc_id"] for r in decoded.collect()]
+    assert sorted(ids) == sorted(r["doc_id"] for r in tokens_df.collect())
+
+
 def test_orphan_chunks_invisible_without_lineage(spark, tokens_df, tmp_path):
     path = str(tmp_path / "enc")
     encode_with_lineage(

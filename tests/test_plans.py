@@ -347,7 +347,6 @@ def test_scan_table_prunes_before_decode(spark, tmp_path, filter_pushdown):
     same chunks fails its CRC check. ``scan_table`` prunes inside its
     one Python decode stage, with no join."""
     import glob
-    import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -374,8 +373,6 @@ def test_scan_table_prunes_before_decode(spark, tmp_path, filter_pushdown):
     assert low["num_max"] < 1000
     low["data"] = bytes([low["data"][0] ^ 0xFF]) + low["data"][1:]
     pq.write_table(pa.Table.from_pylist(rows, schema=t.schema), f)
-    # Hadoop's checksum sidecar would reject the rewritten file
-    os.remove(os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc"))
 
     where = [("k", ">=", 1000)]
     want = sorted(map(tuple, df.where(F.col("k") >= 1000).collect()))
@@ -510,14 +507,14 @@ def test_compaction_decodes_file_locally(spark, maintained_store,
     import pysparkenc.lineage as L
 
     plans = []
-    encode = L.encode_table
+    plan_encode = L._plan_encode
 
     def spy(df, **kw):
-        out = encode(df, **kw)
-        plans.append(plan_of(out))
+        out = plan_encode(df, **kw)
+        plans.append(plan_of(out[0]))
         return out
 
-    monkeypatch.setattr(L, "encode_table", spy)
+    monkeypatch.setattr(L, "_plan_encode", spy)
     jobs = _jobs_in(spark, f"compact-{runs}", lambda: L.compact_store(
         spark, maintained_store, runs=runs))
     assert jobs <= 8

@@ -1,7 +1,7 @@
 """Schema evolution on decode: chunk groups written before a column
 existed read as typed nulls (the parquet/iceberg reader contract), and a
-projection of ONLY the evolved column still returns every row — old
-groups ride on a payload-free anchor chunk for their row count."""
+projection of ONLY the evolved column still returns every row — every
+chunk row of an old group carries the group's row count."""
 
 from __future__ import annotations
 
@@ -70,7 +70,8 @@ def test_projection_of_only_evolved_column_keeps_all_rows(spark, evolved):
     merged, schema = evolved
     proj = StructType([StructField("score", IntegerType(), True)])
     out = decode_table(merged, proj)
-    assert out.count() == 500  # anchor carries the 300 pre-evolution rows
+    # any chunk row carries its group's n_rows: the 300 pre-evolution rows
+    assert out.count() == 500
     assert out.where(F.col("score").isNull()).count() == 300
     assert out.agg(F.sum("score")).first()[0] == sum(
         2 * k for k in range(300, 500)
@@ -209,8 +210,8 @@ def test_lineage_append_adds_column_and_records_schemas(spark, tmp_path):
 
 def test_lineage_append_may_omit_columns(spark, tmp_path):
     """A later run may also DROP a column: its groups decode the
-    missing column as typed nulls under the union schema, same anchor
-    rule as adding."""
+    missing column as typed nulls under the union schema, the same rule
+    as adding: any chunk row of a group supplies its row count."""
     from pyspark.sql import functions as F
 
     from pysparkenc.lineage import encode_with_lineage, read_store
@@ -292,8 +293,9 @@ def test_datasource_explicit_late_column_schema_keeps_old_rows(
 ):
     """Reading an evolved lineage store through the data source with an
     explicit schema of ONLY the late column must still return every
-    row (old groups as nulls) — the anchor rule, mirrored from
-    decode_table into the data source's per-file parquet filter."""
+    row (old groups as nulls): any chunk row of a group supplies its
+    row count, in decode_table and in the data source's per-file
+    parquet filter alike."""
     from pysparkenc.datasource import register
     from pysparkenc.lineage import encode_with_lineage
 
@@ -317,3 +319,37 @@ def test_datasource_explicit_late_column_schema_keeps_old_rows(
         r["quality"] for r in ds.where(F.col("quality").isNotNull()).collect()
     )
     assert got == [0, 2, 4, 6, 8]
+
+
+def test_struct_first_groups_read_as_nulls(spark, tmp_path):
+    """A leading struct column without nulls writes no col_idx-0 chunk
+    (its first chunk is ``st.x``), yet a page group written before
+    ``score`` existed still reads its rows, as nulls, on every read
+    path: any chunk row of a group supplies its row count."""
+    from pysparkenc.datasource import register
+    from pysparkenc.lineage import (
+        encode_with_lineage,
+        read_committed_chunks,
+        read_store,
+    )
+
+    register(spark)
+    store = str(tmp_path / "store")
+    st = F.struct(F.col("id").alias("x")).alias("st")
+    encode_with_lineage(spark.range(300).select(st), store,
+                        num_partitions=2, resume=False)
+    encode_with_lineage(
+        spark.range(200).select(st, (F.col("id") * 2).alias("score")),
+        store, num_partitions=2, resume=False)
+    schema = StructType([StructField("score", LongType(), True)])
+    reads = {
+        "read_store": read_store(spark, store, columns=["score"]),
+        "decode_table": decode_table(read_committed_chunks(spark, store),
+                                     schema),
+        "format": spark.read.format("pysparkenc").schema(schema)
+        .load(store),
+    }
+    for how, df in reads.items():
+        got = [r["score"] for r in df.collect()]
+        assert len(got) == 500, how
+        assert sum(v is None for v in got) == 300, how

@@ -1,8 +1,9 @@
 """Model-based test of the lineage store's table-maintenance surface.
 
-Random interleavings of append / delete / upsert / compact (full or of
-a random subset of live runs) / expire / ``format("pysparkenc")`` append
-and overwrite / ``writeStream.format("pysparkenc")`` micro-batches run
+Random interleavings of append (or a crashed encode and its resume) /
+delete / upsert / compact (full or of a random subset of live runs) /
+expire / ``format("pysparkenc")`` append and overwrite /
+``writeStream.format("pysparkenc")`` micro-batches run
 against both the real store and a plain Python dict model of
 "key -> current row"; after every
 scenario the visible table must equal the model exactly, and the
@@ -49,12 +50,18 @@ def _run_scenario(spark, store, seed):
         next_id += n
         return out
 
-    # always start with an append so every op has something to act on.
-    # ds_append / ds_overwrite drive the data-source writer,
+    # always start with an append so every op has something to act on:
+    # a plain one, or a crash_resume (a run that loses part 0, then the
+    # resume that encodes it). A resume skips the part ids ANY run
+    # committed, so it only resumes the store's first dataset. That
+    # choice draws from its own generator and consumes what an append
+    # does, so `rng` deals every seed the op list it dealt before the
+    # op existed. ds_append / ds_overwrite drive the data-source writer,
     # stream_append its stream sink (one checkpoint and one source dir
     # per scenario, so batch ids continue) and vacuum the orphan
     # reclaim — all must compose with everything else in any order
-    ops = ["append"] + [
+    ops = [random.Random(f"crash_resume-{seed}").choice(
+        ["append", "crash_resume"])] + [
         rng.choice(["append", "delete", "upsert", "compact",
                     "compact_runs", "expire", "ds_append", "ds_overwrite",
                     "stream_append", "vacuum"])
@@ -76,6 +83,18 @@ def _run_scenario(spark, store, seed):
             model.update(items)
             committed.add(m["run_id"])
             snaps.append((m["run_id"], dict(model), False))
+        elif op == "crash_resume":
+            items = [(k, rng.randrange(1000)) for k in fresh(rng.randrange(3, 9))]
+            rows = _mk_rows(spark, items)
+            crashed = encode_with_lineage(rows, store, num_partitions=2,
+                                          drop_part_ids=frozenset({0}))
+            resumed = encode_with_lineage(rows, store, num_partitions=2)
+            assert crashed["rows"] + resumed["rows"] == len(items), (seed, ops)
+            model.update(items)
+            # a run whose parts all landed in the other one commits no row
+            committed |= {m["run_id"] for m in (crashed, resumed)
+                          if m["partitions"]}
+            snaps.append((last_run(), dict(model), False))
         elif op == "delete" and model:
             victims = rng.sample(sorted(model), min(len(model),
                                                     rng.randrange(1, 4)))

@@ -166,7 +166,7 @@ def test_vacuum_removes_stale_temporary_dirs(spark, tokens_df, tmp_path):
 
 
 def test_vacuum_removes_stale_staging_files(spark, tokens_df, tmp_path):
-    """Killed data-source writer tasks leave stage files under
+    """Killed writer tasks leave stage files under
     _staging/ (published files are renamed out at commit); vacuum
     reclaims the stale ones under the same age rule."""
     store = str(tmp_path / "store")
@@ -175,7 +175,7 @@ def test_vacuum_removes_stale_staging_files(spark, tokens_df, tmp_path):
         num_partitions=N_PARTS,
     )
     staging = store + "/_staging"
-    os.makedirs(staging)
+    os.makedirs(staging, exist_ok=True)  # every write stages there
     with open(staging + "/stage-00000-deadbeef.parquet", "wb") as fh:
         fh.write(b"x" * 256)
     old = time.time() - 7200
