@@ -31,9 +31,12 @@ A directory in the retired flat layout is refused (:func:`_refuse_flat`).
 
 Scale design:
 
-- Read tasks bin-pack committed ``(run, file)`` pairs by bytes: the
-  driver holds O(files) metadata, never chunk rows, and each task
-  streams its own files. Write tasks stage one uniquely named file each
+- Read tasks split committed ``(run, file)`` pairs by Spark's
+  file-split rule (:func:`_bin_pack`): one task per file of a one-wave
+  run, so a read fills as many slots as the write did (at most the
+  host's CPUs), while many tiny files pack into few tasks. The driver holds
+  O(files) metadata, never chunk rows, and each task streams its own
+  files. Write tasks stage one uniquely named file each
   (one parquet row group) under ``_staging/``; only the driver's commit
   renames them into the run dir, so a failed job never touches the
   committed store.
@@ -634,28 +637,45 @@ def _to_pushed(
     return out
 
 
+_MAX_SPLIT = 32 << 20
+_OPEN_COST = 4 << 20
+
+
 def _bin_pack(
-    files: list[tuple[int, str]], target: int = 32 << 20
+    files: list[tuple[int, str]], width: int
 ) -> list[tuple[tuple[int, str], ...]]:
-    """Bin-pack ``(run, file)`` pairs into byte-targeted read partitions:
-    each partition costs a Python worker round-trip, so a store left by
-    many small appends or streaming micro-batches (hundreds of tiny
-    chunk files, one run each) must not pay it per FILE. Compacted
-    stores with ~target-sized files get one file per partition — full
-    parallelism either way."""
+    """Pack ``(run, file)`` pairs, in order, into read partitions by
+    Spark's file-split rule (``FilePartition.maxSplitBytes``): a file
+    costs its size plus an open cost of :data:`_OPEN_COST`, and a
+    partition closes before the file whose cost would take it past
+
+        split = min(_MAX_SPLIT, max(_OPEN_COST, total cost / width))
+
+    ``width`` stands in for Spark's slot count, which the data-source
+    planner has no SparkContext to ask: :meth:`ChunkStoreReader.partitions`
+    passes the widest live run's file count (the task count of its
+    one-wave write), at most ``os.cpu_count()``. A one-wave run of
+    ``width`` small files reads in ``width`` tasks, one per file; many
+    tiny files (a tail of small appends or streaming micro-batches, or
+    one run written by 200 shuffle partitions) pack into tasks of fewer
+    than ``_MAX_SPLIT // _OPEN_COST`` files, so they do not pay a Python
+    worker round-trip per file; a file above the cap reads alone."""
+    costs = []
+    for _, f in files:
+        try:
+            costs.append(os.path.getsize(f) + _OPEN_COST)
+        except OSError:
+            costs.append(_MAX_SPLIT)
+    split = min(_MAX_SPLIT, max(_OPEN_COST, sum(costs) // max(1, width)))
     groups: list[tuple[tuple[int, str], ...]] = []
     cur: list[tuple[int, str]] = []
     acc = 0
-    for run_file in files:
-        try:
-            sz = os.path.getsize(run_file[1])
-        except OSError:
-            sz = target
-        if cur and acc + sz > target:
+    for run_file, cost in zip(files, costs):
+        if cur and acc + cost > split:
             groups.append(tuple(cur))
             cur, acc = [], 0
         cur.append(run_file)
-        acc += sz
+        acc += cost
     if cur:
         groups.append(tuple(cur))
     return groups
@@ -696,13 +716,19 @@ class ChunkStoreReader(DataSourceReader):
         return iter(filters)
 
     def partitions(self) -> list[InputPartition]:
-        """The live runs' ``(run id, file)`` pairs, bin-packed across
-        runs into read tasks; each file keeps its run id for delete
-        sequencing. No live file: one empty partition, so the scan
-        yields an empty DataFrame instead of failing."""
-        pairs = [(r, f) for r in sorted(self.live)
-                 for f in _list_parquet(_run_dir(self.path, _CHUNK_DIR, r))]
-        return ([InputPartition(g) for g in _bin_pack(pairs)]
+        """The live runs' ``(run id, file)`` pairs, packed across runs
+        into read tasks by :func:`_bin_pack` over the widest live
+        run's file count, bounded by the host's CPUs: one task per file
+        of a one-wave run, many tiny files packed together. Each file
+        keeps its run id for delete sequencing. No live file: one empty
+        partition, so the scan yields an empty DataFrame instead of
+        failing."""
+        by_run = {r: _list_parquet(_run_dir(self.path, _CHUNK_DIR, r))
+                  for r in sorted(self.live)}
+        pairs = [(r, f) for r, fs in by_run.items() for f in fs]
+        width = min(max(map(len, by_run.values()), default=1),
+                    os.cpu_count() or 1)
+        return ([InputPartition(g) for g in _bin_pack(pairs, width)]
                 or [InputPartition(None)])
 
     def read(self, partition: InputPartition):

@@ -473,6 +473,136 @@ def test_reader_bin_packs_small_files_into_partitions(spark, tmp_path):
     assert n_parts < n_files  # tiny files of many runs actually grouped
 
 
+def test_one_wave_store_reads_in_one_task_wave(spark, tmp_path,
+                                               monkeypatch):
+    """A run written by one wave of 4 encode tasks reads in 4 tasks, one
+    per file, through the planner and ``read_store`` alike (on a host of
+    at least 4 CPUs, as the ``local[4]`` session); a delete run adds no
+    task, and every read path returns the source minus the deleted
+    keys."""
+    from pysparkenc.lineage import delete_rows, read_store
+
+    monkeypatch.setattr(os, "cpu_count", lambda: 4)
+
+    store, df = _lineage_store(spark, tmp_path)
+    gone = df.limit(9).select("doc_id")
+    delete_rows(spark, store, gone)
+    files = _chunk_files(store)
+    assert len(files) == 4
+    back = spark.read.format("pysparkenc").load(store)
+    parts = ChunkStoreReader(store, back.schema).partitions()
+    assert len(parts) == 4
+    pairs = [pair for p in parts for pair in p.value]
+    assert sorted(pairs) == files and len(set(pairs)) == len(pairs)
+    exp = df.join(gone, "doc_id", "left_anti").select(*df.columns)
+    assert exp.count() == 151
+    got = read_store(spark, store)
+    assert got.rdd.getNumPartitions() == 4
+    for out in (got, back):
+        assert out.exceptAll(exp).count() == 0
+        assert exp.exceptAll(out).count() == 0
+
+
+def test_bin_pack_splits_by_spark_file_rule(tmp_path):
+    """``_bin_pack`` as a pure function over real files of known sizes:
+    one partition per file of a one-wave run, a tail of tiny one-file
+    runs packed under the cap, a file above the cap alone, input order
+    kept and every pair placed once. No live file still plans one
+    empty partition."""
+    from pyspark.sql.types import StructType
+
+    from pysparkenc.datasource import _MAX_SPLIT, _OPEN_COST, _bin_pack
+
+    def made(name, size):
+        f = tmp_path / name
+        with open(f, "wb") as fh:
+            fh.truncate(size)
+        return str(f)
+
+    def flat(groups):
+        return [pair for g in groups for pair in g]
+
+    wave = [(1, made(f"w{i}.parquet", 800_000 + 1000 * i)) for i in range(4)]
+    assert _bin_pack(wave, 4) == [(p,) for p in wave]
+
+    wide = [(1, made(f"s{i}.parquet", 1000)) for i in range(24)]
+    groups = _bin_pack(wide, 4)
+    assert [len(g) for g in groups] == [6, 6, 6, 6]
+    assert flat(groups) == wide
+
+    tail = [(r, made(f"t{r}.parquet", 1000)) for r in range(2, 32)]
+    groups = _bin_pack(tail, 1)
+    assert 1 < len(groups) < len(tail)
+    assert all(len(g) * (1000 + _OPEN_COST) <= _MAX_SPLIT for g in groups)
+    assert flat(groups) == tail
+
+    big = (40, made("big.parquet", _MAX_SPLIT + 1))
+    mixed = [*wave, big, *tail[:3]]
+    groups = _bin_pack(mixed, 4)
+    assert (big,) in groups
+    assert flat(groups) == mixed
+
+    empty = ChunkStoreReader(str(tmp_path / "nothing"), StructType())
+    (only,) = empty.partitions()
+    assert only.value is None
+
+
+def test_run_of_many_tiny_files_packs_to_the_slots(
+        spark, tmp_path, monkeypatch):
+    """One run written by more tasks than the host has CPUs (an append
+    after a wide shuffle) must NOT cost one Python worker round-trip per
+    file: its width is bounded by the CPU count, so 24 tiny files plan 4
+    or 5 partitions on a 4-CPU host (the greedy split may spill one),
+    and the scan result is unchanged."""
+    from pysparkenc.lineage import read_store
+
+    store = str(tmp_path / "store")
+    src = spark.sql(_rows(0, 2400))
+    src.repartition(24).write.format("pysparkenc").mode("append").save(store)
+    files = _chunk_files(store)
+    assert len(files) == 24 and {r for r, _ in files} == {1}
+    back = spark.read.format("pysparkenc").load(store)
+    monkeypatch.setattr(os, "cpu_count", lambda: 4)
+    parts = ChunkStoreReader(store, back.schema).partitions()
+    assert 4 <= len(parts) <= 5
+    assert sorted(pair for p in parts for pair in p.value) == files
+    monkeypatch.undo()
+    for out in (back, read_store(spark, store)):
+        assert out.exceptAll(src).count() == 0
+        assert src.exceptAll(out).count() == 0
+
+
+def test_stream_source_splits_a_wide_run(spark, tmp_path, monkeypatch):
+    """A micro-batch whose range holds one 4-file append run plans 4
+    partitions (on a host of at least 4 CPUs), and reads what
+    ``read_store`` reads at its end offset for that run, the later
+    delete applied."""
+    import pyarrow as pa
+
+    from pysparkenc.datasource import ChunkStoreStreamReader
+    from pysparkenc.lineage import delete_rows, read_store
+
+    monkeypatch.setattr(os, "cpu_count", lambda: 4)
+
+    store = str(tmp_path / "store")
+    spark.sql(_rows(0, 100)).coalesce(1).write.format("pysparkenc").mode(
+        "append").save(store)
+    spark.sql(_rows(100, 900)).repartition(4).write.format(
+        "pysparkenc").mode("append").save(store)
+    delete_rows(spark, store, spark.sql(
+        "SELECT id FROM range(0, 900) WHERE id % 7 = 0"), key_cols=("id",))
+    assert len([r for r, _ in _chunk_files(store) if r == 2]) == 4
+    schema = spark.read.format("pysparkenc").load(store).schema
+    src = ChunkStoreStreamReader(store, schema)
+    parts = src.partitions({"run": 1}, {"run": 3})
+    assert len(parts) == 4
+    got = pa.Table.from_batches(
+        [b for p in parts for b in src.read(p)]).sort_by("id")
+    exp = read_store(spark, store, as_of_run=3, runs=(2,)).toArrow()
+    assert got.num_rows == 800 - 114
+    assert got.to_pylist() == exp.sort_by("id").to_pylist()
+
+
 # ---------------------------------------------------------------------------
 # lineage-managed stores through the data source
 # ---------------------------------------------------------------------------
